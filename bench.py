@@ -1,17 +1,18 @@
-"""Benchmark harness — runs the headline queries and prints one JSON line.
+"""Benchmark harness: runs the headline queries and prints two JSON lines.
 
-Driver contract: run at ``$SPARK_GRAFT_SF_DIR`` (default /root/testdata/sf0.1)
-on ``local[$SPARK_GRAFT_CPUS]``; output
-``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``.
+Driver contract: run on the tables in ``$SPARK_GRAFT_SF_DIR`` (default:
+the sf0.1 test data) on ``local[$SPARK_GRAFT_CPUS]``.
+``$MRS_BENCH_QUERIES`` replaces the headline with a comma-separated query
+list, or ``all``.
 
-Each query is executed to completion (noop-sink write forces the full
-plan) after a warmup pass of the session.  Timings are wall-clock per
-query; "value" is the total.  Every query runs ``MRS_BENCH_REPEAT``
-times (default 2) and reports the BEST run: the host shows bursty
-multi-second CPU-steal windows (observed 4-8× inflation of
-Python-kernel-heavy queries in single-shot runs with zero code change),
-and per-query best-of-N is the standard way to measure the code rather
-than the hypervisor.
+After one session warm-up, each query runs to the ``noop`` sink
+:data:`REPEAT` times and reports its best run.  Output is a detail line
+with every query's seconds, then a compact last line
+``{"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+with per-family subtotals, which fits the driver's tail capture.
+``tools/ab_flag.py`` and ``tools/profile_queries.py`` time queries through
+:func:`warm_up` and :func:`time_query` too.  Paired comparisons of two
+checkouts belong to ``perfbench/``.
 """
 
 from __future__ import annotations
@@ -23,7 +24,11 @@ import sys
 import time
 
 from myrecommendsystem_spark.plans import registry
+from myrecommendsystem_spark.plans.registry import Builder
 from myrecommendsystem_spark.session import get_spark
+
+# Timed runs per query; the best one is reported.
+REPEAT = 2
 
 # Headline subset: one per operator family, skewed toward the expensive ones.
 HEADLINE: tuple[str, ...] = (
@@ -43,11 +48,11 @@ HEADLINE: tuple[str, ...] = (
     "stream_recs_batch",
     "events_tumbling_hourly",
     "events_session_windows",
-    # outer join / set ops / offset windows (round-1 extensions)
+    # outer join / set ops / offset windows
     "outer_join_custdist",
     "set_ops_order_status",
     "events_lag_delta",
-    # correlated-subquery / decorrelation shapes (round-2 extensions)
+    # correlated-subquery / decorrelation shapes
     "q4_order_priority_exists",
     "q18_large_volume_customers",
     "q21_late_exclusive_suppliers",
@@ -72,7 +77,7 @@ HEADLINE: tuple[str, ...] = (
     "embedding_cross_corpus_near",
     "embedding_semantic_survivors",
     "media_metadata",
-    # corpus hygiene + MIPS + SQL surface (round-3 extensions)
+    # corpus hygiene + MIPS + SQL surface
     "doc_decontamination",
     "doc_repetition_signals",
     "dedup_cross_corpus",
@@ -91,8 +96,8 @@ HEADLINE: tuple[str, ...] = (
     "corpus_drift_terms",
     "events_type_transitions",
     "events_user_retention_cohorts",
-    # round-4 extensions: division / RFM / cadence / baskets / corpus
-    # analytics / the composed hygiene funnel
+    # division / RFM / cadence / baskets / corpus analytics / the composed
+    # hygiene funnel
     "suppliers_covering_all_types",
     "customer_rfm_scores",
     "events_dau_wau",
@@ -143,7 +148,7 @@ HEADLINE: tuple[str, ...] = (
     "embedding_outlier_scores",
     "doc_duplication_profile",
     "events_error_pchart",
-    # round-4d: tokenizer training / skyline / set-ops / PCA
+    # tokenizer training / skyline / set-ops / PCA
     "bpe_pair_counts",
     "parts_skyline",
     "events_audience_overlap",
@@ -185,7 +190,7 @@ HEADLINE: tuple[str, ...] = (
     "bpe_learned_merges",
     "doc_bpe_segment_stats",
     "parts_size_rank_semantics",
-    # round-4e: incremental view maintenance / runtime filters / itemsets
+    # incremental view maintenance / runtime filters / itemsets
     "incremental_join_view",
     "bloom_prefilter_join",
     "orders_frequent_triples",
@@ -197,14 +202,12 @@ HEADLINE: tuple[str, ...] = (
     "users_locf_daily",
     "events_strict_funnel",
     "events_mutual_information",
-    # round-5: rows-only → hash-gated upgrades (new oracles, same ops)
+    # later additions: chunking, graph, streaming dedup, media and audio
+    # near-dup, sketches, skew handling, winnowing and LSH recall gates
     "doc_cdc_chunks",
     "dedup_substring_overlap",
     "product_graph_pagerank",
-    # round-6: the cross-corpus NEAR path (newly hash-gated) — its exact
-    # sibling dedup_cross_corpus was already a headline entry
     "dedup_cross_corpus_near",
-    # round-5: complete bench coverage of the r5 driver window
     "stream_recs_cold_start",
     "events_median_gap",
     "doc_boilerplate_ngrams",
@@ -214,61 +217,27 @@ HEADLINE: tuple[str, ...] = (
     "events_ohlc_hourly",
     "label_centroid_similarity",
     "orders_yoy_growth",
-    # round-9: the r8 incremental semantic-dedup fold (fronts the r9
-    # driver window — every window-front query has a bench row by the
-    # time it earns a driver row)
     "embedding_incremental_survivors",
-    # round-9: media near-dup (dHash through the SimHash banding
-    # pipeline) — the r10 window front, benched on registration
     "media_near_dup_pairs",
     "media_dedup_survivors",
-    # round-9: audio near-dup (HK fingerprint, same banding) + the
-    # deterministic sketch twins — r10 window front, benched on
-    # registration
     "audio_near_dup_pairs",
     "approx_distinct_users_kmv",
     "events_cms_replay_counts",
     "events_type_overlap_kmv",
     "approx_users_kmv_merge",
-    # round-9: the quality model joined the headline when its fit moved
-    # from MLlib L-BFGS (~6 s at any sf) to the deterministic
-    # bounded-sample Newton solve (sub-second) — the old fit-dominated
-    # exclusion no longer applies
     "doc_quality_model_scores",
-    # round-10: sub-document chunk-level dedup (CCNet granularity) and
-    # the video half of the near-dup modality matrix — benched on
-    # registration, r11 window front
     "doc_chunk_dedup_docs",
     "video_near_dup_pairs",
-    # round-10: the LSH banding S-curve acceptance gate (ann_recall_report
-    # discipline applied to the near-dup family) — benched on
-    # registration, r11 window front
     "dedup_lsh_recall_report",
-    # round-10: key-skew diagnostic (TakeOrderedAndProject heavy-hitter
-    # pick + integer salt recommendation) — benched on registration,
-    # r11 window front
     "events_key_skew_profile",
-    # round-11: the skew-profile CONSUMER (adaptive salted join), MOSS
-    # winnowing selection + its overlap index — benched on
-    # registration, r12 window front
     "events_salted_join_adaptive",
     "doc_winnowing_fingerprints",
     "doc_winnowing_overlap",
-    # round-11: the z-order key gate (the layout module existed since
-    # r4 with tests but no driver-verified entry)
     "events_zorder_keys",
-    # round-12: the groupBy half of the skew loop, cross-corpus
-    # winnowing (the new-vs-ref convention every other dedup family
-    # has), and the sign-bit LSH acceptance gate (completing the
-    # recall-report matrix: MinHash/IVF/hyperplane) — benched on
-    # registration, r13 window front
     "events_salted_agg_adaptive",
     "doc_winnowing_cross_corpus",
     "doc_winnowing_cross_corpus_survivors",
     "embedding_lsh_recall_report",
-    # round-13: the adaptive salt's real venue — set-valued aggregate
-    # with no partial-aggregation escape hatch (r12 verdict item 6) —
-    # benched on registration, r14 window front
     "events_salted_distinct_users",
     # rag_ingest_pipeline intentionally NOT in the headline: index-build
     # dominated (~7 s at any sf — amortized once in production); its
@@ -277,124 +246,29 @@ HEADLINE: tuple[str, ...] = (
 )
 
 
-# Contention bar for the file-of-record guard (and the repeat
-# escalation below): a sweep whose own calibration probe lands this far
-# above the committed quiet-host pin is measuring the hypervisor, not
-# the code.
-CONTENTION_BAR = 1.25
-
-# Quiet-host pin for the calibration probe (round-12 verdict item 3):
-# inheriting ``calib_ref`` from whatever the last committed record
-# carried let one contended commit poison the whole chain — the r11
-# HEAD record carried a contended 0.291 probe, so the r12 record's own
-# ratio (0.767!) was measured against weather and mild slow-drift could
-# ratchet forever.  The pin is the minimum committed quiet-host probe
-# (r10/r11 quiet records: 0.186 / 0.188 — BASELINE.md calibration
-# protocol); override with $MRS_BENCH_CALIB_REF when re-establishing on
-# different hardware.
-CALIB_REF_PIN = 0.188
-
-# Late-onset-contention bar for the file-of-record guard (round-12
-# verdict item 2): the driver's r12 round-close sweep started at probe
-# ratio 1.089 (quiet) but ran 29% over the record with 50 over-bar
-# re-runs — sustained steal that began AFTER calibration walked
-# straight past the probe-only guard.  A sweep whose own re-run pass
-# flags more than this fraction of its recorded entries is measuring
-# the weather regardless of how its probe started (quiet sweeps flag
-# 0-4 of ~190 entries; contended ones flag 28-50).
-RERUN_FLAG_BAR = 0.15
-
-# Uniform-inflation bar (round 13, caught in production the day the
-# flag-frac guard landed): a sweep with quiet probes (0.946 start /
-# 0.884 end) and flag-frac 0.085 still ran its 188 recorded entries at
-# MEDIAN ratio 1.176 vs the committed record with ZERO entries faster
-# — uniform ~1.18x inflation sits under every per-query re-run bar
-# (max(1.3x, +0.3s)) and under the flag-frac bar, yet is unmistakably
-# weather (heterogeneous queries don't all slow 18% from a code
-# change).  The median per-query ratio is immune to both blind spots:
-# genuine optimizations pull it DOWN, genuine regressions are
-# localized (a handful of entries, not the fleet median).  Quiet
-# sweeps measure median 0.95-1.05; contended ones 1.18-1.29.
-MEDIAN_RATIO_BAR = 1.10
-# Record-replacement bar (round 14, codifying the round-13 close
-# adjudication): replacing the committed record with a MILDLY inflated
-# guard-passing capture ratchets the bar every later sweep is graded
-# against — the r13 close saw two sweeps pass the 1.10 contention bar
-# at median 1.068/1.081 that were kept out of the record by hand, and
-# the r14 round-open sweep (median 1.073, quiet probes) walked straight
-# over the record before this bar landed.  So record REPLACEMENT is
-# held to the quiet band's edge: a sweep whose median per-query ratio
-# exceeds this writes the _contended side file instead.  Genuine
-# optimizations pull the median DOWN and always replace; a deliberate
-# fleet-wide re-baseline uses MRS_BENCH_FORCE_RECORD=1.
-RECORD_MEDIAN_BAR = 1.05
-# Below this many recorded entries the median is too noisy to trust as
-# a contention signal (a targeted MRS_BENCH_QUERIES subset run).
-MEDIAN_RATIO_MIN_N = 20
-
-
-def detail_record_paths(
-    here: str,
-    calib_ratio: float,
-    ref_calib: float | None,
-    rerun_flag_frac: float | None = None,
-    median_ratio: float | None = None,
-) -> tuple[str, str]:
-    """Where this sweep's detail may be written: ``(record_path,
-    suffix)`` — round-11 verdict item 1.  A contended capture (own
-    ``calib_ratio`` above :data:`CONTENTION_BAR` vs a committed
-    quiet-host pin) has now clobbered the committed file-of-record
-    twice (r10 close, r11 driver run) — once all the way into a commit
-    — silently laxing the re-run pass for later sweeps.  So the guard
-    is structural: such a run writes ``BENCH_DETAIL_contended.json``
-    (and a ``_contended``-suffixed versioned copy) and leaves the
-    committed record untouched.  ``MRS_BENCH_FORCE_RECORD=1``
-    overrides for deliberately re-establishing a record; a run with no
-    committed pin (fresh checkout, sf mismatch) establishes one.
-
-    Round-12 verdict item 2 closed the probe-only blind spot: a sweep
-    whose re-run pass flagged more than :data:`RERUN_FLAG_BAR` of its
-    recorded entries routes to the ``_contended`` side file even when
-    its calibration probe started quiet (late-onset steal).  The
-    caller passes the max of its start and end probes as
-    ``calib_ratio``, so a steal window that closes in is caught from
-    both directions.  Round 13 added the third signal — the sweep's
-    MEDIAN per-query ratio vs the committed record over
-    :data:`MEDIAN_RATIO_BAR` — closing the uniform-inflation blind
-    spot (quiet probes + fleet-wide ~1.18x sits under every per-entry
-    bar; see :data:`MEDIAN_RATIO_BAR`).  Round 14 codified the r13
-    close's manual adjudication as :data:`RECORD_MEDIAN_BAR`: a sweep
-    may only REPLACE a committed record when its median ratio sits
-    inside the quiet band (≤1.05) — mild guard-passing drift must not
-    ratchet the bar future sweeps are graded against.
-    """
-    if os.environ.get("MRS_BENCH_FORCE_RECORD"):
-        return os.path.join(here, "BENCH_DETAIL.json"), ""
-    contended = ref_calib is not None and (
-        calib_ratio > CONTENTION_BAR
-        or (rerun_flag_frac is not None and rerun_flag_frac > RERUN_FLAG_BAR)
-        or (median_ratio is not None and median_ratio > RECORD_MEDIAN_BAR)
-    )
-    if contended:
-        return os.path.join(here, "BENCH_DETAIL_contended.json"), "_contended"
-    return os.path.join(here, "BENCH_DETAIL.json"), ""
-
-
-def _calibrate(spark) -> float:
-    """Fixed pure-JVM probe for host CPU steal (round-8 verdict item 2):
-    a deterministic 64M-row modular-arithmetic aggregate spanning every
-    task slot, best-of-3.  Its quiet-host time is pinned in the committed
-    BENCH_DETAIL.json (``calib_sec``); a run that starts far above the
-    pin is measuring the hypervisor, not the code — the sweep escalates
-    to best-of-3 and the tail line records the evidence."""
+def warm_up(spark, sf_dir: str) -> None:
+    """Pay one-time session costs before the first timed query: the
+    parquet reader, shuffle machinery and codegen, then the Python
+    worker and Arrow path on every task slot (otherwise the first
+    Pandas-UDF query absorbs the worker forks)."""
     from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
 
+    from myrecommendsystem_spark.io import readers
+
+    readers.events_as_ratings(spark, sf_dir).groupBy("productId").count().count()
+    plus_zero = pandas_udf(lambda s: s + 0, "long")
+    n_slots = spark.sparkContext.defaultParallelism
+    spark.range(0, 100 * n_slots, 1, n_slots).select(F.sum(plus_zero("id"))).count()
+
+
+def time_query(spark, builder: Builder, sf_dir: str) -> float:
+    """Best of :data:`REPEAT` wall-clock runs of one query to the noop
+    sink (which forces the full plan)."""
     best = float("inf")
-    for _ in range(3):
+    for _ in range(REPEAT):
         t0 = time.perf_counter()
-        spark.range(0, 64_000_000, 1, 32).select(
-            F.sum((F.col("id") % 97) * (F.col("id") % 89))
-        ).collect()
+        builder(spark, sf_dir).write.format("noop").mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
     return best
 
@@ -409,225 +283,37 @@ def main() -> None:
 
     all_q = registry.all_queries()
     names = [n for n in HEADLINE if n in all_q]
-    extra = os.environ.get("MRS_BENCH_QUERIES")
-    if extra == "all":
+    selected = os.environ.get("MRS_BENCH_QUERIES")
+    if selected == "all":
         names = list(all_q)
-    elif extra:
-        names = [n for n in extra.split(",") if n in all_q]
+    elif selected:
+        names = [n for n in selected.split(",") if n in all_q]
 
-    # Warmup: exercise the parquet reader, shuffle machinery, and codegen
-    # JIT once so the first timed query doesn't absorb one-time session
-    # costs (measured ~2s of the first query before this).
-    from myrecommendsystem_spark.io import readers as _r
-
-    _r.events_as_ratings(spark, sf_dir).groupBy("productId").count().count()
-
-    # Also warm the Python-worker/Arrow path: the daemon fork + Arrow serde
-    # init otherwise lands entirely on the first Pandas-UDF query (IVF/ALS),
-    # misattributing ~2-4s of one-time session cost to that query's timing.
-    from pyspark.sql import functions as _F
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    # span every task slot so each of the local[N] cores forks its Python
-    # worker during warmup, not inside the first wide kernel query
-    _warm = _pudf(lambda s: s + 0, "long")
-    n_slots = spark.sparkContext.defaultParallelism
-    spark.range(0, 100 * n_slots, 1, n_slots).select(
-        _F.sum(_warm("id"))
-    ).count()
-
-    # --- steal calibration + committed quiet-host records (round-8
-    # verdict item 2: the official r8 capture ran 40% over the committed
-    # record with zero code change — the gate was measuring the weather).
-    here = os.path.dirname(__file__)
-    ref_detail: dict[str, float] = {}
-    ref_calib = None
-    try:
-        with open(os.path.join(here, "BENCH_DETAIL.json")) as f:
-            prev = json.load(f)
-        if prev.get("sf") == sf:
-            ref_detail = prev.get("queries", {})
-            # round-12 verdict item 3: the probe reference is the
-            # PINNED quiet-host constant, not the last record's own
-            # probe — one contended commit must not poison the chain
-            ref_calib = float(
-                os.environ.get("MRS_BENCH_CALIB_REF", CALIB_REF_PIN)
-            )
-    except (OSError, ValueError):
-        pass
-    calib = _calibrate(spark)
-    calib_ratio = round(calib / ref_calib, 3) if ref_calib else 1.0
-
-    repeat = max(1, int(os.environ.get("MRS_BENCH_REPEAT", "2")))
-    if calib_ratio > CONTENTION_BAR:
-        # sustained steal at sweep start: best-of-2 is not enough to
-        # dodge multi-second steal windows — escalate everything
-        repeat = max(repeat, 3)
-
-    # Per-cycle split for the structural multi-fold entries (round-11
-    # verdict item 7: embedding_incremental_survivors is three ingest
-    # cycles by construction — its ~7 s headline row read as one slow
-    # query and regression attribution couldn't land on the cycle that
-    # moved).  The fold records its per-cycle wall-clock into
-    # semantic_dedup.LAST_CYCLE_SECONDS; the capture keeps the split
-    # from each entry's FASTEST run (same best-of-N policy as the
-    # headline number) and lands in the detail file only — the headline
-    # and re-run reference are unchanged.
-    from myrecommendsystem_spark.streaming import semantic_dedup as _sd
-
-    _CYCLE_SOURCES = {
-        "embedding_incremental_survivors": lambda: list(_sd.LAST_CYCLE_SECONDS)
-    }
-    cycle_rec: dict[str, tuple[float, list[float]]] = {}
-
-    def _time_once(name: str) -> float:
-        t0 = time.perf_counter()
-        df = all_q[name](spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.perf_counter() - t0
-        probe = _CYCLE_SOURCES.get(name)
-        cyc = probe() if probe else None
-        if cyc and (name not in cycle_rec or elapsed < cycle_rec[name][0]):
-            cycle_rec[name] = (elapsed, cyc)
-        return elapsed
-
+    warm_up(spark, sf_dir)
     timings: dict[str, float] = {}
     for name in names:
-        best = min(_time_once(name) for _ in range(repeat))
-        timings[name] = round(best, 3)
-        # No cache outlives its query (SCALE.md §caching): lazy intra-query
-        # caches (set-ops/q15/q2 dims, stream sims) are released here, so
-        # the sweep's memory is bounded by one query's working set.  Within
-        # a query's repeats the cache stays warm — unchanged measurement
-        # policy; eager_release operators free theirs before returning.
-        # ONE declared exception (round-6 verdict item 3, BASELINE.md r7):
-        # the recsys-eval family shares a checkpointed split/sims/rec-list
-        # build (analytics_queries._eval_shared) that persists across the
-        # family's entries — a documented materialized intermediate, so
-        # the family's per-query numbers measure metrics-on-shared-build,
-        # and the build cost lands in whichever family entry runs first.
+        timings[name] = round(time_query(spark, all_q[name], sf_dir), 3)
+        # No cache outlives its query, so the sweep's memory is bounded
+        # by one query's working set.  The one exception is the
+        # recsys-eval family's shared checkpointed build
+        # (analytics_queries._eval_shared): its cost lands in whichever
+        # family entry runs first.
         spark.catalog.clearCache()
-
-    # Re-run pass: entries far above their committed quiet-host record
-    # were (most likely) hit by a steal window between the calibration
-    # probes — re-measure them, worst inflation first, inside a bounded
-    # wall-clock budget so a genuinely slow host can't double the sweep.
-    # min() keeps the re-run monotone: a still-stolen re-run never makes
-    # an entry slower.  Entries without a committed record (new queries,
-    # sf mismatch) establish their record this run and are never flagged.
-    flagged = sorted(
-        (
-            n
-            for n in timings
-            if n in ref_detail
-            and timings[n] > max(1.3 * ref_detail[n], ref_detail[n] + 0.3)
-        ),
-        key=lambda n: timings[n] / max(ref_detail[n], 1e-9),
-        reverse=True,
-    )
-    reran = 0
-    rerun_deadline = time.perf_counter() + float(
-        os.environ.get("MRS_BENCH_RERUN_BUDGET", "180")
-    )
-    for name in flagged:
-        if time.perf_counter() > rerun_deadline:
-            break
-        timings[name] = round(
-            min(timings[name], _time_once(name), _time_once(name)), 3
-        )
-        spark.catalog.clearCache()
-        reran += 1
-    # Fraction of recorded entries the re-run pass flagged: the
-    # late-onset-contention signal (round-12 verdict item 2).
-    n_recorded = sum(1 for n in timings if n in ref_detail)
-    rerun_flag_frac = round(len(flagged) / n_recorded, 3) if n_recorded else 0.0
-
-    # Median per-query ratio vs the committed record: the
-    # uniform-inflation signal (round 13 — quiet probes + low flag
-    # fraction still admitted a fleet-wide 1.18x capture).
-    import statistics
-
-    rec_ratios = [
-        timings[n] / max(ref_detail[n], 1e-9)
-        for n in timings
-        if n in ref_detail
-    ]
-    median_ratio = (
-        round(statistics.median(rec_ratios), 3)
-        if len(rec_ratios) >= MEDIAN_RATIO_MIN_N
-        else None
-    )
-
-    # End-of-sweep re-probe (round-12 verdict item 2, second half):
-    # steal that arrives mid-sweep is invisible to the start probe, so
-    # the record decision uses the WORSE of the two probes.
-    calib_end = _calibrate(spark)
-    calib_ratio_end = round(calib_end / ref_calib, 3) if ref_calib else 1.0
-    calib_ratio_max = max(calib_ratio, calib_ratio_end)
 
     total = round(sum(timings.values()), 3)
-    # Artifact-chain fix (round-4 verdict item 3): the external driver
-    # records only the TAIL of this process's output, and r04's
-    # 148-entry per-query dict grew the single JSON line past that
-    # window — BENCH_r04.json came back parsed:null.  So the full
-    # per-query detail goes to a side file + an early (truncatable)
-    # line, and the LAST line printed is a compact, fixed-size totals
-    # object that always survives the tail capture.
-    detail = {
-        "metric": "headline_queries_detail",
-        "value": total,
-        "unit": "sec",
-        "queries": timings,
-        "sf": sf,
-        # steal-calibration evidence: the fixed probe's time this run,
-        # its committed quiet-host pin, and how many inflated entries
-        # the re-run pass re-measured (round-8 verdict item 2)
-        "calib_sec": round(calib, 3),
-        "calib_ref": ref_calib,
-        "calib_ratio": calib_ratio,
-        # late-onset-contention evidence (round-12 verdict item 2): the
-        # end-of-sweep re-probe and the fraction of recorded entries
-        # the re-run pass flagged — either over its bar routes the
-        # capture to the _contended side file
-        "calib_sec_end": round(calib_end, 3),
-        "calib_ratio_end": calib_ratio_end,
-        "rerun_flag_frac": rerun_flag_frac,
-        "median_ratio": median_ratio,
-        "reran": reran,
-    }
-    if cycle_rec:
-        detail["cycles"] = {
-            n: [round(s, 3) for s in cyc] for n, (_, cyc) in cycle_rec.items()
-        }
-    record_path, suffix = detail_record_paths(
-        here, calib_ratio_max, ref_calib, rerun_flag_frac, median_ratio
+    print(
+        json.dumps(
+            {
+                "metric": "headline_queries_detail",
+                "value": total,
+                "unit": "sec",
+                "queries": timings,
+                "sf": sf,
+            }
+        )
     )
-    with open(record_path, "w") as f:
-        json.dump(detail, f, indent=1, sort_keys=True)
-    # Versioned copy (round-5 verdict item 5): BENCH_DETAIL.json is
-    # overwritten each run, so per-query round-over-round diffs needed
-    # git archaeology.  The round number is the next after the highest
-    # committed BENCH_r{N}.json (override: $MRS_ROUND); prior rounds'
-    # detail files stay committed.
-    try:
-        rnd = os.environ.get("MRS_ROUND")
-        if rnd is None:
-            import glob as _glob
-
-            recorded = [
-                int(m.group(1))
-                for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-                if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-            ]
-            rnd = str(max(recorded, default=0) + 1)
-        versioned = os.path.join(here, f"BENCH_DETAIL_r{int(rnd):02d}{suffix}.json")
-        with open(versioned, "w") as f:
-            json.dump(detail, f, indent=1, sort_keys=True)
-    except OSError:
-        pass  # read-only checkout: the unversioned detail already printed
-    print(json.dumps(detail))
-    # Compact per-family subtotals (first name token = family): ~30 keys
-    # regardless of how many queries the headline grows to.
+    # The driver keeps only the tail of stdout, so the last line stays
+    # small: per-family subtotals (first name token = family).
     families: dict[str, float] = {}
     for name, sec in timings.items():
         fam = name.split("_", 1)[0]
@@ -643,17 +329,7 @@ def main() -> None:
                 "sf": sf,
                 "n_queries": len(timings),
                 "worst": worst,
-                "worst_sec": timings.get(worst, 0.0) if worst else 0.0,
-                "calib_sec": round(calib, 3),
-                "calib_ratio": calib_ratio,
-                "calib_ratio_end": calib_ratio_end,
-                "rerun_flag_frac": rerun_flag_frac,
-                "median_ratio": median_ratio,
-                "reran": reran,
-                # round-12 verdict item 5: point at the file this run
-                # actually wrote (a guard-routed run writes the
-                # _contended side file, not the record)
-                "detail": os.path.basename(record_path),
+                "worst_sec": timings.get(worst, 0.0),
             }
         )
     )

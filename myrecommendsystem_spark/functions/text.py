@@ -889,15 +889,18 @@ def bm25_search(
         dl.agg(F.avg("dl").alias("__avgdl"))
     )
     # explicit schema: createDataFrame([], [...]) cannot infer types, so
-    # an empty query list must still build a valid (empty) term relation
-    q = spark.createDataFrame([(t,) for t in query_terms], "term string")
-    # document frequency of the QUERY terms only (r14, guide §2.3): the
-    # score consumes df for terms surviving the tf⋈q broadcast join, so
-    # aggregating df over the full vocabulary shuffled every term's
-    # posting count to compute a handful of values.  Pre-filtering by q
-    # yields identical df for every consumed term and shrinks the df
-    # shuffle from vocabulary-sized to |query|-sized — at 100 TB the
-    # difference between a corpus-wide term aggregation and a k-row one.
+    # an empty query list must still build a valid (empty) term relation.
+    # Each term appears once: a repeated query term must neither double
+    # its df nor add its tf contribution twice.
+    q = spark.createDataFrame(
+        [(t,) for t in dict.fromkeys(query_terms)], "term string"
+    )
+    # document frequency of the QUERY terms only: the score consumes df
+    # for terms surviving the tf⋈q broadcast join, so aggregating df over
+    # the full vocabulary would shuffle every term's posting count to
+    # compute a handful of values.  The result is |query| rows, so it
+    # rides a broadcast into the score join instead of a sort-merge join
+    # against tf.
     df_ = (
         tf.join(F.broadcast(q), "term")
         .groupBy("term")
@@ -905,7 +908,7 @@ def bm25_search(
     )
     scored = (
         tf.join(F.broadcast(q), "term")
-        .join(df_, "term")
+        .join(F.broadcast(df_), "term")
         .join(dl, id_col)
         .crossJoin(F.broadcast(stats))
         .select(

@@ -14,8 +14,8 @@ composable operator so the plan shape is inspectable and testable:
    probe use the identical JVM hash, so there are no false negatives by
    construction), OR the positions into ``n_bits/64`` packed BIGINT
    words.  The word array is tiny (m/8 bytes — 16 KiB for the default
-   2^17 bits) and rides into the probe expression as a literal, i.e. it
-   broadcasts with the plan like Spark's own runtime filters.
+   2^17 bits) and reaches the probe as a 1-row broadcast relation, like
+   Spark's own runtime filters.
 2. PROBE — a pure-Catalyst predicate: ``getbit(element_at(words,
    pos/64 + 1), pos%64) = 1`` for every seed.  Whole-stage codegen, no
    Python, evaluated at the scan before any exchange.
@@ -116,16 +116,18 @@ def bloom_prefiltered_join(
     dim_key: str,
     n_bits: int = DEFAULT_N_BITS,
     n_hashes: int = DEFAULT_N_HASHES,
-    how: str = "inner",
 ) -> DataFrame:
-    """fact ⋈ dim with a Bloom pre-filter on the fact side.
+    """fact ⋈ dim (inner) with a Bloom pre-filter on the fact side.
 
-    Row-for-row equivalent to the plain join: the filter admits a
+    Row-for-row equivalent to the plain inner join: the filter admits a
     superset of matching fact rows (no false negatives) and the join
     itself removes false positives.  What changes is WHERE rows die —
     before the shuffle, in the scan stage — which at 100 TB is the
     difference between exchanging the full fact table and exchanging
-    the ~selectivity fraction that can match.
+    the ~selectivity fraction that can match.  ``dim`` is small by
+    contract (its bit positions are collected), so the join broadcasts
+    it; pass it without a broadcast hint, which would otherwise dangle
+    on the build-side collect.
     """
     # no key-dedup pass: duplicate build keys just OR the same bits again
     words = build_bloom_words(dim.select(dim_key), dim_key, n_bits, n_hashes)
@@ -145,4 +147,6 @@ def bloom_prefiltered_join(
         )
         .drop("__bloom_words")
     )
-    return survivors.join(dim, survivors[fact_key] == dim[dim_key], how)
+    return survivors.join(
+        F.broadcast(dim), survivors[fact_key] == dim[dim_key]
+    )

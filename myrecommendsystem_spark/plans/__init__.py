@@ -1,3 +1,4 @@
+from myrecommendsystem_spark.plans import registry
 from myrecommendsystem_spark.plans.registry import (  # noqa: F401
     QuerySpec,
     all_queries,
@@ -16,3 +17,6 @@ from myrecommendsystem_spark.plans import streaming_queries  # noqa: E402,F401
 from myrecommendsystem_spark.plans import multimodal_queries  # noqa: E402,F401
 from myrecommendsystem_spark.plans import analytics_queries  # noqa: E402,F401
 from myrecommendsystem_spark.plans import tokenizer_queries  # noqa: E402,F401
+
+# Every query is registered now, so the driver window can be derived.
+registry.DRIVER_WINDOW = registry.next_driver_window()

@@ -7529,9 +7529,7 @@ def bloom_prefilter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("c_mktsegment") == "BUILDING")
         .select("c_custkey", "c_mktsegment")
     )
-    joined = RFil.bloom_prefiltered_join(
-        orders, F.broadcast(dim), "o_custkey", "c_custkey"
-    )
+    joined = RFil.bloom_prefiltered_join(orders, dim, "o_custkey", "c_custkey")
     return (
         joined.groupBy(F.col("o_orderpriority").alias("priority"))
         .agg(

@@ -106,798 +106,18 @@ def register(
     return deco
 
 
-# Driver-window rotation — round 4.
-#
-# The external driver verifies exactly the 50-entry PREFIX of
-# ``all_queries()`` per round (observed: CORRECTNESS_r01..r03 each equal
-# the prefix of the order in effect at that round).  The window rotates
-# one round behind registration: each round fronts every query with no
-# driver row in any recorded CORRECTNESS_r0*.json artifact (oracle-gated
-# first, rows-only after) and pads the remaining slots with core
-# re-checks spanning the operator families.  ``all_queries()`` order
-# carries NO semantics beyond this prefix — consumers must not rely on
-# it.  tests/test_plans.py derives the front of the window from the
-# committed CORRECTNESS artifacts, so a stale hand-list fails CI rather
-# than silently re-verifying old queries (round-3 advice).
-#
-# Round 4 fronts the 32 round-3 additions (26 oracle-gated + 6
-# rows-only) that sat behind _DRIVER_WINDOW_R3; after r04 every
-# registered query has at least one driver row across r01..r04.
-# Queries registered DURING round 4 carry ``defer=True`` and are the
-# round-5 front; until then tests/test_registry_oracle.py replays them
-# at driver scale locally.
-#
-# Round 6 fronts the 50 oldest of the 53 still-never-verified gated
-# queries per the schedule BASELINE.md published at round-5 close
-# (``events_session_metrics`` … ``events_mutual_information``).  The
-# three stragglers — ``bpe_pair_counts`` (51st oldest; slid per the
-# published 51 > 50 note) plus ``events_cusum_alarms`` and
-# ``recsys_mmr_rerank`` (rows-only → hash-gated upgrades made during
-# round 5, assigned to the r7 front by the same note) — join the 13
-# never-verified rows-only entries in round 7, which closes the entire
-# backlog with ~34 slots left for core re-checks.  Registry growth
-# stays frozen through r7 (round-5 verdict item 2): new registrations
-# carry ``defer=True``, ≤5 this round.
-_DRIVER_WINDOW_R6 = [
-    # -- never driver-verified: oracle-gated, oldest-first --
-    "events_session_metrics",
-    "doc_perplexity_report",
-    "orders_cohort_ltv",
-    "supplier_scorecard",
-    "events_forecast_backtest",
-    "orders_duplicate_suspects",
-    "events_power_users_pareto",
-    "doc_readability_report",
-    "parts_abc_classification",
-    "doc_langid_confusion",
-    "users_bot_signals",
-    "customer_segment_migration",
-    "users_growth_accounting",
-    "embedding_outlier_scores",
-    "doc_duplication_profile",
-    "events_error_pchart",
-    "parts_skyline",
-    "events_audience_overlap",
-    "orders_chi2_status_priority",
-    "product_graph_components",
-    "events_time_to_convert",
-    "events_late_arrivals",
-    "parts_entity_resolution",
-    "users_cumulative_reach",
-    "parts_price_band_join",
-    "events_rollup_two_level",
-    "events_dp_type_counts",
-    "events_anomalous_sequences",
-    "events_multitouch_attribution",
-    "orders_repurchase_survival",
-    "events_twap_daily",
-    "events_burst_scores",
-    "revenue_by_priority_salted",
-    "revenue_share_of_parent",
-    "users_erasure_audit",
-    "events_ab_srm_check",
-    "events_dow_anova",
-    "revenue_price_volume_mix",
-    "parts_xyz_classification",
-    "parts_size_rank_semantics",
-    "incremental_join_view",
-    "bloom_prefilter_join",
-    "orders_frequent_triples",
-    "events_ks_test",
-    "revenue_decimal_exact",
-    "events_ab_cuped",
-    "orders_ols_by_segment",
-    "users_locf_daily",
-    "events_strict_funnel",
-    "events_mutual_information",
-]
-
-# Round 7 closes the verification backlog scheduled since round 4: the
-# window is now DERIVED MECHANICALLY (round-6 verdict item 2) by
-# ``expected_driver_window(7)`` below — never-verified gated first, then
-# never-verified rows-only, then stale-oracle re-checks (queries whose
-# every prior driver row predates their current hash gate, i.e. was
-# recorded ``err == "no_oracle"``), then padding with the stalest
-# hash-green re-checks (oldest latest-green round first, registration
-# order tiebreak).  The derivation runs over CORRECTNESS_r01..r06 only
-# (rounds < 7), so the list below stays reproducible after the r07
-# artifact lands; tests/test_plans.py re-derives it and fails on any
-# drift.  After r07 every one of the 250 registered queries has a
-# driver row and every gated query has a hash row under its current
-# oracle.  POST-BACKLOG POLICY: the registry UNFREEZES — new
-# registrations land ``defer=True`` and are fronted by the next
-# rotation under the same mechanical rule (a new registration has no
-# driver row, so it lands in tier 1/2 automatically).
-_DRIVER_WINDOW_R7 = [
-    # -- tier 1: never driver-verified, oracle-gated (registration order) --
-    "recsys_mmr_rerank",
-    "events_cusum_alarms",
-    "bpe_pair_counts",
-    "bpe_learned_merges",
-    "doc_bpe_segment_stats",
-    # -- tier 2: never driver-verified, rows-only by documented design --
-    "ann_topk_ivfpq_search",
-    "embedding_pca_spectrum",
-    "doc_quality_model_scores",
-    "rag_ingest_pipeline",
-    "doc_compression_signal",
-    "ann_topk_pca",
-    "embedding_kmeans_clusters",
-    "recsys_als_eval",
-    "events_audience_overlap_hll",
-    "events_cms_user_counts",
-    "events_value_quantiles_sketch",
-    # -- tier 3: stale-oracle re-checks — gated NOW, but every prior
-    #    driver row was recorded before the oracle existed (the r5/r6
-    #    hash-family upgrades; the published six plus
-    #    doc_rolling_fingerprints and embedding_dedup_survivors, which
-    #    the mechanical rule catches as the same class) --
-    "dedup_minhash_pairs",
-    "dedup_simhash_pairs",
-    "doc_rolling_fingerprints",
-    "dedup_minhash_survivors",
-    "embedding_dedup_survivors",
-    "dedup_cross_corpus_near",
-    "media_image_features",
-    "media_frame_sample",
-    # -- tier 4: stalest hash-green core re-checks (latest green round
-    #    ascending, registration order within) --
-    "stats_rate_more_recently_products",
-    "stats_average_products",
-    "ingest_ratings_csv",
-    "ingest_ratings_jsonl",
-    "filter_project_lineitem",
-    "distinct_users",
-    "q5_local_supplier_volume",
-    "semi_join_active",
-    "cross_join_region_nation",
-    "theta_self_join_parts",
-    "global_sort_orders",
-    "priority_scores",
-    "profile_lineitem",
-    "events_asof_prior_value",
-    "events_range_hourly_activity",
-    "rollup_revenue_region_nation",
-    "events_rolling_frames",
-    "sql_string_lifecycle",
-    "pivot_orders_status",
-    "events_json_props",
-    "outer_join_custdist",
-    "set_ops_order_status",
-    "events_lag_delta",
-    "doc_token_counts",
-    "dedup_ngram_jaccard",
-    "embedding_near_dup_pairs",
-]
-
-# Round 8: the first fully post-backlog rotation — the list below IS
-# ``expected_driver_window(8)`` verbatim (the r7 dry-run test rehearsed
-# exactly this derivation before the r07 artifact landed).  Tier 1: the
-# three round-7 LSH registrations (``since=7``, structurally excluded
-# from their own round's window), already replayed hash-green at sf0.01
-# locally.  Tier 2 (never-verified rows-only) and tier 4 (red-hash) are
-# empty.  Tier 3: the quantized/coarse-ANN family plus the composed
-# RAG pipeline, upgraded rows-only → hash-gated THIS round (r7 verdict
-# item 2 extended: the inlined-trained-codebooks/centroids oracles in
-# plans/ann_oracles.py) — every prior driver row predates the hash
-# gate, so the rule re-schedules them for hash-green rows.  Tier 5
-# pads with the 40 stalest hash-green re-checks: the
-# r1/r2-green streaming + media + sampling trio block, then the
-# r3-green TPC-H sweep and relational/LLM extensions (latest green
-# round ascending, registration order within).
-_DRIVER_WINDOW_R8 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=7 front) --
-    "embedding_hyperplane_lsh_pairs",
-    "embedding_cross_corpus_near",
-    "embedding_semantic_survivors",
-    # -- tier 3: stale-oracle re-checks (rows-only → hash-gated in r8) --
-    "ann_topk_ivf",
-    "embedding_near_dup_ivf",
-    "ann_topk_pq",
-    "ann_topk_ivfpq",
-    "ann_topk_ivfpq_search",
-    "rag_ingest_pipeline",
-    "embedding_kmeans_clusters",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "sample_docs_stratified",
-    "stream_log_filter_parse",
-    "stream_recent_ratings",
-    "events_tumbling_hourly",
-    "events_sliding_counts",
-    "media_metadata",
-    "q4_order_priority_exists",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q21_late_exclusive_suppliers",
-    "q22_idle_rich_customers",
-    "cube_lineitem_status",
-    "lineitem_moments",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_linestatus",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_part_supplier_cnt",
-    "q19_disjunctive_revenue",
-    "q2_min_cost_supplier",
-    "q20_part_qty_suppliers",
-    "global_row_numbers",
-    "incremental_user_stats",
-    "orders_price_histogram",
-    "events_funnel_conversion",
-    "events_latest_per_user",
-    "doc_top_terms_global",
-    "events_distinct_products_two_phase",
-    "events_value_quantiles_by_type",
-    "lineitem_measures_unpivot",
-    "user_event_type_profile",
-    "events_hourly_gapfill",
-    "ratings_kfold_sizes",
-    "events_weighted_sample",
-    "orders_snapshot_diff",
-]
-
-# Round-9 window == ``expected_driver_window(9)`` verbatim.  Tier 1:
-# embedding_incremental_survivors (since=8, the r8 incremental
-# semantic-dedup fold — structurally excluded from its own round's
-# window), already replayed hash-green at sf0.01 locally.  Tier 2
-# (never-verified rows-only) and tier 4 (red-hash) are empty.  Tier 3:
-# embedding_pca_spectrum, doc_quality_model_scores, and ann_topk_pca —
-# upgraded rows-only → hash-gated THIS round (r8 verdict item 3: the
-# inlined-constants technique extended to the deterministic
-# bounded-sample PCA basis and the Newton-fit logistic weights) — every
-# prior driver row predates the hash gate, so the rule re-schedules
-# them for hash-green rows.  Tier 5 pads with the 46 stalest hash-green
-# re-checks (latest green round ascending, registration order within a
-# round): the r3-green doc_clean_scrub/doc_pack_bins/embedding-stats
-# block, the r4-green relational/stats sweep, then r5-green LLM-corpus
-# entries through doc_quality_top_half.
-_DRIVER_WINDOW_R9 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=8 front) --
-    "embedding_incremental_survivors",
-    # -- tier 3: stale-oracle re-checks (rows-only → hash-gated in r9) --
-    "embedding_pca_spectrum",
-    "doc_quality_model_scores",
-    "ann_topk_pca",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "doc_clean_scrub",
-    "doc_pack_bins",
-    "embedding_label_centroids",
-    "embedding_vector_stats",
-    "events_view_purchase_attrib",
-    "events_view_conversion_outer",
-    "stats_rate_more_products",
-    "ingest_products_delimited",
-    "product_category_counts",
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "anti_join_unseen",
-    "rmse_vs_product_mean",
-    "topk_orders_per_customer",
-    "scalar_text_funcs",
-    "revenue_by_nation",
-    "sample_users_deterministic",
-    "orders_ntile_deciles",
-    "customer_acctbal_ranks",
-    "orders_intersect_both_status",
-    "revenue_grouping_sets",
-    "events_value_winsorized",
-    "events_type_transitions",
-    "events_value_zscores",
-    "events_user_retention_cohorts",
-    "lineitem_correlations",
-    "events_top_paths",
-    "ratings_next_item_examples",
-    "product_cooccurrence_pmi",
-    "ratings_session_examples",
-    "doc_quality_scores",
-    "doc_lang_id",
-    "dedup_exact_groups",
-    "ann_topk_bruteforce",
-    "doc_tfidf_top_terms",
-    "doc_decontamination",
-    "doc_repetition_signals",
-    "dedup_cross_corpus",
-    "mips_topk_dot",
-    "docs_shard_manifest",
-    "dedup_tfidf_cosine",
-    "doc_bm25_search",
-    "corpus_mixture_report",
-    "doc_decontaminated_survivors",
-    "sample_docs_exact_n",
-    "doc_quality_top_half",
-]
-
-# Round-10 window == ``expected_driver_window(10)`` verbatim — the
-# first rotation derived from a two-digit artifact (CORRECTNESS_r09 is
-# still single-digit; r10's own artifact will be the first the glob's
-# \d+ regex must catch, rehearsed by
-# test_two_digit_round_artifacts_are_parsed).  Tier 1: the seven
-# ``since=9`` registrations (media dHash pairs/survivors, audio
-# Haitsma-Kalker pairs, the KMV distinct/merge/overlap trio, CMS
-# replay) — structurally excluded from their own round's window, all
-# replayed hash-green at sf0.01 locally in r9.  Tiers 2-4 are empty
-# (no rows-only registrations since r9, no stale-oracle or red-hash
-# rows).  Tier 5 pads with the 43 stalest hash-green re-checks (latest
-# green round ascending, registration order within a round): the
-# r5-green corpus_drift_terms .. events_dau_wau block, then r6-green
-# entries through product_score_trend.
-_DRIVER_WINDOW_R10 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=9 front) --
-    "media_near_dup_pairs",
-    "media_dedup_survivors",
-    "audio_near_dup_pairs",
-    "approx_users_kmv_merge",
-    "events_type_overlap_kmv",
-    "approx_distinct_users_kmv",
-    "events_cms_replay_counts",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "corpus_drift_terms",
-    "itemcf_similarities",
-    "stream_recs_batch",
-    "events_session_windows",
-    "ratings_negative_samples",
-    "product_wilson_ranking",
-    "dedup_substring_overlap",
-    "doc_cdc_chunks",
-    "doc_collocations_pmi",
-    "doc_hybrid_search_rrf",
-    "doc_phrase_search",
-    "stream_recs_cold_start",
-    "media_dedup_exact",
-    "suppliers_covering_all_types",
-    "customer_rfm_scores",
-    "events_median_gap",
-    "events_dau_wau",
-    "orders_basket_lift",
-    "doc_boilerplate_ngrams",
-    "doc_token_entropy",
-    "corpus_vocab_diversity",
-    "docs_mixture_resample",
-    "doc_length_curriculum",
-    "events_scd2_intervals",
-    "events_ohlc_hourly",
-    "label_centroid_similarity",
-    "lineitem_integrity_report",
-    "product_graph_pagerank",
-    "corpus_clean_pipeline",
-    "orders_yoy_growth",
-    "product_popularity_decayed",
-    "corpus_zipf_fit",
-    "usercf_similarities",
-    "product_graph_distances",
-    "events_cdc_final_state",
-    "events_ab_test_zscore",
-    "part_name_fuzzy_pairs",
-    "events_value_mad_outliers",
-    "events_ema_daily",
-    "orders_open_backlog",
-    "orders_target_encoding",
-    "events_value_psi",
-    "product_score_trend",
-]
-
-# Round-11 window == ``expected_driver_window(11)`` verbatim.  Tier 1:
-# the six ``since=10`` registrations (chunk dedup, video near-dup, the
-# two recall reports, key-skew profile, histogram-sketch quantiles) —
-# structurally excluded from their own round's window, all replayed
-# hash-green at sf0.01 locally in r10.  Tiers 2-4 are empty (no
-# rows-only registrations since r10, no stale-oracle or red-hash
-# rows).  Tier 5 pads with the 44 stalest hash-green re-checks (latest
-# green round ascending, registration order within a round): the
-# r5-green orders_benford_digits .. product_graph_triangles block,
-# then r6-green entries through revenue_by_priority_salted.
-_DRIVER_WINDOW_R11 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=10 front) --
-    "dedup_lsh_recall_report",
-    "ann_recall_report",
-    "doc_chunk_dedup_docs",
-    "video_near_dup_pairs",
-    "events_key_skew_profile",
-    "events_value_quantiles_histsketch",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "orders_benford_digits",
-    "events_seasonality_profile",
-    "corpus_export_pipeline",
-    "recsys_popularity_eval",
-    "events_k_anonymity",
-    "doc_oov_rate",
-    "recsys_itemcf_eval",
-    "users_churn_labels",
-    "events_pit_training_set",
-    "recsys_beyond_accuracy",
-    "product_graph_triangles",
-    "events_session_metrics",
-    "doc_perplexity_report",
-    "orders_cohort_ltv",
-    "supplier_scorecard",
-    "events_forecast_backtest",
-    "orders_duplicate_suspects",
-    "events_power_users_pareto",
-    "doc_readability_report",
-    "parts_abc_classification",
-    "doc_langid_confusion",
-    "users_bot_signals",
-    "customer_segment_migration",
-    "users_growth_accounting",
-    "embedding_outlier_scores",
-    "doc_duplication_profile",
-    "events_error_pchart",
-    "parts_skyline",
-    "events_audience_overlap",
-    "orders_chi2_status_priority",
-    "product_graph_components",
-    "events_time_to_convert",
-    "events_late_arrivals",
-    "parts_entity_resolution",
-    "users_cumulative_reach",
-    "parts_price_band_join",
-    "events_rollup_two_level",
-    "events_dp_type_counts",
-    "events_anomalous_sequences",
-    "events_multitouch_attribution",
-    "orders_repurchase_survival",
-    "events_twap_daily",
-    "events_burst_scores",
-    "revenue_by_priority_salted",
-]
-
-# Round-12 window == ``expected_driver_window(12)`` verbatim.  Tier 1:
-# the four ``since=11`` registrations (winnowing fingerprints/overlap,
-# the adaptive salted join, z-order keys) — structurally excluded from
-# their own round's window, all replayed hash-green at sf0.01 locally
-# in r11.  Tiers 2-4 are empty (no rows-only registrations since r11,
-# no stale-oracle or red-hash rows).  Tier 5 pads with the 46 stalest
-# hash-green re-checks (latest green round ascending, registration
-# order within a round): the r6-green block from
-# revenue_share_of_parent onward, then r7-green entries through
-# doc_rolling_fingerprints.
-_DRIVER_WINDOW_R12 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=11 front) --
-    "doc_winnowing_fingerprints",
-    "doc_winnowing_overlap",
-    "events_salted_join_adaptive",
-    "events_zorder_keys",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "revenue_share_of_parent",
-    "users_erasure_audit",
-    "events_ab_srm_check",
-    "events_dow_anova",
-    "revenue_price_volume_mix",
-    "parts_xyz_classification",
-    "parts_size_rank_semantics",
-    "incremental_join_view",
-    "bloom_prefilter_join",
-    "orders_frequent_triples",
-    "events_ks_test",
-    "revenue_decimal_exact",
-    "events_ab_cuped",
-    "orders_ols_by_segment",
-    "users_locf_daily",
-    "events_strict_funnel",
-    "events_mutual_information",
-    "stats_rate_more_recently_products",
-    "stats_average_products",
-    "ingest_ratings_csv",
-    "ingest_ratings_jsonl",
-    "filter_project_lineitem",
-    "distinct_users",
-    "q5_local_supplier_volume",
-    "semi_join_active",
-    "cross_join_region_nation",
-    "theta_self_join_parts",
-    "global_sort_orders",
-    "priority_scores",
-    "profile_lineitem",
-    "events_asof_prior_value",
-    "events_range_hourly_activity",
-    "rollup_revenue_region_nation",
-    "events_rolling_frames",
-    "sql_string_lifecycle",
-    "pivot_orders_status",
-    "events_json_props",
-    "outer_join_custdist",
-    "set_ops_order_status",
-    "events_lag_delta",
-    "doc_token_counts",
-    "dedup_minhash_pairs",
-    "dedup_ngram_jaccard",
-    "dedup_simhash_pairs",
-    "embedding_near_dup_pairs",
-    "doc_rolling_fingerprints",
-]
-
-# Round-13 window == ``expected_driver_window(13)`` verbatim.  Tier 1:
-# the four ``since=12`` registrations (cross-corpus winnowing pair +
-# survivors, the embedding-LSH recall gate, the adaptive salted
-# aggregation) — structurally excluded from their own round's window,
-# all replayed hash-green at the driver's sf0.01 locally in r12 (and
-# independently by the r12 judge).  Tiers 2-4 are empty (no rows-only
-# registrations since r12, no stale-oracle or red-hash rows).  Tier 5
-# pads with the 46 stalest hash-green re-checks (latest green round
-# ascending, registration order within a round): the remaining
-# r7-green block from dedup_minhash_survivors onward, then the
-# r8-green TPC-H tail through embedding_near_dup_ivf.
-_DRIVER_WINDOW_R13 = [
-    # -- tier 1: never driver-verified, oracle-gated (since=12 front) --
-    "doc_winnowing_cross_corpus",
-    "doc_winnowing_cross_corpus_survivors",
-    "embedding_lsh_recall_report",
-    "events_salted_agg_adaptive",
-    # -- tier 5 padding: stalest hash-green re-checks --
-    "dedup_minhash_survivors",
-    "embedding_dedup_survivors",
-    "dedup_cross_corpus_near",
-    "recsys_mmr_rerank",
-    "media_image_features",
-    "media_frame_sample",
-    "events_cusum_alarms",
-    "bpe_pair_counts",
-    "bpe_learned_merges",
-    "doc_bpe_segment_stats",
-    "q4_order_priority_exists",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q21_late_exclusive_suppliers",
-    "q22_idle_rich_customers",
-    "cube_lineitem_status",
-    "lineitem_moments",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_linestatus",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_part_supplier_cnt",
-    "q19_disjunctive_revenue",
-    "q2_min_cost_supplier",
-    "q20_part_qty_suppliers",
-    "global_row_numbers",
-    "incremental_user_stats",
-    "orders_price_histogram",
-    "events_funnel_conversion",
-    "events_latest_per_user",
-    "doc_top_terms_global",
-    "events_distinct_products_two_phase",
-    "events_value_quantiles_by_type",
-    "lineitem_measures_unpivot",
-    "user_event_type_profile",
-    "events_hourly_gapfill",
-    "ratings_kfold_sizes",
-    "events_weighted_sample",
-    "orders_snapshot_diff",
-    "ann_topk_ivf",
-    "embedding_near_dup_ivf",
-]
-
-# The window the driver verifies THIS round; tests pin invariants
-# against this alias so rotations touch one assignment.
-DRIVER_WINDOW = _DRIVER_WINDOW_R13
-
-# Round 5 fronted the verification backlog (round-4 verdict item 1):
-# 47 oldest never-driver-verified oracle-gated queries in registration
-# order, plus product_graph_pagerank (upgraded rows-only → hash-gated
-# this round, never driver-verified) — the 48-entry unverified block —
-# then doc_cdc_chunks and dedup_substring_overlap (also upgraded to
-# hash-gated this round; their r04 driver rows were rows-only, so they
-# ride the re-check tail to earn a hash-green row for the new oracles).
-# Displaced to the round-6 front: events_session_metrics,
-# doc_perplexity_report, orders_cohort_ltv plus the remaining 48
-# never-verified gated round-4 additions; the never-verified rows-only
-# entries trail in round 7.  Registry growth is frozen this round
-# (verdict item 2): any new registration carries defer=True and joins
-# the round-7+ queue.  tests/test_registry_oracle.py replays every
-# deferred query at driver scale each round in the meantime.
-_DRIVER_WINDOW_R5 = [
-    # -- never driver-verified: oracle-gated, oldest-first --
-    "ratings_negative_samples",
-    "product_wilson_ranking",
-    "doc_collocations_pmi",
-    "doc_hybrid_search_rrf",
-    "doc_phrase_search",
-    "stream_recs_cold_start",
-    "media_dedup_exact",
-    "suppliers_covering_all_types",
-    "customer_rfm_scores",
-    "events_median_gap",
-    "events_dau_wau",
-    "orders_basket_lift",
-    "doc_boilerplate_ngrams",
-    "doc_token_entropy",
-    "corpus_vocab_diversity",
-    "docs_mixture_resample",
-    "doc_length_curriculum",
-    "events_scd2_intervals",
-    "events_ohlc_hourly",
-    "label_centroid_similarity",
-    "lineitem_integrity_report",
-    "corpus_clean_pipeline",
-    "orders_yoy_growth",
-    "product_popularity_decayed",
-    "corpus_zipf_fit",
-    "usercf_similarities",
-    "product_graph_distances",
-    "events_cdc_final_state",
-    "events_ab_test_zscore",
-    "part_name_fuzzy_pairs",
-    "events_value_mad_outliers",
-    "events_ema_daily",
-    "orders_open_backlog",
-    "orders_target_encoding",
-    "events_value_psi",
-    "product_score_trend",
-    "orders_benford_digits",
-    "events_seasonality_profile",
-    "corpus_export_pipeline",
-    "recsys_popularity_eval",
-    "events_k_anonymity",
-    "doc_oov_rate",
-    "recsys_itemcf_eval",
-    "users_churn_labels",
-    "events_pit_training_set",
-    "recsys_beyond_accuracy",
-    "product_graph_triangles",
-    # -- never driver-verified: upgraded rows-only → hash-gated (r5) --
-    "product_graph_pagerank",
-    # -- re-checks with r04 rows-only driver rows: upgraded to
-    #    hash-gated this round, fronted to earn hash-green rows --
-    "doc_cdc_chunks",
-    "dedup_substring_overlap",
-]
-
-# Round-4 window, kept for artifact provenance (CORRECTNESS_r04.json is
-# the prefix of this list) and for the rotation-derivation test.
-_DRIVER_WINDOW_R4 = [
-    # -- never driver-verified (r01..r03): oracle-gated round-3 additions --
-    "product_category_counts",
-    "orders_ntile_deciles",
-    "customer_acctbal_ranks",
-    "orders_intersect_both_status",
-    "revenue_grouping_sets",
-    "events_value_winsorized",
-    "events_type_transitions",
-    "events_value_zscores",
-    "events_user_retention_cohorts",
-    "lineitem_correlations",
-    "events_top_paths",
-    "ratings_next_item_examples",
-    "product_cooccurrence_pmi",
-    "ratings_session_examples",
-    "doc_decontamination",
-    "doc_repetition_signals",
-    "dedup_cross_corpus",
-    "mips_topk_dot",
-    "docs_shard_manifest",
-    "dedup_tfidf_cosine",
-    "doc_bm25_search",
-    "corpus_mixture_report",
-    "doc_decontaminated_survivors",
-    "sample_docs_exact_n",
-    "doc_quality_top_half",
-    "corpus_drift_terms",
-    # -- never driver-verified: rows-only round-3 additions --
-    "als_implicit_recs",
-    "ann_topk_pq",
-    "dedup_cross_corpus_near",
-    "dedup_substring_overlap",
-    "ann_topk_ivfpq",
-    "doc_cdc_chunks",
-    # -- core re-checks padding the window to 50 (one per family) --
-    "q1_pricing_summary",
-    "q3_shipping_priority",
-    "revenue_by_nation",
-    "topk_orders_per_customer",
-    "rmse_vs_product_mean",
-    "anti_join_unseen",
-    "scalar_text_funcs",
-    "stats_rate_more_products",
-    "sample_users_deterministic",
-    "ingest_products_delimited",
-    "stream_recs_batch",
-    "events_session_windows",
-    "itemcf_similarities",
-    "dedup_exact_groups",
-    "ann_topk_bruteforce",
-    "doc_lang_id",
-    "doc_quality_scores",
-    "doc_tfidf_top_terms",
-]
-
-# Round-3 window, kept for artifact provenance (CORRECTNESS_r03.json is
-# the prefix of this list) and for the rotation-derivation test.
-_DRIVER_WINDOW_R3 = [
-    # -- never driver-verified: full TPC-H sweep (round 2) --
-    "q2_min_cost_supplier",
-    "q4_order_priority_exists",
-    "q6_revenue_forecast",
-    "q7_volume_shipping",
-    "q8_market_share",
-    "q9_product_profit",
-    "q10_returned_items",
-    "q11_important_parts",
-    "q12_priority_linestatus",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_part_supplier_cnt",
-    "q17_small_quantity_revenue",
-    "q18_large_volume_customers",
-    "q19_disjunctive_revenue",
-    "q20_part_qty_suppliers",
-    "q21_late_exclusive_suppliers",
-    "q22_idle_rich_customers",
-    # -- never driver-verified: relational/maintenance extensions --
-    "cube_lineitem_status",
-    "lineitem_moments",
-    "global_row_numbers",
-    "incremental_user_stats",
-    "orders_price_histogram",
-    "events_funnel_conversion",
-    "events_latest_per_user",
-    "events_distinct_products_two_phase",
-    "events_value_quantiles_by_type",
-    "lineitem_measures_unpivot",
-    "user_event_type_profile",
-    "events_hourly_gapfill",
-    "ratings_kfold_sizes",
-    "events_weighted_sample",
-    "orders_snapshot_diff",
-    "events_view_purchase_attrib",
-    "events_view_conversion_outer",
-    # -- never driver-verified: LLM-pipeline extensions --
-    "doc_top_terms_global",
-    "doc_clean_scrub",
-    "doc_pack_bins",
-    "embedding_label_centroids",
-    "embedding_vector_stats",
-    # -- never driver-verified: rows-only checks --
-    "approx_users_hll_merge",
-    "embedding_dedup_survivors",
-    "media_image_features",
-    "media_frame_sample",
-    # -- r01 err row, fixed since (scalar q50/q90/q99) --
-    "approx_distinct_users",
-    # -- core re-checks padding the window to 50 --
-    "stream_recs_batch",
-    "q1_pricing_summary",
-    "stats_rate_more_products",
-    "dedup_exact_groups",
-    "ann_topk_bruteforce",
-]
+# Driver window.  The external driver verifies exactly the 50-entry
+# PREFIX of ``all_queries()`` each round and records the result as
+# CORRECTNESS_r{N}.json.  The window is derived from those committed
+# artifacts (:func:`expected_driver_window`); ``all_queries()`` order
+# carries no semantics beyond this prefix.  The package ``__init__``
+# assigns DRIVER_WINDOW once every query module has registered.
+DRIVER_WINDOW: list[str] = []
 
 
-def expected_driver_window(
-    round_no: int, artifact_dir: str | None = None, size: int = 50
-) -> list[str]:
-    """Derive the round-``round_no`` driver window from the committed
-    CORRECTNESS_r{N}.json artifacts with N < ``round_no`` — the window
-    composition rule, encoded (round-6 verdict item 2) instead of prose:
-
-    1. never driver-verified, oracle-gated (registration order);
-    2. never driver-verified, rows-only (registration order);
-    3. stale-oracle re-checks: gated NOW but every recorded driver row
-       carries ``err == "no_oracle"`` (the row predates the hash gate);
-    4. red-hash re-checks (round-7 ADVICE): gated queries with recorded
-       driver rows but NO hash-green row and not all ``no_oracle`` —
-       i.e. a hash gate that once FAILED (or errored) at the driver and
-       would otherwise never be rescheduled by tiers 1-3 (no green row
-       exists for the padding tier to pick up either);
-    5. padding to ``size``: hash-green re-checks, stalest first (latest
-       green round ascending, registration order within a round).
-
-    Deterministic given the committed artifacts, so
-    ``tests/test_plans.py`` asserts ``DRIVER_WINDOW`` equals this
-    derivation exactly — a rotation that drifts from the rule fails CI
-    rather than silently re-verifying old queries.
-    """
+def _correctness_artifacts(artifact_dir: str | None) -> list[tuple[int, str]]:
+    """(round, path) of every committed CORRECTNESS_r{N}.json."""
     import glob
-    import json
     import os
     import re
 
@@ -905,14 +125,51 @@ def expected_driver_window(
         artifact_dir = os.path.dirname(
             os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
         )
-    seen: dict[str, list[tuple[int, dict]]] = {}
+    out = []
     for path in sorted(glob.glob(os.path.join(artifact_dir, "CORRECTNESS_r*.json"))):
         m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if m is None or int(m.group(1)) >= round_no:
+        if m is not None:
+            out.append((int(m.group(1)), path))
+    return out
+
+
+def next_driver_window() -> list[str]:
+    """The window for the round after the newest committed artifact."""
+    rounds = [r for r, _ in _correctness_artifacts(None)]
+    return expected_driver_window(max(rounds, default=0) + 1)
+
+
+def expected_driver_window(
+    round_no: int, artifact_dir: str | None = None, size: int = 50
+) -> list[str]:
+    """Derive the round-``round_no`` driver window from the committed
+    CORRECTNESS_r{N}.json artifacts with N < ``round_no`` — the window
+    composition rule:
+
+    1. never driver-verified, oracle-gated (registration order);
+    2. never driver-verified, rows-only (registration order);
+    3. stale-oracle re-checks: gated NOW but every recorded driver row
+       carries ``err == "no_oracle"`` (the row predates the hash gate);
+    4. red-hash re-checks: gated queries with recorded
+       driver rows but NO hash-green row and not all ``no_oracle`` —
+       i.e. a hash gate that once FAILED (or errored) at the driver and
+       would otherwise never be rescheduled by tiers 1-3 (no green row
+       exists for the padding tier to pick up either);
+    5. padding to ``size``: hash-green re-checks, stalest first (latest
+       green round ascending, registration order within a round).
+
+    Deterministic given the committed artifacts; ``DRIVER_WINDOW`` is
+    this derivation for the next round (:func:`next_driver_window`).
+    """
+    import json
+
+    seen: dict[str, list[tuple[int, dict]]] = {}
+    for rnd, path in _correctness_artifacts(artifact_dir):
+        if rnd >= round_no:
             continue
         with open(path) as f:
             for name, row in json.load(f).items():
-                seen.setdefault(name, []).append((int(m.group(1)), row))
+                seen.setdefault(name, []).append((rnd, row))
     # same-round registrations (since == round_no) front the NEXT
     # rotation, not their own — they cannot appear in a window that was
     # published before they existed

@@ -42,28 +42,6 @@ from myrecommendsystem_spark.operators.dedup import connected_components
 
 _SURVIVOR_SCHEMA = "vec_id bigint, embedding array<double>, arrived_batch int"
 
-# Per-cycle wall-clock of the LAST incremental_semantic_survivors call
-# (one entry per contributing batch fold, plus the final survivor
-# materialization).  The fold is eager per step (localCheckpoints), so
-# these boundaries measure real work; bench.py copies the list into
-# BENCH_DETAIL's "cycles" block so the three-cycle headline row stops
-# reading as one slow query and regression attribution lands on the
-# cycle that moved (round-11 verdict item 7).  Mutated IN PLACE so
-# importers' references stay live.
-LAST_CYCLE_SECONDS: list[float] = []
-
-
-def _fold_delta_checkpoints() -> bool:
-    """Measurement switch for the r14 fold-accumulator experiment:
-    per-step DELTA checkpoints + a lazy union accumulator (True,
-    default) vs re-checkpointing the full accumulated survivor set
-    every step (the r13 shape; MRS_FOLD_DELTA=0 restores it for
-    interleaved A/B)."""
-    import os
-
-    return os.environ.get("MRS_FOLD_DELTA", "1") != "0"
-
-
 def _eligible(batch: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Zero-norm vectors are ineligible on every path of the LSH family
     (NaN cosine — see similarity._hp_prepare); they never match and
@@ -148,9 +126,9 @@ def incremental_semantic_survivors(
     (semantic_ingest_step, which re-prepares per call) measured 32 s at
     sf0.1 against ~17 s for this form: seven prepare calls collapse to
     three, and the signature pass never re-runs over the growing
-    survivor set.  Accumulated base+bands are localCheckpointed per
-    step (the recsys-eval materialized-view discipline; without it the
-    plan doubles per batch).  Round 13 cut the fold's fixed job count
+    survivor set.  Each step's surviving base+bands are
+    localCheckpointed as a delta (the recsys-eval materialized-view
+    discipline; without it the plan doubles per batch).  Round 13 cut the fold's fixed job count
     (the old structure ran ~94 scheduler jobs at bench scale — each an
     eager barrier at ANY scale): ONE tagged-union dim probe replaces K
     per-batch probe jobs, the survivor roster rides the base
@@ -162,14 +140,11 @@ def incremental_semantic_survivors(
     the same accumulation to parquet instead
     (:func:`run_semantic_dedup_stream`).
     """
-    import time
-
     from functools import reduce
 
     if not batches:
         raise ValueError("incremental_semantic_survivors: no batches")
     spark = batches[0].sparkSession
-    del LAST_CYCLE_SECONDS[:]
     # ONE dim-probe job for the whole fold (r13 optimization): the
     # per-batch `_hp_prepare` probe is a full Spark job each, and the
     # fold ran K of them.  A single tagged union reproduces the exact
@@ -200,7 +175,6 @@ def incremental_semantic_survivors(
     surv_sig = None
     deltas: list[DataFrame] = []
     for b, batch in enumerate(batches):
-        _cycle_t0 = time.perf_counter()
         dim = batch_dims.get(b) or 0
         if dim <= 0:  # empty or 0-dim batch: nothing can survive
             continue
@@ -243,44 +217,23 @@ def incremental_semantic_survivors(
         keep_sig = gated.join(dropped, "id", "left_anti").withColumn(
             "arrived_batch", F.lit(b).cast("int")
         )
-        if _fold_delta_checkpoints():
-            # r14 variant: checkpoint only THIS step's survivors (the
-            # delta) and accumulate a lazy union of the materialized
-            # deltas — the old shape re-checkpointed the ENTIRE
-            # accumulated set every step (O(K·total) checkpoint bytes
-            # over a K-batch fold; the delta form writes each survivor
-            # row exactly once).  Consumers are unchanged: the union of
-            # checkpointed deltas scans pinned blocks, no recompute.
-            delta = keep_sig.localCheckpoint(eager=True)
-            deltas.append(delta)
-            surv_sig = reduce(DataFrame.unionByName, deltas)
-            release_checkpoint(sig, matched)
-        else:
-            prev = surv_sig
-            # keep_sig has exactly one consumer (this union), so it stays
-            # lazy and materializes inside the accumulator checkpoint
-            surv_sig = (
-                keep_sig if prev is None else prev.unionByName(keep_sig)
-            ).localCheckpoint(eager=True)
-            # every step output is materialized now → free the superseded
-            # accumulator checkpoint and the step-local ones (round-8
-            # ADVICE: without this, pinned block storage grows per batch).
-            release_checkpoint(sig, matched)
-            if prev is not None:
-                release_checkpoint(prev)
-        LAST_CYCLE_SECONDS.append(time.perf_counter() - _cycle_t0)
+        # checkpoint only this step's survivors (the delta) and
+        # accumulate a lazy union of the materialized deltas: each
+        # survivor row is written exactly once, and consumers of the
+        # union scan pinned blocks, no recompute
+        deltas.append(keep_sig.localCheckpoint(eager=True))
+        surv_sig = reduce(DataFrame.unionByName, deltas)
+        release_checkpoint(sig, matched)
     if surv_sig is None:
         return spark.createDataFrame([], "vec_id bigint, arrived_batch int")
     # materialize the result, then release the final accumulator — the
     # only blocks that outlive the call are the (small) result's own
-    _fin_t0 = time.perf_counter()
     out = (
         surv_sig.select(F.col("id").alias("vec_id"), "arrived_batch")
         .orderBy("vec_id")
         .localCheckpoint(eager=True)
     )
     release_checkpoint(surv_sig, *deltas)
-    LAST_CYCLE_SECONDS.append(time.perf_counter() - _fin_t0)
     return out
 
 

@@ -274,6 +274,25 @@ def test_bm25_ranks_rare_term_doc_first(spark):
     assert {r.doc_id for r in out} == {1, 2, 3}  # doc 4 matches nothing
 
 
+def test_bm25_repeated_query_term_scores_as_once(spark):
+    """A repeated query term counts once: it must not double the term's
+    df or add its tf contribution twice."""
+    from myrecommendsystem_spark.functions import text as TXT
+
+    docs = _docs(
+        spark,
+        [
+            (1, "rareword filler filler filler"),
+            (2, "common common common common"),
+            (3, "common filler other words"),
+            (4, "unrelated text entirely here"),
+        ],
+    )
+    once = TXT.bm25_search(docs, ["rareword", "common"], k=4).collect()
+    twice = TXT.bm25_search(docs, ["common", "rareword", "common"], k=4).collect()
+    assert [tuple(r) for r in twice] == [tuple(r) for r in once]
+
+
 def test_bm25_empty_query_returns_empty(spark):
     """Round-3 advice: an empty query list must yield an empty top-k, not
     a schema-inference ValueError from createDataFrame([])."""

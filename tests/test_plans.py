@@ -366,27 +366,13 @@ def test_snapshot_diff_full_outer_hash_join(spark):
     assert "Python" not in plan
 
 
-def _correctness_artifacts():
-    """Committed CORRECTNESS_r{N}.json paths — the ``r*`` glob with a
-    regex round filter, NOT ``r0*`` (round-7 ADVICE: the single-digit
-    glob silently drops artifacts from round 10 on)."""
-    import glob
-    import re
-
-    return [
-        p
-        for p in sorted(glob.glob(str(REPO_ROOT / "CORRECTNESS_r*.json")))
-        if re.search(r"CORRECTNESS_r(\d+)\.json$", p)
-    ]
-
-
 def _driver_verified_names():
     """Names with a recorded driver row in any committed CORRECTNESS
     artifact — the ground truth the window rotation is derived from."""
     import json
 
     seen = set()
-    for path in _correctness_artifacts():
+    for _, path in registry._correctness_artifacts(str(REPO_ROOT)):
         with open(path) as f:
             seen |= set(json.load(f))
     return seen
@@ -400,20 +386,6 @@ def test_driver_window_rotation_is_exact_prefix():
     assert len(registry.DRIVER_WINDOW) == 50
     assert names[:50] == registry.DRIVER_WINDOW
     assert len(names) == len(set(names))
-
-
-def test_driver_window_matches_encoded_composition_rule():
-    """Round-6 verdict item 2: the window composition rule lives in code
-    (``registry.expected_driver_window``), not prose.  The committed
-    window must equal the mechanical derivation from the CORRECTNESS
-    artifacts of rounds < 8 exactly: never-verified gated, then
-    never-verified rows-only, then stale-oracle re-checks, then red-hash
-    re-checks (round-7 ADVICE tier), then the stalest hash-green
-    re-checks.  The derivation is pinned to round 13, so this stays
-    reproducible after the r13 artifact lands; the NEXT rotation bumps
-    the round number and re-derives."""
-    derived = registry.expected_driver_window(13, artifact_dir=str(REPO_ROOT))
-    assert registry.DRIVER_WINDOW == derived
 
 
 def test_driver_window_derived_from_correctness_artifacts():
@@ -442,19 +414,22 @@ def test_driver_window_derived_from_correctness_artifacts():
 
 
 def test_next_round_window_derivation_is_ready(tmp_path):
-    """Dry-run the r14 rotation before it happens: with a synthetic r13
-    artifact covering the committed window (hash rows for gated
-    members, rows-only rows for the rest), expected_driver_window(14)
-    must front exactly the round-13 registrations (``since=13`` — no
-    driver row can exist for them by construction), gated before
-    rows-only, then pad with hash-green re-checks to exactly 50 unique
-    real names.  If this breaks, next round's rotation breaks."""
+    """Dry-run the next rotation: with a synthetic artifact for the
+    current window's round (hash rows for gated members, rows-only rows
+    for the rest), the derivation for the round after must front
+    exactly that round's registrations (no driver row can exist for
+    them by construction), gated before rows-only, then pad with
+    hash-green re-checks to exactly 50 unique real names.  If this
+    breaks, the next round's window breaks."""
     import json
     import shutil
 
     gated = {s.name for s in registry.REGISTRY if s.oracle is not None}
-    for p in map(Path, _correctness_artifacts()):
-        shutil.copy(p, tmp_path / p.name)
+    artifacts = registry._correctness_artifacts(str(REPO_ROOT))
+    for _, path in artifacts:
+        shutil.copy(path, tmp_path)
+    current = max(r for r, _ in artifacts) + 1
+    assert registry.DRIVER_WINDOW == registry.expected_driver_window(current)
     fake = {
         name: (
             {"hash_match": True, "rows_match": True, "err": None}
@@ -463,168 +438,19 @@ def test_next_round_window_derivation_is_ready(tmp_path):
         )
         for name in registry.DRIVER_WINDOW
     }
-    (tmp_path / "CORRECTNESS_r13.json").write_text(json.dumps(fake))
-    win14 = registry.expected_driver_window(14, artifact_dir=str(tmp_path))
+    (tmp_path / f"CORRECTNESS_r{current}.json").write_text(json.dumps(fake))
+    nxt = registry.expected_driver_window(current + 1, str(tmp_path))
     names = {s.name for s in registry.REGISTRY}
-    expected_front = [
-        s.name for s in registry.REGISTRY if s.since == 13 and s.oracle is not None
-    ] + [s.name for s in registry.REGISTRY if s.since == 13 and s.oracle is None]
-    assert len(win14) == 50
-    assert len(set(win14)) == 50
-    assert set(win14) <= names
-    assert win14[: len(expected_front)] == expected_front
+    new = [s for s in registry.REGISTRY if s.since == current]
+    expected_front = [s.name for s in new if s.oracle is not None] + [
+        s.name for s in new if s.oracle is None
+    ]
+    assert len(nxt) == 50
+    assert len(set(nxt)) == 50
+    assert set(nxt) <= names
+    assert nxt[: len(expected_front)] == expected_front
     # every padding entry is a genuine re-check with a hash-green row
-    assert all(n in names for n in win14[len(expected_front) :])
-
-
-def test_bench_contended_capture_cannot_touch_record(monkeypatch):
-    """Round-11 verdict item 1: a contended sweep (own calib_ratio above
-    the escalation bar vs a committed quiet-host pin) has clobbered the
-    committed BENCH_DETAIL.json file-of-record twice — once all the way
-    into a commit, silently laxing the re-run pass.  The guard must be
-    structural: such a run targets BENCH_DETAIL_contended.json (and a
-    _contended versioned copy), never the record; a quiet run, a run
-    with no committed pin, and an explicit MRS_BENCH_FORCE_RECORD=1
-    override all still target the record."""
-    import bench
-
-    monkeypatch.delenv("MRS_BENCH_FORCE_RECORD", raising=False)
-    # contended vs a committed pin → side file only
-    path, suffix = bench.detail_record_paths("/x", 1.547, 2.0)
-    assert path == "/x/BENCH_DETAIL_contended.json" and suffix == "_contended"
-    # quiet host → the record
-    path, suffix = bench.detail_record_paths("/x", 1.012, 2.0)
-    assert path == "/x/BENCH_DETAIL.json" and suffix == ""
-    # exactly at the bar is not contended (the bar is strict-greater)
-    path, _ = bench.detail_record_paths("/x", bench.CONTENTION_BAR, 2.0)
-    assert path == "/x/BENCH_DETAIL.json"
-    # no committed pin → this run establishes the record
-    path, suffix = bench.detail_record_paths("/x", 1.0, None)
-    assert path == "/x/BENCH_DETAIL.json" and suffix == ""
-    # deliberate override for re-establishing a record
-    monkeypatch.setenv("MRS_BENCH_FORCE_RECORD", "1")
-    path, suffix = bench.detail_record_paths("/x", 9.9, 2.0)
-    assert path == "/x/BENCH_DETAIL.json" and suffix == ""
-
-
-def test_bench_late_onset_contention_cannot_touch_record(monkeypatch):
-    """Round-12 verdict item 2: the driver's r12 round-close sweep
-    started at a quiet probe (ratio 1.089) but ran 29% over the record
-    with 50/189 over-bar re-runs — sustained steal that began AFTER
-    calibration walked past the probe-only guard and overwrote the
-    working-tree record.  The guard must also route on the sweep's own
-    rerun-flag fraction: a late-onset-contention capture (quiet probe,
-    inflated timings) targets the _contended side file, never
-    BENCH_DETAIL.json."""
-    import bench
-
-    monkeypatch.delenv("MRS_BENCH_FORCE_RECORD", raising=False)
-    # the driver's r12 capture: quiet start probe, 50/189 entries flagged
-    path, suffix = bench.detail_record_paths("/x", 1.089, 0.188, 50 / 189)
-    assert path == "/x/BENCH_DETAIL_contended.json" and suffix == "_contended"
-    # a quiet sweep flagging a handful of entries still targets the record
-    path, suffix = bench.detail_record_paths("/x", 1.089, 0.188, 4 / 188)
-    assert path == "/x/BENCH_DETAIL.json" and suffix == ""
-    # exactly at the flag bar is not contended (strict-greater)
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, bench.RERUN_FLAG_BAR)
-    assert path == "/x/BENCH_DETAIL.json"
-    # no committed pin → this run establishes the record even if noisy
-    path, _ = bench.detail_record_paths("/x", 1.0, None, 0.5)
-    assert path == "/x/BENCH_DETAIL.json"
-    # the force override wins over both signals
-    monkeypatch.setenv("MRS_BENCH_FORCE_RECORD", "1")
-    path, _ = bench.detail_record_paths("/x", 9.9, 0.188, 0.9)
-    assert path == "/x/BENCH_DETAIL.json"
-
-
-def test_bench_uniform_inflation_cannot_touch_record(monkeypatch):
-    """Round 13, caught in production the day the flag-frac guard
-    landed: a sweep with quiet probes (0.946/0.884) and flag-frac
-    0.085 ran its 188 recorded entries at MEDIAN ratio 1.176 with zero
-    faster — uniform inflation sits under every per-entry re-run bar
-    AND the flag-frac bar.  The median-ratio signal must route such a
-    capture to the _contended side file."""
-    import bench
-
-    monkeypatch.delenv("MRS_BENCH_FORCE_RECORD", raising=False)
-    # the production capture: quiet probes, low flag frac, median 1.176
-    path, suffix = bench.detail_record_paths("/x", 0.946, 0.188, 0.085, 1.176)
-    assert path == "/x/BENCH_DETAIL_contended.json" and suffix == "_contended"
-    # a genuinely quiet sweep (median ~1.0) targets the record
-    path, suffix = bench.detail_record_paths("/x", 0.946, 0.188, 0.085, 1.02)
-    assert path == "/x/BENCH_DETAIL.json" and suffix == ""
-    # exactly at the record-replacement bar is not contended
-    # (strict-greater; round 14 tightened replacement to the quiet
-    # band's edge — see test_bench_record_replacement_median_bar)
-    path, _ = bench.detail_record_paths(
-        "/x", 1.0, 0.188, 0.0, bench.RECORD_MEDIAN_BAR
-    )
-    assert path == "/x/BENCH_DETAIL.json"
-    # an optimization sweep (median < 1) is never blocked
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.0, 0.95)
-    assert path == "/x/BENCH_DETAIL.json"
-    # no median available (subset run below MEDIAN_RATIO_MIN_N) →
-    # the other two signals still decide
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.0, None)
-    assert path == "/x/BENCH_DETAIL.json"
-    # no committed pin → establishes the record
-    path, _ = bench.detail_record_paths("/x", 1.0, None, 0.0, 9.9)
-    assert path == "/x/BENCH_DETAIL.json"
-    # the force override wins
-    monkeypatch.setenv("MRS_BENCH_FORCE_RECORD", "1")
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.0, 9.9)
-    assert path == "/x/BENCH_DETAIL.json"
-
-
-def test_bench_record_replacement_median_bar(monkeypatch):
-    """Round 14 (codifying the r13 close adjudication): a sweep may
-    only REPLACE a committed record when its median per-query ratio is
-    inside the quiet band (≤ RECORD_MEDIAN_BAR = 1.05).  Two r13-close
-    sweeps passed the 1.10 contention bar at median 1.068/1.081 and had
-    to be kept out of the record BY HAND to stop the slow-drift
-    ratchet; the r14 round-open sweep (median 1.073, quiet probes)
-    then walked over the record before this bar landed."""
-    import bench
-
-    monkeypatch.delenv("MRS_BENCH_FORCE_RECORD", raising=False)
-    assert bench.RECORD_MEDIAN_BAR == 1.05
-    # the r13-close guard-passers and the r14 round-open capture all
-    # route to the side file now
-    for median in (1.068, 1.073, 1.081):
-        path, suffix = bench.detail_record_paths(
-            "/x", 1.0, 0.188, 0.02, median
-        )
-        assert path == "/x/BENCH_DETAIL_contended.json"
-        assert suffix == "_contended"
-    # a genuinely quiet sweep still replaces
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.02, 1.02)
-    assert path == "/x/BENCH_DETAIL.json"
-    # an optimization sweep (median < 1) is never blocked
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.0, 0.877)
-    assert path == "/x/BENCH_DETAIL.json"
-    # a deliberate re-baseline overrides
-    monkeypatch.setenv("MRS_BENCH_FORCE_RECORD", "1")
-    path, _ = bench.detail_record_paths("/x", 1.0, 0.188, 0.0, 1.073)
-    assert path == "/x/BENCH_DETAIL.json"
-
-
-def test_bench_calib_ref_is_pinned():
-    """Round-12 verdict item 3: the probe reference must be the pinned
-    quiet-host constant (BASELINE.md calibration protocol), not the
-    last committed record's own probe — one contended commit poisoned
-    the chain in r11/r12 (recorded ratio 0.767 measured against a
-    contended 0.291 probe).  The pin is the minimum committed
-    quiet-host probe across the r10/r11 records."""
-    import bench
-
-    assert bench.CALIB_REF_PIN == 0.188
-    # the restored quiet r11 record carries the probe the pin derives from
-    import json
-
-    with open(REPO_ROOT / "BENCH_DETAIL_r11.json") as f:
-        r11 = json.load(f)
-    assert r11["calib_sec"] == 0.188
-    assert r11["value"] < 160  # the quiet 157.97 capture, not the 170.9
+    assert all(n in names for n in nxt[len(expected_front) :])
 
 
 def test_coverage_md_gate_labels_match_registry():

@@ -56,3 +56,19 @@ def test_bloom_empty_dim_yields_empty_join(spark):
     fact = _fact(spark, n=100)
     dim = spark.createDataFrame([], "dk long, dv string")
     assert RFil.bloom_prefiltered_join(fact, dim, "k", "dk").count() == 0
+
+
+def test_bloom_words_ride_one_broadcast_relation(spark):
+    """The packed words reach the probe as a broadcast 1-row relation
+    (one array attribute referenced by every hash probe), not as plan
+    literals, and the dim side of the real join is broadcast too."""
+    fact = _fact(spark, n=100)
+    dim = spark.range(5).select(F.col("id").alias("dk"))
+    plan = (
+        RFil.bloom_prefiltered_join(fact, dim, "k", "dk")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert "BroadcastNestedLoopJoin" in plan and "__bloom_words" in plan
+    assert "BroadcastHashJoin" in plan

@@ -74,27 +74,6 @@ def test_batch_fold_accumulates_with_arrival_tags(spark):
     ]
 
 
-def test_batch_fold_records_per_cycle_timings(spark):
-    """Round-11 verdict item 7: the fold records per-cycle wall-clock
-    into LAST_CYCLE_SECONDS (one entry per contributing batch, plus the
-    final materialization) so bench.py can split the structural
-    three-cycle headline row.  Instrumentation only — results
-    unchanged; a new call replaces the previous recording in place."""
-    from myrecommendsystem_spark.streaming import semantic_dedup as sd
-
-    out = incremental_semantic_survivors(
-        [_df(spark, _BATCH1), _df(spark, _BATCH2)]
-    )
-    assert out.count() == 3
-    rec = list(sd.LAST_CYCLE_SECONDS)
-    assert len(rec) == 3  # 2 batch cycles + finalize
-    assert all(s > 0 for s in rec)
-    # mutated IN PLACE on the next call (bench holds a live reference)
-    ref = sd.LAST_CYCLE_SECONDS
-    incremental_semantic_survivors([_df(spark, _BATCH1)])
-    assert ref is sd.LAST_CYCLE_SECONDS and len(ref) == 2
-
-
 def test_batch_fold_releases_superseded_checkpoints(spark):
     """Round-8 ADVICE: the fold re-checkpoints its survivor accumulators
     every batch — the SUPERSEDED checkpoints must be unpersisted, or

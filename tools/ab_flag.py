@@ -1,21 +1,19 @@
 """Interleaved A/B harness for any runtime-settable SQL conf flag.
 
-Generalizes tools/ab_parallelism_first.py (round-13 ADVICE: the SHJ
-measurement pattern was not committed as a reproducible harness): the
-flag name, its A/B values, and the query list are arguments, so any
+The flag name, its A/B values and the query list are arguments, so any
 session-level conf decision can be re-measured.  Methodology:
 
-- ONE session, A/B/A/B interleaved per query so host phase drift
-  cancels (the committed measurement discipline for conf flags);
-- warmup once per SIDE (round-13 ADVICE item 4: warming only under A
-  left one-time codegen/broadcast costs for plan shapes that differ
-  under the flag on B's first timed run);
-- median of ``repeat`` per side, best also reported.
+- ONE session, warmed once (``bench.warm_up``), A/B/A/B interleaved per
+  query so host phase drift cancels;
+- each sample is ``bench.time_query`` (best of ``bench.REPEAT`` runs), so
+  the first run under a new flag value absorbs the one-time codegen and
+  broadcast costs of that plan shape;
+- median of ``repeat`` samples per side, best also reported.
 
 Usage:
     python tools/ab_flag.py <flag> <a_value> <b_value> <q1,q2,...> [repeat]
 
-Example (the round-13/14 SHJ exoneration run):
+Example:
     python tools/ab_flag.py spark.sql.join.preferSortMergeJoin \
         false true q4_order_priority_exists,q21_late_exclusive_suppliers 3
 """
@@ -26,19 +24,13 @@ import json
 import os
 import statistics
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+import bench  # noqa: E402
 from myrecommendsystem_spark.plans import registry  # noqa: E402
 from myrecommendsystem_spark.session import get_spark  # noqa: E402
-
-
-def run_once(spark, fn, sf_dir: str) -> float:
-    t0 = time.perf_counter()
-    fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
 
 
 def main() -> None:
@@ -50,21 +42,17 @@ def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     spark = get_spark(app_name="ab-flag")
     spark.sparkContext.setLogLevel("ERROR")
+    bench.warm_up(spark, sf_dir)
     qmap = registry.all_queries()
     results = {}
     for name in queries:
         fn = qmap[name]
         a_times, b_times = [], []
-        # warm up once per side: codegen/broadcast caches differ when the
-        # flag changes the plan shape
-        for v in (a_val, b_val):
-            spark.conf.set(flag, v)
-            run_once(spark, fn, sf_dir)
         for _ in range(repeat):
             spark.conf.set(flag, a_val)
-            a_times.append(run_once(spark, fn, sf_dir))
+            a_times.append(bench.time_query(spark, fn, sf_dir))
             spark.conf.set(flag, b_val)
-            b_times.append(run_once(spark, fn, sf_dir))
+            b_times.append(bench.time_query(spark, fn, sf_dir))
         spark.catalog.clearCache()
         r = {
             "a_med": round(statistics.median(a_times), 3),

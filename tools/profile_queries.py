@@ -1,19 +1,20 @@
-"""Per-query profiling harness for the optimization rounds (guide §1).
+"""Per-query profiling harness.
 
-For each named query: run it to the noop sink N times (best-of), and
-record wall seconds plus scheduler-level shape — number of Spark jobs,
-stages, and tasks the query submits — via the status tracker.  Job count
-is the fixed-overhead proxy: every eager materialization
-(localCheckpoint, fit-sample collect, isEmpty probe) is its own job and
-pays scheduling latency even when the data is tiny.
+For each named query: time it with ``bench.time_query`` (best of
+``bench.REPEAT`` runs to the noop sink) after ``bench.warm_up``, and
+record the scheduler-level shape — Spark jobs, stages and tasks per
+timed run (means over the ``bench.REPEAT`` runs) — via the status
+tracker.  Job count is the fixed-overhead proxy: every eager
+materialization (localCheckpoint, fit-sample collect, isEmpty probe) is
+its own job and pays scheduling latency even when the data is tiny.
 
-Optionally captures ``explain("formatted")`` into
-``plans/$MRS_PLANS_ROUND/`` (default ``plans/r14/``).
+``--top N`` profiles the N slowest queries of the committed
+``BENCH_DETAIL.json``.  Optionally captures ``explain("formatted")``
+into ``plans/$MRS_PLANS_ROUND/`` (default ``plans/r14/``).
 
 Usage:
     python tools/profile_queries.py q1,q2,...   [--plans before|after]
     python tools/profile_queries.py --top 25    [--plans before]
-    MRS_PROFILE_REPEAT=3 python tools/profile_queries.py ...
 
 Writes one JSON line per query to stdout and a summary file
 ``/tmp/profile_<tag>.json``.
@@ -24,18 +25,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 HERE = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, HERE)
 
+import bench  # noqa: E402
 from myrecommendsystem_spark.plans import registry  # noqa: E402
 from myrecommendsystem_spark.session import get_spark  # noqa: E402
 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    repeat = int(os.environ.get("MRS_PROFILE_REPEAT", "2"))
     args = [a for a in sys.argv[1:]]
     plans_mode = None
     if "--plans" in args:
@@ -50,11 +50,7 @@ def main() -> None:
 
     all_q = registry.all_queries()
     if top_n:
-        with open(
-            os.path.join(
-                HERE, os.environ.get("MRS_PROFILE_RECORD", "BENCH_DETAIL.json")
-            )
-        ) as f:
+        with open(os.path.join(HERE, "BENCH_DETAIL.json")) as f:
             rec = json.load(f)["queries"]
         names = [
             n
@@ -72,56 +68,33 @@ def main() -> None:
     sc = spark.sparkContext
     tracker = sc.statusTracker()
 
-    # warmup (same as bench.py): parquet reader + shuffle + codegen +
-    # the Python-worker/Arrow daemon across every task slot
-    from myrecommendsystem_spark.io import readers as _r
-
-    _r.events_as_ratings(spark, sf_dir).groupBy("productId").count().count()
-    from pyspark.sql import functions as _F
-    from pyspark.sql.functions import pandas_udf as _pudf
-
-    _warm = _pudf(lambda s: s + 0, "long")
-    n_slots = sc.defaultParallelism
-    spark.range(0, 100 * n_slots, 1, n_slots).select(
-        _F.sum(_warm("id"))
-    ).count()
+    bench.warm_up(spark, sf_dir)
 
     results: dict[str, dict] = {}
     for name in names:
-        sc.setJobDescription(f"profile:{name}")
-        best = float("inf")
-        jobs = stages = tasks = 0
-        for it in range(repeat):
-            group = f"prof-{name}-{it}"
-            sc.setJobGroup(group, name)
-            t0 = time.perf_counter()
-            df = all_q[name](spark, sf_dir)
-            df.write.format("noop").mode("overwrite").save()
-            elapsed = time.perf_counter() - t0
-            job_ids = tracker.getJobIdsForGroup(group)
-            n_stages = n_tasks = 0
-            for jid in job_ids:
-                ji = tracker.getJobInfo(jid)
-                if ji is None:
-                    continue
-                for sid in ji.stageIds:
-                    si = tracker.getStageInfo(sid)
-                    if si is not None and si.numTasks > 0 and si.numActiveTasks == 0:
-                        # count only stages that actually ran (skipped
-                        # stages report via numCompletedTasks == 0)
-                        if si.numCompletedTasks > 0:
-                            n_stages += 1
-                            n_tasks += si.numCompletedTasks
-            if elapsed < best:
-                best = elapsed
-                jobs, stages, tasks = len(job_ids), n_stages, n_tasks
-            spark.catalog.clearCache()
+        group = f"prof-{name}"
+        sc.setJobGroup(group, name)
+        sec = bench.time_query(spark, all_q[name], sf_dir)
         sc.setJobGroup("", "")
+        spark.catalog.clearCache()
+        job_ids = tracker.getJobIdsForGroup(group)
+        n_stages = n_tasks = 0
+        for jid in job_ids:
+            ji = tracker.getJobInfo(jid)
+            if ji is None:
+                continue
+            for sid in ji.stageIds:
+                si = tracker.getStageInfo(sid)
+                # count only stages that actually ran (skipped stages
+                # report numCompletedTasks == 0)
+                if si is not None and si.numActiveTasks == 0 and si.numCompletedTasks > 0:
+                    n_stages += 1
+                    n_tasks += si.numCompletedTasks
         rec = {
-            "sec": round(best, 3),
-            "jobs": jobs,
-            "stages": stages,
-            "tasks": tasks,
+            "sec": round(sec, 3),
+            "jobs": len(job_ids) / bench.REPEAT,
+            "stages": n_stages / bench.REPEAT,
+            "tasks": n_tasks / bench.REPEAT,
         }
         results[name] = rec
         print(json.dumps({"query": name, **rec}), flush=True)
