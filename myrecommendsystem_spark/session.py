@@ -61,12 +61,11 @@ def get_spark(
         # badly wrong after filters/UDFs, and a misestimated build side
         # OOMs a task where sort-merge would have spilled to disk.
         # Memory-constrained deployments can flip it back per session
-        # via extra_conf.  Measured interleaved A/B (tools/ab_flag.py —
-        # the committed reproducible harness): r13 net 0.952x over the
-        # 10 shuffled-join-heaviest queries; r14 exoneration run net
-        # 0.992x over the four r13-flagged TPC-H singles + the join set
-        # (the flagged "regressions" were capture weather — the
-        # joinless q6 moved as much as any of them).
+        # via extra_conf.  Interleaved A/B (tools/ab_flag.py): net
+        # 0.952x over the ten shuffled-join-heaviest queries; a rerun
+        # over those plus four TPC-H singles that had looked slower gave
+        # net 0.992x (the joinless q6 moved as much as any of them, so
+        # the apparent slowdowns were host noise).
         .config("spark.sql.join.preferSortMergeJoin", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")

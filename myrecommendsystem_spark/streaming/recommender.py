@@ -25,6 +25,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
+from myrecommendsystem_spark.functions.caching import release_checkpoint
 from myrecommendsystem_spark.operators.relational import (
     anti_join,
     collect_recs,
@@ -235,8 +236,8 @@ def _fs_exists(spark: SparkSession, path: str) -> bool:
     """Existence probe through the Hadoop FileSystem API — resolves
     whatever filesystem the path's scheme names (local, hdfs://, s3a://),
     unlike ``os.path.exists``, which silently answers False for any
-    non-local URI and would make :func:`upsert_by_key` clobber a remote
-    table on its first micro-batch (round-4 verdict item 8)."""
+    non-local URI and would make :func:`upsert_by_key` take the create
+    branch and clobber a remote table on its first micro-batch."""
     jvm = spark._jvm
     hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
     fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
@@ -257,21 +258,31 @@ def upsert_by_key(
     ``pmod(hash(key), num_buckets)`` so each micro-batch touches only the
     partitions its keys hash into:
 
-    1. tag batch rows with their bucket id, collect the distinct ids
-       (≤ num_buckets ints — a metadata-sized driver hop);
+    1. tag batch rows with their bucket id and ``localCheckpoint`` them:
+       the batch's plan runs once, as one adaptive job whose final stage
+       AQE coalesces (a cached plan keeps every shuffle partition), and
+       every later step reads the checkpoint; collect the distinct
+       bucket ids (≤ num_buckets ints — a metadata-sized driver hop);
     2. read ONLY those partitions back (the ``isin`` filter is partition
-       pruning — untouched partitions' files are never opened);
-    3. anti-join out replaced keys, union the batch rows;
-    4. overwrite ONLY the touched partitions
-       (``partitionOverwriteMode=dynamic`` — partitions absent from the
-       merged frame are left on disk untouched).
+       pruning — untouched partitions' files are never opened), anti-join
+       out replaced keys, union the batch rows, and checkpoint the merged
+       rows: they are materialized before the source is overwritten, and
+       with the lineage cut a lost block fails the batch instead of
+       re-reading a half-overwritten source;
+    3. hash-repartition by bucket, so each touched bucket is written as
+       one file and the buckets are written in parallel;
+    4. overwrite ONLY the touched partitions — the write passes
+       ``partitionOverwriteMode=dynamic`` as its own option, so
+       partitions absent from the merged frame are left on disk untouched
+       and the session's conf is never changed.
 
-    Per-trigger IO is O(touched partitions), not O(table) — the plain-
-    parquet middle ground between full rewrite and a Delta/Iceberg MERGE
-    (which is what a production deployment would use).  The create-vs-
-    merge branch probes the table through the Hadoop FileSystem API
-    (:func:`_fs_exists`), so the sink works unchanged against HDFS/S3
-    paths, not just the local filesystem.
+    Both checkpoints are freed before returning.  Per-trigger IO is
+    O(touched partitions), not O(table) — the plain-parquet middle ground
+    between full rewrite and a Delta/Iceberg MERGE (which is what a
+    production deployment would use).  The create-vs-merge branch probes
+    the table through the Hadoop FileSystem API (:func:`_fs_exists`), so
+    the sink works unchanged against HDFS/S3 paths, not just the local
+    filesystem.
 
     NB: replace-by-key needs the partition column to be a FUNCTION OF
     THE KEY — that is what guarantees a re-arriving key's old rows live
@@ -283,7 +294,8 @@ def upsert_by_key(
     (streaming/semantic_dedup._append_bands).
     """
     bucket = F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-    batch_df = batch_df.withColumn(BUCKET_COL, bucket).cache()
+    batch_df = batch_df.withColumn(BUCKET_COL, bucket).localCheckpoint()
+    merged = None
     try:
         touched = [
             r[BUCKET_COL]
@@ -291,23 +303,22 @@ def upsert_by_key(
         ]
         if not touched:
             return
+        out = batch_df
         if _fs_exists(spark, path):
             existing = spark.read.parquet(path).filter(
                 F.col(BUCKET_COL).isin(touched)
             )
             keep = anti_join(existing, batch_df.select(key), [key])
-            merged = keep.unionByName(batch_df)
-        else:
-            merged = batch_df
-        merged.cache().count()  # materialize before overwriting the source
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(BUCKET_COL).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+            out = merged = keep.unionByName(batch_df).localCheckpoint()
+        (
+            out.repartition(spark.sparkContext.defaultParallelism, BUCKET_COL)
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(BUCKET_COL)
+            .parquet(path)
+        )
     finally:
-        batch_df.unpersist()
+        release_checkpoint(batch_df, merged)
 
 
 def read_upserted(spark: SparkSession, path: str) -> DataFrame:

@@ -319,9 +319,7 @@ def run_semantic_dedup_stream(
     band_part = F.pmod(F.hash(F.col("band_idx"), F.col("band_val")),
                        F.lit(num_band_parts))
 
-    def _append_bands(
-        spark: SparkSession, bands_df: DataFrame, batch_id: int
-    ) -> None:
+    def _append_bands(bands_df: DataFrame, batch_id: int) -> None:
         """Idempotent O(batch) append: dynamic-overwrite ONLY this
         batch_id's partition subtree — a crash-replay rewrites the same
         deterministic files; no existing partition is read or touched."""
@@ -332,16 +330,9 @@ def run_semantic_dedup_stream(
             "band_idx",
             "band_val",
         )
-        prev = spark.conf.get(
-            "spark.sql.sources.partitionOverwriteMode", "static"
-        )
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            data.write.mode("overwrite").partitionBy(
-                "batch_id", BUCKET_COL
-            ).parquet(bands_path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        data.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("batch_id", BUCKET_COL).parquet(bands_path)
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
@@ -373,7 +364,7 @@ def run_semantic_dedup_stream(
                     "embedding",
                     "hp",
                 )
-                _append_bands(spark, sprep[1], -1)
+                _append_bands(sprep[1], -1)
             # probe scan pruned to the partitions the BATCH's band
             # values hash into — a survivor band can only match inside
             # its own hash partition, so the filter loses nothing
@@ -424,7 +415,7 @@ def run_semantic_dedup_stream(
                 return
             upsert_by_key(spark, fresh, out_path, key="vec_id")
             _append_bands(
-                spark, bands_b.join(dropped, "id", "left_anti"), batch_id
+                bands_b.join(dropped, "id", "left_anti"), batch_id
             )
             if compact_every and (batch_id + 1) % compact_every == 0:
                 compact_band_log(spark, bands_path)

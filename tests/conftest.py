@@ -25,10 +25,9 @@ def pytest_configure(config):
         "markers",
         "slow: multi-second soak (sf0.01 sweeps, streaming soaks, heavy "
         "DuckDB oracle replays, property fuzz over generated corpora) — "
-        "skipped by default so the driver's bounded pytest window "
-        "completes (r13 verdict item 1: the 28-min full suite outlived "
-        "it); opt in with MRS_SLOW_TESTS=1 (the round-close discipline) "
-        "or by setting MRS_TEST_SF_DIR",
+        "skipped by default so the default suite fits a bounded test "
+        "timeout (with them the full suite takes about 28 min); opt in "
+        "with MRS_SLOW_TESTS=1 or by setting MRS_TEST_SF_DIR",
     )
 
 
@@ -41,6 +40,17 @@ def pytest_collection_modifyitems(config, items):
     for item in items:
         if "slow" in item.keywords:
             item.add_marker(skip)
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    n = sum(
+        "slow" in getattr(rep, "keywords", ())
+        for rep in terminalreporter.stats.get("skipped", [])
+    )
+    if n:
+        terminalreporter.write_line(
+            f"{n} slow tests skipped; MRS_SLOW_TESTS=1 runs them"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -164,6 +164,100 @@ def test_upsert_by_key_rewrites_only_touched_partitions(spark, tmp_path):
     assert "__bucket" not in read_upserted(spark, path).columns
 
 
+def test_upsert_by_key_replay_matches_single_upsert_one_file_per_bucket(
+    spark, tmp_path
+):
+    """A micro-batch replayed after a crash between the sink write and
+    the stream's commit upserts the same rows twice; the table must equal
+    one upsert of that batch, and every bucket directory holds the one
+    file its bucket's single write task produced."""
+    from myrecommendsystem_spark.streaming.recommender import read_upserted
+
+    schema = "userId int, payload string"
+    base = spark.createDataFrame([(u, "a") for u in range(40)], schema)
+    batch = spark.createDataFrame([(u, "b") for u in range(0, 60, 3)], schema)
+    once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
+    for path in (once, twice):
+        upsert_by_key(spark, base, path)
+    upsert_by_key(spark, batch, once)
+    upsert_by_key(spark, batch, twice)
+    upsert_by_key(spark, batch, twice)
+
+    def _rows(path):
+        return sorted(
+            (r.userId, r.payload) for r in read_upserted(spark, path).collect()
+        )
+
+    expected = sorted(
+        [(u, "a") for u in range(40) if u % 3]
+        + [(u, "b") for u in range(0, 60, 3)]
+    )
+    assert _rows(once) == expected
+    assert _rows(twice) == expected
+    for path in (once, twice):
+        layout = _partition_files(path)
+        assert len(layout) > 1
+        assert {d: len(files) for d, files in layout.items()} == {
+            d: 1 for d in layout
+        }
+
+
+def test_sinks_leave_session_conf_and_block_storage_alone(
+    spark, tmp_path, monkeypatch
+):
+    """Operators never change session-global conf, and a micro-batch's
+    sink work frees every cache and checkpoint block it pinned: a create
+    upsert, a merge upsert, and one semantic-dedup trigger (vector upsert,
+    band-log append, near-dup closure) make no ``RuntimeConfig.set`` call
+    and leave the persisted-RDD count where it started."""
+    from myrecommendsystem_spark.streaming.semantic_dedup import (
+        run_semantic_dedup_stream,
+    )
+    from tests.test_streaming_semantic_dedup import _BATCH1, _SCHEMA
+
+    conf_cls = type(spark.conf)
+    set_keys = []
+    real_set = conf_cls.set
+
+    def _recording_set(self, key, *args, **kwargs):
+        set_keys.append(key)
+        return real_set(self, key, *args, **kwargs)
+
+    jsc = spark.sparkContext._jsc
+    pinned_before = jsc.getPersistentRDDs().size()
+    monkeypatch.setattr(conf_cls, "set", _recording_set)
+
+    schema = "userId int, payload string"
+    path = str(tmp_path / "recs")
+    b1 = spark.createDataFrame([(1, "a"), (2, "a")], schema)
+    b2 = spark.createDataFrame([(2, "b"), (3, "b")], schema)
+    upsert_by_key(spark, b1, path)  # create
+    upsert_by_key(spark, b2, path)  # merge
+    got = {(r.userId, r.payload) for r in spark.read.parquet(path).collect()}
+    assert got == {(1, "a"), (2, "b"), (3, "b")}
+
+    src = tmp_path / "vectors_in"
+    src.mkdir()
+    with open(src / "b0.json", "w") as f:
+        for r in _BATCH1:
+            f.write(json.dumps(r) + "\n")
+    out_path = str(tmp_path / "survivors")
+    q = run_semantic_dedup_stream(
+        spark.readStream.schema(_SCHEMA).json(str(src)),
+        out_path,
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    assert q.exception() is None
+    survivors = spark.read.parquet(out_path).collect()
+    assert sorted(r.vec_id for r in survivors) == [1, 3]
+    assert os.path.isdir(out_path + "_bands")
+
+    assert set_keys == []
+    assert jsc.getPersistentRDDs().size() == pinned_before
+
+
 def test_streaming_recommender_end_to_end(spark, tmp_path):
     """File source → foreachBatch cycle → parquet sink, availableNow."""
     src = tmp_path / "events_in"
