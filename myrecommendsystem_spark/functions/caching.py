@@ -6,7 +6,7 @@ downstream branches consume it (self-join sides, size aggregates, verify
 joins).  Returning a *lazy* result would force a choice between two bad
 options: unpersist before returning (defeats the cache — consumers run
 later) or leak the cache into the session (at a 100 TB shared session
-that is unbounded memory pressure; round-3 advice).  ``eager_release``
+that is unbounded memory pressure).  ``eager_release``
 resolves it: materialize the final result once via
 ``localCheckpoint(eager=True)`` — the checkpoint job reads the warm
 caches — then free the intermediates on the spot.
@@ -62,9 +62,9 @@ def eager_release(result: DataFrame, *cached: DataFrame) -> DataFrame:
 
 def release_checkpoint(*checkpointed: DataFrame | None) -> None:
     """Free the pinned storage blocks behind ``localCheckpoint``-ed
-    DataFrames (round-8 ADVICE: iterative accumulators that re-checkpoint
-    per step must release the superseded checkpoints, or pinned block
-    storage grows with the step count).
+    DataFrames: iterative accumulators that re-checkpoint per step must
+    release the superseded checkpoints, or pinned block storage grows
+    with the step count.
 
     ``DataFrame.unpersist()`` only drops CacheManager entries, not the
     RDD blocks a local checkpoint pins — those need the RDD-level

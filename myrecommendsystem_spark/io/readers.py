@@ -26,16 +26,28 @@ from myrecommendsystem_spark import schemas
 _NANOS_TS_COLS: dict[str, tuple[str, ...]] = {"events": ("ts",)}
 
 
+# Runtime confs every reader depends on: nanos parquet timestamps
+# readable, and a fixed UTC session timezone so date functions match the
+# DuckDB oracle's naive-timestamp semantics.  ``session.get_spark`` builds
+# its sessions with both.
+_ENGINE_CONFS = {
+    "spark.sql.legacy.parquet.nanosAsLong": "true",
+    "spark.sql.session.timeZone": "UTC",
+}
+
+
 def ensure_engine_confs(spark: SparkSession) -> None:
-    """Apply runtime confs every reader depends on.
+    """Apply the readers' runtime confs to a session that lacks them.
 
     Called from the read path (not only our session factory) so the queries
-    behave identically inside the driver's own SparkSession: nanos parquet
-    timestamps readable, and a fixed UTC session timezone so date functions
-    match the DuckDB oracle's naive-timestamp semantics.
+    behave identically inside the driver's own SparkSession.  A key is set
+    only when its current value differs, so a session that already has
+    both (every ``get_spark`` session, or any session after its first
+    read) is left untouched.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    for key, value in _ENGINE_CONFS.items():
+        if spark.conf.get(key, None) != value:
+            spark.conf.set(key, value)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

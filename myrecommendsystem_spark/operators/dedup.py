@@ -17,7 +17,7 @@ UDFs, no driver-side loops — and each is shaped for 100 TB:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Window, functions as F
 
 from myrecommendsystem_spark.functions import text as TXT
 from myrecommendsystem_spark.functions.caching import eager_release
@@ -56,6 +56,11 @@ def dedup_exact(
     return df.join(keep, id_col, "left_semi")
 
 
+# bucket key of a MinHash band: a pair collides in band i when the i-th
+# band hashes are equal
+_BAND = ["band_idx", "band_hash"]
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -71,10 +76,9 @@ def minhash_candidate_pairs(
     collide if any band of their signatures matches exactly.  With r=4,
     b=16 the S-curve threshold is ≈ (1/b)^(1/r) ≈ 0.5 Jaccard.
 
-    ``max_bucket`` drops degenerate buckets (near-universal shingles) —
-    the skew guard that keeps the within-bucket self-join from going
-    quadratic on 100 TB.  Dropped buckets are pairs we *choose* not to
-    compare; exact-dup pass already caught identical texts.
+    ``max_bucket`` drops degenerate buckets (near-universal shingles),
+    see :func:`cap_buckets`; the exact-dup pass already caught identical
+    texts.
     """
     banded = widen_for_kernel(df).select(
         F.col(id_col).alias("id"),
@@ -88,26 +92,77 @@ def minhash_candidate_pairs(
     # — at 10⁹ docs this still fits a cluster's aggregate storage memory,
     # and MEMORY_AND_DISK degrades gracefully if not.
     banded = banded.persist()
-    return eager_release(_candidates_from_banded(banded, max_bucket), banded)
+    cands = bucket_pairs(cap_buckets(banded, _BAND, max_bucket), _BAND)
+    return eager_release(cands.select("id_a", "id_b").distinct(), banded)
 
 
-def _candidates_from_banded(banded: DataFrame, max_bucket: int) -> DataFrame:
-    """(id, band_idx, band_hash) → distinct candidate pairs (id_a < id_b),
-    self-joined within buckets only, degenerate buckets dropped."""
-    bucket_sizes = banded.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("bucket_n")
-    )
-    capped = banded.join(
-        bucket_sizes.filter(F.col("bucket_n") <= max_bucket),
-        ["band_idx", "band_hash"],
-    )
-    a = capped.select("band_idx", "band_hash", F.col("id").alias("id_a"))
-    b = capped.select("band_idx", "band_hash", F.col("id").alias("id_b"))
+def cap_buckets(
+    rows: DataFrame,
+    keys: list[str],
+    max_bucket: int,
+    weight: str | None = None,
+) -> DataFrame:
+    """Rows whose bucket (equal ``keys``) holds at most ``max_bucket``
+    ids — the skew cap of every LSH and inverted-index pair join.
+
+    A bucket of n ids makes n² pairs, so a degenerate bucket (a
+    boilerplate shingle, a black frame, a byte pattern shared by a huge
+    near-identical cluster) would make the bucket join quadratic.
+    Dropped buckets are pairs we *choose* not to compare.
+
+    Occupancy is one ``count()`` window over ``keys``, not a groupBy
+    joined back: the window's exchange on ``keys`` is the one the
+    bucket join (:func:`bucket_pairs`) then reuses.  ``weight`` names a
+    column holding how many ids a row stands for (a collapsed clone
+    group); it is summed instead of counting rows.
+    """
+    n = F.count(F.lit(1)) if weight is None else F.sum(weight)
     return (
-        a.join(b, ["band_idx", "band_hash"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
+        rows.withColumn("_bucket_n", n.over(Window.partitionBy(*keys)))
+        .filter(F.col("_bucket_n") <= max_bucket)
+        .drop("_bucket_n")
+    )
+
+
+def bucket_pairs(
+    rows: DataFrame, keys: list[str], ref: DataFrame | None = None
+) -> DataFrame:
+    """Pairs of rows that share a bucket (equal ``keys``) → (*keys, id_a,
+    id_b, and ``<c>_a`` / ``<c>_b`` for every other column).
+
+    Both inputs carry an ``id`` column.  Without ``ref`` this is a
+    self-join keeping each unordered pair once (id_a < id_b).  With
+    ``ref`` every row of ``rows`` meets every row of ``ref`` in its
+    bucket (id_a from ``rows``, id_b from ``ref``); the caller caps only
+    ``ref``, so a hot new batch is never silently filtered and each new
+    row still meets at most ``max_bucket`` reference rows.  A pair that
+    shares several buckets comes once per bucket; the caller reduces
+    (distinct, a per-pair count, an exact verify).
+    """
+
+    def side(df: DataFrame, s: str) -> DataFrame:
+        other = [c for c in df.columns if c not in keys]
+        return df.select(*keys, *[F.col(c).alias(f"{c}_{s}") for c in other])
+
+    pairs = side(rows, "a").join(side(rows if ref is None else ref, "b"), keys)
+    if ref is None:
+        pairs = pairs.filter(F.col("id_a") < F.col("id_b"))
+    return pairs
+
+
+def _recall_by_band(
+    truth: DataFrame, cands: DataFrame, band_col: str
+) -> DataFrame:
+    """Recall-report tail: per ``band_col`` of the exact truth pairs
+    (id_a, id_b, band_col), how many there are (``n_true``) and how many
+    the distinct candidate pairs ``cands`` caught (``n_caught``)."""
+    return (
+        truth.join(cands.withColumn("m", F.lit(1)), ["id_a", "id_b"], "left")
+        .groupBy(band_col)
+        .agg(
+            F.count(F.lit(1)).alias("n_true"),
+            F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("n_caught"),
+        )
     )
 
 
@@ -127,31 +182,16 @@ def minhash_near_duplicates(
     the small side and broadcasts; intersecting int64 arrays instead of
     strings keeps the verify cheap.
 
-    One FUSED signature pass: band keys (candidate generation) and shingle
-    hashes (verify) come from a single Arrow kernel over each doc
-    (``minhash_bands_and_shingles``), persisted and materialized eagerly so
-    every downstream consumer — the bucket-size aggregate, both self-join
-    sides, and both verify sides — reads the cache instead of racing to
-    recompute the kernel.  Before fusion the pipeline tokenized and hashed
-    every doc twice (band pass + shingle pass), which was the measured
-    majority of its sf0.1 wall time.
+    One FUSED signature pass (:func:`_fused_minhash_sigs`) feeds both
+    the bands and the verify's shingle hashes.  Tokenizing and hashing
+    every doc twice (band pass + shingle pass) was the measured majority
+    of the pipeline's sf0.1 wall time.
     """
-    sigs, cands = _fused_minhash_sigs(
-        df, id_col, text_col, shingle_n, num_hashes, bands, max_bucket=1000
-    )
-    sh = sigs.select("id", F.col("s.sh").alias("sh"))
-    a = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    b = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    joined = cands.join(a, "id_a").join(b, "id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        joined.select(
-            "id_a",
-            "id_b",
-            F.round(inter / union, 4).alias("jaccard"),
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    sigs = _fused_minhash_sigs(df, id_col, text_col, shingle_n, num_hashes, bands)
+    banded = _minhash_bands(sigs)
+    cands = bucket_pairs(cap_buckets(banded, _BAND, 1000), _BAND)
+    out = _jaccard_verify(
+        cands.select("id_a", "id_b").distinct(), sigs, sigs, jaccard_threshold
     )
     return eager_release(out, sigs)
 
@@ -163,14 +203,13 @@ def _fused_minhash_sigs(
     shingle_n: int,
     num_hashes: int,
     bands: int,
-    max_bucket: int,
-) -> "tuple[DataFrame, DataFrame]":
-    """Shared prologue of every single-corpus MinHash pipeline: ONE fused
-    Arrow signature pass (band keys + shingle hashes,
-    ``minhash_bands_and_shingles``), persisted and eagerly materialized so
-    every downstream consumer reads the cache instead of racing to
-    recompute the kernel, plus the banded candidate pairs.  Returns
-    (sigs, cands); callers must release ``sigs`` via ``eager_release``."""
+) -> DataFrame:
+    """(id, s) with ``s`` = (bands, sh): ONE fused Arrow signature pass
+    (band keys + shingle hashes, ``minhash_bands_and_shingles``),
+    persisted and eagerly materialized so every downstream consumer (the
+    bucket cap, both join sides, both verify sides) reads the cache
+    instead of racing to recompute the kernel.  Callers release it via
+    ``eager_release``."""
     sigs = (
         widen_for_kernel(df)
         .select(
@@ -182,10 +221,30 @@ def _fused_minhash_sigs(
         .persist()
     )
     sigs.count()  # eager: the one Arrow pass runs exactly once
-    banded = sigs.select(
-        "id", F.posexplode("s.bands").alias("band_idx", "band_hash")
+    return sigs
+
+
+def _minhash_bands(sigs: DataFrame) -> DataFrame:
+    """(id, band_idx, band_hash): one row per band of each signature."""
+    return sigs.select("id", F.posexplode("s.bands").alias(*_BAND))
+
+
+def _jaccard_verify(
+    cands: DataFrame, sigs_a: DataFrame, sigs_b: DataFrame, threshold: float
+) -> DataFrame:
+    """(id_a, id_b, jaccard ≥ threshold): exact shingle-hash Jaccard of
+    the candidate pairs, id_a's hashes from ``sigs_a``, id_b's from
+    ``sigs_b``."""
+    a = sigs_a.select(F.col("id").alias("id_a"), F.col("s.sh").alias("sh_a"))
+    b = sigs_b.select(F.col("id").alias("id_b"), F.col("s.sh").alias("sh_b"))
+    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
+    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
+    return (
+        cands.join(a, "id_a")
+        .join(b, "id_b")
+        .select("id_a", "id_b", F.round(inter / union, 4).alias("jaccard"))
+        .filter(F.col("jaccard") >= threshold)
     )
-    return sigs, _candidates_from_banded(banded, max_bucket=max_bucket)
 
 
 def minhash_recall_report(
@@ -226,15 +285,19 @@ def minhash_recall_report(
     ``(10·|∩|) div |∪|`` — exact in both engines, immune to the
     ``0.3 × 10 = 2.999…`` double-rounding trap a float bucketize hits.
     """
-    sigs, cands = _fused_minhash_sigs(
-        df, id_col, text_col, shingle_n, num_hashes, bands, max_bucket
-    )
+    sigs = _fused_minhash_sigs(df, id_col, text_col, shingle_n, num_hashes, bands)
+    banded = _minhash_bands(sigs)
+    cands = bucket_pairs(cap_buckets(banded, _BAND, max_bucket), _BAND)
     # every truth pair contains a probe doc, so its id_a = least(...) is
     # always < probe_max_id — Catalyst can't infer that bound through
     # least(), so filter the candidate side explicitly before the recall
     # join (output-identical; candidate GENERATION stays full-corpus so
     # cap/occupancy semantics match the production path exactly)
-    cands = cands.filter(F.col("id_a") < probe_max_id)
+    cands = (
+        cands.select("id_a", "id_b")
+        .distinct()
+        .filter(F.col("id_a") < probe_max_id)
+    )
     # DISTINCT hash sets: grams are distinct per doc but the 31-bit RK
     # hash may collide two grams — the exact-Jaccard contract (and the
     # DuckDB oracle's SELECT DISTINCT hv) is over distinct hash values.
@@ -265,15 +328,7 @@ def minhash_recall_report(
             F.expr("CAST((10 * i) DIV (na + nb - i) AS INT)").alias("jband"),
         )
     )
-    out = (
-        truth.join(cands.withColumn("m", F.lit(1)), ["id_a", "id_b"], "left")
-        .groupBy("jband")
-        .agg(
-            F.count("*").alias("n_true"),
-            F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("n_caught"),
-        )
-    )
-    return eager_release(out, sigs)
+    return eager_release(_recall_by_band(truth, cands, "jband"), sigs)
 
 
 # Pair graphs at or under this edge count run min-label propagation
@@ -498,20 +553,11 @@ def ngram_jaccard_dedup_pairs(
         F.col(id_col).alias("id"),
         F.explode(TXT.shingles(F.col(text_col), shingle_n)).alias("s"),
     )
-    rare = (
-        sh.groupBy("s")
-        .agg(F.count("*").alias("df_cnt"))
-        .filter(F.col("df_cnt") <= max_df)
-        .select("s")
-    )
     # feeds sizes + both join sides; released via eager_release below
-    shf = sh.join(rare, "s").persist()
+    shf = cap_buckets(sh, ["s"], max_df).persist()
     sizes = shf.groupBy("id").agg(F.count("*").alias("n_sh"))
-    a = shf.select(F.col("id").alias("id_a"), "s")
-    b = shf.select(F.col("id").alias("id_b"), "s")
     inter = (
-        a.join(b, "s")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(shf, ["s"])
         .groupBy("id_a", "id_b")
         .agg(F.count("*").cast("double").alias("inter"))
     )
@@ -588,6 +634,9 @@ def simhash_near_duplicates(
     )
 
 
+# bucket key of a fingerprint byte-band
+_FP_BAND = ["band_idx", "band_val"]
+
 # probe-decision memo: (caller key, bands) -> collapse?  See
 # fingerprint_near_duplicates' probe_memo_key contract.
 _PROBE_MEMO: dict[tuple, bool] = {}
@@ -604,21 +653,22 @@ def fingerprint_near_duplicates(
     """Banded near-dup pairs over ANY (id, fp) 64-bit fingerprint
     relation → (id_a, id_b, hamming ≤ max_hamming).
 
-    The fingerprint-agnostic tail of :func:`simhash_near_duplicates`
-    (factored round 9 so image dHash reuses the identical pipeline):
-    byte-band bucketing (shiftright & mask), max_bucket skew cap,
-    bucket self-join, ``bit_count(a XOR b)`` verify.  Everything after
-    the fingerprint is codegen; the shuffles are keyed on fp and
-    (band_idx, band_val).  Note the pigeonhole guarantee (recall 1.0)
-    needs max_hamming < bands; above it the bands are a recall/cost
-    dial exactly like MinHash-LSH banding.
+    The fingerprint-agnostic tail of :func:`simhash_near_duplicates`,
+    so image dHash and audio reuse the identical pipeline: byte-band
+    bucketing (shiftright & mask), max_bucket skew cap
+    (:func:`cap_buckets`), bucket self-join (:func:`bucket_pairs`),
+    ``bit_count(a XOR b)`` verify.  Everything after the fingerprint is
+    codegen; the shuffles are keyed on fp and (band_idx, band_val).
+    Note the pigeonhole guarantee (recall 1.0) needs max_hamming <
+    bands; above it the bands are a recall/cost dial exactly like
+    MinHash-LSH banding.
 
-    **Adaptive exact-fingerprint pre-collapse** (round-10; the round-9
-    SCALE.md mitigation for the audio pipeline's output-driven 0.89
-    exponent): when exact-equal fingerprints are plentiful, only
-    DISTINCT fingerprints enter the banding self-join — a clone group
-    of g identical fingerprints contributes 1 banding row instead of
-    g·bands candidate-join rows PER BAND, so the Σ bucket² term shrinks
+    **Adaptive exact-fingerprint pre-collapse** (the SCALE.md mitigation
+    for the audio pipeline's output-driven 0.89 exponent): when
+    exact-equal fingerprints are plentiful, only DISTINCT fingerprints
+    enter the banding self-join — a clone group of g identical
+    fingerprints contributes 1 banding row instead of g·bands
+    candidate-join rows PER BAND, so the Σ bucket² term shrinks
     quadratically in the clone factor (measured: audio exponent 0.89 →
     0.24 at 4×/16×, identical pair counts).  Output is reconstructed
     afterwards: fp-level near-dup pairs expand back through group
@@ -647,23 +697,23 @@ def fingerprint_near_duplicates(
 
     BOTH paths are output-identical (verified: identical pair counts
     and hash-gated results across all probe corpora): the max_bucket
-    cap counts IDS per bucket in each (group sizes are summed into
-    bucket_n — clones of one fingerprint always share every bucket),
+    cap counts IDS per bucket in each (group sizes are the cap's
+    ``weight`` — clones of one fingerprint always share every bucket),
     survival of a clone group in ≥ 1 capped bucket is exactly the
     both-ids-co-located condition, and hamming is a function of the fp
     pair alone, so the branch can never change results — only the plan.
 
-    ``probe_memo_key`` (round-11; the doc_quality_model_scores memo
-    precedent): the probe decision is a pure function of the fp
-    relation's value distribution, so a caller that can name its input
-    (query name + sf_dir + table stamp — see ``readers.table_stamp``)
-    passes that name and the decision is memoized per process.  A memo
-    hit skips BOTH probe stages — repeated calls over unchanged data
-    (bench best-of-N repeats, re-registered queries in one session) pay
-    the probe's two driver-blocking scalar jobs exactly once.  The
-    caller owns key correctness: the key must change whenever the fp
-    relation's DATA can (include the table stamp).  ``None`` (default)
-    probes every call — the pre-round-11 behavior.
+    ``probe_memo_key`` (the doc_quality_model_scores memo pattern): the
+    probe decision is a pure function of the fp relation's value
+    distribution, so a caller that can name its input (query name +
+    sf_dir + table stamp — see ``readers.table_stamp``) passes that name
+    and the decision is memoized per process.  A memo hit skips BOTH
+    probe stages — repeated calls over unchanged data (bench best-of-N
+    repeats, re-registered queries in one session) pay the probe's two
+    driver-blocking scalar jobs exactly once.  The caller owns key
+    correctness: the key must change whenever the fp relation's DATA
+    can (include the table stamp).  ``None`` (default) probes every
+    call.
     """
     bits_per_band = 64 // bands
     mask = (1 << bits_per_band) - 1
@@ -711,30 +761,10 @@ def fingerprint_near_duplicates(
     if not collapse:
         # ---- direct path: band ids, bucket self-join, verify ----
         banded = members.select(
-            "id", "fp", F.posexplode(band_array).alias("band_idx", "band_val")
-        )
-        bucket_sizes = banded.groupBy("band_idx", "band_val").agg(
-            F.count(F.lit(1)).alias("bucket_n")
-        )
-        capped = banded.join(
-            bucket_sizes.filter(F.col("bucket_n") <= max_bucket),
-            ["band_idx", "band_val"],
-        ).select("band_idx", "band_val", "id", "fp")
-        a = capped.select(
-            "band_idx",
-            "band_val",
-            F.col("id").alias("id_a"),
-            F.col("fp").alias("fp_a"),
-        )
-        b = capped.select(
-            "band_idx",
-            "band_val",
-            F.col("id").alias("id_b"),
-            F.col("fp").alias("fp_b"),
+            "id", "fp", F.posexplode(band_array).alias(*_FP_BAND)
         )
         out = (
-            a.join(b, ["band_idx", "band_val"])
-            .filter(F.col("id_a") < F.col("id_b"))
+            bucket_pairs(cap_buckets(banded, _FP_BAND, max_bucket), _FP_BAND)
             .select(
                 "id_a",
                 "id_b",
@@ -746,25 +776,21 @@ def fingerprint_near_duplicates(
         return eager_release(out, members)
     # ---- pre-collapse path: band DISTINCT fps, expand afterwards ----
     banded = groups.select(
-        "fp", "grp_n", F.posexplode(band_array).alias("band_idx", "band_val")
+        F.col("fp").alias("id"),
+        "grp_n",
+        F.posexplode(band_array).alias(*_FP_BAND),
     )
     banded = banded.persist()  # two join sides — don't re-band twice
-    bucket_sizes = banded.groupBy("band_idx", "band_val").agg(
-        F.sum("grp_n").alias("bucket_n")  # IDs per bucket, not distinct fps
+    # the cap counts IDs per bucket, not distinct fps
+    capped = cap_buckets(banded, _FP_BAND, max_bucket, weight="grp_n").drop(
+        "grp_n"
     )
-    capped = banded.join(
-        bucket_sizes.filter(F.col("bucket_n") <= max_bucket),
-        ["band_idx", "band_val"],
-    ).select("band_idx", "band_val", "fp")
-    a = capped.select("band_idx", "band_val", F.col("fp").alias("fp_a"))
-    b = capped.select("band_idx", "band_val", F.col("fp").alias("fp_b"))
     fp_pairs = (
-        a.join(b, ["band_idx", "band_val"])
-        .filter(F.col("fp_a") < F.col("fp_b"))
+        bucket_pairs(capped, _FP_BAND)
         .select(
-            "fp_a",
-            "fp_b",
-            TXT.hamming64(F.col("fp_a"), F.col("fp_b")).alias("hamming"),
+            F.col("id_a").alias("fp_a"),
+            F.col("id_b").alias("fp_b"),
+            TXT.hamming64(F.col("id_a"), F.col("id_b")).alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["fp_a", "fp_b"])
@@ -776,17 +802,10 @@ def fingerprint_near_duplicates(
         F.greatest("ida", "idb").alias("id_b"),
         "hamming",
     )
-    surviving = capped.select("fp").distinct()
+    surviving = capped.select(F.col("id").alias("fp")).distinct()
     kept = members.join(surviving, "fp")
-    intra = (
-        kept.select("fp", F.col("id").alias("id_a"))
-        .join(kept.select("fp", F.col("id").alias("id_b")), "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select(
-            "id_a",
-            "id_b",
-            F.lit(0).cast("integer").alias("hamming"),
-        )
+    intra = bucket_pairs(kept, ["fp"]).select(
+        "id_a", "id_b", F.lit(0).cast("integer").alias("hamming")
     )
     out = cross.unionByName(intra)
     return eager_release(out, members, banded, groups)
@@ -869,25 +888,14 @@ def winnowing_overlap_pairs(
     one on fp (distinct + frequency), one on the pair key — never an
     all-pairs product.
     """
-    from pyspark.sql.window import Window
-
-    fps = winnowing_fingerprints(
-        docs, id_col, text_col, window, guarantee
-    ).select("doc_id", "fp").distinct()
-    # doc-frequency cap as a WINDOW over fp, not a groupBy+join-back:
-    # one exchange on fp that the a/b self-join below then REUSES
-    # (same child plan → ReusedExchange), instead of a second
-    # aggregate shuffle plus two join exchanges
-    kept = (
-        fps.withColumn("df", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-        .filter(F.col("df") <= max_doc_freq)
-        .select("fp", "doc_id")
+    fps = winnowing_fingerprints(docs, id_col, text_col, window, guarantee)
+    kept = cap_buckets(
+        fps.select(F.col("doc_id").alias("id"), "fp").distinct(),
+        ["fp"],
+        max_doc_freq,
     )
-    a = kept.select("fp", F.col("doc_id").alias("id_a"))
-    b = kept.select("fp", F.col("doc_id").alias("id_b"))
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(kept, ["fp"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("int").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
@@ -923,28 +931,17 @@ def winnowing_cross_corpus_pairs(
     Shuffles: one on fp per side (distinct), the ref-frequency window
     reusing the ref exchange, one on the pair key.
     """
-    from pyspark.sql.window import Window
-
-    new_fps = (
-        winnowing_fingerprints(new_docs, id_col, text_col, window, guarantee)
-        .select(F.col("doc_id").alias("new_id"), "fp")
-        .distinct()
-    )
-    ref_fps = (
-        winnowing_fingerprints(reference, id_col, text_col, window, guarantee)
-        .select(F.col("doc_id").alias("ref_id"), "fp")
-        .distinct()
-    )
-    ref_kept = (
-        ref_fps.withColumn(
-            "df", F.count(F.lit(1)).over(Window.partitionBy("fp"))
+    def _fps(d: DataFrame) -> DataFrame:
+        return (
+            winnowing_fingerprints(d, id_col, text_col, window, guarantee)
+            .select(F.col("doc_id").alias("id"), "fp")
+            .distinct()
         )
-        .filter(F.col("df") <= max_doc_freq)
-        .select("fp", "ref_id")
-    )
+
+    ref_kept = cap_buckets(_fps(reference), ["fp"], max_doc_freq)
     return (
-        new_fps.join(ref_kept, "fp")
-        .groupBy("new_id", "ref_id")
+        bucket_pairs(_fps(new_docs), ["fp"], ref=ref_kept)
+        .groupBy(F.col("id_a").alias("new_id"), F.col("id_b").alias("ref_id"))
         .agg(F.count(F.lit(1)).cast("int").alias("n_shared"))
         .filter(F.col("n_shared") >= min_shared)
     )
@@ -1011,45 +1008,20 @@ def minhash_cross_corpus_pairs(
     applies the same ``max_bucket`` degenerate-bucket cap; verification
     intersects int64 shingle-hash arrays for candidate ids only.
     """
-    def _sigs(df: DataFrame, out_id: str) -> DataFrame:
-        s = widen_for_kernel(df).select(
-            F.col(id_col).alias(out_id),
-            TXT.minhash_bands_and_shingles(
-                F.col(text_col), num_hashes, shingle_n, bands
-            ).alias("s"),
-        ).persist()
-        s.count()  # eager: one Arrow pass per side
-        return s
+    def _sigs(d: DataFrame) -> DataFrame:
+        return _fused_minhash_sigs(
+            d, id_col, text_col, shingle_n, num_hashes, bands
+        )
 
-    sig_new, sig_ref = _sigs(new_docs, "new_id"), _sigs(reference, "ref_id")
-    banded_new = sig_new.select(
-        "new_id", F.posexplode("s.bands").alias("band_idx", "band_hash")
-    )
-    banded_ref = sig_ref.select(
-        "ref_id", F.posexplode("s.bands").alias("band_idx", "band_hash")
-    )
-    ref_sizes = banded_ref.groupBy("band_idx", "band_hash").agg(
-        F.count("*").alias("n")
-    )
-    ref_capped = banded_ref.join(
-        ref_sizes.filter(F.col("n") <= max_bucket), ["band_idx", "band_hash"]
-    ).select("band_idx", "band_hash", "ref_id")
+    sig_new, sig_ref = _sigs(new_docs), _sigs(reference)
+    ref_capped = cap_buckets(_minhash_bands(sig_ref), _BAND, max_bucket)
     cands = (
-        banded_new.join(ref_capped, ["band_idx", "band_hash"])
-        .select("new_id", "ref_id")
+        bucket_pairs(_minhash_bands(sig_new), _BAND, ref=ref_capped)
+        .select("id_a", "id_b")
         .distinct()
     )
-    a = sig_new.select("new_id", F.col("s.sh").alias("sh_a"))
-    b = sig_ref.select("ref_id", F.col("s.sh").alias("sh_b"))
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    out = (
-        cands.join(a, "new_id")
-        .join(b, "ref_id")
-        .select(
-            "new_id", "ref_id", F.round(inter / union, 4).alias("jaccard")
-        )
-        .filter(F.col("jaccard") >= jaccard_threshold)
+    out = _jaccard_verify(cands, sig_new, sig_ref, jaccard_threshold).select(
+        F.col("id_a").alias("new_id"), F.col("id_b").alias("ref_id"), "jaccard"
     )
     return eager_release(out, sig_new, sig_ref)
 
@@ -1100,15 +1072,14 @@ def substring_overlap_pairs(
     bucket-join scale discipline as the MinHash path.
 
     ONE fp shuffle + ONE kernel run total before the pair aggregate:
-    the bucket-size cap is a count() window over the fp partition (not
-    a groupBy+join back — that shape made 3 passes over the fingerprint
-    relation), and the capped relation is ``localCheckpoint``ed so both
-    self-join sides read the SAME materialized rows instead of each
-    re-running the Arrow kernel (exchange reuse can't kick in once AQE
-    broadcasts one side).  Measured 9.0 → 2.5 s warm at sf0.1 across
-    the two changes.  The checkpoint is executor-local storage sized
-    like a shuffle of the capped relation — the same footprint the
-    groupBy+join shape shuffled anyway.  Tradeoffs vs the previous
+    the bucket cap (:func:`cap_buckets`) is a count() window over the fp
+    partition, and the capped relation is ``localCheckpoint``ed between
+    the cap and the pair join so both self-join sides read the SAME
+    materialized rows instead of each re-running the Arrow kernel
+    (exchange reuse can't kick in once AQE broadcasts one side).
+    Measured 9.0 → 2.5 s warm at sf0.1 against a groupBy+join-back cap
+    without the checkpoint.  The checkpoint is executor-local storage
+    sized like a shuffle of the capped relation.  Tradeoffs vs a
     persist()/eager_release shape, accepted deliberately: checkpointed
     partitions live until the RDD is GC'd rather than being released
     the moment the pair aggregate is consumed, and executor loss fails
@@ -1116,25 +1087,15 @@ def substring_overlap_pairs(
     truncates it) — at 100 TB run this stage with external shuffle /
     decommissioning rather than relying on lineage replay.
     """
-    from pyspark.sql import Window
-
     fps = widen_for_kernel(docs).select(
         F.col(id_col).alias("id"),
         F.explode(
             F.array_distinct(TXT.rolling_fingerprints(F.col(text_col), window))
         ).alias("fp"),
     )
-    capped = (
-        fps.withColumn("n", F.count(F.lit(1)).over(Window.partitionBy("fp")))
-        .filter(F.col("n") <= max_bucket)
-        .drop("n")
-        .localCheckpoint(eager=False)
-    )
-    a = capped.select("fp", F.col("id").alias("id_a"))
-    b = capped.select("fp", F.col("id").alias("id_b"))
+    capped = cap_buckets(fps, ["fp"], max_bucket).localCheckpoint(eager=False)
     return (
-        a.join(b, "fp")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(capped, ["fp"])
         .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("int").alias("shared_windows"))
         .filter(F.col("shared_windows") >= min_shared)
@@ -1184,16 +1145,10 @@ def edit_distance_pairs(
             )
         ).alias("variant"),
     )
-    sizes = variants.groupBy("variant").agg(F.count(F.lit(1)).alias("n"))
-    capped = variants.join(
-        sizes.filter(F.col("n") <= max_bucket).select("variant"), "variant"
-    )
-    a = capped.select("variant", F.col("val").alias("val_a"))
-    b = capped.select("variant", F.col("val").alias("val_b"))
+    capped = cap_buckets(variants, ["variant"], max_bucket)
     cands = (
-        a.join(b, "variant")
-        .filter(F.col("val_a") < F.col("val_b"))
-        .select("val_a", "val_b")
+        bucket_pairs(capped.withColumnRenamed("val", "id"), ["variant"])
+        .select(F.col("id_a").alias("val_a"), F.col("id_b").alias("val_b"))
         .distinct()
     )
     return cands.select(
@@ -1238,7 +1193,6 @@ def chunk_dedup_docs(
       columnar scan for a second corpus-sized shuffle, the right side of
       that trade at 100 TB.
     """
-    from pyspark.sql import Window
     import pandas as _pd
 
     chunks = TXT.content_defined_chunks(

@@ -28,6 +28,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
+from myrecommendsystem_spark.operators.dedup import bucket_pairs, cap_buckets
+
 MEDIA_SCHEMA = (
     "media_id bigint, kind string, payload binary, "
     "meta struct<width:int, height:int, channels:int, format:string, n_frames:int>"
@@ -464,31 +466,19 @@ def video_near_dup_pairs(
     """
     from myrecommendsystem_spark.functions.caching import eager_release
 
-    # four consumers (counts, occupancy, both join sides) — one Arrow
-    # kernel pass, not four decode passes over the payloads
+    # three consumers (counts, both join sides) — one Arrow kernel pass,
+    # not three decode passes over the payloads
     frames = frames.persist()
     counts = frames.groupBy("media_id").agg(
         F.count(F.lit(1)).cast("int").alias("n_frames_sampled")
     )
-    occ = frames.groupBy("fsig").agg(F.count(F.lit(1)).alias("occ"))
-    capped = frames.join(
-        occ.filter(F.col("occ") <= max_bucket).select("fsig"), "fsig"
-    ).persist()
-    a = capped.select(
-        F.col("fsig"),
-        F.col("media_id").alias("id_a"),
-        F.col("frame_idx").alias("fi_a"),
-    )
-    b = capped.select(
-        F.col("fsig"),
-        F.col("media_id").alias("id_b"),
-        F.col("frame_idx").alias("fi_b"),
-    )
+    rows = frames.withColumnRenamed("media_id", "id")
     per_offset = (
-        a.join(b, "fsig")
-        .filter(F.col("id_a") < F.col("id_b"))
+        bucket_pairs(cap_buckets(rows, ["fsig"], max_bucket), ["fsig"])
         .groupBy(
-            "id_a", "id_b", (F.col("fi_a") - F.col("fi_b")).alias("offset")
+            "id_a",
+            "id_b",
+            (F.col("frame_idx_a") - F.col("frame_idx_b")).alias("offset"),
         )
         .agg(F.count(F.lit(1)).cast("int").alias("cnt"))
     )
@@ -536,4 +526,4 @@ def video_near_dup_pairs(
             "n_b",
         )
     )
-    return eager_release(result, frames, capped)
+    return eager_release(result, frames)

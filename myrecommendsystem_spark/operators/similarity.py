@@ -32,6 +32,12 @@ from pyspark.sql.functions import pandas_udf
 from pyspark.sql.column import Column
 
 from myrecommendsystem_spark.functions.compat import round_stable
+from myrecommendsystem_spark.operators.dedup import (
+    _recall_by_band,
+    bucket_pairs,
+    cap_buckets,
+    connected_components,
+)
 from myrecommendsystem_spark.operators.parallelism import widen_for_kernel
 
 
@@ -474,8 +480,8 @@ def hyperplane_lsh_pairs(
     ``n_bits // band_bits`` byte-bands, vectors shuffle ONCE on
     (band_idx, band_val), and only same-bucket pairs are generated —
     never an all-pairs join.  Oversized buckets (> ``max_bucket``) are
-    dropped before pairing, the identical skew cap as the MinHash/
-    SimHash banding (dedup.py).  Candidates are then exact-cosine
+    dropped before pairing by the same skew cap as the MinHash/SimHash
+    banding (:func:`dedup.cap_buckets`).  Candidates are then exact-cosine
     verified at ``threshold`` with the engine's standard 4-digit
     round-stable convention, so the output is a deterministic SUBSET of
     :func:`near_duplicate_pairs` (pinned in tests).  Bucket width is
@@ -494,6 +500,31 @@ def hyperplane_lsh_pairs(
     )
 
 
+# bucket key of a sign-bit band
+_HP_BAND = ["band_idx", "band_val"]
+
+
+def _cosine_sides(
+    base_a: DataFrame, base_b: DataFrame
+) -> "tuple[DataFrame, DataFrame, Column]":
+    """The two sides of an exact-cosine verify over (id, v) relations —
+    (id_a, va, na) and (id_b, vb, nb), each norm computed once per
+    VECTOR, not per pair, so the verify folds one dot per pair instead
+    of three — and the 4-digit round-stable cosine over them."""
+
+    def side(base: DataFrame, s: str) -> DataFrame:
+        return base.select(
+            F.col("id").alias(f"id_{s}"),
+            F.col("v").alias(f"v{s}"),
+            F.sqrt(_dot(F.col("v"), F.col("v"))).alias(f"n{s}"),
+        )
+
+    cos = round_stable(
+        _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
+    )
+    return side(base_a, "a"), side(base_b, "b"), cos
+
+
 def hp_pairs_from_prepared(
     base: DataFrame,
     bands: DataFrame,
@@ -503,54 +534,24 @@ def hp_pairs_from_prepared(
 ) -> DataFrame:
     """Pair stage of :func:`hyperplane_lsh_pairs` over already-signed
     relations (``base`` = (id, v), ``bands`` = (id, band_idx,
-    band_val)) — factored out in round 8 so incremental maintenance
-    (streaming/semantic_dedup.py) signs each vector ONCE and reuses the
-    bands across its gate and self-dedup stages, the way the fold
-    oracle's CTEs already do.
+    band_val)), so incremental maintenance (streaming/semantic_dedup.py)
+    signs each vector ONCE and reuses the bands across its gate and
+    self-dedup stages, the way the fold oracle's CTEs already do.
 
     ``ordered=False`` drops the final global sort (one whole exchange):
     set-shaped consumers — connected components, distinct-id gates —
     are order-insensitive, so internal callers skip the sort the
-    registered pair queries keep for presentation (r13 optimization;
-    the driver's oracle hash is order-insensitive either way)."""
-    w = Window.partitionBy("band_idx", "band_val")
-    ok = bands.withColumn("bucket_n", F.count(F.lit(1)).over(w)).filter(
-        F.col("bucket_n") <= max_bucket
-    )
-    a, b = ok.alias("a"), ok.alias("b")
+    registered pair queries keep for presentation (the driver's oracle
+    hash is order-insensitive either way)."""
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .groupBy(
-            F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b")
-        )
+        bucket_pairs(cap_buckets(bands, _HP_BAND, max_bucket), _HP_BAND)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("int").alias("n_bands"))
     )
-    # norms once per VECTOR (not per candidate pair): the verify join
-    # then folds one dot per pair instead of three
-    normed = base.select(
-        "id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm")
-    )
-    va = normed.select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    vb = normed.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
-    cos = round_stable(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
-    )
+    a, b, cos = _cosine_sides(base, base)
     out = (
-        cand.join(va, "id_a")
-        .join(vb, "id_b")
+        cand.join(a, "id_a")
+        .join(b, "id_b")
         .select("id_a", "id_b", "n_bands", cos.alias("cos"))
         .filter(F.col("cos") >= threshold)
     )
@@ -569,9 +570,9 @@ def hyperplane_recall_report(
 ) -> DataFrame:
     """Sign-bit LSH S-curve measurement: per exact-cosine decile band,
     how many true pairs exist and how many the banded candidate stage
-    caught — the acceptance gate the hyperplane family lacked while
-    MinHash had ``minhash_recall_report`` and IVF had
-    ``ann_recall_report`` (round-11 verdict item 3).
+    caught — the hyperplane family's acceptance gate, as
+    ``minhash_recall_report`` is MinHash's and ``ann_recall_report``
+    IVF's.
 
     Returns (cosband, n_true, n_caught): ``cosband`` =
     ⌊10·round(cos, 4)⌋ over the exact cosine (band 3 ≈ cos ∈
@@ -586,8 +587,9 @@ def hyperplane_recall_report(
     bounded to a PROBE sample (ids < ``probe_max_id``) — the probe
     side broadcasts into one linear pass over the corpus (the
     brute_force_topk venue; the corpus never shuffles) — while the
-    candidate side runs the production signing/banding/cap path over
-    the full corpus unchanged.  Truth pairs are (probe, higher id):
+    candidate side runs the production signing/banding/cap path
+    (:func:`dedup.cap_buckets`, :func:`dedup.bucket_pairs`) over the
+    full corpus unchanged.  Truth pairs are (probe, higher id):
     every such pair's smaller id is a probe, matching the candidate
     slice ``id_a < probe_max_id`` exactly (the minhash report's
     convention).
@@ -597,58 +599,23 @@ def hyperplane_recall_report(
     if prepared is None:
         return _empty_frame(df, out_schema)
     base, bands = prepared
-    w = Window.partitionBy("band_idx", "band_val")
-    ok = bands.withColumn("bucket_n", F.count(F.lit(1)).over(w)).filter(
-        F.col("bucket_n") <= max_bucket
-    )
-    a, b = ok.alias("a"), ok.alias("b")
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(cap_buckets(bands, _HP_BAND, max_bucket), _HP_BAND)
+        .select("id_a", "id_b")
         .distinct()
         .filter(F.col("id_a") < probe_max_id)
     )
-    normed = base.select(
-        "id", "v", F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nrm")
-    )
-    pe = normed.filter(F.col("id") < probe_max_id).select(
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    all_v = normed.select(
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
+    a, b, cos = _cosine_sides(base, base)
     # ⌊10·round(cos,4)⌋: the 4-digit round-stable cosine is already
     # replayed bitwise by the hp_pairs oracle convention, and ×10/floor
     # are single IEEE ops written identically in both engines — the
     # integer-div trick isn't available (no integer ratio exists for a
     # cosine), so op-order identity is the cross-engine contract here.
-    cosband = F.floor(
-        round_stable(
-            _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
-        )
-        * 10
-    ).cast("int")
-    truth = (
-        all_v.join(F.broadcast(pe), F.col("id_b") > F.col("id_a"))
-        .select("id_a", "id_b", cosband.alias("cosband"))
-    )
-    return (
-        truth.join(cand.withColumn("m", F.lit(1)), ["id_a", "id_b"], "left")
-        .groupBy("cosband")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_true"),
-            F.coalesce(F.sum("m"), F.lit(0)).cast("long").alias("n_caught"),
-        )
-    )
+    truth = b.join(
+        F.broadcast(a.filter(F.col("id_a") < probe_max_id)),
+        F.col("id_b") > F.col("id_a"),
+    ).select("id_a", "id_b", F.floor(cos * 10).cast("int").alias("cosband"))
+    return _recall_by_band(truth, cand, "cosband")
 
 
 def hyperplane_lsh_cross_pairs(
@@ -728,10 +695,8 @@ def hyperplane_semantic_survivors(
     cluster_size): sign-bit LSH pairs → connected components → one
     min-id survivor per cosine-cluster, singletons riding along at
     size 1.  ONE ``_hp_prepare`` feeds both the pair pipeline and the
-    eligible population (round 8 — the query-side composition ran the
-    signature scan and the eligibility filter as separate passes)."""
-    from myrecommendsystem_spark.operators.dedup import connected_components
-
+    eligible population, so the signature scan and the eligibility
+    filter are one pass."""
     out_schema = f"{id_col} bigint, cluster_size int"
     prep = _hp_prepare(df, n_bits, band_bits, id_col, vec_col, salt)
     if prep is None:
@@ -770,40 +735,24 @@ def hp_cross_pairs_from_prepared(
 ) -> DataFrame:
     """Cross-pair stage of :func:`hyperplane_lsh_cross_pairs` over
     already-signed relations — the prepared-input twin of
-    :func:`hp_pairs_from_prepared` (same round-8 rationale; same
-    ``ordered=False`` escape for set-shaped internal consumers)."""
-    w = Window.partitionBy("band_idx", "band_val")
-    ref_ok = ref_bands.withColumn(
-        "bucket_n", F.count(F.lit(1)).over(w)
-    ).filter(F.col("bucket_n") <= max_bucket)
-    a = new_bands.alias("a")
-    b = ref_ok.alias("b")
+    :func:`hp_pairs_from_prepared` (same ``ordered=False`` escape for
+    set-shaped internal consumers)."""
+    ref_ok = cap_buckets(ref_bands, _HP_BAND, max_bucket)
     cand = (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val")),
-        )
-        .groupBy(F.col("a.id").alias("new_id"), F.col("b.id").alias("ref_id"))
+        bucket_pairs(new_bands, _HP_BAND, ref=ref_ok)
+        .groupBy("id_a", "id_b")
         .agg(F.count(F.lit(1)).cast("int").alias("n_bands"))
     )
-    new_normed = new_base.select(
-        F.col("id").alias("new_id"),
-        F.col("v").alias("va"),
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("na"),
-    )
-    ref_normed = ref_base.select(
-        F.col("id").alias("ref_id"),
-        F.col("v").alias("vb"),
-        F.sqrt(_dot(F.col("v"), F.col("v"))).alias("nb"),
-    )
-    cos = round_stable(
-        _dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 4
-    )
+    a, b, cos = _cosine_sides(new_base, ref_base)
     out = (
-        cand.join(new_normed, "new_id")
-        .join(ref_normed, "ref_id")
-        .select("new_id", "ref_id", "n_bands", cos.alias("cos"))
+        cand.join(a, "id_a")
+        .join(b, "id_b")
+        .select(
+            F.col("id_a").alias("new_id"),
+            F.col("id_b").alias("ref_id"),
+            "n_bands",
+            cos.alias("cos"),
+        )
         .filter(F.col("cos") >= threshold)
     )
     return out.orderBy("new_id", "ref_id") if ordered else out
@@ -1044,8 +993,6 @@ def embedding_dedup_survivors(
     a≈b≈c collapses to one survivor even when cos(a, c) < threshold —
     the same closure semantics pretraining dedup uses for text.
     """
-    from myrecommendsystem_spark.operators.dedup import connected_components
-
     pairs = near_duplicate_pairs(
         df, threshold=threshold, id_col=id_col, vec_col=vec_col, method=method
     )

@@ -31,6 +31,10 @@ def get_spark(
     - ``spark.sql.adaptive.enabled`` — AQE re-plans shuffles at runtime
       (coalesce small partitions, convert to broadcast, split skewed keys).
     - ``spark.sql.session.timeZone=UTC`` — deterministic date semantics.
+    - ``spark.sql.legacy.parquet.nanosAsLong=true`` — parquet
+      TIMESTAMP(NANOS) columns readable (``io.readers.load_table``
+      rebuilds the timestamp); with both set here, reads leave the
+      session's conf alone.
     - ``spark.sql.execution.arrow.pyspark.enabled`` — Arrow batches for the
       few Pandas-UDF paths (vector math, multimodal decode).
     - shuffle partitions sized to the harness (32 cores locally); on a real
@@ -50,6 +54,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(32 * 1024 * 1024))
         # Allow shuffled hash join where the planner's size conditions

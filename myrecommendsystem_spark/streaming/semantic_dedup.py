@@ -1,5 +1,5 @@
 """Incremental semantic dedup — the streaming twin of the batch
-keep-list (round-7 verdict item 6b).
+keep-list.
 
 ``embedding_cross_corpus_near`` is the one-shot INGEST GATE: a batch of
 new vectors probed against a reference corpus through shared sign-bit
@@ -145,12 +145,12 @@ def incremental_semantic_survivors(
     if not batches:
         raise ValueError("incremental_semantic_survivors: no batches")
     spark = batches[0].sparkSession
-    # ONE dim-probe job for the whole fold (r13 optimization): the
-    # per-batch `_hp_prepare` probe is a full Spark job each, and the
-    # fold ran K of them.  A single tagged union reproduces the exact
-    # per-batch max-dims the individual probes would have returned
-    # (including 0/absent for an empty batch → that step contributes
-    # nothing, same as the old prep-is-None skip).
+    # ONE dim-probe job for the whole fold: a per-batch `_hp_prepare`
+    # probe is a full Spark job each, K of them per fold.  A single
+    # tagged union reproduces the exact per-batch max-dims the
+    # individual probes would return (including 0/absent for an empty
+    # batch → that step contributes nothing, as a prep-is-None skip
+    # would).
     probe_union = reduce(
         DataFrame.unionByName,
         (
@@ -271,8 +271,7 @@ def run_semantic_dedup_stream(
     first, bands second; foreachBatch replay after a crash between the
     writes re-upserts both idempotently (same keys, same rows).
 
-    Round 10 (round-9 SCALE.md residual): the band table is an
-    APPEND-ONLY LOG partitioned by (batch_id,
+    The band table is an APPEND-ONLY LOG partitioned by (batch_id,
     ``pmod(hash(band_idx, band_val), num_band_parts)``) — NOT an
     upsert-by-vec_id table.  Write side: each trigger dynamic-
     overwrites only its OWN batch_id partition subtree — O(batch)
@@ -297,11 +296,11 @@ def run_semantic_dedup_stream(
     :func:`compact_band_log` (one batch_id subtree per trigger is the
     classic many-small-files trade, not a correctness term).
 
-    ``compact_every=N`` (round-11 verdict item 4) schedules that
-    compaction INSIDE foreachBatch every N triggers — after the
-    batch's own append, where no concurrent trigger can interleave —
-    so a long-running stream holds at most N uncompacted batch_id
-    subtrees instead of one per trigger forever.  Crash window: a
+    ``compact_every=N`` schedules that compaction INSIDE foreachBatch
+    every N triggers — after the batch's own append, where no
+    concurrent trigger can interleave — so a long-running stream holds
+    at most N uncompacted batch_id subtrees instead of one per trigger
+    forever.  Crash window: a
     replay of the compacting trigger re-appends its own batch_id
     subtree next to the already-folded COMPACTED_EPOCH copy —
     duplicate band rows are correctness-neutral (candidates are

@@ -9,7 +9,7 @@ format-independent.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+from pyspark.sql import functions as F, types as T
 
 from myrecommendsystem_spark.io import readers, writers
 from myrecommendsystem_spark.plans.ingest_queries import RATINGS_JSONL
@@ -72,3 +72,26 @@ def test_orc_scan_gets_pushdown_and_pruning(spark, sf_dir, tmp_path):
     assert "PushedFilters: [" in plan and "o_totalprice" in plan
     # partition filter must NOT appear as a data filter — it prunes directories
     assert "PartitionFilters: [" in plan
+
+
+def test_load_table_leaves_engine_session_conf_alone(
+    spark, sf_dir, monkeypatch
+):
+    """A ``get_spark`` session already has the readers' confs (UTC,
+    nanos parquet timestamps), so reads make no ``RuntimeConfig.set``
+    call, and ``events.ts`` still arrives as a timestamp."""
+    conf_cls = type(spark.conf)
+    set_keys = []
+    real_set = conf_cls.set
+
+    def _recording_set(self, key, *args, **kwargs):
+        set_keys.append(key)
+        return real_set(self, key, *args, **kwargs)
+
+    monkeypatch.setattr(conf_cls, "set", _recording_set)
+    events = readers.load_table(spark, sf_dir, "events")
+    readers.load_table(spark, sf_dir, "documents")
+    assert set_keys == []
+    assert isinstance(
+        events.schema["ts"].dataType, (T.TimestampType, T.TimestampNTZType)
+    )

@@ -169,6 +169,9 @@ def test_fingerprint_adaptive_probe_picks_collapse_when_clone_heavy(spark):
         spark.catalog.clearCache()
     assert "least(" in plans["clone"], "clone-heavy corpus must collapse"
     assert "least(" not in plans["unique"], "unique corpus must run direct"
+
+
+def test_fingerprint_collapse_cap_counts_ids(spark):
     """The max_bucket cap must count IDS per bucket on the collapse
     path too (group sizes summed), not distinct fingerprints — a clone
     group bigger than the cap saturates every one of its buckets and
@@ -182,6 +185,43 @@ def test_fingerprint_adaptive_probe_picks_collapse_when_clone_heavy(spark):
             df, max_hamming=4, max_bucket=10, _force_collapse=forced
         ).count()
         assert got == 0, forced
+
+
+@pytest.mark.parametrize(
+    "rows, ref, weight, expected",
+    [
+        # a bucket of exactly max_bucket (3) ids is kept ...
+        ([(0, 1), (1, 1), (2, 1)], None, None, {(0, 1), (0, 2), (1, 2)}),
+        # ... and one of max_bucket + 1 is dropped
+        ([(0, 1), (1, 1), (2, 1), (3, 1)], None, None, set()),
+        # cross: only ref is capped, so the oversized new-side bucket 1
+        # (5 ids) keeps every pair, while ref's bucket 2 (4 ids) is gone
+        (
+            [(100 + i, 1) for i in range(5)] + [(200, 2)],
+            [(0, 1), (1, 1)] + [(10 + i, 2) for i in range(4)],
+            None,
+            {(100 + i, r) for i in range(5) for r in (0, 1)},
+        ),
+        # weight: the cap sums the ids each row stands for, 2+1 <= 3 kept,
+        # 2+2 > 3 dropped, though both buckets hold two rows
+        ([(0, 1, 2), (1, 1, 1), (2, 2, 2), (3, 2, 2)], None, "w", {(0, 1)}),
+    ],
+)
+def test_bucket_cap_core(spark, rows, ref, weight, expected):
+    """cap_buckets keeps a bucket of at most max_bucket ids (summed
+    ``weight`` when given); bucket_pairs self-joins it (id_a < id_b) or
+    joins it against a capped ``ref``, carrying other columns as
+    ``<c>_a`` / ``<c>_b``."""
+    schema = "id long, k int" + (", w long" if weight else "")
+    df = spark.createDataFrame(rows, schema)
+    if ref is None:
+        out = dedup.bucket_pairs(dedup.cap_buckets(df, ["k"], 3, weight), ["k"])
+    else:
+        capped_ref = dedup.cap_buckets(spark.createDataFrame(ref, schema), ["k"], 3)
+        out = dedup.bucket_pairs(df, ["k"], ref=capped_ref)
+    assert {(r.id_a, r.id_b) for r in out.collect()} == expected
+    carried = ["w_a", "w_b"] if weight else []
+    assert sorted(out.columns) == sorted(["k", "id_a", "id_b", *carried])
 
 
 def test_fingerprint_probe_memo_skips_probe(spark):
