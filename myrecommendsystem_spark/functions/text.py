@@ -60,16 +60,6 @@ def punct_ratio(text: Column) -> Column:
     )
 
 
-def stopword_ratio(text: Column, lang: str = "en") -> Column:
-    """Fraction of tokens that are stopwords of ``lang``."""
-    sw = F.array(*[F.lit(w) for w in LANG_STOPWORDS[lang]])
-    toks = tokens(text)
-    n_sw = F.size(F.filter(toks, lambda t: F.array_contains(sw, t)))
-    return F.when(F.size(toks) == 0, F.lit(0.0)).otherwise(
-        n_sw / F.size(toks).cast("double")
-    )
-
-
 def mean_token_len(text: Column) -> Column:
     toks = tokens(text)
     total = F.aggregate(
@@ -1089,16 +1079,6 @@ def hash_embed_one(
     np.add.at(v, (h % np.uint64(dim)).astype(np.int64), signs)
     nrm = np.linalg.norm(v)
     return (v / nrm if nrm > 0 else v).astype(np.float32).tolist()
-
-
-def hash_bytes(b: bytes, seed: int = 7) -> int:
-    """FNV-1a 64-bit — deterministic across processes (unlike Python's
-    salted builtin hash)."""
-    h = (0xCBF29CE484222325 ^ seed) & 0xFFFFFFFFFFFFFFFF
-    for byte in b:
-        h ^= byte
-        h = (h * 0x100000001B3) & 0xFFFFFFFFFFFFFFFF
-    return h
 
 
 def compression_ratio(text_col, level: int = 6):

@@ -12,18 +12,19 @@ without ever leaving Catalyst:
   ``recommendForAllUsers(k)`` instead — MLlib's blocked BLAS top-k, which
   never materializes the cartesian.
 - M3+J2+F6+P4+A6: the item-item cosine similarity matrix (:92-109) —
-  exact normalized-dot self-join below the ``lsh_threshold`` item count,
-  ``BucketedRandomProjectionLSH.approxSimilarityJoin`` above it.
+  the embedding near-duplicate kernel
+  (``operators.similarity.near_duplicate_pairs``): one numpy GEMM per
+  partition against the broadcast unit factors under its size gate,
+  IVF-bucketed above it.
 """
 
 from __future__ import annotations
 
-from pyspark.ml.feature import BucketedRandomProjectionLSH, Normalizer
-from pyspark.ml.functions import array_to_vector
 from pyspark.ml.recommendation import ALS, ALSModel
 from pyspark.sql import DataFrame, functions as F
 
 from myrecommendsystem_spark.operators.relational import collect_recs
+from myrecommendsystem_spark.operators.similarity import near_duplicate_pairs
 
 USER_MAX_RECOMMENDATION = 20  # OfflineRecommender.scala:32
 SIM_THRESHOLD = 0.6  # OfflineRecommender.scala:105
@@ -116,19 +117,8 @@ def item_factors_df(model: ALSModel) -> DataFrame:
     )
 
 
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x
-    )
-
-
 def item_similarities(
-    factors: DataFrame,
-    threshold: float = SIM_THRESHOLD,
-    method: str = "auto",
-    lsh_item_limit: int = 100_000,
-    lsh_bucket_length: float = 0.5,
-    seed: int = 42,
+    factors: DataFrame, threshold: float = SIM_THRESHOLD, method: str = "auto"
 ) -> DataFrame:
     """M7: pairwise cosine similarity over item factors, thresholded.
 
@@ -136,66 +126,24 @@ def item_similarities(
     directions (pid, other_pid, sim) with pid != other_pid and sim >
     threshold — matching OfflineRecommender.scala:99-109.
 
-    - ``exact``: pre-normalize, then self-join and dot-product with
-      built-ins (zip_with/aggregate — JVM-side, codegen).  O(P²): correct
-      choice only below ~1e5 items.
-    - ``lsh``: BucketedRandomProjectionLSH approx similarity join on the
-      normalized vectors; cosine = 1 - d²/2 for unit vectors, so the
-      threshold maps to euclidean distance sqrt(2(1-threshold)).
-    - ``auto``: exact under ``lsh_item_limit`` items, else LSH — the
-      100 TB-safe default.
+    Scoring is :func:`near_duplicate_pairs` with ``method`` forwarded
+    (``exact`` GEMM, ``ivf`` buckets, ``auto`` picks by size).  It emits
+    each pair once (id_a < id_b, cos ≥ threshold, cos rounded to 4
+    digits); the reference's strict ``>`` is applied here, and each pair
+    is mirrored in one explode so the GEMM plan runs once (a union of
+    two selects would run it twice).
     """
-    norm = F.sqrt(_dot(F.col("features"), F.col("features")))
-    unit = factors.select(
-        "productId",
-        F.transform("features", lambda x: x / norm).alias("unit"),
+    pairs = near_duplicate_pairs(
+        factors, threshold, id_col="productId", vec_col="features", method=method
+    ).filter(F.col("cos") > threshold)
+    a, b, cos = F.col("id_a").cast("int"), F.col("id_b").cast("int"), F.col("cos")
+    mirrored = F.explode(
+        F.array(
+            F.struct(a.alias("pid"), b.alias("other_pid"), cos.alias("sim")),
+            F.struct(b.alias("pid"), a.alias("other_pid"), cos.alias("sim")),
+        )
     )
-
-    if method == "auto":
-        method = "exact" if factors.count() <= lsh_item_limit else "lsh"
-
-    if method == "exact":
-        a = unit.select(
-            F.col("productId").alias("pid"), F.col("unit").alias("ua")
-        )
-        b = unit.select(
-            F.col("productId").alias("other_pid"), F.col("unit").alias("ub")
-        )
-        pairs = a.crossJoin(b).filter(F.col("pid") != F.col("other_pid"))
-        sims = pairs.select(
-            "pid",
-            "other_pid",
-            F.round(_dot(F.col("ua"), F.col("ub")), 4).alias("sim"),
-        )
-        return sims.filter(F.col("sim") > threshold)
-
-    if method == "lsh":
-        vecs = unit.select(
-            "productId", array_to_vector(F.col("unit")).alias("vec")
-        )
-        lsh = BucketedRandomProjectionLSH(
-            inputCol="vec",
-            outputCol="hashes",
-            bucketLength=lsh_bucket_length,
-            numHashTables=4,
-            seed=seed,
-        )
-        lsh_model = lsh.fit(vecs)
-        dist_threshold = float((2.0 * (1.0 - threshold)) ** 0.5)
-        joined = lsh_model.approxSimilarityJoin(
-            vecs, vecs, dist_threshold, distCol="dist"
-        )
-        return (
-            joined.select(
-                F.col("datasetA.productId").alias("pid"),
-                F.col("datasetB.productId").alias("other_pid"),
-                F.round(1.0 - F.col("dist") * F.col("dist") / 2.0, 4).alias("sim"),
-            )
-            .filter(F.col("pid") != F.col("other_pid"))
-            .filter(F.col("sim") > threshold)
-        )
-
-    raise ValueError(f"unknown method: {method!r}")
+    return pairs.select(mirrored.alias("p")).select("p.*")
 
 
 def product_recs(sims: DataFrame, k: int | None = None) -> DataFrame:

@@ -155,6 +155,22 @@ def brute_force_topk_dot(
     )
 
 
+def _threshold_pairs(
+    a_ids: np.ndarray,
+    a_mat: np.ndarray,
+    b_ids: np.ndarray,
+    b_mat: np.ndarray,
+    threshold: float,
+) -> pd.DataFrame:
+    """One block of the cosine gram matrix of unit rows ``a_mat`` against
+    ``b_mat``: the (id_a, id_b, cos) pairs with id_a < id_b and cos ≥
+    ``threshold``, cos rounded like ``round_stable`` (dot + 1e-9, 4
+    digits) so a rounding tie resolves the same way as the oracle."""
+    sims = np.round(a_mat @ b_mat.T + 1e-9, 4)
+    ia, ib = np.nonzero((sims >= threshold) & (a_ids[:, None] < b_ids[None, :]))
+    return pd.DataFrame({"id_a": a_ids[ia], "id_b": b_ids[ib], "cos": sims[ia, ib]})
+
+
 def near_duplicate_pairs(
     df: DataFrame,
     threshold: float = 0.35,
@@ -179,14 +195,13 @@ def near_duplicate_pairs(
       AND ``rows × d × 8 bytes ≤ exact_bytes_limit`` (default 256 MB) —
       the matrix the exact path collects+broadcasts is rows×d×8, so a
       row-count gate alone under-counts wide embeddings (500k rows is
-      256 MB at d=64 but 4 GB at d=1024; round-4 verdict item 6).  Above
-      either bound the router takes IVF — the same size-gated routing as
-      ``ml.als.item_similarities``, so callers never fall into the
-      driver-collect path at scale.
-    """
-    import numpy as np
-    import pandas as pd
+      256 MB at d=64 but 4 GB at d=1024).  Above either bound the router
+      takes IVF, so callers never fall into the driver-collect path at
+      scale.
 
+    Both paths score with :func:`_threshold_pairs`, the one cosine-
+    threshold kernel; ``ml.als.item_similarities`` routes through here.
+    """
     n_rows = None  # known only after the auto router's count
     if method == "auto":
         n_rows = df.count()
@@ -206,6 +221,8 @@ def near_duplicate_pairs(
             vec_col=vec_col,
             n=n_rows,
         )
+    if method != "exact":
+        raise ValueError(f"unknown method: {method!r}")
 
     u = as_unit_vectors(widen_for_kernel(df), id_col, vec_col)
     rows = u.collect()  # corpus side must fit the driver — see docstring
@@ -214,23 +231,15 @@ def near_duplicate_pairs(
     spark = df.sparkSession
     b_ids = spark.sparkContext.broadcast(ids)
     b_mat = spark.sparkContext.broadcast(mat)
-    eps = 1e-9
 
     def block(batches):
         for pdf in batches:
-            a_ids = pdf["id"].to_numpy(dtype=np.int64)
-            a_mat = np.array(list(pdf["unit"]), dtype=np.float64)
-            sims = a_mat @ b_mat.value.T  # (block, N)
-            sims = np.round(sims + eps, 4)
-            ia, ib = np.nonzero(
-                (sims >= threshold) & (a_ids[:, None] < b_ids.value[None, :])
-            )
-            yield pd.DataFrame(
-                {
-                    "id_a": a_ids[ia],
-                    "id_b": b_ids.value[ib],
-                    "cos": sims[ia, ib],
-                }
+            yield _threshold_pairs(
+                pdf["id"].to_numpy(dtype=np.int64),
+                np.array(list(pdf["unit"]), dtype=np.float64),
+                b_ids.value,
+                b_mat.value,
+                threshold,
             )
 
     return u.mapInPandas(block, "id_a long, id_b long, cos double")
@@ -256,21 +265,16 @@ def near_duplicate_pairs_ivf(
     :func:`near_duplicate_pairs` so the two are drop-in comparable.
     """
     if n is None:
-        n = df.count()  # doubles as the empty gate and the fit's n (r13)
+        n = df.count()  # doubles as the empty gate and the fit's n
     if n == 0:
         return _empty_frame(df, "id_a bigint, id_b bigint, cos double")
     centroids = fit_ivf_centroids(df, n_cells, id_col, vec_col, seed, n=n)
     assigned = ivf_assign(df, centroids, id_col, vec_col, nprobe=nprobe)
-    eps = 1e-9
 
     def cell_block(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy(dtype=np.int64)
         m = np.array(list(pdf["unit"]), dtype=np.float64)
-        sims = np.round(m @ m.T + eps, 4)
-        ia, ib = np.nonzero((sims >= threshold) & (ids[:, None] < ids[None, :]))
-        return pd.DataFrame(
-            {"id_a": ids[ia], "id_b": ids[ib], "cos": sims[ia, ib]}
-        )
+        return _threshold_pairs(ids, m, ids, m, threshold)
 
     # One shuffle of the (id, unit) assignment rows on cell_id, then each
     # cell's pair generation is ONE BLAS gram-matrix block — replacing the
@@ -345,7 +349,7 @@ def _hp_prepare(
     interpreted per node — measured 5.7 s vs 0.9 s for this fold at
     sf0.1.
     """
-    # Null-safe dim probe (round-7 ADVICE): an arbitrary .first() row can
+    # Null-safe dim probe: an arbitrary .first() row can
     # be a null/short embedding, which silently emptied the whole family
     # while the oracle still computed pairs over the remaining rows.
     # max(size(v)) over non-null rows matches the population the oracle
@@ -373,14 +377,14 @@ def _hp_prepare_sig(
     band0..band{k-1})`` — ONE row per vector carrying both the raw
     vector and its byte-band values, or None on empty/0-dim input.
 
-    r13 optimization: :func:`_hp_prepare` used to hand back a separate
-    EXPLODED bands relation, so incremental consumers (the semantic
-    fold) checkpointed TWO relations per step (base + bands) — two
-    eager jobs and duplicated id/band storage.  Fusing the band values
-    onto the base row lets a caller checkpoint ONE relation and derive
-    the exploded view with :func:`_explode_bands` (a map-only
-    projection — free to recompute per consumer, unlike the sign fold,
-    which stays materialized in the checkpoint).  Sign-fold semantics
+    Why fused: a separate EXPLODED bands relation would make incremental
+    consumers (the semantic fold) checkpoint TWO relations per step
+    (base + bands) — two eager jobs and duplicated id/band storage.
+    Fusing the band values onto the base row lets a caller checkpoint
+    ONE relation and derive the exploded view with
+    :func:`_explode_bands` (a map-only projection — free to recompute
+    per consumer, unlike the sign fold, which stays materialized in the
+    checkpoint).  Sign-fold semantics
     are bit-identical: same fused left-assoc fold, same band packing
     (see the fold note below).
     """
@@ -762,8 +766,8 @@ def kmeans_fit_mat(mat: np.ndarray, n_cells: int, seed: int = 42) -> np.ndarray:
     """k-means++ seeded Lloyd over an already-normalized (n, d) matrix —
     the PURE numpy fit shared by the Spark path (:func:`fit_ivf_centroids`)
     and the DuckDB-oracle twin (plans/ann_oracles.py), so the two train
-    bit-identical centroids from the same rows.  Factored out in round 8
-    to hash-gate the quantized-ANN family (r7 verdict item 2)."""
+    bit-identical centroids from the same rows, which is what lets the
+    quantized-ANN family be hash-gated against the oracle."""
     rng = np.random.RandomState(seed)
     # k-means++ init
     centers = [mat[rng.randint(len(mat))]]
@@ -870,8 +874,8 @@ def fit_ivf_centroids(
     DataFrame: the fit is driver-local, a round-trip through
     ``createDataFrame`` + re-collect added two more jobs for nothing.
 
-    ``n``: input row count when the caller already knows it — the r13
-    job-fusion hook: the old shape ran ``isEmpty()`` + ``count()`` +
+    ``n``: input row count when the caller already knows it — the
+    job-fusion hook: without it a fit runs ``isEmpty()`` + ``count()`` +
     the sample collect (three scans of the corpus, two of them full
     passes at scale); a caller that counts once and threads ``n``
     through every fit pays ONE count for the whole index build.
@@ -945,7 +949,7 @@ def ivf_topk(
     (query_id, vec_id, cos, rnk) — same shape as brute_force_topk so the
     two are drop-in comparable (recall measured in tests).
     """
-    n = corpus.count()  # doubles as the empty gate and the fit's n (r13)
+    n = corpus.count()  # doubles as the empty gate and the fit's n
     if n == 0:
         return _empty_frame(
             corpus, "query_id bigint, vec_id bigint, cos double, rnk int"
@@ -1192,7 +1196,7 @@ def pq_topk(
     ``rerank=None`` returns the raw compressed-domain ranking.  Recall
     vs brute force asserted in tests (same contract as IVF).
     """
-    n = corpus.count()  # doubles as the empty gate and the fit's n (r13)
+    n = corpus.count()  # doubles as the empty gate and the fit's n
     if n == 0:
         return _empty_frame(
             corpus, "query_id bigint, vec_id bigint, score double, rnk int"
@@ -1278,7 +1282,7 @@ def ivf_pq_topk(
     (row, probing query) pair, and only the ≤ Q·rerank shortlist ever
     fetches true vectors.
     """
-    n = corpus.count()  # doubles as the empty gate and the fits' n (r13)
+    n = corpus.count()  # doubles as the empty gate and the fits' n
     if n == 0:
         return _empty_frame(
             corpus, "query_id bigint, vec_id bigint, score double, rnk int"
@@ -1321,14 +1325,14 @@ def build_ivfpq_index(
     and serves every subsequent search from its 8-byte codes, instead of
     re-quantizing per query the way the one-shot helpers do.
 
-    r13 job fusion: ONE ``count`` gates emptiness and sizes both fits
-    (the old shape scanned the corpus five times before encoding:
-    2×``isEmpty`` + 2×``count`` + 2 sample collects).  When the corpus
-    is within ``max_train`` both quantizers train on the SAME sample —
-    the whole corpus ordered by id, which is what each fit would have
-    collected independently — so the sample is gathered once; above the
-    cap the two salted samples differ by design and are gathered
-    separately, exactly as before.  Trained matrices are bit-identical
+    Job fusion: ONE ``count`` gates emptiness and sizes both fits
+    (fitting each quantizer on its own scans the corpus five times
+    before encoding: 2×``isEmpty`` + 2×``count`` + 2 sample collects).
+    When the corpus is within ``max_train`` both quantizers train on the
+    SAME sample — the whole corpus ordered by id, which is what each fit
+    would have collected independently — so the sample is gathered once;
+    above the cap the two salted samples differ by design and are
+    gathered separately, as each fit alone would.  Trained matrices are bit-identical
     to the per-fit path in both regimes."""
     if n is None:
         n = corpus.count()
@@ -1682,7 +1686,7 @@ def pca_spectrum(
     eigenvalue from the data as the projection variance.  The fully
     distributed covariance remains available as :func:`pca_covariance`
     for exact-spectrum runs."""
-    n = df.count()  # doubles as the empty gate and the fit's n (r13)
+    n = df.count()  # doubles as the empty gate and the fit's n
     if n == 0:
         return _empty_frame(
             df,
@@ -1746,7 +1750,7 @@ def pca_topk(
     one map-only Arrow pass; the reduced-space scan moves r-dim vectors
     only; the re-rank tail is the shared bounded numpy pass.
     """
-    n = corpus.count()  # doubles as the empty gate and the fit's n (r13)
+    n = corpus.count()  # doubles as the empty gate and the fit's n
     if n == 0:
         return _empty_frame(
             corpus, "query_id bigint, vec_id bigint, score double, rnk int"

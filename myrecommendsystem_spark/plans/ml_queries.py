@@ -53,8 +53,8 @@ def als_user_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "als_item_similarities",
     None,
-    doc="M3+M7: item-factor cosine similarity matrix, exact normalized-dot "
-    "self-join, sim > 0.6 (OfflineRecommender.scala:92-109)",
+    doc="M3+M7: item-factor cosine similarity matrix, exact broadcast GEMM "
+    "over unit factors, sim > 0.6 (OfflineRecommender.scala:92-109)",
 )
 def als_item_similarities(spark: SparkSession, sf_dir: str) -> DataFrame:
     r = _ratings(spark, sf_dir)

@@ -160,6 +160,9 @@ def expected_driver_window(
 
     Deterministic given the committed artifacts; ``DRIVER_WINDOW`` is
     this derivation for the next round (:func:`next_driver_window`).
+    No tier is added for queries changed after their last green driver
+    row: every change replays the gated queries it touches at sf0.01
+    against the oracle before it lands.
     """
     import json
 

@@ -193,11 +193,6 @@ def recs_with_popularity_fallback(
     popularity list is a bounded product-dimension relation → broadcast;
     the seen-filter is the same anti join as the model path.
     """
-    from myrecommendsystem_spark.operators.relational import (
-        anti_join,
-        top_k_per_group,
-    )
-
     model = recs.select(
         "userId",
         "candidateId",

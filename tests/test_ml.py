@@ -100,25 +100,30 @@ def test_item_similarities_exact(model):
         assert math.isclose(pairs[(b, a)], s, abs_tol=1e-6)
 
 
-def test_item_similarities_lsh_agrees_with_exact(model):
-    factors = als_mod.item_factors_df(model)
-    exact = {
-        (r.pid, r.other_pid)
-        for r in als_mod.item_similarities(
-            factors, threshold=0.6, method="exact"
-        ).collect()
-    }
-    lsh = {
-        (r.pid, r.other_pid)
-        for r in als_mod.item_similarities(
-            factors, threshold=0.6, method="lsh"
-        ).collect()
-    }
-    # LSH is approximate: it may miss pairs but must not invent them
-    # (distances are exact inside approxSimilarityJoin).
-    assert lsh <= exact
-    # and with 4 hash tables on 40 items it should find the majority
-    assert len(lsh) >= 0.5 * len(exact)
+def test_item_similarities_hand_built_factors(spark):
+    """Cosines 1·2 = 0.6, 1·3 = 0.8, 2·3 = 0.96: the pair at exactly the
+    threshold is dropped by the reference's strict ``>``, the rest come
+    back in both directions."""
+    factors = spark.createDataFrame(
+        [(1, [5.0, 0.0]), (2, [3.0, 4.0]), (3, [4.0, 3.0])],
+        "productId int, features array<double>",
+    )
+    sims = als_mod.item_similarities(factors, threshold=0.6, method="exact")
+    assert sorted(tuple(r) for r in sims.collect()) == [
+        (1, 3, 0.8),
+        (2, 3, 0.96),
+        (3, 1, 0.8),
+        (3, 2, 0.96),
+    ]
+    empty = als_mod.item_similarities(
+        factors.limit(0), threshold=0.6, method="exact"
+    )
+    assert empty.collect() == []
+    assert [(f.name, f.dataType.simpleString()) for f in empty.schema] == [
+        ("pid", "int"),
+        ("other_pid", "int"),
+        ("sim", "double"),
+    ]
 
 
 def test_product_recs_bounded(model):
