@@ -188,7 +188,7 @@ def shingles(text: Column, n: int = 3) -> Column:
     referenced inside a HOF lambda body is re-evaluated per element
     (no common-subexpression elimination there), so the slice form
     re-tokenizes the whole document PER GRAM — O(W²) per doc, the same
-    defect class as the round-9 quality-model finding.  Here ``toks``
+    defect class as a per-element char pass in a HOF.  Here ``toks``
     appears only as a zip_with/slice ARGUMENT (n evaluations per row)
     and the lambdas touch only their own variables.  Output-identical:
     zip_with pads the shorter slice with NULL and concat_ws skips
@@ -269,7 +269,7 @@ def _hash_grams_flat(grams: list[str]) -> np.ndarray:
         arr = arr.reshape(k, m)
         acc = np.zeros(k, dtype=np.int64)
         if m < (1 << 24):
-            # r13: power-weighted lanes with ONE trailing modulo — each
+            # power-weighted lanes with ONE trailing modulo — each
             # term is ≤ 255·(2³¹−2) < 2³⁹, so int64 holds the full sum
             # through m ≈ 2²⁴ columns; one ``%`` replaces m of them
             # (identical residue, see _rk_hash_span).  Column-major
@@ -356,8 +356,7 @@ def _rk_hash_span(
     data: np.ndarray, powers: np.ndarray, window: int, s: int, e: int
 ) -> np.ndarray:
     """RK window hashes for positions ``[s, e)`` of a uint8 buffer —
-    per-lane accumulation with ONE trailing modulo (r13, guide §1.2
-    step 2).  Each lane term is ≤ 255·(2³¹−2) < 2³⁹ and there are
+    per-lane accumulation with ONE trailing modulo.  Each lane term is ≤ 255·(2³¹−2) < 2³⁹ and there are
     ``window`` of them, so the int64 accumulator stays < 2³⁹·window —
     no overflow through window ≈ 2²⁴ — and one final ``%`` replaces the
     ``window``-per-position modulos of the old matmul form (integer
@@ -453,9 +452,8 @@ def winnowed_fingerprints(
     ``window`` (including empty STRINGS) select their single whole-text
     hash at pos 0; NULL text selects NOTHING — an empty array, so
     explode() consumers emit no rows for NULL docs, exactly like the
-    SQL oracle's shingle expansion (round-11 ADVICE: the old None→""
-    coercion emitted the empty-text hash for NULL, a row the oracle
-    never produces).
+    SQL oracle's shingle expansion (a None→"" coercion would emit the
+    empty-text hash for NULL, a row the oracle never produces).
     """
     powers = np.array(
         [pow(_RK_BASE, window - 1 - j, _RK_MOD) for j in range(window)],

@@ -69,7 +69,7 @@ def table_stamp(sf_dir: str, name: str) -> tuple:
     """Cheap change-detection stamp of one testdata table: sorted
     (name, mtime_ns, size) of its files.
 
-    Round-10 ADVICE class: per-process memos keyed on sf_dir alone go
+    Why: per-process memos keyed on sf_dir alone go
     stale when the data under a reused directory is regenerated
     in-process (tests re-materializing a tmp path, bench rebuilding a
     scale factor) — key them on (sf_dir, table_stamp(...)) instead.

@@ -87,7 +87,7 @@ def bigram_slots(col: Column) -> Column:
     over ``regexp_split_to_array``; the numpy fit twin is
     :func:`bigram_count_mat` (counts of the same slots).
 
-    NOTE (r13): composing this inline evaluates :func:`char_codes` five
+    NOTE: composing this inline evaluates :func:`char_codes` five
     times per row — prefer staging the codes column and calling
     :func:`bigram_slots_from_codes` on hot paths.
     """
@@ -113,8 +113,8 @@ def bigram_count_mat(texts: list[str]) -> np.ndarray:
         s = (t or "").lower().strip(" ")
         if len(s) < 2:
             continue
-        # vectorized codepoint stream (the per-char Python loop was the
-        # round-9 bench's worst entry: ~100M interpreter iterations at
+        # vectorized codepoint stream (a per-char Python loop was a
+        # bench's worst entry: ~100M interpreter iterations at
         # sf0.1's 20k-doc fit sample).  utf-16-le yields one uint16 per
         # BMP codepoint == ord(); the ASCII corpus contract keeps it
         # surrogate-free, and the guard keeps the fallback exact beyond
@@ -164,8 +164,8 @@ def label_documents(
     id_col: str = "doc_id",
     target_lang: str = "en",
 ) -> DataFrame:
-    """(id, text, weak_label) — the shared featurization relation
-    (round-11 verdict item 5): the language pass is the featurization's
+    """(id, text, weak_label) — the shared featurization relation:
+    the language pass is the featurization's
     dominant cost, and BOTH the fit's weak labels and the output's
     weak_label column need it.  fit + score previously each evaluated
     it over the whole corpus; computing it once here — and letting the
@@ -200,7 +200,7 @@ def label_documents(
     preserves input multiplicity, so an input carrying k duplicate
     rows for one id would join k×k here where the old per-row
     expression produced k; pre-``dropDuplicates`` such an input before
-    calling (r12 ADVICE).
+    calling.
     """
     langs = TXT.language_id_table(docs, id_col=id_col, text_col=text_col)
     return (
@@ -292,7 +292,7 @@ def score_documents(
     # NON-foldable, e.g. joined in from a model table — unlike the
     # in-lambda form, whose cost would silently become per-element.)
     w_arr = F.array(*[F.lit(float(x)) for x in w])
-    # stage the codepoint array as its own projection (r13, guide §4.1):
+    # stage the codepoint array as its own projection:
     # bigram_slots references it 5x, and HOFs see no subexpression
     # elimination — inline, the split+ascii transform ran five times per
     # row (measured 2.6 s → 1.0 s for this query's bench entry).

@@ -344,7 +344,7 @@ def minhash_recall_report(
 # distributed loop truncates at ``max_iter`` rounds while the in-memory
 # loop always converges (pointer jumping, O(log V) rounds), so on a
 # >cap-edge graph with diameter > ``max_iter`` the distributed labels
-# can be unconverged where the driver path's never are (round-8 ADVICE).
+# can be unconverged where the driver path's never are.
 _DRIVER_PAIR_CAP = 5_000_000
 
 
@@ -353,8 +353,8 @@ def _components_inmem(src, dst) -> "tuple":
     hooking and shortcutting — Zhang/Azad/Hu, "FastSV", and Kiveris et
     al.'s star-contraction family) over (src, dst) id arrays → (ids,
     comps).  Plain one-hop min-label propagation moves a label one hop
-    per round — a 5M-edge CHAIN would need millions of O(E) rounds, the
-    round-8 ADVICE hang.  FastSV hooks each vertex (and its parent)
+    per round — a 5M-edge CHAIN would need millions of O(E) rounds, a
+    hang.  FastSV hooks each vertex (and its parent)
     under its neighbor's GRANDPARENT and then shortcuts the parent
     forest, contracting tree depth geometrically: O(log V) rounds on any
     graph shape (a 200k chain converges in ~20 regardless of id order).
@@ -369,8 +369,7 @@ def _components_inmem(src, dst) -> "tuple":
     s = np.searchsorted(ids, src)
     d = np.searchsorted(ids, dst)
     f = np.arange(len(ids))
-    # explicit monotone-progress bound (round-8 ADVICE: never spin
-    # unbounded): geometric contraction converges in ≤ ~log2(V) + small
+    # explicit monotone-progress bound (never spin unbounded): geometric contraction converges in ≤ ~log2(V) + small
     # constant rounds; 128 covers any representable V with huge margin
     for _ in range(128):
         fold = f.copy()
@@ -422,8 +421,8 @@ def connected_components(
     """
     # ONE run of the (often expensive) upstream pair pipeline feeds the
     # venue decision, the driver fetch, AND the distributed loop's edge
-    # relation — pre-r8 the count and the fetch each re-executed it.
-    # Deliberately a localCheckpoint, NOT persist (r13 measured both):
+    # relation, instead of the count and the fetch each re-executing it.
+    # Deliberately a localCheckpoint, NOT persist (both were measured):
     # a cached subplan materializes under the cached-plan AQE
     # restriction (no output-partitioning changes → no partition
     # coalescing), which quadrupled task counts at bench scale and
@@ -847,8 +846,8 @@ def winnowing_fingerprints(
     and that hash is always selected; NULL text yields an EMPTY
     selection array from the kernel, so ``explode`` drops the doc
     entirely — matching the SQL oracle, whose shingle expansion emits
-    no rows for NULL (round-11 ADVICE: the old None→"" coercion
-    emitted the empty-text hash for NULL docs).
+    no rows for NULL (a None→"" coercion would emit the empty-text
+    hash for NULL docs).
     """
     winnowed = TXT.winnowed_fingerprints(
         F.col(text_col), window=window, guarantee=guarantee

@@ -30,8 +30,8 @@ from pyspark.sql import DataFrame, functions as F
 # arithmetic, deterministically ordered.  Driver footprint at the cap:
 # the Arrow fetch (_collect_edges_arrow) lands 5M edges as two int64
 # columns ≈ 80 MB + one transient Arrow copy — small against any
-# realistic driver heap (the old Row-object collect was the multi-GB
-# risk; round-6 ADVICE, fixed).
+# realistic driver heap (a Row-object collect would be the multi-GB
+# risk).
 _DRIVER_EDGE_CAP = 5_000_000
 
 
@@ -68,8 +68,8 @@ def _pagerank_inmem(
     therefore the float result — is independent of input partitioning.
 
     Position mapping is ``searchsorted`` against the sorted unique ids —
-    dtype-agnostic (int, string/UUID, any orderable id works; round-6
-    ADVICE: the old ``int(v)`` dict raised on non-integer ids) and
+    dtype-agnostic (int, string/UUID, any orderable id works; an
+    ``int(v)`` dict would raise on non-integer ids) and
     vectorized, with positions identical to the old dict (both index
     into the same sorted-unique array), so float results are unchanged.
     """
@@ -123,9 +123,9 @@ def pagerank(
     edges = edges.select(src, dst).localCheckpoint(eager=True)
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    # Empty and non-empty results carry the INPUT's id type (round-6
-    # ADVICE: a hardcoded int schema on the empty branch broke
-    # downstream unions when the data's ids are long/string).
+    # Empty and non-empty results carry the INPUT's id type (a
+    # hardcoded int schema on the empty branch breaks downstream
+    # unions when the data's ids are long/string).
     out_schema = StructType(
         [
             StructField("id", edges.schema.fields[0].dataType),
@@ -157,7 +157,7 @@ def pagerank(
     out_deg = edges.groupBy(src.alias("id")).agg(
         F.count(F.lit(1)).cast("double").alias("deg")
     )
-    # The out-degree is loop-invariant (round-5 verdict): pre-join it
+    # The out-degree is loop-invariant: pre-join it
     # into the checkpointed edge list ONCE so each iteration is a single
     # edges⋈ranks join + aggregate instead of ranks⋈out_deg + edges⋈·.
     # deg rides per edge and contrib stays rank/deg — the identical
@@ -251,9 +251,9 @@ def bfs_distances(
         StructType,
     )
 
-    # Integral ids keep the historical long-widened output (both venues
-    # emitted long since r5 — existing oracles pin it); any other id
-    # type (string/UUID — round-6 ADVICE class) passes through unchanged
+    # Integral ids keep the long-widened output (both venues emit
+    # long — existing oracles pin it); any other id type
+    # (string/UUID) passes through unchanged
     # in BOTH venues instead of null-ing out under a long cast.
     id_type = edges.schema.fields[0].dataType
     out_id_type = LongType() if isinstance(id_type, IntegralType) else id_type

@@ -185,9 +185,9 @@ def cdc_apply(
     2. keys whose surviving op is ``delete_op`` drop out.
 
     At 100 TB the log is partitioned by ingest date and the window
-    shuffle is the only data movement; compaction of the applied state
-    back to storage is `streaming.recommender.upsert_by_key` (touched
-    hash-buckets only).  Deterministic given a unique ``tiebreak_col``
+    shuffle is the only data movement; writing the applied state back
+    to storage is `streaming.recommender.upsert_by_key` (one batch_id
+    subtree per apply, read latest per key).  Deterministic given a unique ``tiebreak_col``
     for equal timestamps.
     """
     from myrecommendsystem_spark.operators.relational import latest_by_key

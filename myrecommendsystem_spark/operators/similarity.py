@@ -202,11 +202,15 @@ def near_duplicate_pairs(
     Both paths score with :func:`_threshold_pairs`, the one cosine-
     threshold kernel; ``ml.als.item_similarities`` routes through here.
     """
-    n_rows = None  # known only after the auto router's count
+    n_rows = None  # known only after the auto router's probe
     if method == "auto":
-        n_rows = df.count()
-        first = df.select(F.size(F.col(vec_col)).alias("d")).first()
-        dim = int(first["d"]) if first is not None and first["d"] is not None else 0
+        # one job: the row count and the widest vector (null-safe — a
+        # null vector's size never stands in for the table's width)
+        probe = df.agg(
+            F.count(F.lit(1)).alias("n"),
+            F.max(F.size(F.col(vec_col))).alias("d"),
+        ).first()
+        n_rows, dim = probe["n"], probe["d"] or 0
         method = (
             "exact"
             if n_rows <= exact_row_limit

@@ -22,7 +22,7 @@ _SALT = "__salt"
 # Join types where replicating the small side per salt value is
 # answer-preserving.  right/full outer are NOT: an unmatched small-side
 # row exists once per replica, so the explode would emit salt_n
-# null-extended copies instead of one (round-11 ADVICE).  Semi/anti on
+# null-extended copies instead of one.  Semi/anti on
 # the skewed side are safe — every salt value of every small-side key
 # exists in the replicated relation, so membership per (key, salt) is
 # membership per key.
@@ -54,7 +54,7 @@ def _check_saltable_how(how: str) -> None:
 
 def _salt_col(cols: Sequence[Column], salt_n: Column) -> Column:
     """Deterministic salt in ``[0, salt_n)`` that levels even FULL-ROW
-    DUPLICATES (round-11 verdict: a whale key whose rows are literal
+    DUPLICATES (a whale key whose rows are literal
     copies — common in event logs — hashes every copy to one salt if
     the salt is a pure row hash, landing the whale back on a single
     reducer).  ``monotonically_increasing_id()`` (partition ordinal in
@@ -124,8 +124,8 @@ def adaptive_salted_join(
     small_hint: str | None = None,
 ) -> DataFrame:
     """:func:`salted_join` whose salt factor is DERIVED from the data —
-    the consumer half of :func:`skew_profile` (round-11: the profile
-    computed ``rec_salt`` but nothing fed it back into a join).
+    the consumer half of :func:`skew_profile`, which computes
+    ``rec_salt`` for exactly this join.
 
     The heaviest key's ``rec_salt`` — the factor that levels it to a
     balanced task's row budget — rides a ONE-ROW broadcast into both
@@ -145,7 +145,7 @@ def adaptive_salted_join(
     equivalence gate covers the fixed-factor core;
     ``events_salted_join_adaptive`` gates this wrapper).  right/full
     outer joins raise — replication would multiply unmatched
-    small-side rows (round-11 ADVICE; see :data:`_SALTABLE_HOW`).
+    small-side rows (see :data:`_SALTABLE_HOW`).
 
     ``small_hint`` (e.g. ``"merge"``) attaches a join-strategy hint to
     the REPLICATED side immediately before the final join — a hint on
@@ -216,9 +216,9 @@ def adaptive_salted_group_count(
     profile: DataFrame | None = None,
 ) -> DataFrame:
     """:func:`salted_group_count` whose salt factor is DERIVED from the
-    data — the groupBy half of the skew loop (round-11 verdict item 4:
-    :func:`adaptive_salted_join` consumed ``rec_salt`` in-plan, the
-    aggregation path still took a hand-tuned constant).
+    data — the groupBy half of the skew loop, as
+    :func:`adaptive_salted_join` is its join half: no hand-tuned
+    constant.
 
     Same one-row-broadcast trick: the heaviest key's ``rec_salt`` from
     :func:`skew_profile` rides ``F.broadcast`` into the salt
@@ -270,7 +270,7 @@ def salted_distinct_set(
     """Per-key exact distinct SET (and its size) with the whale key's
     aggregation buffer bounded by the profile-driven salt — the
     no-partial-aggregation venue the salt actually exists for
-    (round-12 verdict item 6: a salted COUNT is pedagogical because
+    (a salted COUNT is pedagogical because
     counts map-side combine; a set-valued aggregate is the shape where
     the (key, salt) pre-shuffle is the only bound on a whale key's
     buffer).

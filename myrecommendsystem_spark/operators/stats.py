@@ -263,7 +263,7 @@ def kmv_hash(key: Column) -> Column:
     """Knuth multiplicative hash of one key → [0, 2^32) — the shared
     hash of the KMV sketch family.
 
-    Key contract (round-10 ADVICE): keys are pre-folded to [0, 2^31)
+    Key contract: keys are pre-folded to [0, 2^31)
     with pmod, so (a) the product key*KMV_A stays < 2^63 — a raw
     BIGINT multiply would raise ARITHMETIC_OVERFLOW under ANSI mode
     (Spark 4 default) for keys ≥ ~3.47e9 — and (b) negative keys hash

@@ -1571,7 +1571,8 @@ ORDER BY userId, productId
     "INTO shape as one set-oriented pass: last-writer-wins needs only "
     "the per-key max, so the whole log collapses in a single spillable "
     "window (never a per-key ordered replay); deletes are a filter on "
-    "the survivor.  Composes with upsert_by_key for the storage write",
+    "the survivor.  Composes with upsert_by_key (the batch-id log, "
+    "read latest per key) for the storage write",
     defer=True,
 )
 def events_cdc_final_state(spark: SparkSession, sf_dir: str) -> DataFrame:

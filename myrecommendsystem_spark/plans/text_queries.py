@@ -1340,8 +1340,9 @@ def _hp_fold_oracle(n_batches: int = 3) -> str:
     "shape).  The oracle replays the whole fold as sequential CTEs: "
     "per-batch band derivation computed once, gate joins, capped "
     "self-pair closures (three RECURSIVE reaches), min-id keeps.  The "
-    "foreachBatch wiring persists the same accumulation via "
-    "upsert_by_key (e2e-tested in tests/test_streaming_semantic_dedup)",
+    "foreachBatch wiring persists the same accumulation in batch-id "
+    "logs via upsert_by_key (e2e-tested in "
+    "tests/test_streaming_semantic_dedup)",
     defer=True,
     since=8,
 )

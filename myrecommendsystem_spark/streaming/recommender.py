@@ -13,7 +13,7 @@ Here every per-event network hop becomes a per-micro-batch JOIN
 - Mongo seen-filter    → stream-static left anti join (J5/P5)
 - scoring loop         → groupBy().agg() priority formula (A8, shared with
                          operators.relational.streaming_priority_scores)
-- findAndRemove+insert → replace-by-key parquet upsert (S10)
+- findAndRemove+insert → append to a batch-id log, read latest per key (S10)
 
 The whole cycle is a pure DataFrame function (``stream_recs_for_events``)
 so it runs identically inside ``writeStream.foreachBatch`` and in batch
@@ -23,9 +23,8 @@ runtime.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from myrecommendsystem_spark.functions.caching import release_checkpoint
 from myrecommendsystem_spark.operators.relational import (
     anti_join,
     collect_recs,
@@ -224,101 +223,160 @@ def recs_with_popularity_fallback(
     return model.unionByName(fallback)
 
 
-BUCKET_COL = "__bucket"
+#: ``batch_id`` that :func:`compact_log` folds a log's rows under.
+#: Structured Streaming batch ids are non-negative, so it never collides
+#: with a trigger's subtree and sorts below every one of them.
+COMPACTED_EPOCH = -1
+
+_COMMITTED = "_COMMITTED"
+
+
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``: the log resolves whatever
+    filesystem the path's scheme names (local, hdfs://, s3a://)."""
+    hadoop_path = spark.sparkContext._jvm.org.apache.hadoop.fs.Path(path)
+    conf = spark.sparkContext._jsc.hadoopConfiguration()
+    return hadoop_path.getFileSystem(conf), hadoop_path
 
 
 def _fs_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe through the Hadoop FileSystem API — resolves
-    whatever filesystem the path's scheme names (local, hdfs://, s3a://),
-    unlike ``os.path.exists``, which silently answers False for any
-    non-local URI and would make :func:`upsert_by_key` take the create
-    branch and clobber a remote table on its first micro-batch."""
-    jvm = spark._jvm
-    hadoop_path = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hadoop_path.getFileSystem(spark._jsc.hadoopConfiguration())
+    """Existence probe through the Hadoop FileSystem API, unlike
+    ``os.path.exists``, which silently answers False for any non-local
+    URI."""
+    fs, hadoop_path = _fs(spark, path)
     return bool(fs.exists(hadoop_path))
+
+
+def _snapshot(spark: SparkSession, path: str) -> str:
+    """Directory that holds the log at ``path``: the newest ``_v<k>``
+    snapshot whose commit marker :func:`compact_log` created, else
+    ``path`` itself.  Every read and append resolves the log here."""
+    path = path.rstrip("/")
+    fs, marks = _fs(spark, f"{path}/_v*/{_COMMITTED}")
+    versions = [
+        int(m.getPath().getParent().getName()[2:])
+        for m in fs.globStatus(marks) or []
+    ]
+    return f"{path}/_v{max(versions)}" if versions else path
+
+
+def _holds_batches(spark: SparkSession, snap: str) -> bool:
+    """Whether ``snap`` holds a ``batch_id`` subtree; a log directory
+    without one has no schema Spark can read."""
+    fs, subtrees = _fs(spark, f"{snap}/batch_id=*")
+    return bool(fs.globStatus(subtrees))
 
 
 def upsert_by_key(
     spark: SparkSession,
     batch_df: DataFrame,
     path: str,
-    key: str = "userId",
-    num_buckets: int = 16,
+    batch_id: int,
+    part_col: str | None = None,
 ) -> None:
-    """Replace-by-key upsert into a key-bucketed parquet table (S10).
+    """Append one micro-batch to the batch-id log at ``path`` (S10).
 
     Reference: per-user ``findAndRemove`` + ``insert``
-    (StreamingRecommender.scala:254-263).  The table is partitioned by
-    ``pmod(hash(key), num_buckets)`` so each micro-batch touches only the
-    partitions its keys hash into:
-
-    1. tag batch rows with their bucket id and ``localCheckpoint`` them:
-       the batch's plan runs once, as one adaptive job whose final stage
-       AQE coalesces (a cached plan keeps every shuffle partition), and
-       every later step reads the checkpoint; collect the distinct
-       bucket ids (≤ num_buckets ints — a metadata-sized driver hop);
-    2. read ONLY those partitions back (the ``isin`` filter is partition
-       pruning — untouched partitions' files are never opened), anti-join
-       out replaced keys, union the batch rows, and checkpoint the merged
-       rows: they are materialized before the source is overwritten, and
-       with the lineage cut a lost block fails the batch instead of
-       re-reading a half-overwritten source;
-    3. hash-repartition by bucket, so each touched bucket is written as
-       one file and the buckets are written in parallel;
-    4. overwrite ONLY the touched partitions — the write passes
-       ``partitionOverwriteMode=dynamic`` as its own option, so
-       partitions absent from the merged frame are left on disk untouched
-       and the session's conf is never changed.
-
-    Both checkpoints are freed before returning.  Per-trigger IO is
-    O(touched partitions), not O(table) — the plain-parquet middle ground
-    between full rewrite and a Delta/Iceberg MERGE (which is what a
-    production deployment would use).  The create-vs-merge branch probes
-    the table through the Hadoop FileSystem API (:func:`_fs_exists`), so
-    the sink works unchanged against HDFS/S3 paths, not just the local
-    filesystem.
-
-    NB: replace-by-key needs the partition column to be a FUNCTION OF
-    THE KEY — that is what guarantees a re-arriving key's old rows live
-    in a touched partition.  A sink whose natural read layout is keyed
-    on something else (the semantic-dedup band table partitions by band
-    value for probe-scan pruning) should NOT force this shape: re-read-
-    and-rewrite of every touched partition makes each trigger O(table);
-    use an idempotent per-batch append log instead
-    (streaming/semantic_dedup._append_bands).
+    (StreamingRecommender.scala:254-263).  Here the batch's rows are
+    written, tagged with ``batch_id``, into their own ``batch_id=<n>``
+    subtree (under ``part_col`` partitions if given), and
+    :func:`read_upserted` takes each key's rows from its latest batch, so
+    a re-arriving key replaces its old rows as a set.  The write reads
+    nothing and passes ``partitionOverwriteMode=dynamic`` as its own
+    option: it replaces only its own subtree and leaves the session's
+    conf alone.  A replayed batch gets the same ``batch_id`` from
+    ``foreachBatch`` and rewrites the same subtree, so a crash anywhere
+    in the write loses nothing the replay does not rewrite.  An empty
+    batch leaves the log as it was: a first write that produced no
+    subtree removes the directory it created, which would otherwise be
+    unreadable.
     """
-    bucket = F.pmod(F.hash(F.col(key)), F.lit(num_buckets)).cast("int")
-    batch_df = batch_df.withColumn(BUCKET_COL, bucket).localCheckpoint()
-    merged = None
-    try:
-        touched = [
-            r[BUCKET_COL]
-            for r in batch_df.select(BUCKET_COL).distinct().collect()
-        ]
-        if not touched:
-            return
-        out = batch_df
-        if _fs_exists(spark, path):
-            existing = spark.read.parquet(path).filter(
-                F.col(BUCKET_COL).isin(touched)
-            )
-            keep = anti_join(existing, batch_df.select(key), [key])
-            out = merged = keep.unionByName(batch_df).localCheckpoint()
-        (
-            out.repartition(spark.sparkContext.defaultParallelism, BUCKET_COL)
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy(BUCKET_COL)
-            .parquet(path)
-        )
-    finally:
-        release_checkpoint(batch_df, merged)
+    snap = _snapshot(spark, path)
+    (
+        batch_df.withColumn("batch_id", F.lit(batch_id).cast("long"))
+        .write.mode("overwrite")
+        .option("partitionOverwriteMode", "dynamic")
+        .partitionBy("batch_id", *([part_col] if part_col else []))
+        .parquet(snap)
+    )
+    if not _holds_batches(spark, snap):  # an empty first batch
+        fs, snap_path = _fs(spark, snap)
+        fs.delete(snap_path, True)
 
 
-def read_upserted(spark: SparkSession, path: str) -> DataFrame:
-    """Read an :func:`upsert_by_key` table without its layout column."""
-    return spark.read.parquet(path).drop(BUCKET_COL)
+def read_log(
+    spark: SparkSession, path: str, before: int | None = None
+) -> DataFrame:
+    """Every row of the log at ``path`` with its ``batch_id``;
+    ``before=n`` keeps the batches before ``n``."""
+    log = spark.read.parquet(_snapshot(spark, path))
+    return log if before is None else log.filter(F.col("batch_id") < before)
+
+
+def read_upserted(
+    spark: SparkSession,
+    path: str,
+    key: str = "userId",
+    before: int | None = None,
+) -> DataFrame:
+    """The log at ``path`` as a table: each key's rows from its highest
+    ``batch_id`` (before ``before``, if given), without ``batch_id``.
+    Inside trigger ``n``, ``before=n`` reads the state the trigger's
+    first attempt read, not that attempt's own append."""
+    latest = F.max("batch_id").over(Window.partitionBy(key))
+    return (
+        read_log(spark, path, before)
+        .withColumn("_latest", latest)
+        .filter(F.col("batch_id") == F.col("_latest"))
+        .drop("batch_id", "_latest")
+    )
+
+
+def compact_log(
+    spark: SparkSession,
+    path: str,
+    key: str,
+    part_col: str | None = None,
+    before: int | None = None,
+) -> None:
+    """Fold the log at ``path`` into each key's latest rows, all under
+    :data:`COMPACTED_EPOCH`, so later reads scan one subtree per
+    ``part_col`` value instead of one per trigger.  ``before=n`` folds
+    the batches before ``n`` and drops the rest: inside trigger ``n``
+    those can only be an earlier attempt of ``n``, which the trigger
+    rewrites.
+
+    The folded rows go to a new snapshot directory ``<path>/_v<k+1>``;
+    creating its commit marker is the one step that switches every
+    reader and writer to it.  Only then is everything else under
+    ``path`` deleted.  A crash before the marker leaves the old snapshot
+    current (the next compaction overwrites the debris); a crash after it
+    leaves only garbage the next compaction deletes.  Run it between
+    triggers: while the stream is stopped, or from ``foreachBatch``
+    (``run_semantic_dedup_stream(compact_every=N)``).
+    """
+    if not _fs_exists(spark, path):  # the stream never wrote
+        return
+    path = path.rstrip("/")
+    snap = _snapshot(spark, path)
+    version = int(snap.rsplit("/_v", 1)[1]) if snap != path else 0
+    target = f"_v{version + 1}"
+    kept = read_upserted(spark, path, key, before).withColumn(
+        "batch_id", F.lit(COMPACTED_EPOCH).cast("long")
+    )
+    if part_col:  # one file per part_col directory
+        kept = kept.repartition(part_col)
+    kept.write.mode("overwrite").partitionBy(
+        "batch_id", *([part_col] if part_col else [])
+    ).parquet(f"{path}/{target}")
+    fs, root = _fs(spark, path)
+    if not _holds_batches(spark, f"{path}/{target}"):
+        fs.delete(root, True)  # nothing to keep: no log, as before a write
+        return
+    fs.create(_fs(spark, f"{path}/{target}/{_COMMITTED}")[1], False).close()
+    for child in fs.listStatus(root):
+        if child.getPath().getName() != target:
+            fs.delete(child.getPath(), True)
 
 
 def run_streaming_recommender(
@@ -334,7 +392,8 @@ def run_streaming_recommender(
 
     ``events_stream``: streaming DF with (userId, productId, score, ts).
     Trigger default matches the reference's 2 s micro-batch
-    (StreamingRecommender.scala:70).
+    (StreamingRecommender.scala:70).  ``out_path`` is a batch-id log
+    (:func:`upsert_by_key`); read it with :func:`read_upserted`.
     """
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
@@ -342,7 +401,7 @@ def run_streaming_recommender(
         recs = stream_recs_for_events(
             batch_df, sim_flat, seen_ratings, recent_ratings
         )
-        upsert_by_key(spark, recs, out_path)
+        upsert_by_key(spark, recs, out_path, batch_id)
 
     writer = events_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint

@@ -19,12 +19,11 @@ MAINTAINED as batches arrive —
 
 :func:`run_semantic_dedup_stream` wires the cycle into
 ``writeStream.foreachBatch`` with :func:`recommender.upsert_by_key`
-(S10's hash-bucketed replace-by-key sink), so re-arriving vec_ids
-REPLACE their old rows and each trigger touches only the partitions its
-keys hash into.  At 100 TB the survivor table is the corpus-sized side:
-it is read bucket-pruned per trigger, the LSH probe shuffles bands only
-(never vectors twice), and all quantities per trigger are O(batch +
-matched buckets), not O(table).
+(S10's batch-id log, read latest per key), so re-arriving vec_ids
+REPLACE their old rows and each trigger writes only its own batch_id
+subtree.  At 100 TB the survivor table is the corpus-sized side: the
+LSH probe reads only the band partitions the batch's own bands hash
+into and shuffles bands only (never vectors twice).
 
 Deterministic by construction (hash-derived hyperplanes, md5 bucketing,
 min-id survivors), so the batch fold :func:`incremental_semantic_survivors`
@@ -40,7 +39,11 @@ from myrecommendsystem_spark.functions.caching import release_checkpoint
 from myrecommendsystem_spark.operators import similarity
 from myrecommendsystem_spark.operators.dedup import connected_components
 
-_SURVIVOR_SCHEMA = "vec_id bigint, embedding array<double>, arrived_batch int"
+#: The band log's probe partition: ``pmod(hash(band_idx, band_val),
+#: num_band_parts)``, so a trigger's probe scan prunes to the partitions
+#: its own band values hash into.
+BUCKET_COL = "__bucket"
+
 
 def _eligible(batch: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """Zero-norm vectors are ineligible on every path of the LSH family
@@ -128,14 +131,15 @@ def incremental_semantic_survivors(
     three, and the signature pass never re-runs over the growing
     survivor set.  Each step's surviving base+bands are
     localCheckpointed as a delta (the recsys-eval materialized-view
-    discipline; without it the plan doubles per batch).  Round 13 cut the fold's fixed job count
-    (the old structure ran ~94 scheduler jobs at bench scale — each an
-    eager barrier at ANY scale): ONE tagged-union dim probe replaces K
-    per-batch probe jobs, the survivor roster rides the base
-    accumulator as an ``arrived_batch`` column instead of its own
-    per-step checkpoint, and the pair stages skip their presentation
-    sort (``ordered=False`` — the gate's distinct and the component
-    closure are set consumers).  DETERMINISTIC and DuckDB-replayed
+    discipline; without it the plan doubles per batch).  The fold's
+    fixed job count is kept small (each job is an eager barrier at ANY
+    scale; a per-batch structure ran ~94 scheduler jobs at bench
+    scale): ONE tagged-union dim probe replaces K per-batch probe jobs,
+    the survivor roster rides the base accumulator as an
+    ``arrived_batch`` column instead of its own per-step checkpoint,
+    and the pair stages skip their presentation sort
+    (``ordered=False`` — the gate's distinct and the component closure
+    are set consumers).  DETERMINISTIC and DuckDB-replayed
     (``embedding_incremental_survivors``); the streaming path persists
     the same accumulation to parquet instead
     (:func:`run_semantic_dedup_stream`).
@@ -251,65 +255,43 @@ def run_semantic_dedup_stream(
     compact_every: int | None = None,
 ):
     """Maintain the survivor table from a vector stream (vec_id,
-    embedding): per micro-batch, gate against the CURRENT table, self-
-    dedup the remainder, and upsert the new survivors by vec_id
-    (hash-bucketed replace-by-key — re-arriving ids replace their rows,
-    untouched partitions are never rewritten).
+    embedding): per micro-batch, gate against the survivors of the
+    EARLIER batches, self-dedup the remainder, and append the new
+    survivors to the vector log at ``out_path``
+    (:func:`recommender.upsert_by_key`, read latest per vec_id).
 
-    Round 9: each survivor's BAND SIGNATURE persists alongside the
-    vectors (``bands_path``, default ``out_path + "_bands"`` — same
-    upsert-by-key layout), so the per-trigger signature work is the
-    BATCH's alone.  The v1 path re-signed the whole accumulated table
-    every trigger — O(S·n_bits·d) float work growing without bound (the
-    measured marginal cost is small at 80k survivors, ~0.05 ms/vector,
-    but it is the one per-trigger term that scales with table size
-    rather than batch size; at 10^9 survivors it IS the trigger).  With
-    stored bands the survivor side contributes only a band-column scan
-    + the bucket join, and exact-cosine verification touches only
-    matched candidates' vectors — the O(batch + matched buckets)
-    contract, now structural.  The two tables are upserted vectors
-    first, bands second; foreachBatch replay after a crash between the
-    writes re-upserts both idempotently (same keys, same rows).
-
-    The band table is an APPEND-ONLY LOG partitioned by (batch_id,
-    ``pmod(hash(band_idx, band_val), num_band_parts)``) — NOT an
-    upsert-by-vec_id table.  Write side: each trigger dynamic-
-    overwrites only its OWN batch_id partition subtree — O(batch)
-    bytes, no read-modify-write of existing data (the v2 upsert layout
-    re-read and rewrote every touched bucket, an O(S) write per
-    trigger; measured 44 s vs 12 s per 1× trigger), and foreachBatch
-    crash-replay is idempotent because the same batch_id deterministic
-    data overwrites the same partitions.  Read side: the probe scan
+    Each survivor's BAND SIGNATURE goes to a second log (``bands_path``,
+    default ``out_path + "_bands"``), so the per-trigger signature work
+    is the BATCH's alone: the survivor side contributes only a
+    band-column scan and the bucket join, and exact-cosine verification
+    touches only matched candidates' vectors.  The band log is
+    partitioned by (batch_id, :data:`BUCKET_COL` =
+    ``pmod(hash(band_idx, band_val), num_band_parts)``): the probe scan
     filters to the band partitions the batch's own band values hash
     into (a ≤ num_band_parts-int driver hop) — exact pruning across
-    every batch's subtree, since a survivor band can only match a
-    batch band inside its own hash partition; a small steady-state
-    trigger reads O(matched partitions' files), not O(S) bytes.  A
-    vec_id that re-arrives with a CHANGED embedding and survives the
-    gate appends NEW band rows; its old rows persist as stale entries
-    — harmless by construction, since stale bands only ever ADD
-    candidate pairs and every candidate is exact-cosine verified
-    against the CURRENT vector table before it gates anything.
-    ``num_band_parts`` is a layout dial: raise it with corpus size so
-    matched-partition bytes stay bounded (it only changes file layout,
-    never results); long-running streams compact the log with
-    :func:`compact_band_log` (one batch_id subtree per trigger is the
-    classic many-small-files trade, not a correctness term).
+    every batch's subtree, since a survivor band can only match a batch
+    band inside its own hash partition.  It is read raw, not latest per
+    vec_id: a vec_id that re-arrives with a CHANGED embedding leaves its
+    old band rows behind, and stale bands only ever ADD candidate pairs,
+    each exact-cosine verified against the current vector before it
+    gates anything.  ``num_band_parts`` only changes file layout, never
+    results.
 
-    ``compact_every=N`` schedules that compaction INSIDE foreachBatch
-    every N triggers — after the batch's own append, where no
-    concurrent trigger can interleave — so a long-running stream holds
-    at most N uncompacted batch_id subtrees instead of one per trigger
-    forever.  Crash window: a
-    replay of the compacting trigger re-appends its own batch_id
-    subtree next to the already-folded COMPACTED_EPOCH copy —
-    duplicate band rows are correctness-neutral (candidates are
-    distinct-collapsed and exact-cosine verified) and the NEXT
-    compaction folds them away (latest batch_id per vec_id wins).
-    ``None`` (default) keeps compaction fully offline/cron-owned."""
+    Trigger ``n`` reads both logs with ``before=n`` and writes vectors
+    first, bands second, each into its own ``batch_id=n`` subtree; a
+    replay after a crash anywhere in the trigger reads the same state
+    and rewrites the same subtrees.
+
+    ``compact_every=N`` folds both logs with
+    :func:`recommender.compact_log` at the start of every N-th trigger
+    (batches before it; a replay folds the same set), so a long-running
+    stream holds at most N uncompacted batch_id subtrees per log instead
+    of one per trigger forever.  ``None`` (default) leaves compaction to
+    an offline job."""
     from myrecommendsystem_spark.streaming.recommender import (
-        BUCKET_COL,
         _fs_exists,
+        compact_log,
+        read_log,
         read_upserted,
         upsert_by_key,
     )
@@ -318,23 +300,13 @@ def run_semantic_dedup_stream(
     band_part = F.pmod(F.hash(F.col("band_idx"), F.col("band_val")),
                        F.lit(num_band_parts))
 
-    def _append_bands(bands_df: DataFrame, batch_id: int) -> None:
-        """Idempotent O(batch) append: dynamic-overwrite ONLY this
-        batch_id's partition subtree — a crash-replay rewrites the same
-        deterministic files; no existing partition is read or touched."""
-        data = bands_df.select(
-            F.lit(batch_id).cast("long").alias("batch_id"),
-            band_part.cast("int").alias(BUCKET_COL),
-            F.col("id").alias("vec_id"),
-            "band_idx",
-            "band_val",
-        )
-        data.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("batch_id", BUCKET_COL).parquet(bands_path)
-
     def process(batch_df: DataFrame, batch_id: int) -> None:
         spark: SparkSession = batch_df.sparkSession
+        if compact_every and batch_id and batch_id % compact_every == 0:
+            compact_log(spark, out_path, "vec_id", before=batch_id)
+            compact_log(
+                spark, bands_path, "vec_id", BUCKET_COL, before=batch_id
+            )
         elig = _eligible(batch_df, "vec_id", "embedding")
         prep = similarity._hp_prepare(
             elig, n_bits, band_bits, "vec_id", "embedding", "hp"
@@ -344,26 +316,15 @@ def run_semantic_dedup_stream(
         base_b, bands_b = prep
         matched = None
         # sign the batch ONCE; the checkpoint feeds the gate, the
-        # self-pair join, and the fresh-band upsert
+        # self-pair join, and the fresh-band append
         step_bands = bands_b = bands_b.localCheckpoint(eager=True)
-        if _fs_exists(spark, out_path):
-            surv_base = read_upserted(spark, out_path).select(
+        if _fs_exists(spark, bands_path):  # written after the vectors
+            surv_base = read_upserted(
+                spark, out_path, "vec_id", before=batch_id
+            ).select(
                 F.col("vec_id").alias("id"),
                 F.col("embedding").cast("array<double>").alias("v"),
             )
-            if not _fs_exists(spark, bands_path):
-                # migration: a v1 table without stored bands — sign the
-                # accumulated set ONCE, log it under batch_id=-1, never
-                # again
-                sprep = similarity._hp_prepare(
-                    read_upserted(spark, out_path),
-                    n_bits,
-                    band_bits,
-                    "vec_id",
-                    "embedding",
-                    "hp",
-                )
-                _append_bands(sprep[1], -1)
             # probe scan pruned to the partitions the BATCH's band
             # values hash into — a survivor band can only match inside
             # its own hash partition, so the filter loses nothing
@@ -374,13 +335,12 @@ def run_semantic_dedup_stream(
                 .collect()
             ]
             surv_bands = (
-                spark.read.parquet(bands_path)
+                read_log(spark, bands_path, before=batch_id)
                 .filter(F.col(BUCKET_COL).isin(probe_parts))
                 .select(F.col("vec_id").alias("id"), "band_idx", "band_val")
             )
-            # materialized: everything downstream (incl. the fresh-band
-            # upsert) must NOT lazily re-read the survivor tables after
-            # the vector upsert below overwrites their partitions
+            # materialized: both anti joins below and the fresh-band
+            # append consume it, and the probe must run once
             matched = (
                 similarity.hp_cross_pairs_from_prepared(
                     base_b, bands_b, surv_base, surv_bands,
@@ -412,12 +372,14 @@ def run_semantic_dedup_stream(
         try:
             if fresh.isEmpty():
                 return
-            upsert_by_key(spark, fresh, out_path, key="vec_id")
-            _append_bands(
-                bands_b.join(dropped, "id", "left_anti"), batch_id
+            upsert_by_key(spark, fresh, out_path, batch_id)
+            fresh_bands = bands_b.join(dropped, "id", "left_anti").select(
+                band_part.cast("int").alias(BUCKET_COL),
+                F.col("id").alias("vec_id"),
+                "band_idx",
+                "band_val",
             )
-            if compact_every and (batch_id + 1) % compact_every == 0:
-                compact_band_log(spark, bands_path)
+            upsert_by_key(spark, fresh_bands, bands_path, batch_id, BUCKET_COL)
         finally:
             release_checkpoint(step_bands, fresh, matched)
 
@@ -427,108 +389,3 @@ def run_semantic_dedup_stream(
     if trigger:
         writer = writer.trigger(**trigger)
     return writer.start()
-
-
-#: Epoch the compacted band rows are folded under.  Structured
-#: Streaming batch_ids are non-negative and the v1 migration epoch is
-#: -1, so -2 can never collide with a live trigger's subtree; repeated
-#: compactions fold the previous epoch like any other batch_id.
-COMPACTED_EPOCH = -2
-
-
-def compact_band_log(
-    spark: SparkSession, bands_path: str, max_files_per_part: int = 1
-) -> dict:
-    """Offline compaction of the append-only band log: fold every
-    batch_id subtree into the single :data:`COMPACTED_EPOCH` subtree,
-    dropping STALE rows (a vec_id that re-arrived with a changed
-    embedding left its old batches' band rows behind — harmless for
-    correctness, pure probe-side waste) — keep only each vec_id's
-    rows from its LATEST batch_id.
-
-    This is the deferred O(S) job the trigger path refuses to pay: the
-    stream writes O(batch) bytes per trigger into its own batch_id
-    partition and NEVER rewrites history, so file count grows one
-    subtree per trigger and stale bands accumulate per re-arrival.
-    Amortizing the rewrite here (run it every N triggers, or from a
-    cron) keeps the trigger O(batch + matched partitions) while the
-    probe-side scan stays bounded: after compaction each band-hash
-    partition holds ≤ ``max_files_per_part`` files and zero stale rows.
-
-    Plan: one shuffle (window max-batch_id per vec_id), then a
-    repartition by the band-hash column so each partition directory is
-    written by exactly its own tasks.  Crash-safe swap: write the
-    compacted table to ``<bands_path>__compacting``, then delete the
-    old directory and rename — a crash between the steps leaves either
-    the intact original or the intact compacted copy beside it, never a
-    half-rewritten log.  OFFLINE means between triggers: run while the
-    stream is stopped, or from ``foreachBatch`` itself every N batches,
-    where no concurrent trigger can interleave —
-    ``run_semantic_dedup_stream(compact_every=N)`` wires exactly that.
-
-    Returns ``{"rows_kept", "rows_dropped", "files_before",
-    "files_after"}``.
-    """
-    from pyspark.sql import Window
-
-    from myrecommendsystem_spark.streaming.recommender import BUCKET_COL
-
-    jvm = spark.sparkContext._jvm
-    conf = spark.sparkContext._jsc.hadoopConfiguration()
-    src = jvm.org.apache.hadoop.fs.Path(bands_path)
-    fs = src.getFileSystem(conf)
-    if not fs.exists(src):  # nothing to compact (stream never wrote)
-        return {
-            "rows_kept": 0,
-            "rows_dropped": 0,
-            "files_before": 0,
-            "files_after": 0,
-        }
-
-    def _data_files(path) -> int:
-        it, n = fs.listFiles(path, True), 0
-        while it.hasNext():
-            f = it.next().getPath().getName()
-            n += not (f.startswith("_") or f.startswith("."))
-        return n
-
-    files_before = _data_files(src)
-    log = spark.read.parquet(bands_path)
-    rows_before = log.count()
-    latest = F.max("batch_id").over(Window.partitionBy("vec_id"))
-    kept = (
-        log.withColumn("_latest", latest)
-        .filter(F.col("batch_id") == F.col("_latest"))
-        .select(
-            F.lit(COMPACTED_EPOCH).cast("long").alias("batch_id"),
-            F.col(BUCKET_COL),
-            "vec_id",
-            "band_idx",
-            "band_val",
-        )
-    )
-    tmp = bands_path.rstrip("/") + "__compacting"
-    tmp_path = jvm.org.apache.hadoop.fs.Path(tmp)
-    if fs.exists(tmp_path):  # debris from a crashed prior attempt
-        fs.delete(tmp_path, True)
-    # hash-repartition on (bucket, vec_id mod k): every bucket's rows
-    # land in ≤ k tasks, so each partition directory is written as
-    # ≤ max_files_per_part files (k=1 → one file per bucket)
-    splitter = F.pmod(F.hash("vec_id"), F.lit(max_files_per_part))
-    (
-        kept.repartition(F.col(BUCKET_COL), splitter)
-        .sortWithinPartitions("band_idx", "band_val", "vec_id")
-        .write.mode("overwrite")
-        .partitionBy("batch_id", BUCKET_COL)
-        .parquet(tmp)
-    )
-    rows_after = spark.read.parquet(tmp).count()
-    fs.delete(src, True)
-    if not fs.rename(tmp_path, src):
-        raise IOError(f"compact_band_log: rename {tmp} -> {bands_path} failed")
-    return {
-        "rows_kept": rows_after,
-        "rows_dropped": rows_before - rows_after,
-        "files_before": files_before,
-        "files_after": _data_files(src),
-    }

@@ -11,13 +11,18 @@ from __future__ import annotations
 
 import json
 import os
+import time
 
 import pytest
 from pyspark.sql import Row, functions as F
 
 from myrecommendsystem_spark.streaming.log_filter import filter_rating_log
 from myrecommendsystem_spark.streaming.recommender import (
+    COMPACTED_EPOCH,
+    compact_log,
     compact_recent_ratings,
+    read_log,
+    read_upserted,
     run_streaming_recommender,
     stream_recs_flat,
     upsert_by_key,
@@ -95,93 +100,124 @@ def test_upsert_by_key_replaces(spark, tmp_path):
     path = str(tmp_path / "recs")
     b1 = spark.createDataFrame([(1, "a"), (2, "a")], "userId int, payload string")
     b2 = spark.createDataFrame([(2, "b"), (3, "b")], "userId int, payload string")
-    upsert_by_key(spark, b1, path)
-    upsert_by_key(spark, b2, path)
-    got = {(r.userId, r.payload) for r in spark.read.parquet(path).collect()}
+    upsert_by_key(spark, b1, path, 0)
+    upsert_by_key(spark, b2, path, 1)
+    got = {(r.userId, r.payload) for r in read_upserted(spark, path).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "b")}
 
 
+def test_upsert_by_key_replaces_a_keys_rows_as_a_set(spark, tmp_path):
+    """A key's rows come from its latest batch only: a key that had three
+    rows and re-arrives with one keeps one, never a mix of batches."""
+    schema = "userId int, payload string"
+    path = str(tmp_path / "recs")
+    upsert_by_key(spark, spark.createDataFrame(
+        [(1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b")], schema
+    ), path, 0)
+    upsert_by_key(spark, spark.createDataFrame(
+        [(1, "d"), (3, "a"), (3, "b")], schema
+    ), path, 1)
+    got = sorted((r.userId, r.payload) for r in read_upserted(spark, path).collect())
+    assert got == [(1, "d"), (2, "a"), (2, "b"), (3, "a"), (3, "b")]
+    before_1 = read_upserted(spark, path, before=1).collect()
+    assert sorted((r.userId, r.payload) for r in before_1) == [
+        (1, "a"), (1, "b"), (1, "c"), (2, "a"), (2, "b")
+    ]
+
+
+def test_upsert_by_key_empty_batch_leaves_the_sink_alone(spark, tmp_path):
+    """An empty batch creates no directory (an empty one has no schema to
+    read), and after the first batch it leaves the log's files as they
+    were."""
+    schema = "userId int, payload string"
+    path = str(tmp_path / "recs")
+    upsert_by_key(spark, spark.createDataFrame([], schema), path, 0)
+    assert not os.path.exists(path)
+    upsert_by_key(spark, spark.createDataFrame([(1, "a")], schema), path, 1)
+    layout = _parquet_dirs(path)
+    upsert_by_key(spark, spark.createDataFrame([], schema), path, 2)
+    assert _parquet_dirs(path) == layout
+    got = [(r.userId, r.payload) for r in read_upserted(spark, path).collect()]
+    assert got == [(1, "a")]
+
+
 def test_fs_exists_probe_is_scheme_aware(spark, tmp_path):
-    """The S10 sink's create-vs-merge branch goes through the Hadoop
-    FileSystem API, so it resolves non-local URIs instead of os.path's
-    silent False: a nonexistent path (bare and file:-schemed) probes
-    False and the first upsert into it still creates the table."""
+    """The log's existence probe (the semantic-dedup trigger's first
+    batch, ``compact_log`` on a log never written) goes through the
+    Hadoop FileSystem API, so it resolves non-local URIs instead of
+    os.path's silent False: a nonexistent path (bare and file:-schemed)
+    probes False and probes True after the first append."""
     from myrecommendsystem_spark.streaming.recommender import _fs_exists
 
     path = str(tmp_path / "never_written")
     assert _fs_exists(spark, path) is False
     assert _fs_exists(spark, "file://" + path) is False
     b1 = spark.createDataFrame([(7, "a")], "userId int, payload string")
-    upsert_by_key(spark, b1, path)
+    upsert_by_key(spark, b1, path, 0)
     assert _fs_exists(spark, path) is True
     assert _fs_exists(spark, "file://" + path) is True
-    got = {(r.userId, r.payload) for r in spark.read.parquet(path).collect()}
+    got = {(r.userId, r.payload) for r in read_upserted(spark, path).collect()}
     assert got == {(7, "a")}
 
 
-def _partition_files(path):
-    """{partition dir → {(file, size, mtime_ns)}} for a bucketed table."""
+def _parquet_dirs(path):
+    """{directory → {(file, size, mtime_ns)}} for every directory under
+    ``path`` that holds parquet files."""
     out = {}
-    for d in os.listdir(path):
-        full = os.path.join(path, d)
-        if not (os.path.isdir(full) and d.startswith("__bucket=")):
-            continue
-        out[d] = {
-            (f, os.path.getsize(os.path.join(full, f)),
-             os.stat(os.path.join(full, f)).st_mtime_ns)
-            for f in os.listdir(full)
-            if f.endswith(".parquet")
+    for dirpath, _, names in os.walk(path):
+        files = {
+            (n, os.path.getsize(os.path.join(dirpath, n)),
+             os.stat(os.path.join(dirpath, n)).st_mtime_ns)
+            for n in names
+            if n.endswith(".parquet")
         }
+        if files:
+            out[dirpath] = files
     return out
 
 
 def test_upsert_by_key_rewrites_only_touched_partitions(spark, tmp_path):
-    """Incremental-IO contract: a micro-batch rewrites the partitions its
-    keys hash into and leaves every other partition's files byte-for-byte
-    (same names, sizes, mtimes) on disk — per-trigger cost is O(touched),
-    not O(table)."""
-    from myrecommendsystem_spark.streaming.recommender import read_upserted
-
+    """Incremental-IO contract: a micro-batch writes only its own
+    ``batch_id`` subtree and reads nothing; every earlier subtree keeps
+    its files byte for byte (same names, sizes, mtimes) — per-trigger
+    cost is O(batch), not O(table)."""
     path = str(tmp_path / "recs")
     b1 = spark.createDataFrame(
         [(u, "a") for u in range(40)], "userId int, payload string"
     )
-    upsert_by_key(spark, b1, path, num_buckets=8)
-    before = _partition_files(path)
-    assert len(before) > 1  # the layout actually spreads across partitions
+    upsert_by_key(spark, b1, path, 0)
+    before = _parquet_dirs(path)
+    assert [os.path.basename(d) for d in before] == ["batch_id=0"]
 
     upsert_by_key(
         spark,
         spark.createDataFrame([(0, "b")], "userId int, payload string"),
         path,
-        num_buckets=8,
+        1,
     )
-    after = _partition_files(path)
-    changed = [d for d in before if before[d] != after.get(d)]
-    assert len(changed) == 1  # exactly user 0's bucket
+    after = _parquet_dirs(path)
+    assert {d: after[d] for d in before} == before
+    assert sorted(os.path.basename(d) for d in after) == [
+        "batch_id=0", "batch_id=1"
+    ]
     got = {(r.userId, r.payload) for r in read_upserted(spark, path).collect()}
     assert got == {(u, "a") for u in range(1, 40)} | {(0, "b")}
-    assert "__bucket" not in read_upserted(spark, path).columns
+    assert read_upserted(spark, path).columns == ["userId", "payload"]
 
 
-def test_upsert_by_key_replay_matches_single_upsert_one_file_per_bucket(
-    spark, tmp_path
-):
+def test_upsert_by_key_replay_reads_as_once_in_one_subtree(spark, tmp_path):
     """A micro-batch replayed after a crash between the sink write and
-    the stream's commit upserts the same rows twice; the table must equal
-    one upsert of that batch, and every bucket directory holds the one
-    file its bucket's single write task produced."""
-    from myrecommendsystem_spark.streaming.recommender import read_upserted
-
+    the stream's commit writes the same ``batch_id`` twice; the log must
+    read as one write of that batch and hold it in one subtree."""
     schema = "userId int, payload string"
     base = spark.createDataFrame([(u, "a") for u in range(40)], schema)
     batch = spark.createDataFrame([(u, "b") for u in range(0, 60, 3)], schema)
     once, twice = str(tmp_path / "once"), str(tmp_path / "twice")
     for path in (once, twice):
-        upsert_by_key(spark, base, path)
-    upsert_by_key(spark, batch, once)
-    upsert_by_key(spark, batch, twice)
-    upsert_by_key(spark, batch, twice)
+        upsert_by_key(spark, base, path, 0)
+    upsert_by_key(spark, batch, once, 1)
+    upsert_by_key(spark, batch, twice, 1)
+    upsert_by_key(spark, batch, twice, 1)
 
     def _rows(path):
         return sorted(
@@ -194,22 +230,169 @@ def test_upsert_by_key_replay_matches_single_upsert_one_file_per_bucket(
     )
     assert _rows(once) == expected
     assert _rows(twice) == expected
-    for path in (once, twice):
-        layout = _partition_files(path)
-        assert len(layout) > 1
-        assert {d: len(files) for d, files in layout.items()} == {
-            d: 1 for d in layout
-        }
+    assert read_log(spark, twice).count() == 40 + 20
+    assert sorted(os.path.basename(d) for d in _parquet_dirs(twice)) == [
+        "batch_id=0", "batch_id=1"
+    ]
+
+
+class _CrashingFs:
+    """A Hadoop FileSystem whose ``method`` raises: the process dies at
+    that step."""
+
+    def __init__(self, fs, method):
+        self._fs, self._method = fs, method
+
+    def __getattr__(self, name):
+        if name == self._method:
+            raise RuntimeError(f"killed at FileSystem.{name}")
+        return getattr(self._fs, name)
+
+
+@pytest.mark.parametrize("step", ["create", "delete"])
+def test_compact_log_crash_between_steps_keeps_the_rows(
+    spark, tmp_path, monkeypatch, step
+):
+    """Kill ``compact_log`` after it wrote the new snapshot but before its
+    commit marker (``create``), or after the marker but before the old
+    snapshot is deleted (``delete``): the log reads the same rows, takes
+    appends, and the next compaction leaves one snapshot with one epoch."""
+    from myrecommendsystem_spark.streaming import recommender
+
+    schema = "userId int, payload string"
+    path = str(tmp_path / "recs")
+    for batch_id, rows in enumerate([[(1, "a"), (2, "a")], [(2, "b"), (3, "b")]]):
+        upsert_by_key(spark, spark.createDataFrame(rows, schema), path, batch_id)
+
+    def rows():
+        return sorted(
+            (r.userId, r.payload) for r in read_upserted(spark, path).collect()
+        )
+
+    expected = rows()
+    real_fs = recommender._fs
+
+    def crashing_fs(spark, p):
+        fs, hadoop_path = real_fs(spark, p)
+        return _CrashingFs(fs, step), hadoop_path
+
+    monkeypatch.setattr(recommender, "_fs", crashing_fs)
+    with pytest.raises(RuntimeError, match="killed"):
+        compact_log(spark, path, "userId")
+    monkeypatch.setattr(recommender, "_fs", real_fs)
+    assert rows() == expected
+
+    upsert_by_key(spark, spark.createDataFrame([(4, "c")], schema), path, 2)
+    compact_log(spark, path, "userId")
+    assert rows() == expected + [(4, "c")]
+    live = [d for d in os.listdir(path) if not d.startswith(".")]
+    assert len(live) == 1 and live[0].startswith("_v")
+    assert sorted(
+        d for d in os.listdir(os.path.join(path, live[0])) if not d.startswith(".")
+    ) == ["_COMMITTED", "_SUCCESS", f"batch_id={COMPACTED_EPOCH}"]
+
+
+def test_sink_recovers_from_a_crash_inside_its_commit(
+    spark, tmp_path, monkeypatch
+):
+    """Kill the recommender inside the second micro-batch's sink call, at
+    the point a dynamic-overwrite commit has deleted the partition
+    directories it replaces but not yet moved the new files in, then
+    restart from the checkpoint: the replayed batch must leave the sink
+    equal to an uninterrupted run and to the batch twin (replace-by-key
+    over both batches)."""
+    import shutil
+
+    from myrecommendsystem_spark.streaming import recommender
+
+    src = tmp_path / "events_in"
+    src.mkdir()
+    batches = [
+        [(u, 1, 5.0, 10) for u in range(40)],
+        [(0, 2, 4.0, 20), (40, 1, 5.0, 20)],
+    ]
+    for i, rows in enumerate(batches):
+        with open(src / f"b{i}.json", "w") as f:
+            for u, p, s, ts in rows:
+                f.write(json.dumps(
+                    {"userId": u, "productId": p, "score": s, "ts": ts}
+                ) + "\n")
+        # the file source orders files by modification time
+        stamp = time.time() - 60 + i
+        os.utime(src / f"b{i}.json", (stamp, stamp))
+    sims = _sims(spark)
+    seen = spark.createDataFrame([], "userId int, productId int")
+    recent = spark.createDataFrame(
+        [(u, p, s, 1) for u in range(41) for p, s in ((1, 5.0), (2, 3.0))],
+        EVENT_SCHEMA,
+    )
+
+    def run(out_path, ckpt):
+        stream = (
+            spark.readStream.schema(EVENT_SCHEMA)
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = run_streaming_recommender(
+            stream, sims, seen, recent, out_path=out_path, checkpoint=ckpt,
+            trigger={"availableNow": True},
+        )
+        try:
+            q.awaitTermination(120)
+        except Exception:  # the query's own error, returned below
+            pass
+        return q.exception()
+
+    real_sink = recommender.upsert_by_key
+    calls = []
+
+    def crashing_sink(*args, **kwargs):
+        calls.append(1)
+        if len(calls) < 2:
+            return real_sink(*args, **kwargs)
+        path = args[2]
+        before = _parquet_dirs(path)
+        real_sink(*args, **kwargs)
+        after = _parquet_dirs(path)
+        for d in after:
+            if after[d] != before.get(d):
+                shutil.rmtree(d)
+        raise RuntimeError("killed inside the sink commit")
+
+    faulty, ckpt = str(tmp_path / "faulty"), str(tmp_path / "ck_faulty")
+    monkeypatch.setattr(recommender, "upsert_by_key", crashing_sink)
+    assert run(faulty, ckpt) is not None
+    monkeypatch.setattr(recommender, "upsert_by_key", real_sink)
+    assert run(faulty, ckpt) is None
+    clean = str(tmp_path / "clean")
+    assert run(clean, str(tmp_path / "ck_clean")) is None
+
+    def rows(df):
+        return sorted(
+            (r.userId, tuple((x.productId, x.score) for x in r.recs))
+            for r in df.collect()
+        )
+
+    twin = {}
+    for rs in batches:
+        events = spark.createDataFrame(rs, EVENT_SCHEMA)
+        twin.update(dict(rows(recommender.stream_recs_for_events(
+            events, sims, seen, recent
+        ))))
+    assert len(twin) == 41
+    got = rows(recommender.read_upserted(spark, faulty))
+    assert got == rows(recommender.read_upserted(spark, clean))
+    assert got == sorted(twin.items())
 
 
 def test_sinks_leave_session_conf_and_block_storage_alone(
     spark, tmp_path, monkeypatch
 ):
     """Operators never change session-global conf, and a micro-batch's
-    sink work frees every cache and checkpoint block it pinned: a create
-    upsert, a merge upsert, and one semantic-dedup trigger (vector upsert,
-    band-log append, near-dup closure) make no ``RuntimeConfig.set`` call
-    and leave the persisted-RDD count where it started."""
+    sink work frees every cache and checkpoint block it pinned: two log
+    appends and one semantic-dedup trigger (vector append, band-log
+    append, near-dup closure) make no ``RuntimeConfig.set`` call and
+    leave the persisted-RDD count where it started."""
     from myrecommendsystem_spark.streaming.semantic_dedup import (
         run_semantic_dedup_stream,
     )
@@ -231,9 +414,9 @@ def test_sinks_leave_session_conf_and_block_storage_alone(
     path = str(tmp_path / "recs")
     b1 = spark.createDataFrame([(1, "a"), (2, "a")], schema)
     b2 = spark.createDataFrame([(2, "b"), (3, "b")], schema)
-    upsert_by_key(spark, b1, path)  # create
-    upsert_by_key(spark, b2, path)  # merge
-    got = {(r.userId, r.payload) for r in spark.read.parquet(path).collect()}
+    upsert_by_key(spark, b1, path, 0)
+    upsert_by_key(spark, b2, path, 1)
+    got = {(r.userId, r.payload) for r in read_upserted(spark, path).collect()}
     assert got == {(1, "a"), (2, "b"), (3, "b")}
 
     src = tmp_path / "vectors_in"
@@ -250,7 +433,7 @@ def test_sinks_leave_session_conf_and_block_storage_alone(
     )
     q.awaitTermination(120)
     assert q.exception() is None
-    survivors = spark.read.parquet(out_path).collect()
+    survivors = read_upserted(spark, out_path, "vec_id").collect()
     assert sorted(r.vec_id for r in survivors) == [1, 3]
     assert os.path.isdir(out_path + "_bands")
 
@@ -282,7 +465,7 @@ def test_streaming_recommender_end_to_end(spark, tmp_path):
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)
-    rows = spark.read.parquet(out_path).collect()
+    rows = read_upserted(spark, out_path).collect()
     assert len(rows) == 1
     assert [(r.productId, r.score) for r in rows[0].recs] == [(4, 3.5), (2, 2.9)]
 
@@ -365,7 +548,7 @@ def test_full_topology_log_lines_to_recs(spark, tmp_path):
         trigger={"availableNow": True},
     )
     q.awaitTermination(120)
-    rows = spark.read.parquet(out_path).collect()
+    rows = read_upserted(spark, out_path).collect()
     assert len(rows) == 1 and rows[0].userId == 100
     assert [(r.productId, r.score) for r in rows[0].recs] == [(4, 3.5), (2, 2.9)]
 
@@ -676,7 +859,7 @@ def test_streaming_soak_redelivery_keeps_recs_stable(spark, tmp_path):
     def snap():
         return sorted(
             (r.userId, tuple((x.productId, x.score) for x in r.recs))
-            for r in spark.read.parquet(out_path).collect()
+            for r in read_upserted(spark, out_path).collect()
         )
 
     run("ck_first")

@@ -1,10 +1,10 @@
 """Incremental semantic-dedup maintenance — the streaming twin of the
-batch keep-list (round-8).
+batch keep-list.
 
 Covers the three maintenance behaviors the batch queries cannot: a new
 vector matching an EXISTING survivor is gated out, within-batch
 near-dups collapse to the min-id, and the survivor table accumulates
-across triggers through the upsert sink.  The batch fold
+across triggers through the batch-id log.  The batch fold
 (``incremental_semantic_survivors``) is additionally DuckDB-hash-gated
 via the registry (``embedding_incremental_survivors``).
 """
@@ -16,7 +16,14 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from myrecommendsystem_spark.streaming.recommender import (
+    COMPACTED_EPOCH,
+    compact_log,
+    read_log,
+    read_upserted,
+)
 from myrecommendsystem_spark.streaming.semantic_dedup import (
+    BUCKET_COL,
     incremental_semantic_survivors,
     run_semantic_dedup_stream,
     semantic_ingest_step,
@@ -75,8 +82,8 @@ def test_batch_fold_accumulates_with_arrival_tags(spark):
 
 
 def test_batch_fold_releases_superseded_checkpoints(spark):
-    """Round-8 ADVICE: the fold re-checkpoints its survivor accumulators
-    every batch — the SUPERSEDED checkpoints must be unpersisted, or
+    """The fold re-checkpoints its survivor accumulators every batch —
+    the SUPERSEDED checkpoints must be unpersisted, or
     pinned block storage grows linearly with the batch count.  Pin the
     post-fold persisted-RDD count to the pre-fold baseline plus the
     materialized result itself, across enough batches that a leak (≳4
@@ -99,7 +106,7 @@ def test_batch_fold_releases_superseded_checkpoints(spark):
 
 
 def test_streaming_maintenance_end_to_end(spark, tmp_path):
-    """File source → gate → self-dedup → upsert_by_key survivor table,
+    """File source → gate → self-dedup → survivor log (upsert_by_key),
     two sequential availableNow runs sharing one checkpoint (the second
     run processes only the new file — real incremental semantics)."""
     src = tmp_path / "vectors_in"
@@ -118,71 +125,32 @@ def test_streaming_maintenance_end_to_end(spark, tmp_path):
         q.awaitTermination(120)
 
     _run(_BATCH1, "b1.json")
-    t1 = spark.read.parquet(out_path)
+    t1 = read_upserted(spark, out_path, "vec_id")
     assert sorted(r.vec_id for r in t1.collect()) == [1, 3]
 
     _run(_BATCH2, "b2.json")
-    t2 = spark.read.parquet(out_path).select(
+    t2 = read_upserted(spark, out_path, "vec_id").select(
         "vec_id", "arrived_batch"
     ).orderBy("vec_id")
     rows = [(r.vec_id, r.arrived_batch) for r in t2.collect()]
     # 10 gated out against survivor 1; 12 collapsed into 11 within-batch
     assert [v for v, _ in rows] == [1, 3, 11]
-    # batch-0 survivors keep their original arrival tag (upsert did not
-    # rewrite them), the fresh survivor carries the second trigger's id
+    # batch-0 survivors keep their original arrival tag (the second
+    # trigger did not rewrite them), the fresh survivor carries its own id
     assert rows[0][1] == rows[1][1] == 0
     assert rows[2][1] == 1
     # survivor table keeps embeddings: future gates read it directly
-    emb = spark.read.parquet(out_path).filter(F.col("vec_id") == 11).first()
+    emb = read_upserted(spark, out_path, "vec_id").filter(
+        F.col("vec_id") == 11
+    ).first()
     assert emb.embedding[2] == 1.0
-
-
-def test_streaming_v1_table_migrates_to_stored_bands(spark, tmp_path):
-    """A pre-round-9 survivor table (vectors only, no bands table) must
-    keep working: the first trigger signs the accumulated set ONCE,
-    persists the bands table, and gating behaves identically — new
-    dup of an old survivor still gated out."""
-    import json as _json
-
-    from myrecommendsystem_spark.streaming.recommender import upsert_by_key
-
-    out_path = str(tmp_path / "survivors")
-    bands_path = out_path + "_bands"
-    # v1 state: survivors 1 and 3 with vectors, NO bands table
-    v1 = spark.createDataFrame(
-        [(1, _vec(0), 0), (3, _vec(1), 0)],
-        "vec_id long, embedding array<double>, arrived_batch int",
-    )
-    upsert_by_key(spark, v1, out_path, key="vec_id")
-    import os
-
-    assert not os.path.exists(bands_path)
-
-    src = tmp_path / "vectors_in"
-    src.mkdir()
-    with open(src / "b2.json", "w") as f:
-        for r in _BATCH2:
-            f.write(_json.dumps(r) + "\n")
-    stream = spark.readStream.schema(_SCHEMA).json(str(src))
-    q = run_semantic_dedup_stream(
-        stream, out_path, str(tmp_path / "ckpt"), trigger={"availableNow": True}
-    )
-    q.awaitTermination(120)
-    got = sorted(
-        r.vec_id for r in spark.read.parquet(out_path).collect()
-    )
-    # 10 gated out against migrated survivor 1; 12 collapsed into 11
-    assert got == [1, 3, 11]
-    # the bands table now exists and covers every survivor
-    bands = spark.read.parquet(bands_path)
-    assert sorted(set(r.vec_id for r in bands.collect())) == [1, 3, 11]
 
 
 def test_band_table_is_partitioned_by_band_and_probe_scan_prunes(
     spark, tmp_path
 ):
-    """Round-10 (round-9 SCALE.md residual): the survivor band table is
-    an append-only log partitioned by (batch_id,
+    """The survivor band table is an append-only log partitioned by
+    (batch_id,
     pmod(hash(band_idx, band_val), num_band_parts)) — each trigger
     writes only its OWN batch_id subtree (O(batch), no read-modify-
     write of existing partitions), and the per-trigger probe scan
@@ -190,8 +158,6 @@ def test_band_table_is_partitioned_by_band_and_probe_scan_prunes(
     a trigger reads only matched buckets' files instead of O(S) band
     bytes."""
     import os
-
-    from myrecommendsystem_spark.streaming.recommender import BUCKET_COL
 
     src = tmp_path / "vectors_in"
     src.mkdir()
@@ -217,7 +183,7 @@ def test_band_table_is_partitioned_by_band_and_probe_scan_prunes(
 
     snap1 = _run(_BATCH1, "b1.json")
     # (a) on-disk layout: every partition value is the row's band hash
-    rows = spark.read.parquet(bands_path).collect()
+    rows = read_log(spark, bands_path).collect()
     assert rows
     # NB: recompute with the table's own types — F.hash of an int and
     # a bigint differ, and band_val is int in the stream
@@ -236,7 +202,7 @@ def test_band_table_is_partitioned_by_band_and_probe_scan_prunes(
     assert len(snap1) >= 2
     # (b) the pruned probe read plans a PartitionFilter, not a full scan
     some_part = int(next(iter(snap1))[1].split("=")[1])
-    probe = spark.read.parquet(bands_path).filter(
+    probe = read_log(spark, bands_path).filter(
         F.col(BUCKET_COL).isin([some_part])
     )
     plan = probe._jdf.queryExecution().executedPlan().toString()
@@ -252,22 +218,35 @@ def test_band_table_is_partitioned_by_band_and_probe_scan_prunes(
     ) == ["batch_id=0", "batch_id=1"]
 
 
-@pytest.mark.slow
-def test_compact_band_log_folds_epochs_and_drops_stale(spark, tmp_path):
-    """Round-10: the append-only band log's documented offline
-    mitigation — compact_band_log folds every batch_id subtree into the
-    single COMPACTED_EPOCH subtree, drops STALE band rows (a vec_id
-    re-arriving with a changed embedding leaves its old batches' rows
-    behind), and is crash-safe (temp write + swap) and idempotent.
-    Gating semantics before/after compaction are pinned identical."""
+def _subtrees(spark, path):
+    """batch ids of the live snapshot of the log at ``path``."""
     import os
 
-    from pyspark.sql import Window
+    from myrecommendsystem_spark.streaming.recommender import _snapshot
 
-    from myrecommendsystem_spark.streaming.semantic_dedup import (
-        COMPACTED_EPOCH,
-        compact_band_log,
+    snap = _snapshot(spark, path)
+    return sorted(
+        int(d.split("=")[1]) for d in os.listdir(snap) if d.startswith("batch_id=")
     )
+
+
+def _parquet_files(path):
+    import os
+
+    return sum(
+        n.endswith(".parquet") for _, _, names in os.walk(path) for n in names
+    )
+
+
+@pytest.mark.slow
+def test_compact_log_folds_epochs_and_drops_stale(spark, tmp_path):
+    """The band log's offline compaction — compact_log folds every
+    batch_id subtree into one COMPACTED_EPOCH subtree of a new snapshot,
+    drops STALE band rows (a vec_id re-arriving with a changed embedding
+    leaves its old batches' rows behind), keeps each row's band
+    partition, and is idempotent.  Gating semantics before/after
+    compaction are pinned identical."""
+    from pyspark.sql import Window
 
     src = tmp_path / "vectors_in"
     src.mkdir()
@@ -287,12 +266,12 @@ def test_compact_band_log_folds_epochs_and_drops_stale(spark, tmp_path):
 
     # three triggers: batch 0 -> survivors {1, 3}; batch 1 -> {11};
     # batch 2 re-arrives vec_id 3 with a DIFFERENT embedding (axis 4,
-    # orthogonal to everything -> survives the gate, upsert replaces its
-    # vector row, and its batch-0 band rows become stale)
+    # orthogonal to everything -> survives the gate, its vector row is
+    # replaced, and its batch-0 band rows become stale)
     _run(_BATCH1, "b1.json")
     _run(_BATCH2, "b2.json")
     _run([{"vec_id": 3, "embedding": _vec(4)}], "b3.json")
-    log = spark.read.parquet(bands_path)
+    log = read_log(spark, bands_path)
     pre_rows = log.count()
     # expected keep-set: each vec_id's rows from its LATEST batch only
     expect = {
@@ -301,26 +280,17 @@ def test_compact_band_log_folds_epochs_and_drops_stale(spark, tmp_path):
             "_m", F.max("batch_id").over(Window.partitionBy("vec_id"))
         ).filter(F.col("batch_id") == F.col("_m")).collect()
     }
-    stale = pre_rows - len(expect)
-    assert stale > 0, "fixture must produce stale rows (vec 3 batch-0)"
-    assert sorted(
-        d for d in os.listdir(bands_path) if d.startswith("batch_id")
-    ) == ["batch_id=0", "batch_id=1", "batch_id=2"]
+    assert pre_rows > len(expect), "fixture must produce stale rows (vec 3 batch-0)"
+    assert _subtrees(spark, bands_path) == [0, 1, 2]
+    files_before = _parquet_files(bands_path)
 
-    stats = compact_band_log(spark, bands_path)
-    assert stats["rows_dropped"] == stale
-    assert stats["rows_kept"] == len(expect)
-    assert stats["files_after"] < stats["files_before"]
-    # single compacted epoch on disk; row set == latest-per-vec_id
-    assert sorted(
-        d for d in os.listdir(bands_path) if d.startswith("batch_id")
-    ) == [f"batch_id={COMPACTED_EPOCH}"]
-    after = spark.read.parquet(bands_path)
-    got = {(r.vec_id, r.band_idx, r.band_val) for r in after.collect()}
-    assert got == expect
+    compact_log(spark, bands_path, "vec_id", BUCKET_COL)
+    assert _subtrees(spark, bands_path) == [COMPACTED_EPOCH]
+    assert _parquet_files(bands_path) < files_before
+    after = read_log(spark, bands_path)
+    got = [(r.vec_id, r.band_idx, r.band_val) for r in after.collect()]
+    assert sorted(got) == sorted(expect)
     # bucket partition values survived the rewrite unchanged
-    from myrecommendsystem_spark.streaming.recommender import BUCKET_COL
-
     check = after.withColumn(
         "_e",
         F.pmod(
@@ -332,9 +302,8 @@ def test_compact_band_log_folds_epochs_and_drops_stale(spark, tmp_path):
     )
     assert check.filter(F.col(BUCKET_COL) != F.col("_e")).count() == 0
     # idempotent: a second compaction keeps everything
-    stats2 = compact_band_log(spark, bands_path)
-    assert stats2["rows_dropped"] == 0
-    assert stats2["rows_kept"] == len(expect)
+    compact_log(spark, bands_path, "vec_id", BUCKET_COL)
+    assert read_log(spark, bands_path).count() == len(expect)
 
     # gating semantics after compaction: dup of untouched survivor 1 is
     # gated; dup of vec 3's NEW embedding is gated; a vector near vec
@@ -347,35 +316,35 @@ def test_compact_band_log_folds_epochs_and_drops_stale(spark, tmp_path):
         ],
         "b4.json",
     )
-    final = sorted(r.vec_id for r in spark.read.parquet(out_path).collect())
+    final = sorted(
+        r.vec_id for r in read_upserted(spark, out_path, "vec_id").collect()
+    )
     assert final == [1, 3, 11, 22]
 
 
 @pytest.mark.slow
 def test_scheduled_compaction_bounds_uncompacted_subtrees(spark, tmp_path):
-    """Round-11 verdict item 4: ``compact_every=N`` runs
-    compact_band_log from foreachBatch every N triggers — a long stream
-    holds at most N uncompacted batch_id subtrees (plus the folded
+    """``compact_every=N`` folds both logs (vectors and bands) at the
+    start of every N-th trigger — a long stream holds at most N
+    uncompacted batch_id subtrees per log (plus the folded
     COMPACTED_EPOCH) instead of one per trigger forever, and gating
     results across a compaction boundary are identical to the
     never-compacted stream (same survivors, same arrival tags)."""
-    import os
-
-    from myrecommendsystem_spark.streaming.semantic_dedup import (
-        COMPACTED_EPOCH,
-    )
-
     batches = [
         _BATCH1,  # batch 0 -> survivors {1, 3}
-        _BATCH2,  # batch 1 -> {11}; compaction fires (N=2)
-        # batch 2 straddles the boundary: 20 dups COMPACTED survivor 1
+        _BATCH2,  # batch 1 -> {11}
+        # batch 2 folds batches 0-1 first: 20 dups COMPACTED survivor 1
         # (gated out), 30 is fresh
         [
             {"vec_id": 20, "embedding": _vec(0, eps_axis=5)},
             {"vec_id": 30, "embedding": _vec(5)},
         ],
-        # batch 3 -> compaction fires again, folding batch 2's subtree
         [{"vec_id": 40, "embedding": _vec(6)}],
+        # batch 4 folds again: 41 dups 40, which batch 3 appended
+        [
+            {"vec_id": 41, "embedding": _vec(6, eps_axis=8)},
+            {"vec_id": 50, "embedding": _vec(7)},
+        ],
     ]
 
     def _run_all(root, compact_every):
@@ -383,7 +352,7 @@ def test_scheduled_compaction_bounds_uncompacted_subtrees(spark, tmp_path):
         src.mkdir()
         out_path = str(root / "survivors")
         ckpt = str(root / "ckpt")
-        subtree_counts = []
+        trees = []
         for i, rows in enumerate(batches):
             with open(src / f"b{i}.json", "w") as f:
                 for r in rows:
@@ -397,29 +366,26 @@ def test_scheduled_compaction_bounds_uncompacted_subtrees(spark, tmp_path):
                 compact_every=compact_every,
             )
             q.awaitTermination(120)
-            subtree_counts.append(
-                sorted(
-                    int(d.split("=")[1])
-                    for d in os.listdir(out_path + "_bands")
-                    if d.startswith("batch_id")
-                )
+            trees.append(
+                (_subtrees(spark, out_path), _subtrees(spark, out_path + "_bands"))
             )
         surv = sorted(
             (r.vec_id, r.arrived_batch)
-            for r in spark.read.parquet(out_path).collect()
+            for r in read_upserted(spark, out_path, "vec_id").collect()
         )
-        return subtree_counts, surv
+        return trees, surv
 
     plain_dir, sched_dir = tmp_path / "plain", tmp_path / "sched"
     plain_dir.mkdir(), sched_dir.mkdir()
     _, surv_plain = _run_all(plain_dir, compact_every=None)
     trees, surv_sched = _run_all(sched_dir, compact_every=2)
     assert surv_sched == surv_plain  # gating unchanged by compaction
-    # after triggers 2 and 4 (batch ids 1, 3) the live subtrees fold
-    assert trees[1] == [COMPACTED_EPOCH]
-    assert trees[2] == [COMPACTED_EPOCH, 2]
-    assert trees[3] == [COMPACTED_EPOCH]
+    assert [v for v, _ in surv_sched] == [1, 3, 11, 30, 40, 50]
+    e = COMPACTED_EPOCH
+    expected = [[0], [0, 1], [e, 2], [e, 2, 3], [e, 4]]
+    assert [vectors for vectors, _ in trees] == expected
+    assert [bands for _, bands in trees] == expected
     # the bound: never more than compact_every uncompacted subtrees
     assert all(
-        sum(1 for b in t if b >= 0) <= 2 for t in trees
+        sum(1 for b in t if b >= 0) <= 2 for pair in trees for t in pair
     )

@@ -760,7 +760,7 @@ def test_near_duplicate_pairs_byte_gate_routes_wide_d_to_ivf(
     """The auto gate must be BYTE-aware, not just row-aware: a frame
     whose rows×d×8 matrix exceeds exact_bytes_limit routes to IVF even
     when the row count is under exact_row_limit (a d=1024 table at 500k
-    rows is a 4 GB driver collect — round-4 verdict item 6)."""
+    rows is a 4 GB driver collect)."""
     from myrecommendsystem_spark.operators import similarity as sim_mod
 
     sentinel = object()
@@ -778,6 +778,15 @@ def test_near_duplicate_pairs_byte_gate_routes_wide_d_to_ivf(
         vectors, threshold=0.99, exact_bytes_limit=8192
     )
     assert exact is not sentinel
+    # a null vector in the first row must not stand in for the width:
+    # the gate sizes the matrix by the widest vector
+    nulled = vectors.sparkSession.createDataFrame(
+        [(-1, None)], vectors.schema
+    ).unionByName(vectors)
+    out = sim_mod.near_duplicate_pairs(
+        nulled, threshold=0.99, exact_bytes_limit=4096
+    )
+    assert out is sentinel
 
 
 def test_fused_bands_and_shingles_matches_separate_kernels(spark, sf_dir):
