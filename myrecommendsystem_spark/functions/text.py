@@ -1,6 +1,6 @@
 """Text analysis functions — tokenize, quality, language-ID, fingerprints.
 
-LLM-data-pipeline extensions (BASELINE.json north star) beyond the
+LLM-data-pipeline extensions beyond the
 reference's surface.  Everything is a Catalyst expression (split /
 transform / aggregate / regexp) — no Python UDFs, so these run JVM-side at
 full codegen speed over 100 TB of documents.
@@ -934,7 +934,7 @@ def cdc_cut_points(
     the pure per-doc kernel shared by :func:`content_defined_chunks`'
     Arrow pass and the oracle generator (plans/ann_oracles.py trains the
     RAG pipeline's quantizer on locally-recomputed chunks, so both paths
-    MUST cut identically).  Factored out in round 8; logic unchanged."""
+    MUST cut identically)."""
     import numpy as _np
 
     powers = _np.array(
@@ -1057,8 +1057,8 @@ def hash_embed_one(
 ) -> list[float]:
     """One document's feature-hash embedding — the pure kernel shared by
     :func:`hashing_embedding`'s Arrow pass and the oracle generator
-    (plans/ann_oracles.py), so both paths embed bit-identically
-    (round 8).  Vectorized polynomial rolling hash over the utf-8 byte
+    (plans/ann_oracles.py), so both paths embed bit-identically.
+    Vectorized polynomial rolling hash over the utf-8 byte
     stream: the whole doc stays in numpy (a per-n-gram Python hash loop
     measured ~8x slower on 300-char docs).  Logic unchanged."""
     powers = np.array(

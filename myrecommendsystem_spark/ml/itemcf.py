@@ -65,7 +65,7 @@ def corating_similarities(
         .agg(F.avg("score").alias("score"))
     )
 
-    # Single-lineage plan (optimization round 13): the norm rides ``r`` as
+    # Single-lineage plan: the norm rides ``r`` as
     # a productId-window aggregate instead of a separate ``groupBy(productId)``
     # relation joined back onto the pair aggregate.  The old shape computed
     # the scan→cap→collapse subtree FOUR times (both pair sides + both norm

@@ -9,8 +9,7 @@ calibration + generalization: the model smooths over individual rule
 misfires and emits a continuous score a pipeline can threshold per use
 case.
 
-Spark shape (round 9 — redesigned DuckDB-gateable, the quantizer-fit
-discipline):
+Spark shape (DuckDB-gateable, the quantizer-fit discipline):
 
 - featurization is a pure Catalyst expression: char-bigram slots via a
   31·ord(c1)+ord(c2) mod 256 rolling hash (NOT MurmurHash HashingTF —
@@ -174,7 +173,7 @@ def label_documents(
     into a persisted table, fit on a bounded sample of it, score every
     batch from it.
 
-    Round 12: the language pass itself moved from the per-row
+    The language pass itself moved from the per-row
     ``predicted_lang`` expression — token×language stopword membership,
     the one expression family in the repo that evaluated INTERPRETED
     instead of codegen — to the set-oriented

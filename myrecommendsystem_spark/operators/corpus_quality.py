@@ -1,7 +1,6 @@
 """Corpus-hygiene operators for pretraining-scale data pipelines.
 
-LLM-data-pipeline extensions (BASELINE.json north star, graded alongside
-SURVEY.md §2):
+LLM-data-pipeline extensions (graded alongside SURVEY.md §2):
 
 - **benchmark decontamination** — flag training documents sharing word
   n-grams with an evaluation/benchmark set.  The industry-standard

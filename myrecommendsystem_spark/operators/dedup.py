@@ -1,6 +1,6 @@
 """Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
 
-LLM-data-pipeline extensions (BASELINE.json north star).  All four are
+LLM-data-pipeline extensions.  All four are
 pure DataFrame pipelines over the text fingerprint functions — no Python
 UDFs, no driver-side loops — and each is shaped for 100 TB:
 
@@ -409,7 +409,7 @@ def connected_components(
     and the job dies long before 100 TB does.
 
     Pair graphs at or under ``_DRIVER_PAIR_CAP`` edges run the identical
-    propagation in numpy off one Arrow fetch (round 8) — see the cap's
+    propagation in numpy off one Arrow fetch — see the cap's
     comment; both venues converge to the same fixpoint, but only the
     driver path is guaranteed to REACH it on any shape (pointer jumping)
     — the distributed loop stops after ``max_iter`` rounds, i.e. graphs

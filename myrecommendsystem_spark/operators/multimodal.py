@@ -1,6 +1,6 @@
 """Multimodal columns: binary payloads + typed metadata, Arrow-batched ops.
 
-LLM-data-pipeline extension (BASELINE.json north star).  Media lives in a
+LLM-data-pipeline extension.  Media lives in a
 DataFrame as an opaque ``binary`` column plus a typed metadata struct —
 the Spark-native layout for 100 TB of images/audio/video:
 

@@ -1,6 +1,6 @@
 """Similarity search over embedding columns (array<float>).
 
-LLM-data-pipeline extensions (BASELINE.json north star):
+LLM-data-pipeline extensions:
 
 - brute-force cosine top-k — the exactness baseline.  Query set broadcast
   against the corpus scan; per-query top-k via window.  O(Q·N) but zero
@@ -27,7 +27,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.column import Column
 
@@ -39,6 +39,7 @@ from myrecommendsystem_spark.operators.dedup import (
     connected_components,
 )
 from myrecommendsystem_spark.operators.parallelism import widen_for_kernel
+from myrecommendsystem_spark.operators.relational import top_k_per_group
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -78,6 +79,70 @@ def _empty_frame(df, schema: str) -> DataFrame:
     return df.sparkSession.createDataFrame([], schema)
 
 
+# output of the compressed-domain searches (ivf_topk names its score cos)
+_TOPK_SCHEMA = "query_id bigint, vec_id bigint, score double, rnk int"
+
+
+def _unit(mat: np.ndarray) -> np.ndarray:
+    """Rows of a float64 matrix divided in place by their L2 norm, floored
+    at 1e-12 — the one numpy normalization of every search and quantizer
+    kernel (the oracles' ``x / GREATEST(sqrt(...), 1e-12)``)."""
+    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return mat
+
+
+def _gather_unit(df: DataFrame, id_col: str, *vec_cols: str) -> tuple:
+    """(ids, one unit matrix per vector column) of a relation that is
+    small by contract — a query set, or the vectors of a re-rank
+    shortlist — collected in ONE job."""
+    rows = df.select(F.col(id_col), *vec_cols).collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    return (ids,) + tuple(
+        _unit(np.array([r[i] for r in rows], dtype=np.float64))
+        for i in range(1, len(vec_cols) + 1)
+    )
+
+
+def _probe_cells(unit: np.ndarray, centroids: np.ndarray, nprobe: int) -> np.ndarray:
+    """(rows, nprobe) ids of each unit row's ``nprobe`` nearest cells:
+    unit dot descending, ties to the LOWEST cell id (stable sort) — the
+    oracles' ``ORDER BY cd DESC, c``."""
+    dots = unit @ np.ascontiguousarray(centroids.T)
+    return np.argsort(-dots, axis=1, kind="stable")[:, :nprobe]
+
+
+def _rank_topk(
+    scored: DataFrame, score_col: str, k: int, rank_col: str = "rnk"
+) -> DataFrame:
+    """Per-query top-k of a (query_id, vec_id, score) relation: score
+    descending, ties to the lowest vec_id — the one ranking (and
+    shortlist cut) of every distributed search."""
+    return top_k_per_group(
+        scored, ["query_id"], [F.col(score_col).desc(), F.col("vec_id")], k, rank_col
+    )
+
+
+def _scan_topk(
+    corpus: DataFrame, queries: DataFrame, k: int, score_col: str
+) -> DataFrame:
+    """Exact top-k of two (id, vector) relations by a broadcast scan:
+    the query side is broadcast, the corpus never shuffles, and each
+    pair scores the round-stable SQL dot — the body of both exact
+    searches, which differ only in what they feed it."""
+    c = corpus.toDF("vec_id", "cv")
+    q = queries.toDF("query_id", "qv")
+    scored = (
+        c.crossJoin(F.broadcast(q))
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .select(
+            "query_id",
+            "vec_id",
+            round_stable(_dot(F.col("cv"), F.col("qv")), 4).alias(score_col),
+        )
+    )
+    return _rank_topk(scored, score_col, k)
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -91,27 +156,11 @@ def brute_force_topk(
     by corpus id for determinism.  Excludes self-matches when a query id
     also appears in the corpus.
     """
-    c = as_unit_vectors(
-        widen_for_kernel(corpus), id_col, vec_col
-    ).withColumnsRenamed({"id": "vec_id", "unit": "cu"})
-    q = as_unit_vectors(queries, id_col, vec_col).withColumnsRenamed(
-        {"id": "query_id", "unit": "qu"}
-    )
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            round_stable(_dot(F.col("cu"), F.col("qu")), 4).alias("cos"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
+    return _scan_topk(
+        as_unit_vectors(widen_for_kernel(corpus), id_col, vec_col),
+        as_unit_vectors(queries, id_col, vec_col),
+        k,
+        "cos",
     )
 
 
@@ -134,25 +183,11 @@ def brute_force_topk_dot(
     extra coordinate — matters when feeding an angular ANN index; the
     exact baseline scores directly.)
     """
-    v = lambda c: F.col(c).cast("array<double>")  # noqa: E731
-    c = widen_for_kernel(corpus).select(
-        F.col(id_col).alias("vec_id"), v(vec_col).alias("cv")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), v(vec_col).alias("qv"))
-    scored = (
-        c.crossJoin(F.broadcast(q))
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select(
-            "query_id",
-            "vec_id",
-            round_stable(_dot(F.col("cv"), F.col("qv")), 4).alias("dot"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-    )
+
+    def raw(df: DataFrame) -> DataFrame:
+        return df.select(F.col(id_col), F.col(vec_col).cast("array<double>"))
+
+    return _scan_topk(raw(widen_for_kernel(corpus)), raw(queries), k, "dot")
 
 
 def _threshold_pairs(
@@ -826,7 +861,7 @@ def pq_fit_mat(mat: np.ndarray, m: int, k: int, seed: int = 42) -> np.ndarray:
     return books
 
 
-def _unit_sample_matrix(
+def _sample_matrix(
     df: DataFrame,
     id_col: str,
     vec_col: str,
@@ -834,9 +869,10 @@ def _unit_sample_matrix(
     max_train: int,
     salt: str,
 ) -> np.ndarray:
-    """Deterministic bounded training sample as a unit-normalized
-    (≤max_train, d) float64 matrix — the shared gather of the IVF/PQ
-    quantizer fits.  ``n`` is the caller-supplied input row count (the
+    """Deterministic bounded training sample as a RAW (≤max_train, d)
+    float64 matrix — the shared gather of the IVF/PQ quantizer fits
+    (which unit-normalize it) and the PCA fit (which mean-centers it
+    instead).  ``n`` is the caller-supplied input row count (the
     sampling fraction needs it); when ``n <= max_train`` the sample is
     the WHOLE input ordered by id, independent of ``salt`` — which is
     what lets :func:`build_ivfpq_index` gather once for both fits."""
@@ -847,9 +883,7 @@ def _unit_sample_matrix(
         raw = sample_fraction(raw, "id", max_train / n, salt=salt)
     # orderBy(id) pins collect order: k-means init indexes into row order,
     # so codebooks must not depend on physical partition layout.
-    mat = np.array([r.vec for r in raw.orderBy("id").collect()], dtype=np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    return mat
+    return np.array([r.vec for r in raw.orderBy("id").collect()], dtype=np.float64)
 
 
 def fit_ivf_centroids(
@@ -888,7 +922,7 @@ def fit_ivf_centroids(
         n = df.count()
     if n == 0:
         raise ValueError("fit_ivf_centroids: empty input — nothing to quantize")
-    mat = _unit_sample_matrix(df, id_col, vec_col, n, max_train, "ivf")
+    mat = _unit(_sample_matrix(df, id_col, vec_col, n, max_train, "ivf"))
     return kmeans_fit_mat(mat, n_cells, seed)
 
 
@@ -904,22 +938,20 @@ def ivf_assign(
 
     One narrow FUSED Arrow pass over the corpus (no shuffle, no join):
     each batch is normalized and probed by a single numpy kernel — the
-    (C, d) centroid matrix is closure state, scoring one (B, d) @ (d, C)
-    matmul + argsort.  Fused because a separate ``as_unit_vectors`` step
-    evaluates interpreted array lambdas per element (~1.2 s per pass at
-    just 2k×64 — the dominant cost of the whole IVF query before fusion).
-    Ties break on cell_id ascending (argsort stability).
+    (C, d) centroid matrix is closure state, probing with one (B, d) @
+    (d, C) matmul + argsort (:func:`_probe_cells`).  Fused because a
+    separate ``as_unit_vectors`` step evaluates interpreted array lambdas
+    per element (~1.2 s per pass at just 2k×64 — the dominant cost of
+    the whole IVF query before fusion).  Ties break on cell_id ascending.
     """
-    cmat = np.ascontiguousarray(centroids.T)  # (d, C)
 
     def kernel(batches):
         for pdf in batches:
             ids = pdf["id"].to_numpy()
-            m = np.array(list(pdf["vec"]), dtype=np.float64)  # (B, d)
-            if len(m) == 0:
+            if len(ids) == 0:
                 continue
-            m /= np.maximum(np.linalg.norm(m, axis=1, keepdims=True), 1e-12)
-            top = np.argsort(-(m @ cmat), axis=1, kind="stable")[:, :nprobe]
+            m = _unit(np.array(list(pdf["vec"]), dtype=np.float64))  # (B, d)
+            top = _probe_cells(m, centroids, nprobe)
             rep = np.repeat(np.arange(len(ids)), nprobe)
             yield pd.DataFrame(
                 {
@@ -976,13 +1008,7 @@ def ivf_topk(
             round_stable(_pdot(F.col("cu"), F.col("qu")), 4).alias("cos"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos").desc(), F.col("vec_id")
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-        .filter(F.col("rnk") <= k)
-    )
+    return _rank_topk(scored, "cos", k)
 
 
 def embedding_dedup_survivors(
@@ -1043,7 +1069,7 @@ def fit_pq_codebooks(
         n = df.count()
     if n == 0:
         raise ValueError("fit_pq_codebooks: empty input — nothing to quantize")
-    mat = _unit_sample_matrix(df, id_col, vec_col, n, max_train, "pq")
+    mat = _unit(_sample_matrix(df, id_col, vec_col, n, max_train, "pq"))
     return pq_fit_mat(mat, m, k, seed)
 
 
@@ -1066,8 +1092,7 @@ def pq_encode(
             ids = pdf["id"].to_numpy()
             if len(ids) == 0:
                 continue
-            x = np.array(list(pdf["vec"]), dtype=np.float64)
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+            x = _unit(np.array(list(pdf["vec"]), dtype=np.float64))
             codes = np.empty((len(ids), m), dtype=np.int32)
             for j in range(m):
                 xs = x[:, j * sub : (j + 1) * sub]
@@ -1079,36 +1104,18 @@ def pq_encode(
     return raw.mapInPandas(kernel, "id long, codes array<int>")
 
 
-def _query_adc_table(
-    queries: DataFrame, books: np.ndarray, id_col: str, vec_col: str
-) -> tuple[np.ndarray, np.ndarray]:
-    """Collect the (small-by-contract) query set and build the ADC lookup
-    table: (q_ids, q_mat unit-normalized, table[q, j, c] =
-    q_subvector_j · centroid_{j,c}).  q_mat is returned so callers can
-    reuse the collected queries (e.g. driver-side probe-cell assignment)
-    instead of running another Spark job over the query relation."""
-    m, _, sub = books.shape
-    q_rows = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("vec")
-    ).collect()
-    q_ids = np.array([r.qid for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r.vec for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
-    table = np.einsum("qjs,jcs->qjc", q_mat.reshape(len(q_ids), m, sub), books)
-    return q_ids, q_mat, table
-
-
 def _exact_rerank_topk(
     corpus: DataFrame,
-    queries: DataFrame,
     shortlist: DataFrame,
+    q_ids: np.ndarray,
+    q_mat: np.ndarray,
     k: int,
     id_col: str,
     vec_col: str,
-    q_cache: tuple[np.ndarray, np.ndarray] | None = None,
 ) -> DataFrame:
     """Exact-cosine top-k over a (query_id, vec_id) shortlist — the
-    shared re-rank tail of every compressed-domain search.
+    shared re-rank tail of every compressed-domain search; ``q_ids`` /
+    ``q_mat`` are the unit query matrix the search already gathered.
 
     Everything here is bounded by the search contract, so the re-rank is
     a DRIVER-side numpy pass (the faiss deployment shape — shortlist
@@ -1128,40 +1135,21 @@ def _exact_rerank_topk(
     keeping the corpus-side IO identical."""
     spark = corpus.sparkSession
     pair_rows = shortlist.select("query_id", "vec_id").collect()
-    out_schema = "query_id bigint, vec_id bigint, score double, rnk int"
     if not pair_rows:
-        return spark.createDataFrame([], out_schema)
+        return spark.createDataFrame([], _TOPK_SCHEMA)
     ids = sorted({int(r.vec_id) for r in pair_rows})
-    vec_rows = (
-        corpus.filter(F.col(id_col).isin(ids))
-        .select(F.col(id_col).alias("vid"), F.col(vec_col).alias("vec"))
-        .collect()
+    c_ids, cmat = _gather_unit(
+        corpus.filter(F.col(id_col).isin(ids)), id_col, vec_col
     )
-    def _unit(rows):
-        mat = np.array([r.vec for r in rows], dtype=np.float64)
-        mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-        return mat
-
-    if q_cache is not None:
-        # callers that already collected the query set (the ADC table
-        # builders) pass it through — one less job per search
-        q_ids, qmat = q_cache
-        qidx = {int(q): i for i, q in enumerate(q_ids)}
-    else:
-        q_rows = queries.select(
-            F.col(id_col).alias("qid"), F.col(vec_col).alias("vec")
-        ).collect()
-        qmat = _unit(q_rows)
-        qidx = {int(r.qid): i for i, r in enumerate(q_rows)}
-    cmat = _unit(vec_rows)
-    cidx = {int(r.vid): i for i, r in enumerate(vec_rows)}
+    qidx = {int(q): i for i, q in enumerate(q_ids)}
+    cidx = {int(c): i for i, c in enumerate(c_ids)}
     by_query: dict[int, list[int]] = {}
     for r in pair_rows:
         by_query.setdefault(int(r.query_id), []).append(int(r.vec_id))
     out = []
     for qid, cand_ids in by_query.items():
         cand_ids = [c for c in cand_ids if c in cidx]
-        scores = cmat[[cidx[c] for c in cand_ids]] @ qmat[qidx[qid]]
+        scores = cmat[[cidx[c] for c in cand_ids]] @ q_mat[qidx[qid]]
         ranked = sorted(
             zip(cand_ids, scores), key=lambda t: (-round(t[1], 4), t[0])
         )[:k]
@@ -1169,7 +1157,86 @@ def _exact_rerank_topk(
             (qid, c, float(np.round(s, 4)), i + 1)
             for i, (c, s) in enumerate(ranked)
         )
-    return spark.createDataFrame(out, out_schema)
+    return spark.createDataFrame(out, _TOPK_SCHEMA)
+
+
+def _adc_topk(
+    packed: DataFrame,
+    queries: DataFrame,
+    books: np.ndarray,
+    rerank_corpus: DataFrame | None,
+    k: int,
+    rerank: int,
+    id_col: str,
+    vec_col: str,
+    centroids: np.ndarray | None = None,
+    nprobe: int = 1,
+) -> DataFrame:
+    """The one compressed-domain search of :func:`pq_topk` and
+    :func:`ivfpq_search` over ``packed`` = (id, codes[, cell_id]):
+    (query_id, vec_id, score, rnk).
+
+    Probe: with ``centroids`` (IVF-PQ) each query probes its ``nprobe``
+    nearest cells (:func:`_probe_cells`, on the gathered query matrix —
+    a distributed pass for a query set that is small by contract would
+    be one whole extra job) and the codes scan keeps only the probed
+    cells.  PQ is the no-probe case: one cell holding every row, probed
+    by every query.
+
+    ADC: the (Q, m, k) table of query-subvector · subcentroid inner
+    products rides the task closure; each (row, probing query) pair
+    scores m table lookups summed — no vector reconstruction, no
+    full-dim dot, and the codes never shuffle.
+
+    Re-rank: ADC alone ranks coarsely — rows sharing codes tie — so the
+    ADC top-``rerank`` shortlist per query goes through
+    :func:`_exact_rerank_topk`; ``rerank_corpus=None`` (an index alone
+    stores no vectors) returns the ADC ranking itself."""
+    q_ids, q_mat = _gather_unit(queries, id_col, vec_col)
+    nq, (m, _, sub) = len(q_ids), books.shape
+    table = np.einsum("qjs,jcs->qjc", q_mat.reshape(nq, m, sub), books)
+    if centroids is None:
+        packed = packed.withColumn("cell_id", F.lit(0))
+        probes = np.zeros((nq, 1), dtype=np.int64)
+    else:
+        probes = _probe_cells(q_mat, centroids, nprobe)
+        packed = packed.filter(F.col("cell_id").isin(np.unique(probes).tolist()))
+    hit = np.zeros((probes.max() + 1, nq), dtype=bool)  # hit[c, q]: q probes c
+    hit[probes, np.arange(nq)[:, None]] = True
+    b_state = packed.sparkSession.sparkContext.broadcast((table, q_ids, hit))
+
+    def adc(batches):
+        t, qids, hit = b_state.value
+        for pdf in batches:
+            # (row, query) pairs: each row against every query probing its cell
+            rows, qi = np.nonzero(hit[pdf["cell_id"].to_numpy(dtype=np.int64)])
+            if len(rows) == 0:
+                continue
+            c = np.array(list(pdf["codes"]), dtype=np.int64)[rows]  # (P, m)
+            # subspaces summed left to right: a fixed order, where numpy's
+            # sum(axis=...) picks pairwise or sequential by array layout
+            s = t[qi, 0, c[:, 0]]
+            for j in range(1, m):
+                s = s + t[qi, j, c[:, j]]
+            yield pd.DataFrame(
+                {
+                    "query_id": qids[qi],
+                    "vec_id": pdf["id"].to_numpy()[rows],
+                    "score": np.round(s, 4),
+                }
+            )
+
+    scored = (
+        packed.select("id", "codes", "cell_id")
+        .mapInPandas(adc, "query_id long, vec_id long, score double")
+        .filter(F.col("vec_id") != F.col("query_id"))
+    )
+    if rerank_corpus is None:
+        return _rank_topk(scored, "score", k)
+    shortlist = _rank_topk(scored, "score", max(rerank, k), "adc_rnk")
+    return _exact_rerank_topk(
+        rerank_corpus, shortlist, q_ids, q_mat, k, id_col, vec_col
+    )
 
 
 def pq_topk(
@@ -1178,84 +1245,27 @@ def pq_topk(
     m: int = 8,
     k_codes: int = 16,
     k: int = 5,
-    rerank: int | None = 50,
+    rerank: int = 50,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     seed: int = 42,
 ) -> DataFrame:
     """Approximate cosine top-k via PQ asymmetric distance (ADC) with
     exact re-ranking: (query_id, vec_id, score, rnk) — queries stay
-    EXACT vectors, the corpus is scanned as its 8-byte codes.
-
-    Stage 1 (compressed domain): per Arrow batch, one (Q, m, k) lookup
-    table of query-subvector · subcentroid inner products; each corpus
-    row's ADC score is m table lookups summed — no vector
-    reconstruction, no full-dim dot.  The corpus never shuffles.
-
-    Stage 2 (re-rank, the standard IVF-PQ deployment shape): the ADC
-    top-``rerank`` shortlist per query (a few hundred ids) is broadcast
-    back against the corpus to score EXACT cosine on true vectors, and
-    the final top-k ranks on that.  ADC alone ranks coarsely — rows
-    sharing codes tie — so production PQ always re-ranks a shortlist;
-    ``rerank=None`` returns the raw compressed-domain ranking.  Recall
-    vs brute force asserted in tests (same contract as IVF).
+    EXACT vectors, the corpus is scanned as its 8-byte codes, and the
+    ADC top-``rerank`` shortlist per query (a few hundred ids) is
+    re-scored by EXACT cosine on true vectors (the standard IVF-PQ
+    deployment shape) — :func:`_adc_topk` with no probe.  Recall vs
+    brute force asserted in tests (same contract as IVF).
     """
     n = corpus.count()  # doubles as the empty gate and the fit's n
     if n == 0:
-        return _empty_frame(
-            corpus, "query_id bigint, vec_id bigint, score double, rnk int"
-        )
+        return _empty_frame(corpus, _TOPK_SCHEMA)
     books = fit_pq_codebooks(
         corpus, m=m, k=k_codes, id_col=id_col, vec_col=vec_col, seed=seed, n=n
     )
     codes = pq_encode(corpus, books, id_col, vec_col)
-
-    mm = books.shape[0]
-    q_ids, q_mat, table = _query_adc_table(queries, books, id_col, vec_col)
-    spark = corpus.sparkSession
-    b_table = spark.sparkContext.broadcast(table)
-    b_qids = spark.sparkContext.broadcast(q_ids)
-
-    def score(batches):
-        for pdf in batches:
-            ids = pdf["id"].to_numpy()
-            if len(ids) == 0:
-                continue
-            c = np.array(list(pdf["codes"]), dtype=np.int64)  # (B, m)
-            t = b_table.value  # (Q, m, k)
-            # scores[b, q] = sum_j t[q, j, c[b, j]]: gather per-subspace
-            # rows from the (m, k, Q) view, then sum subspaces
-            s = t.transpose(1, 2, 0)[np.arange(mm)[None, :], c, :].sum(axis=1)
-            nb, nq = s.shape
-            yield pd.DataFrame(
-                {
-                    "vec_id": np.repeat(ids, nq),
-                    "query_id": np.tile(b_qids.value, nb),
-                    "score": np.round(s.reshape(-1), 4),
-                }
-            )
-
-    scored = codes.mapInPandas(
-        score, "vec_id long, query_id long, score double"
-    ).filter(F.col("vec_id") != F.col("query_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    if rerank is None:
-        return (
-            scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= k)
-        )
-
-    shortlist = (
-        scored.withColumn("adc_rnk", F.row_number().over(w))
-        .filter(F.col("adc_rnk") <= max(rerank, k))
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank_topk(
-        corpus, queries, shortlist, k, id_col, vec_col,
-        q_cache=(q_ids, q_mat),
-    )
+    return _adc_topk(codes, queries, books, corpus, k, rerank, id_col, vec_col)
 
 
 def ivf_pq_topk(
@@ -1281,16 +1291,13 @@ def ivf_pq_topk(
 
     Build: both quantizers train on bounded samples (O(1) in corpus
     size); the (cell_id, codes) index materializes with ONE build-time
-    join on id.  Search: the per-query probed-cell list broadcasts, the
-    codes scan touches only probed cells, ADC is m table lookups per
-    (row, probing query) pair, and only the ≤ Q·rerank shortlist ever
-    fetches true vectors.
+    join on id.  Search: the probed cells filter the codes scan, ADC is
+    m table lookups per (row, probing query) pair, and only the
+    ≤ Q·rerank shortlist ever fetches true vectors.
     """
     n = corpus.count()  # doubles as the empty gate and the fits' n
     if n == 0:
-        return _empty_frame(
-            corpus, "query_id bigint, vec_id bigint, score double, rnk int"
-        )
+        return _empty_frame(corpus, _TOPK_SCHEMA)
     index = build_ivfpq_index(
         corpus,
         n_cells=n_cells,
@@ -1343,7 +1350,7 @@ def build_ivfpq_index(
     if n == 0:
         raise ValueError("build_ivfpq_index: empty input — nothing to quantize")
     if n <= max_train:
-        mat = _unit_sample_matrix(corpus, id_col, vec_col, n, max_train, "ivf")
+        mat = _unit(_sample_matrix(corpus, id_col, vec_col, n, max_train, "ivf"))
         centroids = kmeans_fit_mat(mat, n_cells, seed)
         books = pq_fit_mat(mat, m, k_codes, seed)
     else:
@@ -1354,11 +1361,9 @@ def build_ivfpq_index(
             corpus, m=m, k=k_codes, id_col=id_col, vec_col=vec_col,
             seed=seed, max_train=max_train, n=n,
         )
-    cells = ivf_assign(corpus, centroids, id_col, vec_col, nprobe=1).select(
-        F.col("id"), F.col("cell_id")
-    )
-    packed = pq_encode(corpus, books, id_col, vec_col).join(cells, "id")
-    return IvfPqIndex(packed=packed, centroids=centroids, books=books)
+    index = IvfPqIndex(packed=None, centroids=centroids, books=books)
+    index.packed = index.encode(corpus, id_col, vec_col)
+    return index
 
 
 class IvfPqIndex:
@@ -1463,69 +1468,9 @@ def ivfpq_search(
     true vectors for the exact re-rank stage; pass None to return the
     raw compressed-domain (ADC) ranking — the index alone never stores
     vectors."""
-    packed, centroids, books = index.packed, index.centroids, index.books
-    corpus = rerank_corpus  # original naming below
-    mm = books.shape[0]
-    q_ids, q_mat, table = _query_adc_table(queries, books, id_col, vec_col)
-    qidx = {int(q): i for i, q in enumerate(q_ids)}
-    spark = packed.sparkSession
-    b_table = spark.sparkContext.broadcast(table)
-    b_qidx = spark.sparkContext.broadcast(qidx)
-
-    # probe-cell assignment runs DRIVER-side on the already-collected
-    # query matrix (same unit-dot ranking as ivf_assign) — the query set
-    # is small by contract, and a distributed Arrow pass for it was one
-    # whole extra job per search
-    probe_order = np.argsort(-(q_mat @ centroids.T), axis=1)[:, :nprobe]
-    q_cells = spark.createDataFrame(
-        [
-            (int(q_ids[i]), int(c))
-            for i in range(len(q_ids))
-            for c in probe_order[i]
-        ],
-        "query_id bigint, cell_id int",
-    )
-
-    cand = packed.join(F.broadcast(q_cells), "cell_id").filter(
-        F.col("id") != F.col("query_id")
-    )
-
-    def adc(batches):
-        t = b_table.value
-        lut = b_qidx.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            c = np.array(list(pdf["codes"]), dtype=np.int64)  # (B, m)
-            qi = pdf["query_id"].map(lut).to_numpy(dtype=np.int64)
-            s = t[qi[:, None], np.arange(mm)[None, :], c].sum(axis=1)
-            yield pd.DataFrame(
-                {
-                    "query_id": pdf["query_id"].to_numpy(),
-                    "vec_id": pdf["id"].to_numpy(),
-                    "score": np.round(s, 4),
-                }
-            )
-
-    scored = cand.select("query_id", "id", "codes").mapInPandas(
-        adc, "query_id long, vec_id long, score double"
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("vec_id")
-    )
-    if corpus is None:
-        return (
-            scored.withColumn("rnk", F.row_number().over(w).cast("int"))
-            .filter(F.col("rnk") <= k)
-        )
-    shortlist = (
-        scored.withColumn("adc_rnk", F.row_number().over(w))
-        .filter(F.col("adc_rnk") <= max(rerank, k))
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank_topk(
-        corpus, queries, shortlist, k, id_col, vec_col,
-        q_cache=(q_ids, q_mat),
+    return _adc_topk(
+        index.packed, queries, index.books, rerank_corpus, k, rerank,
+        id_col, vec_col, centroids=index.centroids, nprobe=nprobe,
     )
 
 
@@ -1599,7 +1544,7 @@ def pca_fit_mat(mat: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     unbiased sample covariance of a RAW (n, d) float64 matrix — the PURE
     numpy fit shared by the Spark path (:func:`fit_pca_sample`) and the
     DuckDB-oracle twin (plans/ann_oracles.py), the ``kmeans_fit_mat``
-    discipline applied to PCA (round 9): same rows + same single-call
+    discipline applied to PCA: same rows + same single-call
     numpy reductions ⇒ bit-identical basis in both engines.  (The
     DISTRIBUTED covariance (:func:`pca_covariance`) cannot be gated this
     way: partition-order summation noise rotates eigenvectors freely
@@ -1633,15 +1578,7 @@ def fit_pca_sample(
         n = df.count()
     if n == 0:
         raise ValueError("fit_pca_sample: empty input — nothing to fit")
-    raw = df.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    if n > max_train:
-        from myrecommendsystem_spark.operators.sampling import sample_fraction
-
-        raw = sample_fraction(raw, "id", max_train / n, salt="pca")
-    mat = np.array(
-        [r.vec for r in raw.orderBy("id").collect()], dtype=np.float64
-    )
-    return pca_fit_mat(mat)
+    return pca_fit_mat(_sample_matrix(df, id_col, vec_col, n, max_train, "pca"))
 
 
 def pca_spectrum_rows(
@@ -1750,62 +1687,45 @@ def pca_topk(
 
     Scale: the basis is a bounded-sample deterministic driver fit
     (fit_pca_sample — O(1) in corpus size, and what makes the search
-    DuckDB-gateable with inlined components, round 9); projection is
+    DuckDB-gateable with inlined components); projection is
     one map-only Arrow pass; the reduced-space scan moves r-dim vectors
     only; the re-rank tail is the shared bounded numpy pass.
     """
     n = corpus.count()  # doubles as the empty gate and the fit's n
     if n == 0:
-        return _empty_frame(
-            corpus, "query_id bigint, vec_id bigint, score double, rnk int"
-        )
+        return _empty_frame(corpus, _TOPK_SCHEMA)
     mean, _evals, evecs = fit_pca_sample(corpus, id_col, vec_col, n=n)
     comps = evecs[:, :n_components].T
     red_c = pca_project(corpus, comps, mean, vec_col, out_col="red").select(
         F.col(id_col).alias("id"), "red"
     )
-    red_q = pca_project(queries, comps, mean, vec_col, out_col="red").select(
-        F.col(id_col).alias("query_id"), "red"
+    q_ids, q_mat, q_red = _gather_unit(
+        pca_project(queries, comps, mean, vec_col, out_col="red"),
+        id_col,
+        vec_col,
+        "red",
     )
-    q_rows = red_q.collect()  # query set small by contract
-    q_ids = np.array([r["query_id"] for r in q_rows], dtype=np.int64)
-    q_mat = np.array([r["red"] for r in q_rows], dtype=np.float64)
-    q_norm = q_mat / np.maximum(
-        np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12
-    )
-    shortlist_n = max(k * shortlist_factor, k)
 
     def score(batches):
-        import pandas as _pd
-
         for pdf in batches:
             if not len(pdf):
                 continue
-            mat = np.asarray(list(pdf["red"]), dtype=np.float64)
-            mat = mat / np.maximum(
-                np.linalg.norm(mat, axis=1, keepdims=True), 1e-12
-            )
+            mat = _unit(np.asarray(list(pdf["red"]), dtype=np.float64))
             # 4-dp convention (ann_oracles): the rounded score + vec_id
             # tie-break make the shortlist cut deterministic, so the SQL
             # twin replays it exactly
-            sims = np.round(mat @ q_norm.T, 4)  # (batch, Q)
+            sims = np.round(mat @ q_red.T, 4)  # (batch, Q)
             ids = pdf["id"].to_numpy(dtype=np.int64)
-            out = {
-                "query_id": np.repeat(q_ids, len(ids)),
-                "vec_id": np.tile(ids, len(q_ids)),
-                "red_score": sims.T.reshape(-1),
-            }
-            yield _pd.DataFrame(out)
+            yield pd.DataFrame(
+                {
+                    "query_id": np.repeat(q_ids, len(ids)),
+                    "vec_id": np.tile(ids, len(q_ids)),
+                    "red_score": sims.T.reshape(-1),
+                }
+            )
 
     scored = red_c.mapInPandas(
         score, "query_id long, vec_id long, red_score double"
     ).filter(F.col("query_id") != F.col("vec_id"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("red_score").desc(), F.col("vec_id")
-    )
-    shortlist = (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= shortlist_n)
-        .select("query_id", "vec_id")
-    )
-    return _exact_rerank_topk(corpus, queries, shortlist, k, id_col, vec_col)
+    shortlist = _rank_topk(scored, "red_score", max(k * shortlist_factor, k))
+    return _exact_rerank_topk(corpus, shortlist, q_ids, q_mat, k, id_col, vec_col)

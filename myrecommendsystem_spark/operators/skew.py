@@ -189,36 +189,16 @@ def adaptive_salted_join(
     return salted.join(replicated, [*on, _SALT], how).drop(_SALT)
 
 
-def salted_group_count(
-    df: DataFrame, keys: Sequence[str], salt_factor: int = 8
-) -> DataFrame:
-    """Two-stage grouped count: (keys, salt) partial → keys final.
-
-    Mostly pedagogical — ``groupBy().agg()`` already map-side combines, so
-    salting a count is only needed for high-cardinality-per-key aggregates
-    without partial support (exact distinct, collect_list on a hot key).
-    """
-    partial = (
-        df.withColumn(
-            _SALT,
-            _salt_col([F.col(c) for c in df.columns], F.lit(salt_factor)),
-        )
-        .groupBy(*keys, _SALT)
-        .agg(F.count("*").alias("partial_cnt"))
-    )
-    return partial.groupBy(*keys).agg(F.sum("partial_cnt").alias("cnt"))
-
-
 def adaptive_salted_group_count(
     df: DataFrame,
     keys: Sequence[str],
     num_partitions: int = 200,
     profile: DataFrame | None = None,
 ) -> DataFrame:
-    """:func:`salted_group_count` whose salt factor is DERIVED from the
-    data — the groupBy half of the skew loop, as
-    :func:`adaptive_salted_join` is its join half: no hand-tuned
-    constant.
+    """Two-stage grouped count — (keys, salt) partial → keys final —
+    whose salt factor is DERIVED from the data: the groupBy half of the
+    skew loop, as :func:`adaptive_salted_join` is its join half, with no
+    hand-tuned constant.
 
     Same one-row-broadcast trick: the heaviest key's ``rec_salt`` from
     :func:`skew_profile` rides ``F.broadcast`` into the salt
@@ -376,7 +356,7 @@ def skew_profile(
     ``ceil(cnt / ceil(total / num_partitions))`` in pure integer
     arithmetic, so 1 means "this key fits a partition, leave it alone"
     and the max over the report is the ``salt_factor`` to hand
-    :func:`salted_join` / :func:`salted_group_count`.
+    :func:`salted_join`.
 
     Scale shape: one count shuffle on the key; the heavy-hitter pick is
     ``orderBy().limit(top_n)`` — Spark plans TakeOrderedAndProject

@@ -191,7 +191,7 @@ def count_min_sketch(
     events.  Driver traffic is depth x width ints, O(1) in data
     volume; estimates stay distributed via :func:`cms_estimate_col`.
 
-    ``weight_col`` (round 14): each row adds that column's integer
+    ``weight_col``: each row adds that column's integer
     weight to its cells instead of 1 — so a caller that already holds
     per-key counts can sketch the AGGREGATED relation.  Cell-identical
     to sketching the raw rows (a cell is the sum of the counts of the

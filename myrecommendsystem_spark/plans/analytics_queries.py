@@ -1,7 +1,7 @@
-"""Round-4 analytics extensions — relational division, RFM, basket lift,
+"""Analytics extensions — relational division, RFM, basket lift,
 activity windows, and corpus-mixture / boilerplate tooling.
 
-All registered ``defer=True`` (registry tier 2 → round-5 driver window):
+All registered ``defer=True`` (registry tier 2 → driver window):
 full DuckDB oracles, replayed locally by tests/test_registry_oracle.py at
 the driver's scale every round.  Conventions follow registry.py (shared
 aliases, BIGINT counts, ROUND'd floats, deterministic tie-breaks).
@@ -261,7 +261,7 @@ ORDER BY pid_a, pid_b
     "of product_cooccurrence_pmi (lift = P(a,b)/(P(a)P(b)) vs its log "
     "form): pair volume bounded by per-order basket size squared (no "
     "cap needed — baskets are physically small), part-count tables "
-    "broadcast, support floor n_ab >= 3.  Round-10 shape: pairs are "
+    "broadcast, support floor n_ab >= 3.  Pairs are "
     "generated IN-ROW from a per-order collect_set basket array "
     "(sorted, upper-triangle via transform-over-slice — slice on a "
     "plain column attribute is HOF-safe) instead of the items "
@@ -302,7 +302,7 @@ def orders_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("double").alias("n_ab"))
         .filter(F.col("n_ab") >= 3)
     )
-    # Deliberately LAZY (r13 measured the alternative): the printed
+    # Deliberately LAZY: the printed
     # plan shows the basket/pc legs duplicated, but at runtime AQE
     # stage reuse runs the shared lineitem shuffle and the canonically
     # identical pc broadcast once within the single action; an eager
@@ -727,7 +727,7 @@ ORDER BY label_a, label_b
 )
 def label_centroid_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = readers.load_table(spark, sf_dir, "embeddings")
-    # r13: cent is labels×dims — tiny after the aggregate but consumed
+    # cent is labels×dims — tiny after the aggregate but consumed
     # by THREE lazy branches (both dot sides + the norm), each re-running
     # the posexplode + centroid aggregation over the corpus.  One eager
     # checkpoint makes the corpus pass run once; nrm then derives from
@@ -929,8 +929,8 @@ SELECT product_id, rank, rnk FROM (
     doc="PageRank over the item-similarity graph (operators.graph."
     "pagerank): power iteration, one node-keyed join+aggregate per "
     "round, lineage checkpoint-truncated, dangling mass redistributed "
-    "so ranks sum to 1.  Upgraded rows-only → hash-gated (round-4 "
-    "verdict item 7): fixed iteration count + deterministic kNN edge "
+    "so ranks sum to 1.  Upgraded rows-only → hash-gated: "
+    "fixed iteration count + deterministic kNN edge "
     "construction make the fixpoint a bounded DuckDB WITH RECURSIVE "
     "power iteration (the product_graph_distances pattern); ranks are "
     "rounded to 6 digits on both sides, far above the ~1e-15 "
@@ -1134,7 +1134,7 @@ ORDER BY source, stage
     defer=True,
 )
 def corpus_clean_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # r13 (guide §2.4): the old funnel aggregated each stage relation
+    # (guide §2.4): the old funnel aggregated each stage relation
     # separately — FOUR column-pruned passes over train (s3's branch
     # alone re-joined all three keep sets; 6 semi joins total).  The
     # keep chains are nested by construction (keep3 ⊆ keep2 ⊆ keep1 on
@@ -1402,7 +1402,7 @@ def usercf_similarities(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_kmeans_clusters",
-    # hash-gated in round 8: the Lloyd fit stays numpy, but the trained
+    # hash-gated: the Lloyd fit stays numpy, but the trained
     # centroids inline into a DuckDB twin of the ASSIGNMENT + profile
     ann_oracles.kmeans_clusters_oracle,
     doc="k-means cluster profile over the embedding corpus: the IVF "
@@ -1412,7 +1412,7 @@ def usercf_similarities(spark: SparkSession, sf_dir: str) -> DataFrame:
     "the fused no-shuffle Arrow pass (ivf_assign); the profile is one "
     "grouped aggregate over (cell, unit-dot).  Deterministic at any "
     "partitioning: sample membership is hash-keyed and the training "
-    "matrix is sorted by id before the fit.  Hash-gated since round 8: "
+    "matrix is sorted by id before the fit.  Hash-gated: "
     "the assignment + count replay in SQL against the inlined centroids",
     defer=True,
 )
@@ -2656,8 +2656,8 @@ recs AS (
 )"""
 
 
-# Shared materialization for the recsys eval family (round-6 verdict
-# item 3).  recsys_itemcf_eval and recsys_beyond_accuracy consume the
+# Shared materialization for the recsys eval family.
+# recsys_itemcf_eval and recsys_beyond_accuracy consume the
 # IDENTICAL split → train → full-co-rating sims → scores → anti-join →
 # top-20 chain (the Spark twin of the shared _EVAL_RECS_CTES text
 # above), and recsys_als_eval shares the same md5 split/train; before
@@ -2670,8 +2670,8 @@ recs AS (
 # is unchanged code), and every derived metric is round_stable, so
 # driver hashes are identical whether or not the memo hits.  Bench
 # policy note: this is a DOCUMENTED shared materialized intermediate
-# (bench.py caching note + BASELINE.md r7), not a cache leak — the
-# r4 hygiene rule "no cache outlives its query" is amended to "…except
+# (bench.py caching note), not a cache leak — the
+# hygiene rule "no cache outlives its query" is amended to "…except
 # the declared recsys-eval shared build".
 _EVAL_SHARED: dict = {}
 
@@ -2680,8 +2680,8 @@ def _evict_eval_shared() -> None:
     """Drop the memoized eval build AND free its checkpoint blocks.
 
     ``localCheckpoint`` pins the materialized rows in block storage; just
-    clearing the dict (the pre-r8 behavior) leaked those blocks until JVM
-    GC when callers alternate sf_dirs (round-7 ADVICE).  The checkpointed
+    clearing the dict leaked those blocks until JVM
+    GC when callers alternate sf_dirs.  The checkpointed
     relation's logical plan is a LogicalRDD whose ``rdd`` field IS the
     cached RDD, so unpersisting it frees the blocks immediately; the
     evicted entry is unusable afterwards by design (it is being dropped).
@@ -2702,9 +2702,9 @@ def _eval_shared(spark: SparkSession, sf_dir: str) -> dict:
 
     # Session identity (id(spark)) is part of the key: two SparkSessions
     # can share one applicationId (newSession/getActiveSession), and a
-    # checkpointed DataFrame is bound to the session that built it
-    # (round-7 ADVICE).  The events-table stamp (round-10 ADVICE class)
-    # invalidates the memo when a reused sf_dir is re-materialized.
+    # checkpointed DataFrame is bound to the session that built it.  The
+    # events-table stamp invalidates the memo when a reused sf_dir is
+    # re-materialized.
     key = (
         spark.sparkContext.applicationId,
         id(spark),
@@ -3830,8 +3830,8 @@ def events_power_users_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_key_skew_profile",
     f"""
 WITH per_key AS (
-    -- group on the RAW key, render '<NULL>' AFTER counting (round-11
-    -- ADVICE: COALESCE inside the GROUP BY would merge a NULL key with
+    -- group on the RAW key, render '<NULL>' AFTER counting
+    -- (COALESCE inside the GROUP BY would merge a NULL key with
     -- a literal '<NULL>' value; the operator never does — it groups
     -- raw columns and renders for display only)
     SELECT COALESCE(CAST(event_type AS VARCHAR), '<NULL>') AS key,
@@ -4881,7 +4881,7 @@ def events_audience_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_audience_overlap_hll",
     None,  # approx_count_distinct's HLL++ estimates are engine-specific
     # — rows-only at the driver; estimate-vs-exact error is bounded by
-    # tests/test_analytics_round4d.py
+    # test_hll_overlap_tracks_exact
     doc="sketch twin of events_audience_overlap: per-type and unioned "
     "distinct-user HLL estimates, intersection by inclusion-exclusion "
     "(|A|+|B|-|AuB|).  No self-join at all — two grouped sketch "
@@ -5106,7 +5106,7 @@ def events_type_overlap_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint(eager=True)
     )
     # type roster from the checkpointed sketch, not a third events scan
-    # (r14, guide §2.4): every event row lands in d — a NULL user hashes
+    # (guide §2.4): every event row lands in d — a NULL user hashes
     # to a NULL hv row that still survives per type (NULLs sort first in
     # the top-k window) — so sk carries exactly the distinct types and
     # the pair grid derives from types x k checkpointed rows.
@@ -5311,12 +5311,12 @@ ORDER BY event_type, day
     "groups parallelize, each series is one batch.  Complements the "
     "Shewhart p-chart (events_error_pchart): CUSUM accumulates small "
     "persistent shifts the per-point control limits miss.  Upgraded "
-    "rows-only → hash-gated (r5): the nonlinear prefix scan is a "
+    "rows-only → hash-gated: the nonlinear prefix scan is a "
     "bounded left fold, so the DuckDB twin walks it as a day-indexed "
     "recursive CTE (the doc_cdc_chunks technique); alarms fire on the "
     "UNROUNDED sums on both sides, outputs follow round_stable.  The "
-    "independent-scan parity + step-injection tests in "
-    "tests/test_analytics_round4d.py stay as the semantic pins",
+    "independent-scan parity + step-injection tests (test_cusum_*) "
+    "stay as the semantic pins",
     defer=True,
 )
 def events_cusum_alarms(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -5728,7 +5728,7 @@ def users_cumulative_reach(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_cms_user_counts",
     None,  # xxhash64-seeded sketch — engine-specific; rows-only at the
     # driver.  Overestimate-only + additive-merge + error-bound laws
-    # pinned in tests/test_analytics_round4d.py
+    # pinned in test_cms_overestimates_within_bound_and_merges
     doc="count-min sketch point-frequency readout: build one mergeable "
     "depth=5 x width=256 sketch over event user_ids (operators/stats."
     "count_min_sketch — Arrow grid partials reduced by a grouped sum, "
@@ -5748,7 +5748,7 @@ def events_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     ev = _t(spark, sf_dir, "events")
-    # ONE events pass (r14, guide §2.4): the sketch build used to scan
+    # ONE events pass (guide §2.4): the sketch build used to scan
     # raw events through the Arrow grid kernel while the top-20 readout
     # scanned them AGAIN for the exact counts.  The per-user counts are
     # sufficient for both — cell-identical sketch via the weighted build
@@ -5776,7 +5776,7 @@ def events_cms_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Deterministic sketch twins (round 9): the xxhash/datasketches sketches
+# Deterministic sketch twins: the xxhash/datasketches sketches
 # above are engine-specific and stay rows-only; these two replay the SAME
 # sketch algorithms with pure-integer hashing both engines compute
 # identically, so the whole family is hash-gated end to end.
@@ -5826,7 +5826,7 @@ def approx_distinct_users_kmv(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = ev.agg(
         F.count_distinct("user_id").cast("bigint").alias("exact_users")
     )
-    # k<64 guard (round-10 ADVICE, the KMV-family convention): the
+    # k<64 guard (the KMV-family convention): the
     # (k-1)·M/h_(k) estimator is biased while the sketch isn't full —
     # with fewer than k distinct keys the sketch IS the exact set
     est = F.when(F.col("k") < 64, F.col("k").cast("double")).otherwise(
@@ -5882,7 +5882,8 @@ ORDER BY true_cnt DESC, pr.user_id
     "rows — (user, true_cnt, est_cnt ≥ true_cnt).  Pure integer "
     "hashing makes build AND probe oracle-replayable; the CMS laws "
     "(overestimate-only, additive merge) are pinned in "
-    "tests/test_analytics_round4d.py for the xxhash variant and hold "
+    "test_cms_overestimates_within_bound_and_merges for the xxhash "
+    "variant and hold "
     "here by the same algebra",
     defer=True,
     since=9,
@@ -5973,7 +5974,7 @@ def parts_price_band_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("price").alias("bprice"),
         F.floor(F.col("price") / width).alias("bkt"),
     )
-    # r13: keep the SELF-match (it lands in exactly one of the probe's
+    # keep the SELF-match (it lands in exactly one of the probe's
     # three buckets) so every part reaches the aggregate and the old
     # LEFT join back to `p` — a second full scan of part plus a
     # sort-merge join (2 exchanges + 2 sorts) — is redundant:
@@ -6066,7 +6067,7 @@ def events_rollup_two_level(spark: SparkSession, sf_dir: str) -> DataFrame:
     "events_value_quantiles_sketch",
     None,  # approx_percentile's KLL-style sketch is engine-specific —
     # rows-only; rank-error vs the exact quantiles is bounded in
-    # tests/test_analytics_round4d.py
+    # test_quantile_sketch_tracks_exact
     doc="mergeable quantile sketch readout: per-type approx_percentile "
     "(Spark's GK/KLL-family sketch, relativeError 0.01) for "
     "p25/p50/p75/p99 — the one-pass mergeable path that answers "
@@ -6128,7 +6129,7 @@ GROUP BY event_type
 ORDER BY event_type
 """,
     doc="REPLAYABLE mergeable quantile sketch (deterministic twin of "
-    "events_value_quantiles_sketch — the round-9 KMV/CMS-twin "
+    "events_value_quantiles_sketch — the KMV/CMS-twin "
     "technique extended to the last sketch family): a fixed-resolution "
     "histogram relation (event_type, centi-bucket = floor(value·100), "
     "cnt), one grouped count whose map-side partial aggregation caps "
@@ -6475,8 +6476,8 @@ ORDER BY t_days
     "to the data horizon entering as a CENSORED observation — the "
     "estimator marketing/retention teams need because naive gap "
     "averages are biased by exactly those open intervals.  The "
-    "product-limit is exp(running sum of ln(1 - d/n)).  Round-8 "
-    "rewrite (r7 verdict item 4 profile): the at-risk counts come from "
+    "product-limit is exp(running sum of ln(1 - d/n)).  "
+    "The at-risk counts come from "
     "ONE per-gap aggregate + a suffix cumulative sum over the "
     "calendar-bounded distinct-gap relation, replacing the oracle's "
     "times x gaps band join — algebraically identical (n(t) = suffix "
@@ -6720,7 +6721,7 @@ FROM events e JOIN dim d ON d.event_type = e.event_type
 GROUP BY e.event_type
 ORDER BY e.event_type
 """,
-    doc="closes the skew loop (round-11 verdict item 3): "
+    doc="closes the skew loop: "
     "operators/skew.adaptive_salted_join derives its salt factor from "
     "skew_profile's rec_salt IN-PLAN — the heaviest key's recommended "
     "salt rides a one-row broadcast into both join sides, so the salt "
@@ -6781,7 +6782,7 @@ FROM events
 GROUP BY event_type
 ORDER BY event_type
 """,
-    doc="the groupBy half of the skew loop (round-11 verdict item 4): "
+    doc="the groupBy half of the skew loop: "
     "operators/skew.adaptive_salted_group_count derives its salt "
     "factor from skew_profile's rec_salt via the same one-row "
     "broadcast as the adaptive join — partial count shuffles on "
@@ -6828,7 +6829,7 @@ FROM events
 GROUP BY event_type
 ORDER BY event_type
 """,
-    doc="the adaptive salt's REAL venue (round-12 verdict item 6: a "
+    doc="the adaptive salt's REAL venue (a "
     "salted count is pedagogical — counts map-side combine; the "
     "no-partial-aggregation shape is a SET-VALUED aggregate, where "
     "the (key, salt) pre-shuffle is the only bound on a whale key's "
@@ -6915,7 +6916,7 @@ ORDER BY z, event_id
     "tests/test_zorder.py; this gate pins the KEY arithmetic "
     "cross-engine — scaling is IEEE-deterministic double math in "
     "identical op order, interleave is integer bit ops).  The module "
-    "existed since round 4 with tests but no driver-verified gate — "
+    "had tests but no driver-verified gate — "
     "this closes that audit hole",
     defer=True,
     since=11,
@@ -7601,7 +7602,7 @@ def orders_frequent_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("pa", "pb")
     )
     # enumerate triples only where the leading (pa, pb) pair is frequent.
-    # NO broadcast hint here — this is the r7 plan-audit watch-point
+    # NO broadcast hint here — this is a plan-audit watch-point
     # (a hinted broadcast of the frequent-pair set could outgrow executor
     # memory at very low relative support), resolved the Spark-first way:
     # AQE observes the pair aggregate's RUNTIME size at the shuffle

@@ -1,6 +1,6 @@
-"""Lazy DuckDB oracles for the quantized-ANN family — round 8.
+"""Lazy DuckDB oracles for the quantized-ANN family.
 
-The r7 hyperplane-LSH technique ("inline build-time constants into both
+The hyperplane-LSH technique ("inline build-time constants into both
 engines") applied to DATA-DEPENDENT constants: the PQ codebooks and IVF
 centroids are deterministic, seed-pinned, bounded-sample fits
 (operators/similarity.fit_pq_codebooks / fit_ivf_centroids), so the
@@ -51,9 +51,9 @@ _DRIVER_DIM = 64  # embeddings.parquet contract (TESTDATA.md)
 
 def _stamped_cache(table: str):
     """Per-process memo keyed on (sf_dir, io.readers.table_stamp) — the
-    lru_cache these generators used until round 10, plus invalidation
+    lru_cache shape, plus invalidation
     when the data under a reused sf_dir is regenerated in-process (the
-    quality-fit-memo ADVICE class applies to every cache in this
+    quality-fit-memo staleness class applies to every cache in this
     module: a stale inlined-constants oracle would silently diverge
     from a fresh Spark fit).  Bounded like lru_cache(maxsize=8) by
     FIFO eviction; remote paths stamp to a constant (sf_dir-only
@@ -440,7 +440,7 @@ def rag_report_oracle(sf_dir: str) -> str:
         # utf-8 BYTE stream — identical only while the corpus is pure
         # ASCII (true for the committed testdata; same contract the
         # doc_cdc_chunks oracle leans on).  Fail loudly at oracle-build
-        # time instead of as a mysterious red hash (round-8 ADVICE).
+        # time instead of as a mysterious red hash.
         if text is not None and not text.isascii():
             raise ValueError(
                 f"rag oracle: non-ASCII text in doc_id={did} at {sf_dir} "
@@ -550,7 +550,7 @@ FROM cells GROUP BY cluster_id ORDER BY cluster_id
 @_stamped_cache("embeddings")
 def pca_spectrum_oracle(sf_dir: str) -> str:
     """DuckDB twin of plans/text_queries.embedding_pca_spectrum
-    (similarity.pca_spectrum over the fit_pca_sample basis, round 9).
+    (similarity.pca_spectrum over the fit_pca_sample basis).
 
     The generator runs the SAME shared fit (pca_fit_mat on the
     bit-identical raw matrix) and inlines the EIGENVECTORS; the SQL then
@@ -727,7 +727,7 @@ lab AS (
 @_stamped_cache("documents")
 def quality_model_oracle(sf_dir: str) -> str:
     """DuckDB twin of plans/text_queries.doc_quality_model_scores
-    (ml/quality.score_documents, round 9).
+    (ml/quality.score_documents).
 
     The generator re-trains the logistic weights OUTSIDE Spark: weak
     labels come from DuckDB itself running the hash-green doc_lang_id

@@ -219,7 +219,7 @@ def product_cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("pid_a", "pid_b")
         .agg(F.count(F.lit(1)).cast("double").alias("n_ab"))
     )
-    # r13: one eager checkpoint of the tiny (product, count) table —
+    # one eager checkpoint of the tiny (product, count) table —
     # lazily, ca and cb each re-ran the product-count aggregation over
     # the cached capped relation (two shuffles for one relation).
     pc = pc.localCheckpoint(eager=True)

@@ -200,7 +200,7 @@ def media_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Media NEAR-dup (round 9): perceptual dHash, banded like SimHash
+# Media NEAR-dup: perceptual dHash, banded like SimHash
 # ---------------------------------------------------------------------------
 
 _P2 = "[" + ",".join(f"{1 << b}::HUGEINT" for b in range(64)) + "]"
@@ -380,7 +380,7 @@ def media_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Audio near-dup (round 9): Haitsma–Kalker fingerprint, same banding
+# Audio near-dup: Haitsma–Kalker fingerprint, same banding
 # ---------------------------------------------------------------------------
 
 # Closed-form twin of operators/multimodal.audio_fingerprint over the stub

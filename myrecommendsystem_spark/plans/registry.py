@@ -47,7 +47,7 @@ ratings AS (
 # lazy oracles (see plans/ann_oracles.py) train their inlined constants
 # from this directory when the driver calls oracle_sql(); local replays
 # resolve at their own sf_dir instead (resolve_oracle).  Overridable for
-# hosts with the testdata elsewhere (round-8 ADVICE).
+# hosts with the testdata elsewhere.
 import os as _os
 
 DRIVER_ORACLE_SF_DIR = _os.environ.get(
@@ -58,7 +58,7 @@ DRIVER_ORACLE_SF_DIR = _os.environ.get(
 def resolve_oracle(oracle, sf_dir: str) -> str | None:
     """A QuerySpec oracle is a SQL string, None (rows-only), or a
     ``Callable[[str], str]`` building the SQL for a given sf_dir — the
-    round-8 shape for oracles whose inlined constants are trained on
+    shape for oracles whose inlined constants are trained on
     the data (quantized-ANN codebooks).  Resolve to a plain string."""
     return oracle(sf_dir) if callable(oracle) else oracle
 
@@ -244,8 +244,7 @@ def all_oracle_sql() -> dict[str, str]:
     A lazy oracle that fails to resolve — testdata missing/empty on this
     host — degrades THAT entry to rows-only (omitted here, exactly as if
     ``oracle=None``) instead of poisoning the whole enumeration: one
-    unreadable file must not turn every gated query red (round-8
-    ADVICE)."""
+    unreadable file must not turn every gated query red."""
     out: dict[str, str] = {}
     for spec in _ordered():
         if spec.oracle is None:

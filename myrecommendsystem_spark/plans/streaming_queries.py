@@ -598,8 +598,8 @@ ORDER BY userId, mmr_rank
     "(ml/rerank.py).  The candidate-pair similarity edges are "
     "materialized relationally first (per-user K² at most), so the "
     "cogrouped Arrow kernel never touches the full sim matrix; users "
-    "parallelize across executors.  Upgraded rows-only → hash-gated "
-    "(r5): the greedy selection is a bounded left fold — one recursive-"
+    "parallelize across executors.  Upgraded rows-only → hash-gated: "
+    "the greedy selection is a bounded left fold — one recursive-"
     "CTE step per rank position carrying the picked set as a list, the "
     "penalty as a correlated MAX over the pair edges (missing pair = 0 "
     "on both sides; sims are nonnegative by construction so the "
@@ -623,7 +623,7 @@ def recsys_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("candidateId").alias("productId"),
         F.col("priority").alias("score"),
     )
-    # r13: the checkpoint materializes UNSORTED — the old shape sorted
+    # the checkpoint materializes UNSORTED — the old shape sorted
     # inside eager_release and then re-sorted the checkpointed rows, a
     # full range-exchange paid twice for one presentation order.
     out = mmr_rerank(recs, sims, k=10, lam=0.7)

@@ -12,7 +12,7 @@ after their own decorrelation.
 
 All registered with ``defer=True`` (registry tier 2): full DuckDB oracles,
 replayed by tests/test_registry_oracle.py at the driver's scale, behind the
-round-1-verified prefix.
+already-verified prefix.
 
 Dates in the testdata are parquet TIMESTAMP; predicates use explicit
 ``INTERVAL`` arithmetic valid in both engines.

@@ -1,5 +1,5 @@
 """Text-analysis / dedup / similarity-search queries (LLM-data-pipeline
-extensions — BASELINE.json north star, graded alongside SURVEY.md §2).
+extensions, graded alongside SURVEY.md §2).
 
 Oracle-matched where ANSI-SQL can express the semantics (token counts,
 quality scoring, exact-dup groups, brute-force ANN, embedding near-dups);
@@ -260,7 +260,7 @@ WHERE ROUND(CAST(i.i AS DOUBLE) / (sa.n + sb.n - i.i), 4) >= 0.5
 """,
     doc="MinHash-LSH near-dup pairs: shingle→64-hash signature→16 banded "
     "buckets→within-bucket join→exact-Jaccard verify ≥ 0.5.  Upgraded "
-    "rows-only → hash-gated (round-5 verdict item 6): the shingle hash "
+    "rows-only → hash-gated: the shingle hash "
     "is now the SAME Rabin-Karp 31-bit modular family as "
     "rolling_fingerprints (functions/text.py:_hash_grams_flat — "
     "replacing pandas' SQL-irreproducible keyed siphash), so the oracle "
@@ -452,7 +452,7 @@ FROM signed WHERE bit_count(xor(sa, sb)) <= 3
     "the signed value), the max_bucket cap, and bit_count(xor) verify",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # probe memo (round-11): repeated calls over an unchanged documents
+    # probe memo: repeated calls over an unchanged documents
     # table skip the adaptive-collapse probe's two scalar jobs
     return dedup.simhash_near_duplicates(
         _docs(spark, sf_dir),
@@ -508,7 +508,7 @@ def ann_topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     "ann_topk_ivf",
     ann_oracles.ivf_topk_oracle,
     doc="similarity search scale path: IVF (KMeans coarse quantizer, "
-    "nprobe=4 of 16 cells) top-5 — hash-gated since round 8 "
+    "nprobe=4 of 16 cells) top-5 — hash-gated "
     "(plans/ann_oracles.ivf_topk_oracle: assignment, probing, and the "
     "round-stable cosine ranking replay in SQL against the inlined "
     "centroids); recall vs brute force additionally asserted in tests",
@@ -734,7 +734,7 @@ def doc_winnowing_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # Source-carrying variant of _WINNOW_CTES for the cross-corpus query —
 # kept separate so the two committed winnowing oracles' SQL text stays
-# byte-identical while they earn their first driver rows (r12 window).
+# byte-identical while they earn their first driver rows.
 _WINNOW_X_CTES = f"""c AS (
     SELECT doc_id, source,
            [ord(ch) for ch in regexp_split_to_array(text, '')] AS cs
@@ -783,7 +783,7 @@ GROUP BY 1, 2
 HAVING COUNT(*) >= 2
 ORDER BY new_id, ref_id
 """,
-    doc="cross-corpus winnowing overlap (round-11 verdict item 5 — the "
+    doc="cross-corpus winnowing overlap (the "
     "new-vs-reference convention every other dedup family already "
     "has, cf. dedup_cross_corpus_near): new docs (source != src0) "
     "sharing >= 2 winnowed fingerprint VALUES with the held corpus "
@@ -795,7 +795,7 @@ ORDER BY new_id, ref_id
     "bounding candidates by 100·|new fps|).  Oracle replays the "
     "RK-31 winnowing arithmetic of doc_winnowing_fingerprints plus "
     "the ref-side QUALIFY cap and the pair count, integer-exact.  "
-    "Corpus assumption (r12 ADVICE): every doc is >= the 16-byte "
+    "Corpus assumption: every doc is >= the 16-byte "
     "window — the kernel emits a whole-text fingerprint for "
     "sub-window docs while the oracle's generate_series produces no "
     "rows, so sub-window docs could pair in Spark but never in "
@@ -839,7 +839,7 @@ ORDER BY doc_id
     "along so the gate verifies the surviving ROWS, not just ids "
     "(ASCII corpus: char length == byte length in both engines).  "
     "Same >= 16-byte-docs corpus assumption as "
-    "doc_winnowing_cross_corpus (r12 ADVICE): a sub-window doc "
+    "doc_winnowing_cross_corpus: a sub-window doc "
     "fingerprints in Spark but not in the oracle, so it could be "
     "culled here yet survive there",
     defer=True,
@@ -905,7 +905,7 @@ def dedup_minhash_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     "embedding_near_dup_ivf",
     ann_oracles.ivf_near_dup_oracle,
     doc="embedding near-dup scale path: multi-probe IVF bucketed self-join "
-    "(nprobe=2 of 16 KMeans cells) — hash-gated since round 8 "
+    "(nprobe=2 of 16 KMeans cells) — hash-gated "
     "(plans/ann_oracles.ivf_near_dup_oracle: top-2 probing, shared-cell "
     "pairing with DISTINCT collapse, the kernel's round-stable cosine); "
     "recall vs the exact join additionally asserted in tests",
@@ -997,7 +997,8 @@ ORDER BY id_a, id_b
     "literals, 16 sign bits packed into two 8-bit bands, ONE shuffle on "
     "(band_idx, band_val), oversized buckets dropped at the MinHash "
     "max_bucket=1000 cap, then exact-cosine verification at the same "
-    "0.35 / round-4 convention as embedding_near_dup_pairs — so the "
+    "0.35 / 4-digit round-stable convention as embedding_near_dup_pairs "
+    "— so the "
     "output is a deterministic subset of the exact query (pinned in "
     "tests).  DuckDB replays the entire pipeline: bit derivation, "
     "banding, cap, pairing, verify",
@@ -1041,7 +1042,7 @@ FROM (
 )
 ORDER BY cosband
 """,
-    doc="sign-bit LSH S-curve measurement (round-11 verdict item 3 — "
+    doc="sign-bit LSH S-curve measurement ("
     "the hyperplane family was the one near-dup path without an "
     "acceptance gate, while MinHash had dedup_lsh_recall_report and "
     "IVF had ann_recall_report): per exact-cosine decile band "
@@ -1119,7 +1120,8 @@ ORDER BY new_id, ref_id
     "max_bucket cap applies to the REFERENCE side only (text "
     "cross-corpus convention: drop a pathological reference bucket, "
     "never silently filter the ingest batch); exact-cosine verify at "
-    "the 0.35 / round-4 convention.  Fully oracle-gated end to end",
+    "the 0.35 / 4-digit round-stable convention.  Fully oracle-gated "
+    "end to end",
     defer=True,
     since=7,
 )
@@ -1130,7 +1132,7 @@ def embedding_cross_corpus_near(
     # ONCE over the full relation (checkpointed bands) and splits by the
     # ingest predicate — signatures are per-vector, so the split-after
     # and sign-per-side forms are value-identical, but the composed
-    # two-sided helper ran the 16x64 sign fold twice (round 8; measured
+    # two-sided helper ran the 16x64 sign fold twice (measured
     # 4.0 -> 2.8 s at sf0.1).  The generic ingest path
     # (hyperplane_lsh_cross_pairs / semantic_dedup) keeps per-side
     # signing: there the reference is a TABLE, not a filter of the batch.
@@ -1153,7 +1155,7 @@ def embedding_cross_corpus_near(
     ).localCheckpoint(eager=True)
     # the (small, thresholded) result is materialized — release the
     # corpus-sized signature checkpoint instead of pinning it for the
-    # session (round-8 ADVICE; eager_release discipline)
+    # session (eager_release discipline)
     from myrecommendsystem_spark.functions.caching import release_checkpoint
 
     release_checkpoint(bands)
@@ -1330,8 +1332,8 @@ def _hp_fold_oracle(n_batches: int = 3) -> str:
     "embedding_incremental_survivors",
     _hp_fold_oracle(3),
     doc="INCREMENTAL maintenance of the semantic-dedup keep-list (the "
-    "streaming twin of embedding_semantic_survivors, r7 verdict item "
-    "6b): three ingest batches (vec_id % 3 as arrival order) fold "
+    "streaming twin of embedding_semantic_survivors): three ingest "
+    "batches (vec_id % 3 as arrival order) fold "
     "through streaming/semantic_dedup.incremental_semantic_survivors — "
     "each batch is gated against the ACCUMULATED survivor set via "
     "shared sign-bit LSH buckets (ref-side cap), the fresh remainder "
@@ -1665,7 +1667,7 @@ def q_embedding_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Corpus hygiene: decontamination / repetition / cross-corpus dedup (round 3)
+# Corpus hygiene: decontamination / repetition / cross-corpus dedup
 # ---------------------------------------------------------------------------
 
 # DuckDB twin of functions.text.shingles (3-gram, short-doc fallback) —
@@ -1840,14 +1842,14 @@ def mips_topk_dot(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_pq",
-    # hash-gated in round 8 (r7 verdict item 2): the seed-pinned codebook
+    # hash-gated: the seed-pinned codebook
     # fit is replayed outside Spark and inlined as literals into a DuckDB
     # twin of encode → ADC → shortlist → exact re-rank
     ann_oracles.pq_oracle,
     doc="similarity search compressed path: product quantization (m=8 "
     "subspaces × 16 codes → 8 bytes/vector, 32× memory cut) with "
-    "asymmetric-distance scoring and exact re-rank — hash-gated since "
-    "round 8 via the inlined-trained-codebooks oracle "
+    "asymmetric-distance scoring and exact re-rank — hash-gated "
+    "via the inlined-trained-codebooks oracle "
     "(plans/ann_oracles.pq_oracle); recall vs brute force additionally "
     "asserted in tests/test_corpus_quality.py",
     defer=True,
@@ -2153,7 +2155,7 @@ HAVING COUNT(*) >= 8
     doc="exact-substring overlap pairs (Lee et al. 2022 span-dedup "
     "candidate stage): docs sharing >= 8 distinct 16-byte Rabin-Karp "
     "window fingerprints — inverted-index join with degenerate-bucket "
-    "cap.  Upgraded rows-only → hash-gated (round-4 verdict item 5): "
+    "cap.  Upgraded rows-only → hash-gated: "
     "the polynomial hash IS deterministic modular arithmetic, so the "
     "oracle recomputes every window fingerprint with the inlined "
     "power table (the doc_rolling_fingerprints twin), dedups per doc, "
@@ -2217,7 +2219,7 @@ def doc_decontaminated_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="the full production ANN shape (IVF-PQ, faiss IndexIVFPQ): "
     "coarse cells bound WHICH vectors are scored (nprobe=4 of 16), PQ "
     "codes bound WHAT is scored (8 bytes/vector), exact re-rank of the "
-    "shortlist restores ranking — hash-gated since round 8 via the "
+    "shortlist restores ranking — hash-gated via the "
     "inlined-trained-quantizers oracle (plans/ann_oracles.ivfpq_oracle: "
     "cell assign, probe, encode, ADC, shortlist, and re-rank all replay "
     "in SQL); recall vs brute force additionally asserted in tests",
@@ -2246,8 +2248,8 @@ _IVFPQ_INDEX_DIRS: dict[str, str] = {}
     "API (similarity.build_ivfpq_index / IvfPqIndex.save); this query "
     "loads and searches it — the amortized per-query shape a production "
     "100 TB index serves, separating build cost (paid at ingest) from "
-    "search cost (paid per query; BASELINE.md round-4 note) — hash-gated "
-    "since round 8 (plans/ann_oracles.ivfpq_oracle)",
+    "search cost (paid per query) — hash-gated "
+    "(plans/ann_oracles.ivfpq_oracle)",
     defer=True,
 )
 def ann_topk_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2395,8 +2397,8 @@ SELECT id, chunk_idx, chunk, n_bytes FROM cdc_chunks
     "hash hits the boundary pattern (expected ~64-byte chunks, 256-byte "
     "cap) — boundaries are functions of content, so head edits re-chunk "
     "only to the next boundary and chunk-level dedup/caching across "
-    "crawl snapshots works.  Upgraded rows-only → hash-gated (round-4 "
-    "verdict item 4): the cuts are deterministic Rabin-Karp window "
+    "crawl snapshots works.  Upgraded rows-only → hash-gated: "
+    "the cuts are deterministic Rabin-Karp window "
     "hashes (the doc_rolling_fingerprints modular-arithmetic twin), the "
     "kernel's sequential min-gap fold is a bounded recursive CTE over "
     "candidate positions, and the max-size splits are generate_series "
@@ -2541,7 +2543,7 @@ def corpus_drift_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "embedding_pca_spectrum",
-    # hash-gated since round 9: the basis is a deterministic
+    # hash-gated: the basis is a deterministic
     # bounded-sample fit (fit_pca_sample — the quantizer discipline), so
     # the oracle inlines the eigenvectors and re-derives each eigenvalue
     # FROM THE DATA as the projection variance
@@ -2564,7 +2566,7 @@ def embedding_pca_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "doc_quality_model_scores",
-    # hash-gated since round 9: deterministic driver-side IRLS fit on a
+    # hash-gated: deterministic driver-side IRLS fit on a
     # bounded md5-ranked sample (shared numpy kernels), labels from the
     # hash-green lang-ID chain run by DuckDB itself, scoring replayed
     # in SQL against the inlined 257 weights
@@ -2594,11 +2596,11 @@ def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ann_topk_ivfpq_search index-memo precedent: the fit is
     # deterministic in its input, so re-running the query re-pays only
     # SCORING — the production split (fit once on a bounded sample,
-    # score every batch).  The stamp (round-10 ADVICE) is the documents
+    # score every batch).  The stamp is the documents
     # files' names/mtimes/sizes, so regenerating the data under a
     # reused dir (tests re-materializing a tmp path, bench rebuilding a
     # scale factor in-process) invalidates the memo instead of scoring
-    # with stale weights.  Round-11 (verdict item 5): the memo also
+    # with stale weights.  The memo also
     # holds the CHECKPOINTED featurization relation (id, text,
     # weak_label) — predicted_lang, the interpreted token×language
     # membership that dominated this query's 4.3 s bench entry, now
@@ -2630,7 +2632,7 @@ def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _corpus_stamp(sf_dir: str) -> tuple:
     """Change-detection stamp of the documents table (io.readers.
     table_stamp): remote paths degrade to a constant, keying the memo
-    on sf_dir alone — the pre-round-10 behavior."""
+    on sf_dir alone."""
     return readers.table_stamp(sf_dir, "documents")
 
 
@@ -2848,14 +2850,14 @@ def doc_hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "rag_ingest_pipeline",
-    # hash-gated in round 8: the composed job replays END-TO-END in SQL —
+    # hash-gated: the composed job replays END-TO-END in SQL —
     # the shared byte-exact cdc_chunks CTEs, the feature-hash embedding
     # recomputed in SQL (BIGINT 3-gram hashes, bit-31 signs, integer-
     # exact norms, float32 casts), and IVF assignment against centroids
     # the generator trains on locally-recomputed chunk embeddings via
     # the SAME pure kernels (text.cdc_cut_points / hash_embed_one +
     # similarity.kmeans_fit_mat).  Composition invariants additionally
-    # pinned by tests/test_analytics_round4d.py
+    # pinned by test_rag_ingest_covers_every_chunk
     ann_oracles.rag_report_oracle,
     doc="the complete RAG ingestion job, composed from gated parts: "
     "content-defined chunking (re-chunk-stable boundaries) -> "
@@ -2899,7 +2901,7 @@ def rag_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from myrecommendsystem_spark.functions.caching import eager_release
 
-    # sort only AFTER the checkpoint (r13) — one range exchange, not two
+    # sort only AFTER the checkpoint — one range exchange, not two
     return eager_release(report, embedded).orderBy("cell_id")
 
 
@@ -2935,7 +2937,7 @@ def doc_compression_signal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "ann_topk_pca",
-    # hash-gated since round 9: inlined mean + top-32 components from
+    # hash-gated: inlined mean + top-32 components from
     # the deterministic bounded-sample fit; projection, reduced cosine,
     # shortlist, and exact re-rank all replay in SQL
     # (plans/ann_oracles.pca_topk_oracle); recall vs the exact

@@ -3,7 +3,7 @@ table (Sennrich 2016).  The LLM-pipeline step between corpus cleaning
 and training-example export; the reference has no tokenizer component,
 so these extend the engine (SURVEY.md "beyond the reference" tier).
 
-All registered ``defer=True`` (round-5 driver window overflow —
+All registered ``defer=True`` (driver window overflow —
 registry.py rotation note); replayed locally by
 tests/test_registry_oracle.py at driver scale.
 """
@@ -157,7 +157,7 @@ ORDER BY rank
     "applies the merge with an Arrow kernel; lineage checkpointed "
     "every 5 iterations.  Output (rank, a, b, merged, cnt) is the "
     "merge table a segmenter broadcasts.  Upgraded rows-only → "
-    "hash-gated (round-5 verdict item 3): the greedy loop is a "
+    "hash-gated: the greedy loop is a "
     "deterministic bounded left fold — the same recursive-CTE shape "
     "that gated CUSUM and MMR — walked with the per-word segmentation "
     "encoded as a dot-delimited string so replace() reproduces the "

@@ -23,7 +23,7 @@ never cross-engine SUM tails.
 
 All registered ``defer=True`` (registry tier 2): full DuckDB oracles,
 replayed by tests/test_registry_oracle.py at the driver's scale, behind
-the round-1-verified prefix.
+the already-verified prefix.
 """
 
 from __future__ import annotations

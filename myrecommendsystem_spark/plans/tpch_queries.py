@@ -933,7 +933,7 @@ def events_lag_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# SQL-surface round 3: ntile / percent_rank / INTERSECT / GROUPING SETS
+# SQL surface: ntile / percent_rank / INTERSECT / GROUPING SETS
 # ---------------------------------------------------------------------------
 
 

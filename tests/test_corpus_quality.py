@@ -490,3 +490,29 @@ def test_ivfpq_incremental_add_and_append(spark, tmp_path):
     approx = {(r.query_id, r.vec_id) for r in got}
     recall = len(exact & approx) / len(exact)
     assert recall >= 10 * (10.0 / (n - 1)), f"recall {recall:.2f} at chance"
+
+
+def test_ivfpq_probe_ties_break_to_lowest_cell_like_ivf_assign(spark):
+    """Cells with duplicated centroid rows tie exactly.  With more than 16
+    cells numpy's default argsort (introsort) may reorder a tie, so only
+    a stable sort keeps the lowest cell ids — the tie-break the oracles
+    replay (``ORDER BY cd DESC, c``).  The index search and ivf_assign
+    must probe the same cells."""
+    import numpy as np
+
+    n_cells, nprobe = 24, 3
+    # odd cells share one row, even cells another: the query ties on every
+    # odd cell, and the dots are exact (unit basis vectors)
+    centroids = np.array([np.eye(4)[i % 2] for i in range(n_cells)])
+    packed = spark.createDataFrame(
+        [(100 + c, [0], c) for c in range(n_cells)],
+        "id bigint, codes array<int>, cell_id int",
+    )
+    index = similarity.IvfPqIndex(packed, centroids, np.zeros((1, 1, 4)))
+    q = spark.createDataFrame(
+        [(0, [0.0, 1.0, 0.0, 0.0])], "vec_id bigint, embedding array<double>"
+    )
+    searched = similarity.ivfpq_search(index, q, None, nprobe=nprobe, k=n_cells)
+    assigned = similarity.ivf_assign(q, centroids, nprobe=nprobe)
+    assert sorted(r.vec_id - 100 for r in searched.collect()) == [1, 3, 5]
+    assert sorted(r.cell_id for r in assigned.collect()) == [1, 3, 5]

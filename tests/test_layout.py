@@ -16,7 +16,7 @@ from myrecommendsystem_spark.io.writers import (
     write_bucketed_table,
     write_overwrite,
 )
-from myrecommendsystem_spark.operators.skew import salted_group_count, salted_join
+from myrecommendsystem_spark.operators.skew import salted_join
 
 
 def test_partitioned_write_prunes(spark, tmp_path):
@@ -76,15 +76,6 @@ def test_salted_join_matches_plain_join(spark):
         for r in salted_join(skewed, dim, ["k"], salt_factor=4).collect()
     }
     assert salted == plain and len(plain) > 1500
-
-
-def test_salted_group_count_matches_plain(spark):
-    df = spark.range(0, 3000).select((F.col("id") % 5).alias("k"))
-    plain = {(r.k, r["count"]) for r in df.groupBy("k").count().collect()}
-    salted = {
-        (r.k, r.cnt) for r in salted_group_count(df, ["k"], salt_factor=6).collect()
-    }
-    assert salted == plain
 
 
 def test_table_stamp_detects_regeneration(spark, tmp_path):

@@ -553,7 +553,7 @@ def test_full_topology_log_lines_to_recs(spark, tmp_path):
     assert [(r.productId, r.score) for r in rows[0].recs] == [(4, 3.5), (2, 2.9)]
 
 
-def test_dedup_within_watermark_streaming(spark, tmp_path):
+def test_dedup_within_watermark_memory_sink(spark, tmp_path):
     """duplicate keys inside the watermark horizon are emitted once; state
     is bounded by the watermark, so a key re-appearing is NOT a duplicate
     once the horizon has passed it."""

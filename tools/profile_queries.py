@@ -9,8 +9,9 @@ materialization (localCheckpoint, fit-sample collect, isEmpty probe) is
 its own job and pays scheduling latency even when the data is tiny.
 
 ``--top N`` profiles the N slowest queries of the committed
-``BENCH_DETAIL.json``.  Optionally captures ``explain("formatted")``
-into ``plans/$MRS_PLANS_ROUND/`` (default ``plans/r14/``).
+``BENCH_DETAIL.json``.  ``--plans <tag>`` also captures each query's
+``explain("formatted")`` as ``/tmp/profile_<tag>_<query>.txt``, next
+to the summary file.
 
 Usage:
     python tools/profile_queries.py q1,q2,...   [--plans before|after]
@@ -113,12 +114,7 @@ def main() -> None:
                 with redirect_stdout(buf):
                     df.explain("formatted")
                 txt = buf.getvalue()
-            plans_dir = os.path.join(
-                HERE, "plans", os.environ.get("MRS_PLANS_ROUND", "r14")
-            )
-            os.makedirs(plans_dir, exist_ok=True)
-            out = os.path.join(plans_dir, f"{name}_{plans_mode}.txt")
-            with open(out, "w") as f:
+            with open(f"/tmp/profile_{plans_mode}_{name}.txt", "w") as f:
                 f.write(txt)
 
     tag = plans_mode or "adhoc"
