@@ -293,11 +293,9 @@ def main() -> None:
     timings: dict[str, float] = {}
     for name in names:
         timings[name] = round(time_query(spark, all_q[name], sf_dir), 3)
-        # No cache outlives its query, so the sweep's memory is bounded
-        # by one query's working set.  The one exception is the
-        # recsys-eval family's shared checkpointed build
-        # (analytics_queries._eval_shared): its cost lands in whichever
-        # family entry runs first.
+        # No cache or result outlives its query, so the sweep's memory
+        # is bounded by one query's working set and every run of a
+        # query pays its whole cost.
         spark.catalog.clearCache()
 
     total = round(sum(timings.values()), 3)

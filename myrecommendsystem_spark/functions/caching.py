@@ -68,10 +68,9 @@ def release_checkpoint(*checkpointed: DataFrame | None) -> None:
 
     ``DataFrame.unpersist()`` only drops CacheManager entries, not the
     RDD blocks a local checkpoint pins — those need the RDD-level
-    unpersist on the analyzed plan (the ``dedup.connected_components``
-    release pattern).  Only call this on DataFrames whose blocks no
-    downstream plan will read again: a released checkpoint has no
-    lineage to recompute from.  ``None`` entries and release failures
+    unpersist on the analyzed plan.  Only call this on DataFrames whose
+    blocks no downstream plan will read again: a released checkpoint
+    has no lineage to recompute from.  ``None`` entries and release failures
     are ignored (best-effort memory hygiene, never correctness).
     """
     for df in checkpointed:

@@ -69,12 +69,12 @@ def table_stamp(sf_dir: str, name: str) -> tuple:
     """Cheap change-detection stamp of one testdata table: sorted
     (name, mtime_ns, size) of its files.
 
-    Why: per-process memos keyed on sf_dir alone go
-    stale when the data under a reused directory is regenerated
-    in-process (tests re-materializing a tmp path, bench rebuilding a
-    scale factor) — key them on (sf_dir, table_stamp(...)) instead.
+    Its one caller is the DuckDB oracle cache
+    (``plans.ann_oracles._stamped_cache``), which keys on
+    (sf_dir, table_stamp(...)) so a table regenerated under a reused
+    directory re-derives its oracle instead of serving a stale one.
     Remote/object-store paths (no local stat) degrade to a constant, so
-    such memos fall back to sf_dir-only keying rather than erroring."""
+    that cache falls back to sf_dir-only keying rather than erroring."""
     p = os.path.join(sf_dir, f"{name}.parquet")
     try:
         if os.path.isdir(p):

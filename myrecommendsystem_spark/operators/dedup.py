@@ -20,7 +20,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window, functions as F
 
 from myrecommendsystem_spark.functions import text as TXT
-from myrecommendsystem_spark.functions.caching import eager_release
+from myrecommendsystem_spark.functions.caching import eager_release, release_checkpoint
 from myrecommendsystem_spark.operators.parallelism import widen_for_kernel
 
 
@@ -432,13 +432,6 @@ def connected_components(
     fwd = pairs.select(
         F.col(id_a).alias("src"), F.col(id_b).alias("dst")
     ).localCheckpoint(eager=True)
-
-    def _release() -> None:
-        try:
-            fwd._jdf.queryExecution().analyzed().rdd().unpersist(False)
-        except Exception:
-            pass
-
     n_edges = fwd.count()
     if n_edges <= _DRIVER_PAIR_CAP:
         from myrecommendsystem_spark.operators.graph import (
@@ -448,10 +441,10 @@ def connected_components(
         spark = pairs.sparkSession
         id_type = pairs.schema[id_a].dataType.simpleString()
         if n_edges == 0:
-            _release()
+            release_checkpoint(fwd)
             return spark.createDataFrame([], f"id {id_type}, comp {id_type}")
         pdf = _collect_edges_arrow(fwd)
-        _release()
+        release_checkpoint(fwd)
         ids, comps = _components_inmem(
             pdf["src"].to_numpy(), pdf["dst"].to_numpy()
         )
@@ -464,7 +457,7 @@ def connected_components(
     edges = fwd.union(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).distinct().localCheckpoint(eager=True)
-    _release()
+    release_checkpoint(fwd)
     labels = (
         edges.select(F.col("src").alias("id"))
         .distinct()
@@ -607,7 +600,6 @@ def simhash_near_duplicates(
     max_hamming: int = 3,
     bands: int = 8,
     max_bucket: int = 1000,
-    probe_memo_key: tuple | None = None,
 ) -> DataFrame:
     """SimHash near-dup pairs: byte-banded fingerprint buckets + hamming.
 
@@ -628,17 +620,11 @@ def simhash_near_duplicates(
         F.col(id_col).alias("id"),
         TXT.simhash64(F.col(text_col)).alias("fp"),
     )
-    return fingerprint_near_duplicates(
-        fp, max_hamming, bands, max_bucket, probe_memo_key=probe_memo_key
-    )
+    return fingerprint_near_duplicates(fp, max_hamming, bands, max_bucket)
 
 
 # bucket key of a fingerprint byte-band
 _FP_BAND = ["band_idx", "band_val"]
-
-# probe-decision memo: (caller key, bands) -> collapse?  See
-# fingerprint_near_duplicates' probe_memo_key contract.
-_PROBE_MEMO: dict[tuple, bool] = {}
 
 
 def fingerprint_near_duplicates(
@@ -647,7 +633,6 @@ def fingerprint_near_duplicates(
     bands: int = 8,
     max_bucket: int = 1000,
     _force_collapse: bool | None = None,
-    probe_memo_key: tuple | None = None,
 ) -> DataFrame:
     """Banded near-dup pairs over ANY (id, fp) 64-bit fingerprint
     relation → (id_a, id_b, hamming ≤ max_hamming).
@@ -701,18 +686,6 @@ def fingerprint_near_duplicates(
     survival of a clone group in ≥ 1 capped bucket is exactly the
     both-ids-co-located condition, and hamming is a function of the fp
     pair alone, so the branch can never change results — only the plan.
-
-    ``probe_memo_key`` (the doc_quality_model_scores memo pattern): the
-    probe decision is a pure function of the fp relation's value
-    distribution, so a caller that can name its input (query name +
-    sf_dir + table stamp — see ``readers.table_stamp``) passes that name
-    and the decision is memoized per process.  A memo hit skips BOTH
-    probe stages — repeated calls over unchanged data (bench best-of-N
-    repeats, re-registered queries in one session) pay the probe's two
-    driver-blocking scalar jobs exactly once.  The caller owns key
-    correctness: the key must change whenever the fp relation's DATA
-    can (include the table stamp).  ``None`` (default) probes every
-    call.
     """
     bits_per_band = 64 // bands
     mask = (1 << bits_per_band) - 1
@@ -725,32 +698,22 @@ def fingerprint_near_duplicates(
     members = fp.persist()  # every path reads it ≥ 2×s — one kernel pass
     groups = None
     if _force_collapse is None:  # adaptive (the production path)
-        # decision depends on the data AND on bands (the excess-volume
-        # multiplier) — max_hamming/max_bucket don't enter the probe
-        memo_key = (probe_memo_key, bands) if probe_memo_key is not None else None
-        if memo_key is not None and memo_key in _PROBE_MEMO:
-            collapse = _PROBE_MEMO[memo_key]
-        else:
-            stats = members.agg(
-                F.count(F.lit(1)).alias("n"), F.count_distinct("fp").alias("d")
-            ).first()
-            dup_count = stats.n - stats.d
-            collapse = False
-            if dup_count > max(1000, stats.n // 100):
-                groups = members.groupBy("fp").agg(
-                    F.count(F.lit(1)).alias("grp_n")
-                ).persist()
-                excess = groups.agg(
-                    F.sum(F.col("grp_n") * F.col("grp_n") - F.col("grp_n"))
-                ).first()[0] or 0
-                collapse = bands * excess > max(10_000_000, 20 * stats.n)
-                if not collapse:
-                    groups.unpersist()
-                    groups = None
-            if memo_key is not None:
-                if len(_PROBE_MEMO) >= 64:  # bounded, FIFO-evicted
-                    _PROBE_MEMO.pop(next(iter(_PROBE_MEMO)))
-                _PROBE_MEMO[memo_key] = collapse
+        stats = members.agg(
+            F.count(F.lit(1)).alias("n"), F.count_distinct("fp").alias("d")
+        ).first()
+        dup_count = stats.n - stats.d
+        collapse = False
+        if dup_count > max(1000, stats.n // 100):
+            groups = members.groupBy("fp").agg(
+                F.count(F.lit(1)).alias("grp_n")
+            ).persist()
+            excess = groups.agg(
+                F.sum(F.col("grp_n") * F.col("grp_n") - F.col("grp_n"))
+            ).first()[0] or 0
+            collapse = bands * excess > max(10_000_000, 20 * stats.n)
+            if not collapse:
+                groups.unpersist()
+                groups = None
     else:  # test/tuning override: pin one strategy, skip the probe
         collapse = _force_collapse
     if collapse and groups is None:

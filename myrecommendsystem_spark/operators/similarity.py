@@ -94,11 +94,15 @@ def _unit(mat: np.ndarray) -> np.ndarray:
 def _gather_unit(df: DataFrame, id_col: str, *vec_cols: str) -> tuple:
     """(ids, one unit matrix per vector column) of a relation that is
     small by contract — a query set, or the vectors of a re-rank
-    shortlist — collected in ONE job."""
+    shortlist — collected in ONE job.  Zero rows give (0, 0) matrices."""
     rows = df.select(F.col(id_col), *vec_cols).collect()
     ids = np.array([r[0] for r in rows], dtype=np.int64)
     return (ids,) + tuple(
-        _unit(np.array([r[i] for r in rows], dtype=np.float64))
+        _unit(
+            np.array([r[i] for r in rows], dtype=np.float64).reshape(
+                len(rows), -1 if rows else 0
+            )
+        )
         for i in range(1, len(vec_cols) + 1)
     )
 
@@ -1193,6 +1197,8 @@ def _adc_topk(
     :func:`_exact_rerank_topk`; ``rerank_corpus=None`` (an index alone
     stores no vectors) returns the ADC ranking itself."""
     q_ids, q_mat = _gather_unit(queries, id_col, vec_col)
+    if len(q_ids) == 0:
+        return _empty_frame(packed, _TOPK_SCHEMA)
     nq, (m, _, sub) = len(q_ids), books.shape
     table = np.einsum("qjs,jcs->qjc", q_mat.reshape(nq, m, sub), books)
     if centroids is None:
@@ -1705,6 +1711,8 @@ def pca_topk(
         vec_col,
         "red",
     )
+    if len(q_ids) == 0:
+        return _empty_frame(corpus, _TOPK_SCHEMA)
 
     def score(batches):
         for pdf in batches:

@@ -2656,64 +2656,13 @@ recs AS (
 )"""
 
 
-# Shared materialization for the recsys eval family.
-# recsys_itemcf_eval and recsys_beyond_accuracy consume the
-# IDENTICAL split → train → full-co-rating sims → scores → anti-join →
-# top-20 chain (the Spark twin of the shared _EVAL_RECS_CTES text
-# above), and recsys_als_eval shares the same md5 split/train; before
-# this helper each builder re-ran the whole chain (~15 stages) from
-# scratch.  The memo holds ONE entry — the localCheckpointed relations
-# for the most recent (session, sf_dir) — mirroring how a production
-# engine materializes the eval rec-list view once per dataset and lets
-# the metric queries read it.  Hash-safety: consumers read the same
-# checkpointed rows the per-query builds would have produced (the chain
-# is unchanged code), and every derived metric is round_stable, so
-# driver hashes are identical whether or not the memo hits.  Bench
-# policy note: this is a DOCUMENTED shared materialized intermediate
-# (bench.py caching note), not a cache leak — the
-# hygiene rule "no cache outlives its query" is amended to "…except
-# the declared recsys-eval shared build".
-_EVAL_SHARED: dict = {}
-
-
-def _evict_eval_shared() -> None:
-    """Drop the memoized eval build AND free its checkpoint blocks.
-
-    ``localCheckpoint`` pins the materialized rows in block storage; just
-    clearing the dict leaked those blocks until JVM
-    GC when callers alternate sf_dirs.  The checkpointed
-    relation's logical plan is a LogicalRDD whose ``rdd`` field IS the
-    cached RDD, so unpersisting it frees the blocks immediately; the
-    evicted entry is unusable afterwards by design (it is being dropped).
-    """
-    for old in _EVAL_SHARED.values():
-        for name in ("train", "sims", "recs"):
-            try:
-                old[name]._jdf.queryExecution().analyzed().rdd().unpersist(False)
-            except Exception:
-                pass  # session stopped or plan shape changed: nothing to free
-    _EVAL_SHARED.clear()
-
-
-def _eval_shared(spark: SparkSession, sf_dir: str) -> dict:
-    from myrecommendsystem_spark.ml.itemcf import corating_similarities
-    from myrecommendsystem_spark.operators.relational import top_k_per_group
+def _eval_split(spark: SparkSession, sf_dir: str) -> tuple:
+    """(split, train) of the recsys eval family: the ratings with an
+    ``is_test`` flag from the md5 hold-out coordinate (20 %), and the
+    checkpointed 80 % train side.  The Spark twin of the shared
+    _EVAL_RECS_CTES split; every eval query builds it from its inputs."""
     from myrecommendsystem_spark.operators.sampling import hash_key
 
-    # Session identity (id(spark)) is part of the key: two SparkSessions
-    # can share one applicationId (newSession/getActiveSession), and a
-    # checkpointed DataFrame is bound to the session that built it.  The
-    # events-table stamp invalidates the memo when a reused sf_dir is
-    # re-materialized.
-    key = (
-        spark.sparkContext.applicationId,
-        id(spark),
-        sf_dir,
-        readers.table_stamp(sf_dir, "events"),
-    )
-    hit = _EVAL_SHARED.get(key)
-    if hit is not None:
-        return hit
     ratings = readers.events_as_ratings(spark, sf_dir)
     coord = F.conv(
         hash_key(
@@ -2728,18 +2677,30 @@ def _eval_shared(spark: SparkSession, sf_dir: str) -> dict:
         10,
     ).cast("double") / F.lit(float(1 << 32))
     split = ratings.withColumn("is_test", coord < 0.2)
-    # train feeds four plan branches per consumer (sims' r/norms/dots,
-    # candidate scoring, the seen anti-join) — materialize the split
-    # once so the md5-coordinate scan isn't re-run per branch; sims is
-    # a products^2-bounded relation read by two joins.
+    # train feeds several plan branches per query (the sims' r/norms/dots,
+    # candidate scoring, the seen anti-join, the ALS fit's passes) —
+    # materialize it once so the md5-coordinate scan isn't re-run per
+    # branch
     train = (
         split.filter(~F.col("is_test"))
         .select("userId", "productId", "score", "ts")
         .localCheckpoint(eager=True)
     )
-    sims = corating_similarities(train, threshold=-1.0).localCheckpoint(
-        eager=True
-    )
+    return split, train
+
+
+def _itemcf_recs(train: DataFrame) -> DataFrame:
+    """(userId, candidateId, rnk): the item-CF top-20 per user fit on
+    ``train`` — full-co-rating sims, per-user candidate scores, train-seen
+    anti-joined out (the Spark twin of _EVAL_RECS_CTES' recs).
+
+    Checkpointed (users x 20 rows by contract): recsys_beyond_accuracy
+    reads it from four aggregates, and the metric plans of both
+    consumers join a materialized relation instead of the whole chain."""
+    from myrecommendsystem_spark.ml.itemcf import corating_similarities
+    from myrecommendsystem_spark.operators.relational import top_k_per_group
+
+    sims = corating_similarities(train, threshold=-1.0)
     scores = (
         train.join(sims, train.productId == sims.pid)
         .groupBy("userId", F.col("other_pid").alias("candidateId"))
@@ -2754,9 +2715,7 @@ def _eval_shared(spark: SparkSession, sf_dir: str) -> dict:
         ["userId", "candidateId"],
         "left_anti",
     )
-    # users × 20 rows by contract — the one relation every metric query
-    # in the family reads, so it is the thing worth materializing.
-    recs = (
+    return (
         top_k_per_group(
             unseen,
             ["userId"],
@@ -2766,10 +2725,6 @@ def _eval_shared(spark: SparkSession, sf_dir: str) -> dict:
         .select("userId", "candidateId", "rnk")
         .localCheckpoint(eager=True)
     )
-    out = {"split": split, "train": train, "sims": sims, "recs": recs}
-    _evict_eval_shared()  # hold at most one build: bounded executor state
-    _EVAL_SHARED[key] = out
-    return out
 
 
 @register(
@@ -2822,20 +2777,15 @@ FROM per_user
     defer=True,
 )
 def recsys_itemcf_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    shared = _eval_shared(spark, sf_dir)
-    test = (
-        shared["split"]
-        .filter("is_test")
-        .select("userId", "productId")
-        .distinct()
-    )
-    recs = shared["recs"]
+    split, train = _eval_split(spark, sf_dir)
+    test = split.filter("is_test").select("userId", "productId").distinct()
+    recs = _itemcf_recs(train)
     user_test = test.groupBy("userId").agg(
         F.count(F.lit(1)).cast("bigint").alias("n_test")
     )
-    # name-based join: test and the shared recs build descend from the
-    # same checkpointed split, so attribute-object references would be
-    # ambiguous (identical exprIds on both sides)
+    # name-based join: test and recs descend from the same split, so
+    # attribute-object references would be ambiguous (identical exprIds
+    # on both sides)
     hits = test.join(
         recs.withColumnRenamed("candidateId", "productId"),
         ["userId", "productId"],
@@ -3055,12 +3005,10 @@ def recsys_beyond_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
             "novelty_bits double, gini_concentration double",
         )
     # The rec-list relation feeds FOUR independent aggregates (conc,
-    # novelty, n_rec, and via conc the gini ranking) — it is the shared
-    # checkpointed build (users x 20 by contract), read, never
-    # re-derived.
-    shared = _eval_shared(spark, sf_dir)
-    train = shared["train"]
-    recs = shared["recs"].select("userId", "candidateId")
+    # novelty, n_rec, and via conc the gini ranking) — read from its
+    # checkpoint, never re-derived.
+    _, train = _eval_split(spark, sf_dir)
+    recs = _itemcf_recs(train).select("userId", "candidateId")
 
     pop = train.groupBy("productId").agg(F.count(F.lit(1)).alias("cnt"))
     total = pop.agg(F.sum("cnt").alias("total"))
@@ -4078,17 +4026,11 @@ def recsys_als_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_users bigint, precision_at_20 double, recall_at_20 double, "
             "ndcg_at_20 double",
         )
-    # Same md5 split/train as the item-CF eval pair, read from the
-    # shared checkpointed build (the ALS fit ignores the extra ts
-    # column) — the three-model comparison runs on ONE split build.
-    shared = _eval_shared(spark, sf_dir)
-    train = shared["train"]
-    test = (
-        shared["split"]
-        .filter("is_test")
-        .select("userId", "productId")
-        .distinct()
-    )
+    # Same md5 split/train as the item-CF eval pair (the ALS fit
+    # ignores the extra ts column) — the three-model comparison runs on
+    # one split.
+    split, train = _eval_split(spark, sf_dir)
+    test = split.filter("is_test").select("userId", "productId").distinct()
     model = train_als(train, rank=8)
     flat = user_recs_flat(model, k=40)  # over-fetch, then drop train-seen
     unseen = flat.join(

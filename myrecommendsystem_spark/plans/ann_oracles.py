@@ -51,13 +51,12 @@ _DRIVER_DIM = 64  # embeddings.parquet contract (TESTDATA.md)
 
 def _stamped_cache(table: str):
     """Per-process memo keyed on (sf_dir, io.readers.table_stamp) — the
-    lru_cache shape, plus invalidation
-    when the data under a reused sf_dir is regenerated in-process (the
-    quality-fit-memo staleness class applies to every cache in this
-    module: a stale inlined-constants oracle would silently diverge
-    from a fresh Spark fit).  Bounded like lru_cache(maxsize=8) by
-    FIFO eviction; remote paths stamp to a constant (sf_dir-only
-    keying, the old behavior)."""
+    lru_cache shape, plus invalidation when the data under a reused
+    sf_dir is regenerated in-process (a stale inlined-constants oracle
+    would silently diverge from a fresh Spark fit).  It caches the
+    DuckDB reference side only, never a measured query.  Bounded like
+    lru_cache(maxsize=8) by FIFO eviction; remote paths stamp to a
+    constant (sf_dir-only keying)."""
 
     def deco(fn):
         memo: dict = {}

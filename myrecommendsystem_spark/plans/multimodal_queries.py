@@ -25,15 +25,6 @@ def _media(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fp_probe_key(family: str, sf_dir: str) -> tuple:
-    """Probe-memo key for dedup.fingerprint_near_duplicates callers in
-    this module: every media/audio fp relation is a pure function of
-    the documents table, so (family, sf_dir, table stamp) uniquely
-    names the fingerprint distribution and invalidates on data change
-    (readers.table_stamp contract)."""
-    return (family, sf_dir, readers.table_stamp(sf_dir, "documents"))
-
-
 @register(
     "media_metadata",
     """
@@ -308,9 +299,9 @@ def media_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.image_dhash(_media(spark, sf_dir)).select(
         F.col("media_id").alias("id"), F.col("dhash").alias("fp")
     )
-    return dedup.fingerprint_near_duplicates(
-        fp, max_hamming=16, probe_memo_key=_fp_probe_key("dhash", sf_dir)
-    ).orderBy("id_a", "id_b")
+    return dedup.fingerprint_near_duplicates(fp, max_hamming=16).orderBy(
+        "id_a", "id_b"
+    )
 
 
 @register(
@@ -359,9 +350,7 @@ def media_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.image_dhash(media).select(
         F.col("media_id").alias("id"), F.col("dhash").alias("fp")
     )
-    pairs = dedup.fingerprint_near_duplicates(
-        fp, max_hamming=16, probe_memo_key=_fp_probe_key("dhash", sf_dir)
-    )
+    pairs = dedup.fingerprint_near_duplicates(fp, max_hamming=16)
     comps = dedup.connected_components(pairs)
     sizes = comps.groupBy("comp").agg(
         F.count(F.lit(1)).cast("int").alias("cluster_size")
@@ -463,9 +452,9 @@ def audio_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     fp = multimodal.audio_fingerprint(audio).select(
         F.col("media_id").alias("id"), F.col("afp").alias("fp")
     )
-    return dedup.fingerprint_near_duplicates(
-        fp, max_hamming=16, probe_memo_key=_fp_probe_key("audio", sf_dir)
-    ).orderBy("id_a", "id_b")
+    return dedup.fingerprint_near_duplicates(fp, max_hamming=16).orderBy(
+        "id_a", "id_b"
+    )
 
 
 # Closed-form twin of operators/multimodal.frame_signatures over the stub

@@ -452,17 +452,7 @@ FROM signed WHERE bit_count(xor(sa, sb)) <= 3
     "the signed value), the max_bucket cap, and bit_count(xor) verify",
 )
 def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # probe memo: repeated calls over an unchanged documents
-    # table skip the adaptive-collapse probe's two scalar jobs
-    return dedup.simhash_near_duplicates(
-        _docs(spark, sf_dir),
-        max_hamming=3,
-        probe_memo_key=(
-            "dedup_simhash_pairs",
-            sf_dir,
-            readers.table_stamp(sf_dir, "documents"),
-        ),
-    )
+    return dedup.simhash_near_duplicates(_docs(spark, sf_dir), max_hamming=3)
 
 
 # ---------------------------------------------------------------------------
@@ -2233,39 +2223,27 @@ def ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# ann_topk_ivfpq_search builds its index once per (process, sf_dir); the
-# saved path memo makes repeat bench runs measure SEARCH alone.
-_IVFPQ_INDEX_DIRS: dict[str, str] = {}
-
-
 @register(
     "ann_topk_ivfpq_search",
-    # identical oracle to ann_topk_ivfpq: save/load round-trips the
-    # float64 quantizers exactly, so search output is the same relation
+    # identical oracle to ann_topk_ivfpq: same quantizers and search
+    # parameters, so the build-then-search path yields the same relation
     ann_oracles.ivfpq_oracle,
-    doc="IVF-PQ SEARCH-ONLY cost: the index (cells + 8-byte codes + "
-    "quantizers) is built and saved ONCE per session via the lifecycle "
-    "API (similarity.build_ivfpq_index / IvfPqIndex.save); this query "
-    "loads and searches it — the amortized per-query shape a production "
-    "100 TB index serves, separating build cost (paid at ingest) from "
-    "search cost (paid per query) — hash-gated "
-    "(plans/ann_oracles.ivfpq_oracle)",
+    doc="IVF-PQ through the index lifecycle API's build-then-search "
+    "path: similarity.build_ivfpq_index materializes the index (cells + "
+    "8-byte codes + quantizers) as explicit state, and "
+    "similarity.ivfpq_search probes it in memory — the API a production "
+    "100 TB index serves, where the build is paid at ingest and "
+    "IvfPqIndex.save/load carries the index between processes — "
+    "hash-gated (plans/ann_oracles.ivfpq_oracle)",
     defer=True,
 )
 def ann_topk_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     emb = _emb(spark, sf_dir)
     if emb.isEmpty():
         return spark.createDataFrame(
             [], "query_id bigint, vec_id bigint, score double, rnk int"
         )
-    path = _IVFPQ_INDEX_DIRS.get(sf_dir)
-    if path is None:
-        path = tempfile.mkdtemp(prefix="mrs_ivfpq_") + "/index"
-        similarity.build_ivfpq_index(emb, n_cells=16, m=8, k_codes=16).save(path)
-        _IVFPQ_INDEX_DIRS[sf_dir] = path
-    index = similarity.IvfPqIndex.load(spark, path)
+    index = similarity.build_ivfpq_index(emb, n_cells=16, m=8, k_codes=16)
     queries = emb.filter(F.col("vec_id") < 10)
     return similarity.ivfpq_search(index, queries, emb, nprobe=4, k=5)
 
@@ -2592,53 +2570,12 @@ def doc_quality_model_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         return spark.createDataFrame(
             [], "doc_id bigint, weak_label int, p_target double"
         )
-    # per-process memo keyed by (sf_dir, corpus stamp) — the
-    # ann_topk_ivfpq_search index-memo precedent: the fit is
-    # deterministic in its input, so re-running the query re-pays only
-    # SCORING — the production split (fit once on a bounded sample,
-    # score every batch).  The stamp is the documents
-    # files' names/mtimes/sizes, so regenerating the data under a
-    # reused dir (tests re-materializing a tmp path, bench rebuilding a
-    # scale factor in-process) invalidates the memo instead of scoring
-    # with stale weights.  The memo also
-    # holds the CHECKPOINTED featurization relation (id, text,
-    # weak_label) — predicted_lang, the interpreted token×language
-    # membership that dominated this query's 4.3 s bench entry, now
-    # evaluates once per (process, corpus) instead of once per fit pass
-    # PLUS once per scoring call; a session change or a superseding
-    # stamp releases the stale checkpoint's pinned blocks.
-    key = (sf_dir, _corpus_stamp(sf_dir))
-    ent = _QUALITY_FIT_MEMO.get(key)
-    if ent is not None and ent[1].sparkSession is not spark:
-        ent = None  # checkpoint blocks died with the old session
-    if ent is None:
-        from myrecommendsystem_spark.functions.caching import (
-            release_checkpoint,
-        )
-
-        for stale_key in [
-            k for k in _QUALITY_FIT_MEMO if k[0] == sf_dir and k != key
-        ]:
-            old = _QUALITY_FIT_MEMO.pop(stale_key)
-            if old[1].sparkSession is spark:
-                release_checkpoint(old[1])
-        labeled = quality.label_documents(docs).localCheckpoint(eager=True)
-        weights = quality.fit_quality_weights(docs, labeled=labeled)
-        ent = _QUALITY_FIT_MEMO[key] = (weights, labeled)
-    weights, labeled = ent
+    # the checkpointed featurization (id, text, weak_label) is read by
+    # both the fit and the scoring: predicted_lang, the interpreted
+    # token×language membership, evaluates once per call
+    labeled = quality.label_documents(docs).localCheckpoint(eager=True)
+    weights = quality.fit_quality_weights(docs, labeled=labeled)
     return quality.score_documents(docs, weights=weights, labeled=labeled)
-
-
-def _corpus_stamp(sf_dir: str) -> tuple:
-    """Change-detection stamp of the documents table (io.readers.
-    table_stamp): remote paths degrade to a constant, keying the memo
-    on sf_dir alone."""
-    return readers.table_stamp(sf_dir, "documents")
-
-
-# (sf_dir, corpus stamp) -> (weights, checkpointed label_documents
-# relation); see doc_quality_model_scores
-_QUALITY_FIT_MEMO: dict[tuple, tuple] = {}
 
 
 @register(

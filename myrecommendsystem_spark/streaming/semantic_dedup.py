@@ -130,8 +130,8 @@ def incremental_semantic_survivors(
     sf0.1 against ~17 s for this form: seven prepare calls collapse to
     three, and the signature pass never re-runs over the growing
     survivor set.  Each step's surviving base+bands are
-    localCheckpointed as a delta (the recsys-eval materialized-view
-    discipline; without it the plan doubles per batch).  The fold's
+    localCheckpointed as a delta (without it the plan doubles per
+    batch).  The fold's
     fixed job count is kept small (each job is an eager barrier at ANY
     scale; a per-batch structure ran ~94 scheduler jobs at bench
     scale): ONE tagged-union dim probe replaces K per-batch probe jobs,

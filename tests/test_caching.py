@@ -1,6 +1,6 @@
 """Cache-hygiene pins — no corpus-sized persist outlives its operator.
 
-Round-3 advice: operators that persist shared intermediates (dedup
+Operators that persist shared intermediates (dedup
 signature tables, TF-IDF weights, PMI baskets) must release them once
 the small result materializes (``functions.caching.eager_release``), or
 a long-lived multi-query session accumulates cached blocks until LRU

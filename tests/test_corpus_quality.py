@@ -169,7 +169,7 @@ def test_pq_codes_shape_and_determinism(spark):
 
 
 def test_quantizers_invariant_to_partition_layout(spark):
-    """Round-3 advice: k-means init indexes into collect order, so both
+    """K-means init indexes into collect order, so both
     quantizer trainers sort the sample by id — the SAME codebooks and
     centroids must come out of any physical partitioning."""
     import numpy as np
@@ -294,7 +294,7 @@ def test_bm25_repeated_query_term_scores_as_once(spark):
 
 
 def test_bm25_empty_query_returns_empty(spark):
-    """Round-3 advice: an empty query list must yield an empty top-k, not
+    """An empty query list must yield an empty top-k, not
     a schema-inference ValueError from createDataFrame([])."""
     from myrecommendsystem_spark.functions import text as TXT
 
@@ -450,6 +450,83 @@ def test_ivfpq_index_save_load_search_parity(spark, tmp_path):
     # index-only search (no rerank corpus) still returns a ranking
     adc_only = similarity.ivfpq_search(loaded, q, None, nprobe=4, k=5)
     assert adc_only.count() > 0
+
+
+def test_ivfpq_search_query_reads_rewritten_embeddings(spark, tmp_path):
+    """ann_topk_ivfpq_search builds its index from the table it reads on
+    every call: after the embeddings under one directory are rewritten
+    with different vectors, the next call must hash-match the DuckDB
+    oracle over the NEW table — an index kept from the first call would
+    answer with stale quantizers and codes."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from myrecommendsystem_spark import schemas
+    from myrecommendsystem_spark.plans import ann_oracles
+    from myrecommendsystem_spark.plans.text_queries import ann_topk_ivfpq_search
+    from tests.conftest import SF_SMOKE
+    from tests.oracle_utils import compare_query_to_oracle
+
+    for name in schemas.TESTDATA_TABLES:
+        if name != "embeddings":
+            (tmp_path / f"{name}.parquet").symlink_to(f"{SF_SMOKE}/{name}.parquet")
+    src = pq.read_table(f"{SF_SMOKE}/embeddings.parquet")
+    dest = str(tmp_path / "embeddings.parquet")
+    sf = str(tmp_path)
+
+    def run():
+        compare_query_to_oracle(
+            spark, sf, ann_topk_ivfpq_search, ann_oracles.ivfpq_oracle(sf)
+        )
+        return sorted(tuple(r) for r in ann_topk_ivfpq_search(spark, sf).collect())
+
+    pq.write_table(src, dest)
+    first = run()
+    mat = np.array(src["embedding"].to_pylist())[:, ::-1]  # other vectors
+    emb_type = src.schema.field("embedding").type
+    pq.write_table(
+        src.set_column(
+            src.schema.get_field_index("embedding"),
+            "embedding",
+            pa.array(mat.tolist(), type=emb_type),
+        ),
+        dest,
+    )
+    assert run() != first
+
+
+# every top-k search of operators/similarity, with its score column name
+_SEARCHES = {
+    "brute_force_topk": (similarity.brute_force_topk, "cos"),
+    "brute_force_topk_dot": (similarity.brute_force_topk_dot, "dot"),
+    "ivf_topk": (lambda c, q: similarity.ivf_topk(c, q, n_cells=8), "cos"),
+    "pq_topk": (similarity.pq_topk, "score"),
+    "ivf_pq_topk": (lambda c, q: similarity.ivf_pq_topk(c, q, n_cells=8), "score"),
+    "ivfpq_search": (
+        lambda c, q: similarity.ivfpq_search(
+            similarity.build_ivfpq_index(c, n_cells=8), q, c
+        ),
+        "score",
+    ),
+    "pca_topk": (similarity.pca_topk, "score"),
+}
+
+
+@pytest.mark.parametrize("search", list(_SEARCHES))
+def test_topk_search_empty_query_set(spark, search):
+    """An empty query set yields zero rows of the search's usual
+    (query_id, vec_id, score, rnk) schema, on every search — the
+    compressed-domain ones gather the query matrix on the driver and
+    must not normalize a zero-row array."""
+    from myrecommendsystem_spark.io import readers
+    from tests.conftest import SF_SMOKE
+
+    fn, score = _SEARCHES[search]
+    emb = readers.load_table(spark, SF_SMOKE, "embeddings")
+    out = fn(emb, emb.filter(F.col("vec_id") < 0))
+    assert out.count() == 0
+    assert out.columns == ["query_id", "vec_id", score, "rnk"]
 
 
 def test_ivfpq_incremental_add_and_append(spark, tmp_path):

@@ -72,7 +72,7 @@ def test_pagerank_symmetric_graph_uniform(spark, cap):
 
 
 def test_pagerank_string_ids_both_venues(spark):
-    """Round-6 ADVICE (medium): non-integer vertex ids (string/UUID)
+    """Non-integer vertex ids (string/UUID)
     must work on the driver venue too — the position map is
     searchsorted over sorted unique ids, not an int() dict."""
     rows = [("a", "b"), ("b", "c"), ("c", "a"), ("a", "c")]
@@ -86,7 +86,7 @@ def test_pagerank_string_ids_both_venues(spark):
 
 
 def test_pagerank_empty_edges_schema_matches_input_type(spark):
-    """Round-6 ADVICE: the empty-edge result must carry the INPUT's id
+    """The empty-edge result must carry the INPUT's id
     type (was hardcoded int) so downstream unions don't break."""
     empty = spark.createDataFrame([], "src bigint, dst bigint")
     out = pagerank(empty)
@@ -153,7 +153,7 @@ def test_bfs_cycle_terminates_and_unreachable_excluded(spark, cap):
 
 @pytest.mark.parametrize("cap", [0, 5_000_000], ids=["distributed", "driver"])
 def test_bfs_string_ids_both_venues(spark, cap):
-    """Round-6 ADVICE class: string ids traverse on both venues — the
+    """String ids traverse on both venues — the
     distributed hop no longer casts dst to long (which nulled strings),
     and the driver venue never coerced via int()."""
     edges = spark.createDataFrame(

@@ -79,9 +79,9 @@ def test_salted_join_matches_plain_join(spark):
 
 
 def test_table_stamp_detects_regeneration(spark, tmp_path):
-    """Round-10 ADVICE class: per-process memos keyed on sf_dir go
-    stale when the data under a reused dir is regenerated in-process.
-    table_stamp must change when a table is rewritten (even same row
+    """Caches keyed on sf_dir alone go stale when the data under a
+    reused dir is regenerated in-process (the ann_oracles cache keys on
+    the stamp for that reason).  table_stamp must change when a table is rewritten (even same row
     count), be stable across reads, and degrade to a constant for
     unstattable paths."""
     import time
@@ -97,6 +97,33 @@ def test_table_stamp_detects_regeneration(spark, tmp_path):
     df1.write.mode("overwrite").parquet(f"{sf}/documents.parquet")
     assert table_stamp(sf, "documents") != s1  # rewrite invalidates
     assert table_stamp(sf, "nonexistent") == ("unstattable",)
+
+
+def test_no_module_level_memo_dicts():
+    """No query keeps state between calls: a module-level name bound to
+    an empty dict is a per-process memo, which serves a repeat call
+    over rewritten data a stale result and makes every timed repeat a
+    cache hit — so no module of the package binds one."""
+    import ast
+    import pathlib
+
+    import myrecommendsystem_spark
+
+    root = pathlib.Path(myrecommendsystem_spark.__file__).parent
+    memos = []
+    for path in sorted(root.rglob("*.py")):
+        for node in ast.parse(path.read_text()).body:
+            value = getattr(node, "value", None)
+            if not isinstance(node, (ast.Assign, ast.AnnAssign)):
+                continue
+            if (isinstance(value, ast.Dict) and not value.keys) or (
+                isinstance(value, ast.Call)
+                and getattr(value.func, "id", None) == "dict"
+                and not value.args
+                and not value.keywords
+            ):
+                memos.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert memos == []
 
 
 def test_skew_profile_recommends_salt_for_whale_key(spark):
@@ -139,7 +166,7 @@ def test_skew_profile_plan_avoids_global_sort(spark):
 
 
 def test_adaptive_salted_join_matches_plain_and_salts_in_plan(spark):
-    """Round-11 verdict item 3 (close the skew loop): the salt factor
+    """Close the skew loop: the salt factor
     comes from skew_profile's rec_salt via a one-row broadcast, never a
     hand-tuned constant or a driver collect.  Contract: (a) answer-
     identical to the plain join on a whale-key corpus; (b) with the
@@ -184,7 +211,7 @@ def test_adaptive_salted_join_matches_plain_and_salts_in_plan(spark):
         ).collect()
     }
     assert ugot == uplain  # (c)
-    with pytest.raises(ValueError):  # (d) — round-11 ADVICE guards
+    with pytest.raises(ValueError):  # (d) — argument guards
         adaptive_salted_join(skewed, dim, ["k"], num_partitions=0)
     with pytest.raises(ValueError):
         skew_profile(skewed, ["k"], num_partitions=-3)
@@ -193,7 +220,7 @@ def test_adaptive_salted_join_matches_plain_and_salts_in_plan(spark):
 
 
 def test_salted_join_rejects_right_and_full_outer(spark):
-    """Round-11 ADVICE (medium): the small side is replicated once per
+    """The small side is replicated once per
     salt value, so an unmatched small-side row under how='right'/'full'
     would emit salt_factor null-extended copies instead of one.  Both
     salted joins must refuse those join types up front; the supported
@@ -227,7 +254,7 @@ def test_salted_join_rejects_right_and_full_outer(spark):
 
 
 def test_salt_levels_full_row_duplicates(spark):
-    """Round-11 verdict item 6: a whale key whose rows are LITERAL
+    """A whale key whose rows are LITERAL
     duplicates (common in event logs) defeats a pure row-hash salt —
     every copy lands on one reducer and the levelling guarantee
     silently degrades.  The salt mixes in the partition-local row
@@ -262,7 +289,7 @@ def test_salt_levels_full_row_duplicates(spark):
 
 
 def test_adaptive_salted_group_count_matches_plain_and_salts_in_plan(spark):
-    """Round-11 verdict item 4: the groupBy half of the skew loop.  The
+    """The groupBy half of the skew loop.  The
     salt factor comes from skew_profile's rec_salt via a one-row
     broadcast (no driver hop, no hand-tuned constant); the partial
     aggregate's exchange carries (keys…, __salt); answers match the
@@ -296,7 +323,7 @@ def test_adaptive_salted_group_count_matches_plain_and_salts_in_plan(spark):
 
 
 def test_salted_distinct_set_matches_plain_and_partitions_exactly(spark):
-    """Round-12 verdict item 6: the adaptive salt's real venue — a
+    """The adaptive salt's real venue — a
     set-valued aggregate with no partial-aggregation escape hatch.
     The salt keys on the VALUE hash, so each distinct value lands in
     exactly one (key, salt) bucket: partial sets are disjoint, their

@@ -51,7 +51,7 @@ def test_image_features_deterministic_and_shaped(spark):
 
 
 def test_tiling_oracle_assumption_holds():
-    """Round-6 verdict item 5: the hash gates on ``media_image_features``
+    """The hash gates on ``media_image_features``
     and ``media_frame_sample`` assume the decode stage IS deterministic
     byte tiling — their DuckDB oracles compute the tiled pixel sum in
     closed form (full repetitions + leading remainder slice) and the
@@ -60,8 +60,7 @@ def test_tiling_oracle_assumption_holds():
     that identity against the kernel directly: if it fails — e.g. a
     real codec replaced ``_decode_payload`` — REVERT BOTH ORACLES TO
     ROWS-ONLY (oracle=None in plans/multimodal_queries.py) instead of
-    shipping a silently-wrong hash gate (the documented trigger in
-    BASELINE.md)."""
+    shipping a silently-wrong hash gate."""
     payloads = [b"", b"a", b"hello world", bytes(range(97, 123)) * 3]
     shapes = [(3, 2, 1), (5, 7, 3), (16, 16, 1)]
     for payload in payloads:
@@ -182,7 +181,7 @@ def _exact_intensity_distance(rows_by_id, a, b):
 
 
 def test_media_near_dup_recall_vs_exact_intensity(spark):
-    """Round-8 verdict item 4's 'Done' bar: on the fixture corpus the
+    """On the fixture corpus the
     banded dHash pipeline must (a) recover every constructed near-dup
     pair — pairs whose EXACT intensity distance is tiny — and (b) admit
     no cross-base pair, whose exact distance is ~85x larger."""

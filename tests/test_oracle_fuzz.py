@@ -243,9 +243,8 @@ def test_hyperplane_recall_oracle_fuzz(spark, seed):
         "vec_id long, embedding array<float>",
     )
     # compute the recall column exactly the way the registered plan
-    # does (r12 ADVICE: the fuzz corpora previously verified only the
-    # count columns, leaving the round_stable division to the driver
-    # hash gate alone)
+    # does (verifying only the count columns would leave the
+    # round_stable division to the driver hash gate alone)
     from pyspark.sql import functions as F
 
     from myrecommendsystem_spark.functions.compat import round_stable

@@ -389,7 +389,7 @@ def test_driver_window_rotation_is_exact_prefix():
 
 
 def test_driver_window_derived_from_correctness_artifacts():
-    """Round-3 advice: the window must be derivable from the recorded
+    """The window must be derivable from the recorded
     CORRECTNESS_r0*.json artifacts, not a hand-list that can go stale.
 
     Invariants: (a) every unverified query is either at the exact front
@@ -454,7 +454,7 @@ def test_next_round_window_derivation_is_ready(tmp_path):
 
 
 def test_coverage_md_gate_labels_match_registry():
-    """Round-11 verdict item 6: COVERAGE.md's ``(oracle)`` / ``(rows)``
+    """COVERAGE.md's ``(oracle)`` / ``(rows)``
     gate labels drift when a query is upgraded rows-only → hash-gated
     (dedup_minhash_pairs/_simhash_pairs sat stale since r6; the sweep
     found five more).  Diff every label that names a registered query
@@ -475,7 +475,7 @@ def test_coverage_md_gate_labels_match_registry():
 
 
 def test_two_digit_round_artifacts_are_parsed(tmp_path):
-    """Round-8 verdict item 7: from round 10 on the artifact filenames
+    """From round 10 on the artifact filenames
     grow a second digit (CORRECTNESS_r10.json).  The derivation's glob +
     regex must pick them up — a green row recorded ONLY in a two-digit
     artifact must keep its query out of the never-verified front and
@@ -499,7 +499,7 @@ def test_two_digit_round_artifacts_are_parsed(tmp_path):
 
 
 def test_oracle_enumeration_degrades_per_entry_not_globally(monkeypatch):
-    """Round-8 ADVICE: a lazy (data-dependent) oracle that cannot resolve
+    """A lazy (data-dependent) oracle that cannot resolve
     — testdata dir missing on this host — must degrade only ITS entry to
     rows-only, never poison the whole ``all_oracle_sql()`` map.  With the
     resolution dir pointed at a nonexistent path, every static-SQL entry
@@ -522,7 +522,7 @@ def test_oracle_enumeration_degrades_per_entry_not_globally(monkeypatch):
 
 
 def test_red_hash_queries_are_rescheduled(tmp_path):
-    """Round-7 ADVICE (medium): a gated query whose only driver rows are
+    """A gated query whose only driver rows are
     hash-RED (rows exist, not ``no_oracle``, never hash-green) must be
     rescheduled by the mechanical rule — after the stale-oracle tier,
     before the hash-green padding.  Synthetic artifacts: one green query,
@@ -570,7 +570,7 @@ def test_driver_window_schemas_are_flat(spark, sf_dir):
 
 
 def test_headline_shuffle_counts_pinned(spark):
-    """Round-7 verdict item 6a: the per-query plan pins check SHAPES;
+    """The per-query plan pins check SHAPES;
     nothing caught a new shuffle sneaking into an unpinned query.  This
     pins the number of shuffle Exchange nodes (BroadcastExchange is a
     different token and deliberately NOT counted — broadcasts are the
@@ -643,7 +643,7 @@ def test_fingerprint_near_dup_python_is_fingerprint_only(spark, name):
         # cached subtree — read the kernel count from the analyzed plan
         full = qe.analyzed().toString()
     spark.catalog.clearCache()
-    # round-10 ADVICE: ">= 1" would let a SECOND Python stage slip in —
+    # ">= 1" would let a SECOND Python stage slip in —
     # the exact regression this pin guards.  The analyzed plan prints
     # the persisted fingerprint subtree once per reference (expr ids
     # differ per copy), so count DISTINCT kernels after normalizing

@@ -70,8 +70,8 @@ def test_dedup_scales_subquadratically(spark, name, op, max_exponent):
     # MRS_SCALE_PROBE_64=1 extends the curve with a 64x point (320k
     # docs — needs the 48g heap and several more minutes) and grades
     # the exponent on the TOP doubling pair, where fixed-stage overhead
-    # has amortized out of the denominator (round-6 verdict item 6;
-    # measured r7: minhash/simhash both ≲1 at 16x->64x, SCALE.md).
+    # has amortized out of the denominator (measured: minhash/simhash
+    # both ≲1 at 16x->64x, SCALE.md).
     mults = (4, 16, 64) if os.environ.get("MRS_SCALE_PROBE_64") else (4, 16)
     times = {}
     for mult in mults:  # skip 1x: first-touch JIT pollutes it
@@ -170,7 +170,7 @@ def test_media_fingerprint_dedup_scales_subquadratically(spark, kernel):
     """Round-9 modality twin of the text-dedup probe: the image/audio
     near-dup pipeline (synthesize -> fingerprint kernel -> shared
     banding) on the pseudo-random corpus at 4x/16x (64x for dHash with
-    MRS_SCALE_PROBE_64=1 — the round-9 verdict's 320k point).
+    MRS_SCALE_PROBE_64=1 — the 320k point).
     Fingerprints are 64-bit, buckets are byte-bands, so the cost model
     is the SimHash one: one Arrow pass + one (band, value) shuffle;
     exponent must stay sub-quadratic on a corpus with no planted

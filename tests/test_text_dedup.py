@@ -43,7 +43,7 @@ def test_token_count_edges(spark):
 def test_shingles_null_and_empty_text(spark):
     """NULL and empty text both yield the single empty gram [''].
 
-    Pins the ADVICE r9 regression: the zip-fold rewrite propagated
+    Pins a regression of the zip-fold rewrite, which propagated
     NULL through slice/zip_with so shingles(NULL) returned NULL,
     silently dropping NULL-text rows from explode() consumers; the
     coalesce restores the pre-rewrite transform-form behavior."""
@@ -224,54 +224,6 @@ def test_bucket_cap_core(spark, rows, ref, weight, expected):
     assert sorted(out.columns) == sorted(["k", "id_a", "id_b", *carried])
 
 
-def test_fingerprint_probe_memo_skips_probe(spark):
-    """Round-11 (verdict item 2): the adaptive probe's two scalar jobs
-    are memoizable per (caller key, bands) — the dedup_simhash_pairs
-    bench regression was pure probe tax on a corpus that never
-    collapses.  Pin the contract: (a) a keyed call records its decision
-    in the memo; (b) a later call with the same key follows the MEMO,
-    not a fresh probe — proven by poisoning the entry with the opposite
-    decision and watching the plan flip to the collapse shape the probe
-    itself would never pick here; (c) both calls stay output-identical
-    (the strategies are equivalent by construction, so a stale memo can
-    only change the plan, never the results)."""
-    from myrecommendsystem_spark.functions import caching
-
-    df = spark.range(200).select(F.col("id"), F.xxhash64("id").alias("fp"))
-    key = ("test_fingerprint_probe_memo", "unique-corpus")
-    dedup._PROBE_MEMO.pop((key, 8), None)
-    try:
-        first = sorted(
-            map(
-                tuple,
-                dedup.fingerprint_near_duplicates(
-                    df, max_hamming=2, probe_memo_key=key
-                ).collect(),
-            )
-        )
-        assert dedup._PROBE_MEMO[(key, 8)] is False  # (a) probe ran, direct
-        dedup._PROBE_MEMO[(key, 8)] = True  # poison: opposite decision
-        with caching.lazy_plans():
-            out = dedup.fingerprint_near_duplicates(
-                df, max_hamming=2, probe_memo_key=key
-            )
-            plan = out._jdf.queryExecution().analyzed().toString()
-        assert "least(" in plan, "memo hit must skip the probe"  # (b)
-        spark.catalog.clearCache()
-        second = sorted(
-            map(
-                tuple,
-                dedup.fingerprint_near_duplicates(
-                    df, max_hamming=2, probe_memo_key=key
-                ).collect(),
-            )
-        )
-        assert first == second  # (c)
-    finally:
-        dedup._PROBE_MEMO.pop((key, 8), None)
-        spark.catalog.clearCache()
-
-
 def test_winnowing_selection_semantics(spark):
     """MOSS winnowing contract (round-11): (a) the guarantee — two docs
     sharing a substring of length >= window + guarantee - 1 (16+8-1=23)
@@ -314,7 +266,7 @@ def test_winnowing_selection_semantics(spark):
     # (d) short + empty docs: one whole-text hash each, selected at 0
     assert by_doc[5] == {(0, next(iter(vals[5])))}
     assert by_doc[6] == {(0, 0)}
-    # (e) round-11 ADVICE: NULL text selects NOTHING — the kernel emits
+    # (e) NULL text selects NOTHING — the kernel emits
     # an empty array and explode drops the doc, exactly like the SQL
     # oracle (the old None->"" coercion emitted the empty-text hash)
     assert 7 not in by_doc
@@ -545,7 +497,7 @@ def test_rolling_fingerprints_detect_shared_substrings(spark):
 
 def test_rolling_fingerprints_segment_boundary_invariance(spark):
     """The kernel hashes the fused batch buffer in 128 KiB segments
-    (bounded peak memory — round-5 advice); a doc whose windows straddle
+    (bounded peak memory); a doc whose windows straddle
     a segment boundary must hash identically to the same doc placed far
     from any boundary, and match the direct per-window definition."""
     from myrecommendsystem_spark.functions import text as TXT
@@ -592,7 +544,7 @@ def test_connected_components_matches_transitive_closure(spark):
 
 
 def test_components_inmem_long_chain_converges_fast():
-    """Round-8 ADVICE (medium): a chain-shaped pair graph is the worst
+    """A chain-shaped pair graph is the worst
     case for plain min-label propagation (one hop per round — a long
     chain under the 5M-edge driver cap would effectively hang).  The
     pointer-jumping loop must converge in O(log V) rounds and still
@@ -915,7 +867,7 @@ def test_substring_overlap_oracle_fp_parity_includes_short_docs(spark):
     """The DuckDB oracle's fp CTE must emit the SAME (doc_id, fp) set as
     the Spark kernel for EVERY doc — including sub-window docs, which
     get one whole-text hash that counts toward max_bucket occupancy
-    (round-5 advice: the old oracle emitted nothing for them, so a
+    (an oracle that emitted nothing for them would let a
     short doc in a near-cap bucket could flip which buckets drop).
     Bucket-cap agreement follows from fp-set equality, so this pins the
     whole divergence class, empty text included."""
@@ -1110,8 +1062,8 @@ def test_recall_report_scurve_shape(scurve_corpus):
 
 
 def test_hyperplane_recall_report_scurve_shape(spark):
-    """Constructed S-curve for the sign-bit LSH acceptance gate
-    (round-11 verdict item 3): identical vectors (cosband 10) are
+    """Constructed S-curve for the sign-bit LSH acceptance gate:
+    identical vectors (cosband 10) are
     caught with certainty (identical sign bits, same bucket), near-
     orthogonal pairs (low bands) are nearly all rejected, and a
     cos≈0.92 block lands in between — loose bands around the analytic
