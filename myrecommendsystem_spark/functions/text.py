@@ -1,9 +1,12 @@
 """Text analysis functions — tokenize, quality, language-ID, fingerprints.
 
-LLM-data-pipeline extensions beyond the
-reference's surface.  Everything is a Catalyst expression (split /
-transform / aggregate / regexp) — no Python UDFs, so these run JVM-side at
-full codegen speed over 100 TB of documents.
+LLM-data-pipeline extensions beyond the reference's surface.  Tokenizing,
+scoring, shingling, PII scrubbing and the relational operators are
+Catalyst expressions (split / zip_with / aggregate / regexp) that run
+JVM-side under codegen.  The byte- and hash-level kernels (MinHash,
+Rabin-Karp rolling and winnowed fingerprints, SimHash votes, content-
+defined chunking, hashing embeddings, compression ratio) are Arrow-batched
+pandas UDFs over numpy, one kernel per fingerprint decision.
 """
 
 from __future__ import annotations
@@ -194,12 +197,13 @@ def shingles(text: Column, n: int = 3) -> Column:
     zip_with pads the shorter slice with NULL and concat_ws skips
     NULLs, which reproduces the short-doc whole-text fallback.
 
-    NULL text is coalesced to '' so shingles(NULL) == [''] — the
-    pre-rewrite ``transform`` form's behavior, which downstream
-    empty-shingle parity (corpus_quality) and explode() consumers
-    rely on; without the coalesce, slice(NULL)/zip_with would
-    propagate NULL and silently drop NULL-text rows."""
-    toks = tokens(F.coalesce(text, F.lit("")))
+    NULL text has no grams: slice/zip_with propagate the NULL, so
+    ``explode`` emits no row for it — the DuckDB twin's rule
+    (``plans/text_queries._SHINGLES_CTE``).  Empty or all-blank text
+    is the single empty gram ``['']``.  The one relational shingler:
+    n-gram Jaccard, decontamination and the boilerplate listing all
+    explode it."""
+    toks = tokens(text)
     length = F.greatest(F.size(toks) - (n - 1), F.lit(1))
     grams = F.slice(toks, 1, length)
     for j in range(1, n):
@@ -212,6 +216,10 @@ def shingles(text: Column, n: int = 3) -> Column:
 
 
 _MINHASH_SEED = 0x5EED
+# LCG constants of the band fold: band j of a signature is the LCG mix of
+# its rows j·r .. j·r+r-1, so a band key is one int64.
+_MIX_A = np.int64(6364136223846793005)
+_MIX_B = np.int64(1442695040888963407)
 
 
 def _affine_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
@@ -222,14 +230,22 @@ def _affine_params(k: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
 
 
 def _gram_list_py(text: str, n: int) -> list[str]:
-    """Distinct word n-grams of one doc, sorted — :func:`shingles`
-    semantics (lowercase, whitespace tokens, whole-text fallback for
-    docs of ≤ n tokens; empty text → the single empty gram)."""
+    """Distinct word n-grams of one doc, sorted (lowercase, whole-text
+    fallback for docs of ≤ n tokens; empty text → the single empty gram).
+
+    Tokenizes with ``str.split()``, the MinHash oracle's
+    ``list_filter(... x != '')`` twin — not :func:`shingles`'
+    ``split(trim(t), '\\s+')``, which keeps a leading empty token when
+    text starts with a tab or newline.  Each gram list matches its own
+    DuckDB twin, so the two stay apart."""
     toks = text.lower().split()
     if len(toks) > n:
         return sorted({" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)})
     return [" ".join(toks)]
 
+
+_RK_BASE = 257
+_RK_MOD = (1 << 31) - 1
 
 # Grams hashed per padded-matrix segment: bounds the Horner pass's
 # temporary (segment × max-gram-width uint8 matrix + int64 index
@@ -288,68 +304,76 @@ def _hash_grams_flat(grams: list[str]) -> np.ndarray:
 
 def _shingle_hash_lists(texts: pd.Series, n: int) -> list[np.ndarray]:
     """Per-doc shingle-hash arrays for a whole Arrow batch: ONE fused
-    gram build + ONE segmented Horner pass, then per-doc views."""
-    gram_lists = [_gram_list_py(t or "", n) for t in texts]
+    gram build + ONE segmented Horner pass, then per-doc views.  NULL
+    text has no grams (an empty array); every other text has ≥ 1."""
+    gram_lists = [[] if t is None else _gram_list_py(t, n) for t in texts]
     counts = [len(g) for g in gram_lists]
     flat = _hash_grams_flat([g for gs in gram_lists for g in gs])
     offs = np.concatenate(([0], np.cumsum(counts)))
     return [flat[offs[i] : offs[i + 1]] for i in range(len(gram_lists))]
 
 
-def _shingle_hashes_py(text: str, n: int) -> np.ndarray:
-    """One doc's distinct-shingle hashes (see :func:`_hash_grams_flat`
-    for the SQL-reproducible hash family)."""
-    return _hash_grams_flat(_gram_list_py(text, n))
+def _minhash_band_keys(
+    hv: np.ndarray, a: np.ndarray, b: np.ndarray, band_ids: np.ndarray
+) -> np.ndarray:
+    """Banded MinHash keys of one doc's (non-empty) shingle hashes.
 
-
-def shingle_hashes(text: Column, n: int = 3) -> Column:
-    """RK-31 Rabin-Karp hash per distinct shingle (31-bit values carried
-    in ``array<long>``), as one Arrow-batched pass.
-
-    The compact form both the MinHash signature and the exact Jaccard
-    verify run on (see :func:`_hash_grams_flat` for the SQL-reproducible
-    hash family and its collision budget).  Python, not a Catalyst
-    ``transform``: the shingle build is |tokens| slice+concat ops per
-    row, and interpreted higher-order lambdas were the measured
-    bottleneck of the whole dedup pipeline; CPython string slicing + the
-    fused Horner pass is ~5× faster and one worker round-trip.
+    The signature is the k min-permutations ``min(h·a_s + b_s)`` (odd
+    ``a_s`` ⇒ a bijection on Z/2⁶⁴) as one dense numpy broadcast; band
+    ``j`` folds signature rows ``j·r .. j·r+r-1`` with the LCG mix and
+    then its own index, so different bands never share a bucket.  With
+    one row per band (``band_ids.size == k``) each key is a bijective
+    image of one signature row, so key agreement is signature agreement.
     """
+    sig = (hv[None, :] * a[:, None] + b[:, None]).min(axis=1)
+    rows = sig.reshape(band_ids.size, -1)
+    acc = np.full(band_ids.size, _MIX_B, dtype=np.int64)
+    for j in range(rows.shape[1]):
+        acc = acc * _MIX_A + rows[:, j] + _MIX_B
+    return acc * _MIX_A + band_ids
 
-    @pandas_udf("array<long>")
-    def _sh(texts: pd.Series) -> pd.Series:
-        return pd.Series(_shingle_hash_lists(texts, n))
 
-    return _sh(text)
+def minhash_bands_and_shingles(
+    text: Column, k: int = 64, n: int = 3, bands: int = 16
+) -> Column:
+    """``struct<bands: array<long>, sh: array<long>>`` in ONE Arrow pass —
+    the MinHash kernel.
 
-
-def minhash_signature(text: Column, k: int = 64, n: int = 3) -> Column:
-    """k-permutation MinHash signature as array<bigint>, from raw text.
-
-    One fused Arrow stage: shingle hashing (``_shingle_hashes_py``) and
-    the k min-permutations (min over ``h·a_s + b_s``; odd ``a_s`` ⇒
-    bijection on Z/2⁶⁴) — a dense numpy broadcast at C speed, no
-    intermediate array column shipped back through the JVM.  The
-    expression-tree alternative (transform×transform) is interpreted per
-    element and was measured 2 orders of magnitude slower at sf0.1.
+    The near-dup pipeline needs both the banded LSH keys (candidate
+    generation) and the raw shingle hashes (exact-Jaccard verify); one
+    pass shares the shingle-hash array between both outputs, so each
+    doc is tokenized and hashed once (see :func:`_hash_grams_flat` for
+    the SQL-reproducible hash family).  Python, not a Catalyst
+    ``transform``: interpreted higher-order lambdas per element were the
+    measured bottleneck of the whole dedup pipeline.  NULL text has no
+    grams, so both arrays are empty and the doc joins no bucket — the
+    ``dedup_minhash_pairs`` oracle's rule.
     """
+    assert k % bands == 0
     a, b = _affine_params(k, _MINHASH_SEED)
-    empty = np.full(k, np.iinfo(np.int64).max, dtype=np.int64)
+    band_ids = np.arange(bands, dtype=np.int64)
 
-    @pandas_udf("array<long>")
-    def _sig(texts: pd.Series) -> pd.Series:
-        out = []
+    @pandas_udf("struct<bands: array<long>, sh: array<long>>")
+    def _both(texts: pd.Series) -> pd.DataFrame:
+        out_b, out_s = [], []
         for hv in _shingle_hash_lists(texts, n):
-            if hv.size == 0:
-                out.append(empty)
-                continue
-            out.append((hv[None, :] * a[:, None] + b[:, None]).min(axis=1))
-        return pd.Series(out)
+            # empty hv ⇔ NULL text: no grams, so no bands either
+            out_b.append(
+                _minhash_band_keys(hv, a, b, band_ids) if hv.size else hv
+            )
+            out_s.append(hv)
+        return pd.DataFrame({"bands": out_b, "sh": out_s})
 
-    return _sig(text)
+    return _both(text)
 
 
-_RK_BASE = 257
-_RK_MOD = (1 << 31) - 1
+def _rk_powers(window: int) -> np.ndarray:
+    """RK-31 Horner weights ``257^(window-1-j) mod 2³¹−1``; the last
+    ``n`` entries are the weights of an ``n``-byte window."""
+    return np.array(
+        [pow(_RK_BASE, window - 1 - j, _RK_MOD) for j in range(window)],
+        dtype=np.int64,
+    )
 
 
 def _rk_hash_span(
@@ -371,63 +395,67 @@ def _rk_hash_span(
     return acc
 
 
+_RK_SEG = 1 << 17  # window positions hashed per segment of the fused buffer
+
+
+def _rk_window_hashes(texts: pd.Series, window: int) -> list[np.ndarray]:
+    """Each doc's RK window hashes for a whole Arrow batch.
+
+    All docs concatenate into one byte buffer, the segmented
+    :func:`_rk_hash_span` pass hashes every window of it, and each doc
+    slices its own span back out (views, no copies) — per-doc numpy
+    dispatch dominated a doc-at-a-time loop on ~300-byte docs (measured
+    ~2× on the sf0.1 corpus).  Cross-doc windows are never emitted (each
+    slice stops ``window−1`` short of its doc's end); a doc shorter than
+    ``window`` gets one hash of its whole text.  NULL text hashes as ''.
+
+    The pass walks the buffer in segments of ``_RK_SEG`` positions so
+    peak temporary memory is ~50 MB per task regardless of total batch
+    bytes — a single whole-buffer expansion costs ~384 temp bytes per
+    input byte, which at 10k multi-KB docs per Arrow batch is multi-GB
+    and an executor OOM risk.
+    """
+    powers = _rk_powers(window)
+    bufs = [(t or "").encode("utf-8") for t in texts]
+    lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
+    data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
+    hashes = np.empty(max(data.size - window + 1, 0), dtype=np.int64)
+    for s in range(0, hashes.size, _RK_SEG):
+        e = min(s + _RK_SEG, hashes.size)
+        hashes[s:e] = _rk_hash_span(data, powers, window, s, e)
+    offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
+    out = []
+    for off, n in zip(offs, lens):
+        if n < window:  # rare path: one hash of the whole (short) text
+            out.append(_rk_hash_span(data, powers[window - n :], n, off, off + 1))
+        else:
+            out.append(hashes[off : off + n - window + 1])
+    return out
+
+
 def rolling_fingerprints(text: Column, window: int = 16) -> Column:
     """Rabin-Karp rolling-hash fingerprints: one hash per byte window.
 
     The substring-level fingerprint family (vs. the document-level md5 and
     the token-level MinHash): two documents sharing any ``window``-byte
     run share a hash, which is the primitive for plagiarism-style overlap
-    detection and content-defined chunking.  Vectorized across the WHOLE
-    Arrow batch: all docs concatenate into one byte buffer, ONE
-    sliding-window matmul mod 2³¹−1 hashes every window, and each doc
-    slices its own span back out (views, no copies) — per-doc numpy
-    dispatch overhead dominated the earlier doc-at-a-time loop on
-    ~300-byte docs (measured ~2× on the sf0.1 corpus).  Cross-doc
-    windows are never emitted (each doc's slice stops ``window−1`` short
-    of its end); docs shorter than ``window`` get one hash of the whole
-    text, computed in the rare-path per-doc loop.
-
-    The matmul walks the fused buffer in bounded segments (128 KiB of
-    bytes each, overlapping ``window−1``) so peak temporary memory is
-    ~50 MB per task regardless of total batch bytes — the single
-    whole-buffer expansion costs ~384 temp bytes per input byte, which
-    at 10k multi-KB docs per Arrow batch is multi-GB and an executor
-    OOM risk.
+    detection and content-defined chunking.  One Arrow-batched pass of
+    :func:`_rk_window_hashes`; docs shorter than ``window`` (and NULL
+    text) get one hash of the whole text.
     """
-    powers = np.array(
-        [pow(_RK_BASE, window - 1 - j, _RK_MOD) for j in range(window)],
-        dtype=np.int64,
-    )
-    seg = 1 << 17  # window positions hashed per matmul segment
 
     @pandas_udf("array<long>")
     def _fp(texts: pd.Series) -> pd.Series:
-        bufs = [(t or "").encode("utf-8") for t in texts]
-        lens = np.fromiter((len(b) for b in bufs), dtype=np.int64, count=len(bufs))
-        data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        hashes = None
-        if data.size >= window:
-            n_pos = data.size - window + 1
-            hashes = np.empty(n_pos, dtype=np.int64)
-            for s in range(0, n_pos, seg):
-                e = min(s + seg, n_pos)
-                hashes[s:e] = _rk_hash_span(data, powers, window, s, e)
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
-        out = []
-        for off, n, buf in zip(offs, lens, bufs):
-            if n < window:  # rare path: one hash of the whole (short) text
-                p = np.array(
-                    [pow(_RK_BASE, int(n) - 1 - j, _RK_MOD) for j in range(int(n))],
-                    dtype=np.int64,
-                )
-                d = np.frombuffer(buf, dtype=np.uint8)
-                h = int((d.astype(np.int64) * p % _RK_MOD).sum() % _RK_MOD)
-                out.append(np.array([h], dtype=np.int64))
-                continue
-            out.append(hashes[off : off + n - window + 1])
-        return pd.Series(out)
+        return pd.Series(_rk_window_hashes(texts, window))
 
     return _fp(text)
+
+
+# A winnowing selection packs (hash, pos) into one BIGINT
+# h·WINNOW_SHIFT + (WINNOW_MAXP − pos): RK-31 hashes are < 2³¹, so it
+# fits in 62 bits and one int64 ``min`` picks min hash, then max pos.
+WINNOW_SHIFT = 1 << 31
+WINNOW_MAXP = (1 << 31) - 1
 
 
 def winnowed_fingerprints(
@@ -436,68 +464,37 @@ def winnowed_fingerprints(
     """Packed MOSS winnowing selections per document (array<long>):
     from the RK rolling hashes, the minimum of every run of
     ``guarantee`` consecutive window hashes, rightmost on ties —
-    encoded h·2³¹ + (2³¹−1−pos) so one int64 ``min`` decides both the
-    hash comparison and the tie-break.  Duplicates across overlapping
-    runs are RETAINED — dedupe with ``array_distinct`` downstream
-    (JVM-side, cheap) rather than per-doc ``np.unique`` here.
+    encoded h·2³¹ + (2³¹−1−pos) (``WINNOW_SHIFT`` / ``WINNOW_MAXP``) so
+    one int64 ``min`` decides both the hash comparison and the
+    tie-break.  Duplicates across overlapping runs are RETAINED — dedupe
+    with ``array_distinct`` downstream (JVM-side, cheap) rather than
+    per-doc ``np.unique`` here.
 
-    Fused into the :func:`rolling_fingerprints` kernel pass (same
-    segmented whole-batch matmul, same short-doc rare path) because the
-    expression-level formulation — nested transforms slicing a lambda
-    variable — evaluates HOFs interpreted per window: measured ~8 s at
-    sf0.1 vs ~2 s end-to-end with this kernel, on identical output.  The
+    Runs on the :func:`rolling_fingerprints` batch pass
+    (:func:`_rk_window_hashes`) because the expression-level
+    formulation — nested transforms slicing a lambda variable —
+    evaluates HOFs interpreted per window: measured ~8 s at sf0.1 vs
+    ~2 s end-to-end with this kernel, on identical output.  The
     winnowing itself is one ``sliding_window_view(...).min(axis=1)``
-    per document — O(n·guarantee) vectorized, ~4 small numpy calls per
-    doc on top of the already-fused hashing.  Docs shorter than
-    ``window`` (including empty STRINGS) select their single whole-text
-    hash at pos 0; NULL text selects NOTHING — an empty array, so
-    explode() consumers emit no rows for NULL docs, exactly like the
-    SQL oracle's shingle expansion (a None→"" coercion would emit the
-    empty-text hash for NULL, a row the oracle never produces).
+    per document.  Docs shorter than ``window`` (including empty
+    STRINGS) select their single whole-text hash at pos 0; NULL text
+    selects NOTHING — an empty array, so explode() consumers emit no
+    rows for NULL docs, exactly like the SQL oracle's shingle expansion
+    (a None→"" coercion would emit the empty-text hash for NULL, a row
+    the oracle never produces).
     """
-    powers = np.array(
-        [pow(_RK_BASE, window - 1 - j, _RK_MOD) for j in range(window)],
-        dtype=np.int64,
-    )
-    seg = 1 << 17
-    shift = np.int64(1 << 31)
-    maxp = np.int64((1 << 31) - 1)
 
     @pandas_udf("array<long>")
     def _wfp(texts: pd.Series) -> pd.Series:
-        nulls = texts.isna().to_numpy()
-        bufs = [(t or "").encode("utf-8") for t in texts]
-        lens = np.fromiter(
-            (len(b) for b in bufs), dtype=np.int64, count=len(bufs)
-        )
-        data = np.frombuffer(b"".join(bufs), dtype=np.uint8)
-        hashes = None
-        if data.size >= window:
-            n_pos = data.size - window + 1
-            hashes = np.empty(n_pos, dtype=np.int64)
-            for s in range(0, n_pos, seg):
-                e = min(s + seg, n_pos)
-                hashes[s:e] = _rk_hash_span(data, powers, window, s, e)
-        offs = np.concatenate(([0], np.cumsum(lens)[:-1]))
         out = []
-        for off, n, buf, isnull in zip(offs, lens, bufs, nulls):
+        hashes = _rk_window_hashes(texts, window)
+        for hv, isnull in zip(hashes, texts.isna().to_numpy()):
             if isnull:  # NULL text: no fingerprints (oracle parity)
                 out.append(np.empty(0, dtype=np.int64))
                 continue
-            if n < window:  # rare path: one whole-text hash, always kept
-                p = np.array(
-                    [
-                        pow(_RK_BASE, int(n) - 1 - j, _RK_MOD)
-                        for j in range(int(n))
-                    ],
-                    dtype=np.int64,
-                )
-                d = np.frombuffer(buf, dtype=np.uint8)
-                h = int((d.astype(np.int64) * p % _RK_MOD).sum() % _RK_MOD)
-                out.append(np.array([h * shift + maxp], dtype=np.int64))
-                continue
-            hv = hashes[off : off + n - window + 1]
-            enc = hv * shift + (maxp - np.arange(hv.size, dtype=np.int64))
+            enc = hv * WINNOW_SHIFT + (
+                WINNOW_MAXP - np.arange(hv.size, dtype=np.int64)
+            )
             if hv.size < guarantee:  # one whole-sequence window
                 out.append(enc.min(keepdims=True))
             else:
@@ -509,82 +506,6 @@ def winnowed_fingerprints(
         return pd.Series(out)
 
     return _wfp(text)
-
-
-def minhash_band_hashes(
-    text: Column, k: int = 64, n: int = 3, bands: int = 16
-) -> Column:
-    """Banded MinHash bucket keys as array<bigint> (length ``bands``).
-
-    Fuses the whole LSH prefix — shingle hashing, k min-permutations,
-    and per-band signature folding — into ONE Arrow stage: band ``j`` is
-    an LCG-mix fold of signature rows ``j·r .. j·r+r-1``.  Nothing but
-    the final ``bands`` longs ever leaves the Python worker, and the
-    downstream pipeline (posexplode → bucket join) is pure codegen.
-    """
-    assert k % bands == 0
-    r = k // bands
-    a, b = _affine_params(k, _MINHASH_SEED)
-    _MIX_A = np.int64(6364136223846793005)
-    _MIX_B = np.int64(1442695040888963407)
-
-    @pandas_udf("array<long>")
-    def _bands(texts: pd.Series) -> pd.Series:
-        out = []
-        for hv in _shingle_hash_lists(texts, n):
-            if hv.size == 0:
-                sig = np.full(k, np.iinfo(np.int64).max, dtype=np.int64)
-            else:
-                sig = (hv[None, :] * a[:, None] + b[:, None]).min(axis=1)
-            rows = sig.reshape(bands, r)
-            acc = np.full(bands, _MIX_B, dtype=np.int64)
-            for j in range(r):
-                acc = acc * _MIX_A + rows[:, j] + _MIX_B
-            # band index folded in so different bands never share buckets
-            out.append(acc * _MIX_A + np.arange(bands, dtype=np.int64))
-        return pd.Series(out)
-
-    return _bands(text)
-
-
-def minhash_bands_and_shingles(
-    text: Column, k: int = 64, n: int = 3, bands: int = 16
-) -> Column:
-    """``struct<bands: array<long>, sh: array<long>>`` in ONE Arrow pass.
-
-    The near-dup pipeline needs both the banded LSH keys (candidate
-    generation) and the raw shingle hashes (exact-Jaccard verify).
-    Computing them separately ran TWO full Python passes over every doc —
-    each re-tokenizing and re-hashing the text from scratch; this kernel
-    shares the shingle-hash array between both outputs, halving the
-    dominant cost of the whole dedup pipeline (the signature kernel).
-    Band values are identical to :func:`minhash_band_hashes`, shingle
-    hashes to :func:`shingle_hashes` — pinned by test_text_dedup.
-    """
-    assert k % bands == 0
-    r = k // bands
-    a, b = _affine_params(k, _MINHASH_SEED)
-    _MIX_A = np.int64(6364136223846793005)
-    _MIX_B = np.int64(1442695040888963407)
-    band_ids = np.arange(bands, dtype=np.int64)
-
-    @pandas_udf("struct<bands: array<long>, sh: array<long>>")
-    def _both(texts: pd.Series) -> pd.DataFrame:
-        out_b, out_s = [], []
-        for hv in _shingle_hash_lists(texts, n):
-            if hv.size == 0:
-                sig = np.full(k, np.iinfo(np.int64).max, dtype=np.int64)
-            else:
-                sig = (hv[None, :] * a[:, None] + b[:, None]).min(axis=1)
-            rows = sig.reshape(bands, r)
-            acc = np.full(bands, _MIX_B, dtype=np.int64)
-            for j in range(r):
-                acc = acc * _MIX_A + rows[:, j] + _MIX_B
-            out_b.append(acc * _MIX_A + band_ids)
-            out_s.append(hv)
-        return pd.DataFrame({"bands": out_b, "sh": out_s})
-
-    return _both(text)
 
 
 def md5_hash64(col: Column) -> Column:
@@ -614,7 +535,7 @@ def simhash64(text: Column) -> Column:
     the DuckDB oracle reproduces the fingerprint bit-for-bit); the
     per-bit ±1 vote tally runs as an Arrow-batched numpy
     ``unpackbits``/``packbits`` — same reasoning as
-    :func:`minhash_signature`.  Packing into a single long (instead of
+    :func:`minhash_bands_and_shingles`.  Packing into a single long (instead of
     an array<int> bit vector) is the scale move: banding becomes byte
     extraction (``shiftright & 0xFF``) and hamming distance becomes
     ``bit_count(a XOR b)`` — both whole-stage-codegen expressions, no
@@ -626,7 +547,7 @@ def simhash64(text: Column) -> Column:
         out = np.zeros(len(hashes), dtype=np.int64)
         for i, h in enumerate(hashes):
             if h is None:  # NULL text → tokens() → NULL; fingerprint 0,
-                continue  # same as empty text (mirrors _shingle_hashes_py)
+                continue  # same as empty text
             hv = np.asarray(h, dtype=np.int64)
             if hv.size == 0:
                 continue
@@ -935,18 +856,14 @@ def cdc_cut_points(
     Arrow pass and the oracle generator (plans/ann_oracles.py trains the
     RAG pipeline's quantizer on locally-recomputed chunks, so both paths
     MUST cut identically)."""
-    import numpy as _np
-
-    powers = _np.array(
-        [pow(_RK_BASE, window - 1 - j, _RK_MOD) for j in range(window)],
-        dtype=_np.int64,
-    )
-    arr = _np.frombuffer(data, dtype=_np.uint8)
+    arr = np.frombuffer(data, dtype=np.uint8)
     cuts = [0]
     if arr.size >= window:
-        hs = _rk_hash_span(arr, powers, window, 0, arr.size - window + 1)
+        hs = _rk_hash_span(
+            arr, _rk_powers(window), window, 0, arr.size - window + 1
+        )
         # hs[i] covers bytes [i, i+window); boundary AFTER that
-        bpos = _np.nonzero(hs % divisor == divisor - 1)[0] + window
+        bpos = np.nonzero(hs % divisor == divisor - 1)[0] + window
         last = 0
         for p in bpos:
             if p - last >= window:  # min chunk = one window

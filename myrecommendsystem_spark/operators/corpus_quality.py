@@ -39,47 +39,6 @@ from myrecommendsystem_spark.functions import text as TXT
 from myrecommendsystem_spark.functions.compat import round_stable
 
 
-def _distinct_shingles(
-    docs: DataFrame, n: int, id_col: str, text_col: str
-) -> DataFrame:
-    """(id, gram): each document's DISTINCT word n-grams, with
-    functions.text.shingles' short-doc fallback (fewer than ``n`` words →
-    the whole normalized text is the single shingle).
-
-    Codegen-friendly construction: one word-level ``posexplode``, grams
-    as ``lead(word, 1..n-1)`` offset windows over (id, pos) — no
-    interpreted array lambdas anywhere.
-    """
-    from pyspark.sql import Window
-
-    toks = F.when(
-        F.length(F.trim(F.col(text_col))) == 0, F.array().cast("array<string>")
-    ).otherwise(TXT.tokens(F.col(text_col)))
-
-    words = docs.select(F.col(id_col), F.posexplode(toks).alias("pos", "word"))
-    w = Window.partitionBy(id_col).orderBy("pos")
-    parts = ["word"] + [f"next{i}" for i in range(1, n)]
-    grams = (
-        words.select(
-            id_col,
-            "word",
-            *[F.lead("word", i).over(w).alias(f"next{i}") for i in range(1, n)],
-        )
-        .filter(F.col(f"next{n - 1}").isNotNull())
-        .select(F.col(id_col), F.concat_ws(" ", *parts).alias("gram"))
-        .distinct()
-    )
-    # short-doc fallback: ids that produced no full n-gram emit the whole
-    # normalized text (≤ n-1 words) as their single shingle — including
-    # empty docs, whose shingle is '' (shingles() parity)
-    short = (
-        docs.select(F.col(id_col), toks.alias("t"))
-        .filter(F.size(F.col("t")) < n)
-        .select(F.col(id_col), F.concat_ws(" ", F.col("t")).alias("gram"))
-    )
-    return grams.unionByName(short)
-
-
 def ngram_contamination(
     docs: DataFrame,
     benchmark: DataFrame,
@@ -91,32 +50,25 @@ def ngram_contamination(
 
     A training document is contaminated to the degree its distinct word
     ``n``-grams also occur anywhere in the benchmark set.  Output one row
-    per input document (zero-gram docs included with frac 0.0):
+    per document with non-NULL text (NULL text has no grams, so it gets
+    no row — in the DuckDB oracle too):
 
-    - ``n_grams``  — distinct n-grams in the document (int),
+    - ``n_grams``  — distinct n-grams in the document (int, ≥ 1),
     - ``n_hits``   — how many of those occur in the benchmark (int),
-    - ``contamination`` — ``n_hits / n_grams`` rounded to 4 (0.0 when the
-      document has no grams).
+    - ``contamination`` — ``n_hits / n_grams`` rounded to 4.
 
     Shape: benchmark grams are collected DISTINCT and broadcast (eval
-    suites are tiny next to the corpus); the corpus explodes words once
-    and aggregates back on ``doc_id``.  Short docs fall back to the
-    whole text as one shingle (functions.text.shingles semantics), so a
-    verbatim short benchmark string is still caught.  Grams build from a
-    word-level posexplode + ``lead`` offset windows, NOT array
-    ``transform``/``slice`` HOFs — those evaluate interpreted per
-    element and measured ~4× slower here (same finding as
-    :func:`repetition_signals`, where the gap was 9×).
+    suites are tiny next to the corpus); the corpus explodes each doc's
+    :func:`functions.text.shingles` array (distinct per doc, built on
+    the scan) and aggregates back on ``doc_id``.  Short docs fall back
+    to the whole text as one shingle, so a verbatim short benchmark
+    string is still caught.
     """
-    bench_grams = (
-        _distinct_shingles(benchmark, n, id_col, text_col)
-        .select("gram")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
-    doc_grams = _distinct_shingles(docs, n, id_col, text_col)
+    gram = F.explode(TXT.shingles(F.col(text_col), n)).alias("gram")
+    bench_grams = benchmark.select(gram).distinct().withColumn("hit", F.lit(1))
     per_doc = (
-        doc_grams.join(F.broadcast(bench_grams), "gram", "left")
+        docs.select(F.col(id_col), gram)
+        .join(F.broadcast(bench_grams), "gram", "left")
         .groupBy(id_col)
         .agg(
             F.count(F.lit(1)).cast("int").alias("n_grams"),
@@ -128,10 +80,7 @@ def ngram_contamination(
         "n_grams",
         "n_hits",
         round_stable(
-            F.when(F.col("n_grams") == 0, F.lit(0.0)).otherwise(
-                F.col("n_hits") / F.col("n_grams").cast("double")
-            ),
-            4,
+            F.col("n_hits") / F.col("n_grams").cast("double"), 4
         ).alias("contamination"),
     )
 
@@ -254,14 +203,13 @@ def boilerplate_ngrams(
     The corpus-level complement of :func:`repetition_signals` (which is
     within-doc): headers, license text, and template phrases show up as
     n-grams with high DOCUMENT frequency, and this listing is what a
-    boilerplate-strip pass is built from (C4-style).  Shape: the same
-    posexplode + ``lead`` gram construction as decontamination (HOF
-    array lambdas measured 4-9× slower), distinct per doc, one gram
-    aggregate with map-side combine, global top-k via
-    TakeOrderedAndProject — never a full vocabulary sort.
+    boilerplate-strip pass is built from (C4-style).  Shape: each doc's
+    distinct :func:`functions.text.shingles` exploded on the scan (no
+    shuffle on doc id), one gram aggregate with map-side combine, global
+    top-k via TakeOrderedAndProject — never a full vocabulary sort.
     """
     return (
-        _distinct_shingles(docs, n, id_col, text_col)
+        docs.select(F.explode(TXT.shingles(F.col(text_col), n)).alias("gram"))
         .groupBy("gram")
         .agg(F.count(F.lit(1)).cast("bigint").alias("n_docs"))
         .filter(F.col("n_docs") >= min_docs)

@@ -1,8 +1,9 @@
 """Deduplication operators: exact, MinHash-LSH, SimHash, n-gram Jaccard.
 
 LLM-data-pipeline extensions.  All four are
-pure DataFrame pipelines over the text fingerprint functions — no Python
-UDFs, no driver-side loops — and each is shaped for 100 TB:
+DataFrame pipelines over the text fingerprint functions — the only
+Python stages are the Arrow-batched fingerprint kernels, and there are
+no driver-side loops — and each is shaped for 100 TB:
 
 - exact: one hash-groupBy shuffle on a 16-byte fingerprint.
 - MinHash-LSH: shingle → k-hash signature → band buckets → self-join
@@ -11,8 +12,8 @@ UDFs, no driver-side loops — and each is shaped for 100 TB:
   degenerate bucket (boilerplate shingle) would cause.
 - SimHash: 64-bit fingerprint → band buckets → hamming verify.  Same
   join-on-bucket shape.
-- n-gram Jaccard: the verify stage alone, for candidate pairs from any
-  source.
+- n-gram Jaccard: exact, over df-capped shingle sets — a shingle
+  inverted-index self-join, then one aggregate on the pair key.
 """
 
 from __future__ import annotations
@@ -59,41 +60,6 @@ def dedup_exact(
 # bucket key of a MinHash band: a pair collides in band i when the i-th
 # band hashes are equal
 _BAND = ["band_idx", "band_hash"]
-
-
-def minhash_candidate_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 64,
-    bands: int = 16,
-    max_bucket: int = 1000,
-) -> DataFrame:
-    """LSH candidate pairs (id_a < id_b) from banded MinHash signatures.
-
-    bands × rows layout: ``num_hashes = bands * rows_per_band``; two docs
-    collide if any band of their signatures matches exactly.  With r=4,
-    b=16 the S-curve threshold is ≈ (1/b)^(1/r) ≈ 0.5 Jaccard.
-
-    ``max_bucket`` drops degenerate buckets (near-universal shingles),
-    see :func:`cap_buckets`; the exact-dup pass already caught identical
-    texts.
-    """
-    banded = widen_for_kernel(df).select(
-        F.col(id_col).alias("id"),
-        F.posexplode(
-            TXT.minhash_band_hashes(F.col(text_col), num_hashes, shingle_n, bands)
-        ).alias("band_idx", "band_hash"),
-    )
-    # Cache the banded signatures: the self-join consumes them twice, and
-    # uncached each side re-runs shingling + the signature UDF (measured
-    # 2× the whole signature cost at sf0.1).  Size is bands × docs × ~24 B
-    # — at 10⁹ docs this still fits a cluster's aggregate storage memory,
-    # and MEMORY_AND_DISK degrades gracefully if not.
-    banded = banded.persist()
-    cands = bucket_pairs(cap_buckets(banded, _BAND, max_bucket), _BAND)
-    return eager_release(cands.select("id_a", "id_b").distinct(), banded)
 
 
 def cap_buckets(
@@ -570,29 +536,6 @@ def ngram_jaccard_dedup_pairs(
     return eager_release(out, shf)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    pairs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-) -> DataFrame:
-    """Exact n-gram Jaccard for given candidate pairs (id_a, id_b)."""
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        TXT.shingles(F.col(text_col), shingle_n).alias("sh"),
-    )
-    joined = (
-        pairs.join(sh.withColumnsRenamed({"id": "id_a", "sh": "sh_a"}), "id_a")
-        .join(sh.withColumnsRenamed({"id": "id_b", "sh": "sh_b"}), "id_b")
-    )
-    inter = F.size(F.array_intersect("sh_a", "sh_b")).cast("double")
-    union = F.size(F.array_union("sh_a", "sh_b")).cast("double")
-    return joined.select(
-        "id_a", "id_b", F.round(inter / union, 4).alias("jaccard")
-    )
-
-
 def simhash_near_duplicates(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -773,10 +716,6 @@ def fingerprint_near_duplicates(
     return eager_release(out, members, banded, groups)
 
 
-_WINNOW_SHIFT = 1 << 31  # RK-31 hashes are < 2^31 — (h, pos) packs in 62 bits
-_WINNOW_MAXP = (1 << 31) - 1
-
-
 def winnowing_fingerprints(
     docs: DataFrame,
     id_col: str = "doc_id",
@@ -822,10 +761,10 @@ def winnowing_fingerprints(
         )
         .select(
             "doc_id",
-            (F.lit(_WINNOW_MAXP) - F.col("v") % F.lit(_WINNOW_SHIFT))
+            (F.lit(TXT.WINNOW_MAXP) - F.col("v") % F.lit(TXT.WINNOW_SHIFT))
             .cast("int")
             .alias("pos"),
-            F.expr(f"CAST(v DIV {_WINNOW_SHIFT} AS BIGINT)").alias("fp"),
+            F.expr(f"CAST(v DIV {TXT.WINNOW_SHIFT} AS BIGINT)").alias("fp"),
         )
     )
 

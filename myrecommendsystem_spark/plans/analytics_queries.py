@@ -16,6 +16,7 @@ from myrecommendsystem_spark.io import readers
 from myrecommendsystem_spark.operators import stats
 from myrecommendsystem_spark.plans import ann_oracles
 from myrecommendsystem_spark.plans.registry import register
+from myrecommendsystem_spark.plans.text_queries import _SHINGLES_CTE
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -333,23 +334,6 @@ def orders_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Corpus analytics: boilerplate, entropy, diversity, curriculum, mixture
 # ---------------------------------------------------------------------------
 
-# shared with text_queries._SHINGLES_CTE (kept local to avoid an import
-# cycle; the decontamination oracle pins the same construction)
-_SHINGLES_CTE = r"""
-toks AS (
-    SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-    FROM documents
-),
-sh AS (
-    SELECT doc_id,
-           list_distinct([array_to_string(t[i:i+2], ' ')
-                          for i in generate_series(1, greatest(len(t)-2, 1))])
-               AS g
-    FROM toks
-)
-""".strip()
-
-
 @register(
     "doc_boilerplate_ngrams",
     f"""
@@ -364,7 +348,7 @@ LIMIT 20
     doc="cross-document boilerplate n-grams (C4-style strip-list "
     "builder): distinct word 3-grams per doc, DOCUMENT frequency "
     "aggregate, top-20 — corpus-level complement of the within-doc "
-    "repetition signals; posexplode+lead grams, TakeOrderedAndProject",
+    "repetition signals; shingle-array explode, TakeOrderedAndProject",
     defer=True,
 )
 def doc_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:

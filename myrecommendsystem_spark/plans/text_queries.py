@@ -339,21 +339,29 @@ def dedup_lsh_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("jband")
 
 
-@register(
-    "dedup_ngram_jaccard",
-    rf"""
-WITH toks AS (
+# DuckDB twin of functions.text.shingles (3-gram, short-doc fallback;
+# NULL text has no grams): sh(doc_id, g).  The n-gram Jaccard,
+# decontamination and boilerplate oracles all build on it.
+_SHINGLES_CTE = r"""
+toks AS (
     SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
     FROM documents
 ),
-shl AS (
+sh AS (
     SELECT doc_id,
            list_distinct([array_to_string(t[i:i+2], ' ')
                           for i in generate_series(1, greatest(len(t)-2, 1))])
-               AS sh
+               AS g
     FROM toks
-),
-ex AS (SELECT doc_id, unnest(sh) AS s FROM shl),
+)
+""".strip()
+
+
+@register(
+    "dedup_ngram_jaccard",
+    f"""
+WITH {_SHINGLES_CTE},
+ex AS (SELECT doc_id, unnest(g) AS s FROM sh),
 rare AS (SELECT s FROM ex GROUP BY s HAVING COUNT(*) <= 50),
 shf AS (SELECT ex.doc_id, ex.s FROM ex JOIN rare USING (s)),
 sizes AS (SELECT doc_id, CAST(COUNT(*) AS DOUBLE) AS n_sh FROM shf GROUP BY doc_id),
@@ -1659,23 +1667,6 @@ def q_embedding_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Corpus hygiene: decontamination / repetition / cross-corpus dedup
 # ---------------------------------------------------------------------------
-
-# DuckDB twin of functions.text.shingles (3-gram, short-doc fallback) —
-# the same CTE shape dedup_ngram_jaccard's oracle uses.
-_SHINGLES_CTE = r"""
-toks AS (
-    SELECT doc_id, regexp_split_to_array(lower(trim(text)), '\s+') AS t
-    FROM documents
-),
-sh AS (
-    SELECT doc_id,
-           list_distinct([array_to_string(t[i:i+2], ' ')
-                          for i in generate_series(1, greatest(len(t)-2, 1))])
-               AS g
-    FROM toks
-)
-""".strip()
-
 
 @register(
     "doc_decontamination",

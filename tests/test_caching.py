@@ -33,7 +33,6 @@ def docs(spark):
 @pytest.mark.parametrize(
     "build",
     [
-        lambda d: dedup.minhash_candidate_pairs(d),
         lambda d: dedup.minhash_near_duplicates(d, jaccard_threshold=0.5),
         lambda d: dedup.simhash_near_duplicates(d),
         lambda d: dedup.ngram_jaccard_dedup_pairs(d, threshold=0.3),
@@ -42,7 +41,6 @@ def docs(spark):
         lambda d: TXT.tfidf_cosine_pairs(d, threshold=0.5),
     ],
     ids=[
-        "minhash_candidates",
         "minhash_near_dups",
         "simhash",
         "ngram_jaccard",

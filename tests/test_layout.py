@@ -126,6 +126,27 @@ def test_no_module_level_memo_dicts():
     assert memos == []
 
 
+def test_no_shadowed_test_definitions():
+    """No two module-level functions or classes in one tests/*.py file
+    share a name: Python keeps the last definition silently, so the
+    first one never runs."""
+    import ast
+    import collections
+    import pathlib
+
+    dups = []
+    for path in sorted(pathlib.Path(__file__).parent.glob("*.py")):
+        names = collections.Counter(
+            node.name
+            for node in ast.parse(path.read_text()).body
+            if isinstance(
+                node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)
+            )
+        )
+        dups += [f"{path.name}::{n}" for n, c in names.items() if c > 1]
+    assert dups == []
+
+
 def test_skew_profile_recommends_salt_for_whale_key(spark):
     """A whale key (80% of rows) gets rec_salt ≈ its share of the
     partition budget; a key that fits one balanced task gets 1; ranking

@@ -22,6 +22,7 @@ import random
 import duckdb
 import pytest
 
+from myrecommendsystem_spark.operators import dedup
 from myrecommendsystem_spark.plans import registry
 
 
@@ -64,8 +65,6 @@ def test_bpe_merges_oracle_fuzz(spark, seed):
 
 @pytest.mark.parametrize("seed", [1, 4])
 def test_minhash_pairs_oracle_fuzz(spark, seed):
-    from myrecommendsystem_spark.operators import dedup
-
     rng = random.Random(seed)
     vocab = [f"t{i}" for i in range(40)]
     rows = []
@@ -94,6 +93,42 @@ def test_minhash_pairs_oracle_fuzz(spark, seed):
     con.close()
     assert got == want
     assert (0, 100, 1.0) in got  # the planted exact copy must collide
+
+
+@pytest.mark.parametrize(
+    "name, build",
+    [
+        (
+            "dedup_ngram_jaccard",
+            lambda d: dedup.ngram_jaccard_dedup_pairs(d, max_df=50, threshold=0.5),
+        ),
+        (
+            "dedup_minhash_pairs",
+            lambda d: dedup.minhash_near_duplicates(d, jaccard_threshold=0.5),
+        ),
+    ],
+    ids=["ngram_jaccard", "minhash"],
+)
+def test_null_text_has_no_grams_oracle_parity(spark, name, build):
+    """NULL text has no grams in both shingle builders, as in their
+    DuckDB twins: NULL docs pair with nothing — not with each other, not
+    with the empty doc (whose one gram is '')."""
+    rows = [
+        (1, None),
+        (2, ""),
+        (3, "alpha beta gamma delta"),
+        (4, "alpha beta gamma delta"),
+        (5, None),
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    got = sorted((r.id_a, r.id_b, r.jaccard) for r in build(docs).collect())
+    con = _duck(rows)
+    want = sorted(
+        (int(a), int(b), float(j))
+        for a, b, j in con.execute(_oracle(name)).fetchall()
+    )
+    con.close()
+    assert got == want == [(3, 4, 1.0)]
 
 
 @pytest.mark.parametrize("seed", [2, 5, 9])
@@ -157,8 +192,6 @@ def test_winnowing_cross_corpus_oracle_fuzz(spark, seed):
     the cap is ref-side only).  Docs stay ASCII and ≥ 16 bytes — the
     family's documented corpus assumption (short-doc divergence is
     pinned separately in test_text_dedup)."""
-    from myrecommendsystem_spark.operators import dedup
-
     rng = random.Random(seed)
     vocab = [f"tok{i}" for i in range(60)]
 

@@ -108,29 +108,29 @@ def test_top_k_matches_python_sort(spark, rows, k):
     overlap=st.floats(0.3, 0.9),
 )
 @_settings
-def test_minhash_estimates_jaccard(spark, base, overlap):
+def test_minhash_estimates_jaccard(base, overlap):
     """Signature agreement rate ≈ true shingle-hash Jaccard (±0.25 with
-    k=64) — the statistical contract LSH banding relies on."""
+    k=64) — the statistical contract LSH banding relies on.  With one
+    signature row per band, each band key is a bijective image of its
+    row, so key agreement is signature agreement."""
     import numpy as np
+    import pandas as pd
 
-    from myrecommendsystem_spark.functions.text import (
-        _shingle_hashes_py,
-        minhash_signature,
-    )
+    from myrecommendsystem_spark.functions import text as TXT
 
     n_shared = int(len(base) * overlap)
     a = " ".join(base)
     b = " ".join(base[:n_shared] + [w + "zz" for w in base[n_shared:]])
-    df = spark.createDataFrame([(0, a), (1, b)], "id long, text string")
-    sigs = {
-        r.id: np.array(r.sig)
-        for r in df.select(
-            "id", minhash_signature(F.col("text"), 64, 3).alias("sig")
-        ).collect()
-    }
-    est = float((sigs[0] == sigs[1]).mean())
-    ha, hb = set(_shingle_hashes_py(a, 3)), set(_shingle_hashes_py(b, 3))
-    true_j = len(ha & hb) / len(ha | hb)
+    ha, hb = TXT._shingle_hash_lists(pd.Series([a, b]), 3)
+    pa, pb = TXT._affine_params(64, TXT._MINHASH_SEED)
+    one_row_bands = np.arange(64, dtype=np.int64)
+    est = float(
+        (
+            TXT._minhash_band_keys(ha, pa, pb, one_row_bands)
+            == TXT._minhash_band_keys(hb, pa, pb, one_row_bands)
+        ).mean()
+    )
+    true_j = len(set(ha) & set(hb)) / len(set(ha) | set(hb))
     assert abs(est - true_j) <= 0.25
 
 

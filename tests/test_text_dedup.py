@@ -41,12 +41,9 @@ def test_token_count_edges(spark):
 
 
 def test_shingles_null_and_empty_text(spark):
-    """NULL and empty text both yield the single empty gram [''].
-
-    Pins a regression of the zip-fold rewrite, which propagated
-    NULL through slice/zip_with so shingles(NULL) returned NULL,
-    silently dropping NULL-text rows from explode() consumers; the
-    coalesce restores the pre-rewrite transform-form behavior."""
+    """NULL text has no grams — explode() emits no row for it, as the
+    DuckDB twin's unnest does — while empty and all-blank text are the
+    single empty gram ['']."""
     from pyspark.sql.types import StringType, StructField, StructType, LongType
 
     schema = StructType(
@@ -56,18 +53,17 @@ def test_shingles_null_and_empty_text(spark):
         [(0, None), (1, ""), (2, "   "), (3, "one two three four")], schema
     )
     out = {
-        r.doc_id: r.s
-        for r in df.select(
-            "doc_id", TXT.shingles(F.col("t")).alias("s")
-        ).collect()
+        r.doc_id: r.g
+        for r in df.select("doc_id", F.explode(TXT.shingles(F.col("t"))).alias("g"))
+        .groupBy("doc_id")
+        .agg(F.sort_array(F.collect_list("g")).alias("g"))
+        .collect()
     }
-    assert out[0] == [""]  # NULL text -> the single empty gram, not NULL
-    assert out[1] == [""]
-    assert out[2] == [""]
-    assert sorted(out[3]) == ["one two three", "two three four"]
-    # explode() keeps the NULL-text row (one row per doc here)
-    n = df.select("doc_id", F.explode(TXT.shingles(F.col("t")))).count()
-    assert n == 5  # docs 0..2 contribute 1 gram each, doc 3 contributes 2
+    assert out == {
+        1: [""],
+        2: [""],
+        3: ["one two three", "two three four"],
+    }
 
 
 def test_bpe_ish_tokens(spark):
@@ -304,18 +300,6 @@ def test_simhash_near_dups(docs):
     assert not any(4 in p for p in found)
 
 
-def test_ngram_jaccard_pairs(spark, docs):
-    pairs = spark.createDataFrame(
-        [Row(id_a=0, id_b=1), Row(id_a=0, id_b=4)]
-    )
-    out = {
-        (r.id_a, r.id_b): r.jaccard
-        for r in dedup.ngram_jaccard_pairs(docs, pairs).collect()
-    }
-    assert out[(0, 1)] == 1.0
-    assert out[(0, 4)] < 0.05
-
-
 def test_lang_id(spark):
     df = spark.createDataFrame(
         [
@@ -495,25 +479,36 @@ def test_rolling_fingerprints_detect_shared_substrings(spark):
     assert h1 == h2 and len(h1[0][0]) == 1
 
 
-def test_rolling_fingerprints_segment_boundary_invariance(spark):
-    """The kernel hashes the fused batch buffer in 128 KiB segments
-    (bounded peak memory); a doc whose windows straddle
+def _winnow_ref(hashes, guarantee=8):
+    """Per-definition MOSS selection over RK window hashes: the min of
+    every run of ``guarantee`` packed (hash, pos) values."""
+    enc = [h * (1 << 31) + ((1 << 31) - 1 - i) for i, h in enumerate(hashes)]
+    return [min(enc[i : i + guarantee]) for i in range(len(enc) - guarantee + 1)]
+
+
+@pytest.mark.parametrize(
+    "kernel, reference",
+    [
+        (lambda c: TXT.rolling_fingerprints(c, 16), lambda hs: hs),
+        (lambda c: TXT.winnowed_fingerprints(c, 16, 8), _winnow_ref),
+    ],
+    ids=["rolling", "winnowed"],
+)
+def test_rolling_fingerprints_segment_boundary_invariance(spark, kernel, reference):
+    """Both rolling kernels hash the fused batch buffer in 128 KiB
+    segments (bounded peak memory); a doc whose windows straddle
     a segment boundary must hash identically to the same doc placed far
     from any boundary, and match the direct per-window definition."""
-    from myrecommendsystem_spark.functions import text as TXT
-    from pyspark.sql import functions as F
-
     target = ("shared-substring-payload-" * 40)[:1000]
     filler_long = "z" * 131_000  # pushes target across the 1<<17 boundary
     filler_short = "z" * 50
 
     def fps(*texts):
+        # one partition, so both docs share one Arrow batch and buffer
         df = spark.createDataFrame(
             [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
-        )
-        rows = df.select(
-            "doc_id", TXT.rolling_fingerprints(F.col("text"), 16).alias("fp")
-        ).collect()
+        ).coalesce(1)
+        rows = df.select("doc_id", kernel(F.col("text")).alias("fp")).collect()
         return {r.doc_id: list(r.fp) for r in rows}
 
     straddled = fps(filler_long, target)[1]
@@ -526,7 +521,7 @@ def test_rolling_fingerprints_segment_boundary_invariance(spark):
         sum(b * pow(base, 15 - j, mod) for j, b in enumerate(data[i : i + 16])) % mod
         for i in range(len(data) - 15)
     ]
-    assert straddled == expect
+    assert straddled == reference(expect)
 
 
 def test_connected_components_matches_transitive_closure(spark):
@@ -739,27 +734,6 @@ def test_near_duplicate_pairs_byte_gate_routes_wide_d_to_ivf(
         nulled, threshold=0.99, exact_bytes_limit=4096
     )
     assert out is sentinel
-
-
-def test_fused_bands_and_shingles_matches_separate_kernels(spark, sf_dir):
-    """The fused struct kernel must reproduce minhash_band_hashes and
-    shingle_hashes exactly — the near-dup pipeline's semantics may not
-    drift when the fusion changes the execution shape."""
-    from myrecommendsystem_spark.functions import text as TXT
-    from myrecommendsystem_spark.io import readers
-
-    docs = readers.load_table(spark, sf_dir, "documents").limit(50)
-    fused = docs.select(
-        "doc_id", TXT.minhash_bands_and_shingles(F.col("text")).alias("s")
-    ).collect()
-    sep = docs.select(
-        "doc_id",
-        TXT.minhash_band_hashes(F.col("text")).alias("bands"),
-        TXT.shingle_hashes(F.col("text")).alias("sh"),
-    ).collect()
-    f = {r.doc_id: (list(r.s.bands), sorted(r.s.sh)) for r in fused}
-    s = {r.doc_id: (list(r.bands), sorted(r.sh)) for r in sep}
-    assert f == s
 
 
 def test_embedding_survivors_transitive(spark):
