@@ -540,14 +540,19 @@ def simhash64(text: Column) -> Column:
     extraction (``shiftright & 0xFF``) and hamming distance becomes
     ``bit_count(a XOR b)`` — both whole-stage-codegen expressions, no
     per-element interpretation anywhere downstream.
+
+    NULL text fingerprints to 0, like text with no tokens; pipelines
+    that pair fingerprints drop NULL text first (no fingerprint row, as
+    in the ``dedup_simhash_pairs`` oracle), or every NULL doc would pair
+    with every other at hamming 0.
     """
 
     @pandas_udf("long")
     def _fp(hashes: pd.Series) -> pd.Series:
         out = np.zeros(len(hashes), dtype=np.int64)
         for i, h in enumerate(hashes):
-            if h is None:  # NULL text → tokens() → NULL; fingerprint 0,
-                continue  # same as empty text
+            if h is None:  # NULL text → tokens() → NULL; fingerprint 0
+                continue
             hv = np.asarray(h, dtype=np.int64)
             if hv.size == 0:
                 continue

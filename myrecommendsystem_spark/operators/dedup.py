@@ -383,7 +383,8 @@ def connected_components(
 
     This is the step that turns near-dup PAIRS into dedup DECISIONS:
     survivors = min id per component (transitive closure), matching the
-    exact-dup pass's min-id rule.
+    exact-dup pass's min-id rule — applied by :func:`min_id_survivors`
+    (drop list) and :func:`min_id_keep_list` (keep list with sizes).
     """
     # ONE run of the (often expensive) upstream pair pipeline feeds the
     # venue decision, the driver fetch, AND the distributed loop's edge
@@ -458,6 +459,43 @@ def connected_components(
     return labels
 
 
+def min_id_survivors(
+    pairs: DataFrame, population: DataFrame, id_col: str
+) -> DataFrame:
+    """The near-dup keep rule as a drop list: ``population`` rows minus
+    every id that is not its component's min (:func:`connected_components`
+    over ``pairs``), so each cluster keeps its min id and unpaired rows
+    ride along.  ``population`` keeps its own columns."""
+    dropped = (
+        connected_components(pairs)
+        .filter(F.col("comp") != F.col("id"))
+        .select(F.col("id").alias(id_col))
+    )
+    return population.join(dropped, id_col, "left_anti")
+
+
+def min_id_keep_list(
+    pairs: DataFrame, ids: DataFrame, id_col: str
+) -> DataFrame:
+    """The near-dup keep rule as a keep list → (id_col, cluster_size):
+    each component's min id with the component's size, plus every id of
+    ``ids`` (a one-column ``id_col`` relation) that no pair touches, at
+    size 1; ordered by id."""
+    comps = connected_components(pairs)
+    sizes = comps.groupBy("comp").agg(
+        F.count(F.lit(1)).cast("int").alias("cluster_size")
+    )
+    keepers = (
+        comps.join(sizes, "comp")
+        .filter(F.col("id") == F.col("comp"))
+        .select(F.col("id").alias(id_col), "cluster_size")
+    )
+    singletons = ids.join(
+        comps.select(F.col("id").alias(id_col)), id_col, "left_anti"
+    ).select(id_col, F.lit(1).cast("int").alias("cluster_size"))
+    return keepers.unionByName(singletons).orderBy(id_col)
+
+
 def dedup_near_survivors(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -474,11 +512,7 @@ def dedup_near_survivors(
     pairs = minhash_near_duplicates(
         df, id_col, text_col, jaccard_threshold, shingle_n
     )
-    comps = connected_components(pairs)
-    drop = comps.filter(F.col("comp") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(drop, id_col, "left_anti")
+    return min_id_survivors(pairs, df, id_col)
 
 
 def ngram_jaccard_dedup_pairs(
@@ -559,9 +593,13 @@ def simhash_near_duplicates(
     dropped buckets only ever lose pairs the remaining 7 bands can still
     recover unless the docs disagree in every band.
     """
-    fp = widen_for_kernel(df).select(
-        F.col(id_col).alias("id"),
-        TXT.simhash64(F.col(text_col)).alias("fp"),
+    fp = (
+        widen_for_kernel(df)
+        .filter(F.col(text_col).isNotNull())  # NULL text: no fingerprint
+        .select(
+            F.col(id_col).alias("id"),
+            TXT.simhash64(F.col(text_col)).alias("fp"),
+        )
     )
     return fingerprint_near_duplicates(fp, max_hamming, bands, max_bucket)
 

@@ -36,7 +36,8 @@ from myrecommendsystem_spark.operators.dedup import (
     _recall_by_band,
     bucket_pairs,
     cap_buckets,
-    connected_components,
+    min_id_keep_list,
+    min_id_survivors,
 )
 from myrecommendsystem_spark.operators.parallelism import widen_for_kernel
 from myrecommendsystem_spark.operators.relational import top_k_per_group
@@ -665,69 +666,6 @@ def hyperplane_recall_report(
     return _recall_by_band(truth, cand, "cosband")
 
 
-def hyperplane_lsh_cross_pairs(
-    new_df: DataFrame,
-    ref_df: DataFrame,
-    threshold: float = 0.35,
-    n_bits: int = 16,
-    band_bits: int = 8,
-    max_bucket: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    salt: str = "hp",
-    ordered: bool = True,
-) -> DataFrame:
-    """Cross-corpus semantic dedup → (new_id, ref_id, n_bands, cos):
-    incoming vectors against an existing reference corpus through
-    shared sign-bit LSH buckets — the embedding twin of the text
-    pipeline's ``dedup.cross_corpus_near_duplicates`` ingest gate.
-
-    Same hyperplanes (same ``salt``) sign both sides, so a new vector
-    lands in exactly the bucket its reference near-dups occupy; the
-    join is new-bands ⋈ ref-bands on (band_idx, band_val) — never a
-    union self-join, and the NEW side (typically a small ingest batch)
-    streams against the bucketed reference.  The ``max_bucket`` cap
-    applies to the REFERENCE side only, mirroring the text
-    cross-corpus convention: a pathological reference bucket is
-    dropped, a hot ingest batch is not silently filtered.  Candidates
-    are exact-cosine verified at ``threshold``; both populations
-    exclude zero-norm vectors (NaN-cosine class, see
-    :func:`_hp_prepare`).
-    """
-    out_schema = "new_id bigint, ref_id bigint, n_bands int, cos double"
-    # ONE dim probe across both sides (one corpus, one dim by contract):
-    # probe the union's max size, then both prepares skip their own
-    # probe job.  An empty side simply contributes zero bands/candidates.
-    probe = (
-        new_df.select(F.col(vec_col).alias("v"))
-        .unionByName(ref_df.select(F.col(vec_col).alias("v")))
-        .filter(F.col("v").isNotNull())
-        .agg(F.max(F.size("v")).alias("d"))
-        .first()
-    )
-    dim = int(probe["d"]) if probe is not None and probe["d"] is not None else 0
-    if dim <= 0:
-        return _empty_frame(new_df, out_schema)
-    new_prep = _hp_prepare(
-        new_df, n_bits, band_bits, id_col, vec_col, salt, dim=dim
-    )
-    ref_prep = _hp_prepare(
-        ref_df, n_bits, band_bits, id_col, vec_col, salt, dim=dim
-    )
-    assert new_prep is not None and ref_prep is not None
-    new_base, new_bands = new_prep
-    ref_base, ref_bands = ref_prep
-    return hp_cross_pairs_from_prepared(
-        new_base,
-        new_bands,
-        ref_base,
-        ref_bands,
-        threshold,
-        max_bucket,
-        ordered=ordered,
-    )
-
-
 def hyperplane_semantic_survivors(
     df: DataFrame,
     threshold: float = 0.35,
@@ -754,21 +692,8 @@ def hyperplane_semantic_survivors(
     pairs = hp_pairs_from_prepared(
         base, bands, threshold, max_bucket, ordered=False
     )
-    comps = connected_components(pairs)
-    sizes = comps.groupBy("comp").agg(
-        F.count(F.lit(1)).cast("int").alias("cluster_size")
-    )
-    keepers = (
-        comps.join(sizes, "comp")
-        .filter(F.col("id") == F.col("comp"))
-        .select(F.col("id").alias(id_col), "cluster_size")
-    )
-    singletons = (
-        base.select(F.col("id").alias(id_col))
-        .join(comps.select(F.col("id").alias(id_col)), id_col, "left_anti")
-        .select(id_col, F.lit(1).cast("int").alias("cluster_size"))
-    )
-    return keepers.unionByName(singletons).orderBy(id_col)
+    ids = base.select(F.col("id").alias(id_col))
+    return min_id_keep_list(pairs, ids, id_col)
 
 
 def hp_cross_pairs_from_prepared(
@@ -780,10 +705,14 @@ def hp_cross_pairs_from_prepared(
     max_bucket: int = 1000,
     ordered: bool = True,
 ) -> DataFrame:
-    """Cross-pair stage of :func:`hyperplane_lsh_cross_pairs` over
-    already-signed relations — the prepared-input twin of
-    :func:`hp_pairs_from_prepared` (same ``ordered=False`` escape for
-    set-shaped internal consumers)."""
+    """Cross-corpus semantic dedup → (new_id, ref_id, n_bands, cos):
+    signed new vectors against a signed reference corpus through shared
+    sign-bit LSH buckets (both sides prepared with the same salt and
+    dim), the cross-pair twin of :func:`hp_pairs_from_prepared`.  The
+    ``max_bucket`` cap applies to the REFERENCE side only, as in the
+    text ``dedup.cross_corpus_near_duplicates`` gate: a pathological
+    reference bucket is dropped, a hot ingest batch is never silently
+    filtered.  Candidates are exact-cosine verified at ``threshold``."""
     ref_ok = cap_buckets(ref_bands, _HP_BAND, max_bucket)
     cand = (
         bucket_pairs(new_bands, _HP_BAND, ref=ref_ok)
@@ -1034,11 +963,7 @@ def embedding_dedup_survivors(
     pairs = near_duplicate_pairs(
         df, threshold=threshold, id_col=id_col, vec_col=vec_col, method=method
     )
-    comps = connected_components(pairs)
-    drop = comps.filter(F.col("comp") != F.col("id")).select(
-        F.col("id").alias(id_col)
-    )
-    return df.join(drop, id_col, "left_anti")
+    return min_id_survivors(pairs, df, id_col)
 
 
 # ---------------------------------------------------------------------------

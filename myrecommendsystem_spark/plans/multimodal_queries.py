@@ -351,21 +351,7 @@ def media_dedup_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("media_id").alias("id"), F.col("dhash").alias("fp")
     )
     pairs = dedup.fingerprint_near_duplicates(fp, max_hamming=16)
-    comps = dedup.connected_components(pairs)
-    sizes = comps.groupBy("comp").agg(
-        F.count(F.lit(1)).cast("int").alias("cluster_size")
-    )
-    keepers = (
-        comps.join(sizes, "comp")
-        .filter(F.col("id") == F.col("comp"))
-        .select(F.col("id").alias("media_id"), "cluster_size")
-    )
-    singletons = (
-        media.select("media_id")
-        .join(comps.select(F.col("id").alias("media_id")), "media_id", "left_anti")
-        .select("media_id", F.lit(1).cast("int").alias("cluster_size"))
-    )
-    return keepers.unionByName(singletons).orderBy("media_id")
+    return dedup.min_id_keep_list(pairs, media.select("media_id"), "media_id")
 
 
 # ---------------------------------------------------------------------------

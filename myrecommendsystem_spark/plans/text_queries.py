@@ -1129,11 +1129,10 @@ def embedding_cross_corpus_near(
     # Both populations come from ONE corpus, so the signature pass runs
     # ONCE over the full relation (checkpointed bands) and splits by the
     # ingest predicate — signatures are per-vector, so the split-after
-    # and sign-per-side forms are value-identical, but the composed
-    # two-sided helper ran the 16x64 sign fold twice (measured
-    # 4.0 -> 2.8 s at sf0.1).  The generic ingest path
-    # (hyperplane_lsh_cross_pairs / semantic_dedup) keeps per-side
-    # signing: there the reference is a TABLE, not a filter of the batch.
+    # and sign-per-side forms are value-identical, but signing each
+    # side ran the 16x64 sign fold twice (measured 4.0 -> 2.8 s at
+    # sf0.1).  The streaming ingest path (streaming/semantic_dedup)
+    # signs the batch alone: there the survivors' bands are stored.
     emb = _emb(spark, sf_dir)
     prep = similarity._hp_prepare(emb, 16, 8, "vec_id", "embedding", "hp")
     if prep is None:

@@ -323,10 +323,17 @@ def read_upserted(
     ``batch_id`` (before ``before``, if given), without ``batch_id``.
     Inside trigger ``n``, ``before=n`` reads the state the trigger's
     first attempt read, not that attempt's own append."""
+    return latest_per_key(read_log(spark, path, before), key)
+
+
+def latest_per_key(log: DataFrame, key: str) -> DataFrame:
+    """Each key's rows from its highest ``batch_id`` in ``log`` (rows of
+    a log as :func:`read_log` returns them), without ``batch_id``.  A
+    filter on ``key`` applied to ``log`` keeps, for every key it
+    passes, the same rows as applied to the result."""
     latest = F.max("batch_id").over(Window.partitionBy(key))
     return (
-        read_log(spark, path, before)
-        .withColumn("_latest", latest)
+        log.withColumn("_latest", latest)
         .filter(F.col("batch_id") == F.col("_latest"))
         .drop("batch_id", "_latest")
     )

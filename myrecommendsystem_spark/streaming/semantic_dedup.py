@@ -1,43 +1,34 @@
 """Incremental semantic dedup — the streaming twin of the batch
-keep-list.
+keep-list: a survivor table MAINTAINED as vector batches arrive.
 
-``embedding_cross_corpus_near`` is the one-shot INGEST GATE: a batch of
-new vectors probed against a reference corpus through shared sign-bit
-LSH buckets.  This module closes the loop: a survivor table is
-MAINTAINED as batches arrive —
+One ingest cycle, :func:`_ingest_step`, runs on a batch signed once
+(``similarity._hp_prepare_sig``): batch vectors with an exact-cosine
+verified LSH match among the survivors are dropped (the ingest gate of
+``embedding_cross_corpus_near``, capped on the survivor side only); the
+remainder, which can hold its own near-dup clusters, keeps each
+cluster's min id (:func:`dedup.min_id_survivors`, the batch keep-lists'
+rule); what is left, tagged with its arrival batch, joins the survivors.
 
-1. gate: batch vectors with an exact-cosine-verified LSH match in the
-   accumulated survivor set are duplicates and dropped
-   (:func:`similarity.hyperplane_lsh_cross_pairs` — ref-side bucket cap,
-   the ingest batch is never silently filtered);
-2. within-batch self-dedup: the fresh remainder can contain its own
-   near-dup clusters (two copies arriving together match nothing in the
-   table), so it runs the same pairs → connected-components → min-id
-   survivor closure as the batch keep-list
-   (``embedding_semantic_survivors``);
-3. the surviving rows append into the survivor table.
-
-:func:`run_semantic_dedup_stream` wires the cycle into
-``writeStream.foreachBatch`` with :func:`recommender.upsert_by_key`
-(S10's batch-id log, read latest per key), so re-arriving vec_ids
-REPLACE their old rows and each trigger writes only its own batch_id
-subtree.  At 100 TB the survivor table is the corpus-sized side: the
-LSH probe reads only the band partitions the batch's own bands hash
-into and shuffles bands only (never vectors twice).
-
-Deterministic by construction (hash-derived hyperplanes, md5 bucketing,
-min-id survivors), so the batch fold :func:`incremental_semantic_survivors`
-is DuckDB-replayable — registered as ``embedding_incremental_survivors``
-(plans/text_queries.py) with a sequential-fold oracle.
+:func:`incremental_semantic_survivors` folds the step over a batch list;
+:func:`run_semantic_dedup_stream` runs it per ``foreachBatch`` trigger
+against two batch-id logs (:func:`recommender.upsert_by_key`, read
+latest per vec_id), reading only the survivors that share a bucket with
+the batch.  Deterministic by construction (hash-derived hyperplanes, md5
+bucketing, min-id survivors): the fold is DuckDB-replayed as
+``embedding_incremental_survivors`` (plans/text_queries.py), and the
+stream is pinned to the fold in tests.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from myrecommendsystem_spark.functions.caching import release_checkpoint
 from myrecommendsystem_spark.operators import similarity
-from myrecommendsystem_spark.operators.dedup import connected_components
+from myrecommendsystem_spark.operators.dedup import (
+    cap_buckets,
+    min_id_survivors,
+)
 
 #: The band log's probe partition: ``pmod(hash(band_idx, band_val),
 #: num_band_parts)``, so a trigger's probe scan prunes to the partitions
@@ -45,68 +36,59 @@ from myrecommendsystem_spark.operators.dedup import connected_components
 BUCKET_COL = "__bucket"
 
 
-def _eligible(batch: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    """Zero-norm vectors are ineligible on every path of the LSH family
-    (NaN cosine — see similarity._hp_prepare); they never match and
-    never become survivors."""
-    v = F.col(vec_col).cast("array<double>")
-    return batch.filter(similarity._dot(v, v) > 0).select(
-        F.col(id_col).cast("long").alias("vec_id"),
-        v.alias("embedding"),
-    )
-
-
-def _self_survivors(
-    fresh: DataFrame,
+def _ingest_step(
+    sig: DataFrame,
+    n_bands: int,
+    survivors: tuple[DataFrame, DataFrame] | None,
     threshold: float,
-    n_bits: int,
-    band_bits: int,
     max_bucket: int,
+    arrived_batch: int,
 ) -> DataFrame:
-    """Min-id-per-component survivors of one (already eligible)
-    population — the within-batch closure, identical semantics to the
-    batch ``embedding_semantic_survivors`` keep rule."""
-    pairs = similarity.hyperplane_lsh_pairs(
-        fresh,
-        threshold=threshold,
-        n_bits=n_bits,
-        band_bits=band_bits,
-        max_bucket=max_bucket,
-        ordered=False,  # feeds the component closure — a set consumer
-    )
-    comps = connected_components(pairs)
-    dropped = comps.filter(F.col("comp") != F.col("id")).select(
-        F.col("id").alias("vec_id")
-    )
-    return fresh.join(dropped, "vec_id", "left_anti")
-
-
-def semantic_ingest_step(
-    survivors: DataFrame | None,
-    batch: DataFrame,
-    threshold: float = 0.35,
-    n_bits: int = 16,
-    band_bits: int = 8,
-    max_bucket: int = 1000,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """One maintenance cycle → the batch rows that become NEW survivors
-    (vec_id, embedding).  ``survivors`` is the accumulated set (or None
-    on the first batch)."""
-    elig = _eligible(batch, id_col, vec_col)
-    if survivors is not None:
-        matched = similarity.hyperplane_lsh_cross_pairs(
-            elig,
-            survivors,
-            threshold=threshold,
-            n_bits=n_bits,
-            band_bits=band_bits,
-            max_bucket=max_bucket,
-            ordered=False,  # distinct-id gate — order-insensitive
-        ).select(F.col("new_id").alias("vec_id")).distinct()
-        elig = elig.join(matched, "vec_id", "left_anti")
-    return _self_survivors(elig, threshold, n_bits, band_bits, max_bucket)
+    """One ingest cycle → the batch's new survivors, checkpointed:
+    ``sig``'s rows (a :func:`similarity._hp_prepare_sig` relation) that
+    match no survivor and are their within-batch cluster's min id, with
+    an ``arrived_batch`` column.  ``survivors`` is the accumulated set as
+    prepared ``(base, bands)`` relations, or None before the first
+    survivor.  The pair stages skip their presentation sort
+    (``ordered=False``): the gate's distinct and the component closure
+    are set consumers."""
+    gated = sig
+    matched = None
+    try:
+        if survivors is not None:
+            surv_base, surv_bands = survivors
+            # materialized: the anti join and the self-pair bands both read
+            # it, and the probe must run once
+            matched = (
+                similarity.hp_cross_pairs_from_prepared(
+                    sig.select("id", "v"),
+                    similarity._explode_bands(sig, n_bands),
+                    surv_base,
+                    surv_bands,
+                    threshold,
+                    max_bucket,
+                    ordered=False,
+                )
+                .select(F.col("new_id").alias("id"))
+                .distinct()
+                .localCheckpoint(eager=True)
+            )
+            gated = sig.join(matched, "id", "left_anti")
+        pairs = similarity.hp_pairs_from_prepared(
+            gated.select("id", "v"),
+            similarity._explode_bands(gated, n_bands),
+            threshold,
+            max_bucket,
+            ordered=False,
+        )
+        keep = (
+            min_id_survivors(pairs, gated, "id")
+            .withColumn("arrived_batch", F.lit(arrived_batch).cast("int"))
+            .localCheckpoint(eager=True)
+        )
+    finally:
+        release_checkpoint(matched)
+    return keep
 
 
 def incremental_semantic_survivors(
@@ -119,42 +101,25 @@ def incremental_semantic_survivors(
     """Fold the ingest cycle over an ordered batch sequence → the final
     survivor table (vec_id, arrived_batch).
 
-    Each vector is SIGNED EXACTLY ONCE: the per-batch (base, bands)
-    relations from ``similarity._hp_prepare`` feed both the gate
-    (``hp_cross_pairs_from_prepared`` against the accumulated survivor
-    bands) and the self-dedup (``hp_pairs_from_prepared`` on the fresh
-    remainder), and surviving rows' bands accumulate alongside their
-    vectors — the structure the fold oracle's CTEs replay (bands{b}
-    computed once, filtered per stage).  The naive per-step composition
-    (semantic_ingest_step, which re-prepares per call) measured 32 s at
-    sf0.1 against ~17 s for this form: seven prepare calls collapse to
-    three, and the signature pass never re-runs over the growing
-    survivor set.  Each step's surviving base+bands are
-    localCheckpointed as a delta (without it the plan doubles per
-    batch).  The fold's
-    fixed job count is kept small (each job is an eager barrier at ANY
-    scale; a per-batch structure ran ~94 scheduler jobs at bench
-    scale): ONE tagged-union dim probe replaces K per-batch probe jobs,
-    the survivor roster rides the base accumulator as an
-    ``arrived_batch`` column instead of its own per-step checkpoint,
-    and the pair stages skip their presentation sort
-    (``ordered=False`` — the gate's distinct and the component closure
-    are set consumers).  DETERMINISTIC and DuckDB-replayed
-    (``embedding_incremental_survivors``); the streaming path persists
-    the same accumulation to parquet instead
-    (:func:`run_semantic_dedup_stream`).
+    Each vector is SIGNED EXACTLY ONCE: the batch's fused
+    ``similarity._hp_prepare_sig`` relation feeds the gate and the
+    self-dedup, and survivors' bands accumulate alongside their vectors
+    (the fold oracle's CTEs replay that structure).  Re-signing the
+    survivors on every step measured 32 s at sf0.1 against ~17 s for
+    this form.  Each step's survivors are localCheckpointed as a delta
+    (without it the plan doubles per batch), and the fixed job count is
+    kept small — each job is an eager barrier at ANY scale: ONE
+    tagged-union dim probe replaces K per-batch probe jobs, and the
+    roster rides the accumulator as an ``arrived_batch`` column.
     """
     from functools import reduce
 
     if not batches:
         raise ValueError("incremental_semantic_survivors: no batches")
     spark = batches[0].sparkSession
-    # ONE dim-probe job for the whole fold: a per-batch `_hp_prepare`
-    # probe is a full Spark job each, K of them per fold.  A single
-    # tagged union reproduces the exact per-batch max-dims the
-    # individual probes would return (including 0/absent for an empty
-    # batch → that step contributes nothing, as a prep-is-None skip
-    # would).
+    # ONE dim-probe job for the whole fold instead of K per-batch ones:
+    # the tagged union yields each batch's max dim (absent for an empty
+    # batch, whose step then contributes nothing)
     probe_union = reduce(
         DataFrame.unionByName,
         (
@@ -170,12 +135,9 @@ def incremental_semantic_survivors(
         for r in probe_union.groupBy("b").agg(F.max("s").alias("s")).collect()
     }
     n_bands = n_bits // band_bits
-    # ONE accumulator: (id, v, band0.., arrived_batch) — the fused sig
-    # relation (similarity._hp_prepare_sig) carries vector, band values
-    # and arrival tag in one row, so each step checkpoints ONE relation
-    # where the old fold checkpointed three (base + exploded bands +
-    # roster); the exploded band view and the (vec_id, arrived_batch)
-    # roster are map-only projections derived per consumer.
+    # ONE accumulator: (id, v, band0.., arrived_batch) rows, so each
+    # step checkpoints ONE relation; the exploded band view and the
+    # (vec_id, arrived_batch) roster are map-only projections of it.
     surv_sig = None
     deltas: list[DataFrame] = []
     for b, batch in enumerate(batches):
@@ -188,46 +150,19 @@ def incremental_semantic_survivors(
         sig = similarity._hp_prepare_sig(
             batch, n_bits, band_bits, "vec_id", "embedding", "hp", dim=dim
         ).localCheckpoint(eager=True)
-        gated = sig
-        matched = None
-        if surv_sig is not None:
-            matched = (
-                similarity.hp_cross_pairs_from_prepared(
-                    sig.select("id", "v"),
-                    similarity._explode_bands(sig, n_bands),
-                    surv_sig.select("id", "v"),
-                    similarity._explode_bands(surv_sig, n_bands),
-                    threshold,
-                    max_bucket,
-                    ordered=False,  # distinct-id gate — set consumer
-                )
-                .select(F.col("new_id").alias("id"))
-                .distinct()
-                .localCheckpoint(eager=True)
-            )
-            gated = sig.join(matched, "id", "left_anti")
-        pairs = similarity.hp_pairs_from_prepared(
-            gated.select("id", "v"),
-            similarity._explode_bands(gated, n_bands),
-            threshold,
-            max_bucket,
-            ordered=False,
+        survivors = None if surv_sig is None else (
+            surv_sig.select("id", "v"),
+            similarity._explode_bands(surv_sig, n_bands),
         )
-        dropped = (
-            connected_components(pairs)
-            .filter(F.col("comp") != F.col("id"))
-            .select("id")
+        # each step's survivors are checkpointed once (the delta) and
+        # the accumulator is a lazy union of the materialized deltas:
+        # each survivor row is written exactly once, and consumers of
+        # the union scan pinned blocks, no recompute
+        deltas.append(
+            _ingest_step(sig, n_bands, survivors, threshold, max_bucket, b)
         )
-        keep_sig = gated.join(dropped, "id", "left_anti").withColumn(
-            "arrived_batch", F.lit(b).cast("int")
-        )
-        # checkpoint only this step's survivors (the delta) and
-        # accumulate a lazy union of the materialized deltas: each
-        # survivor row is written exactly once, and consumers of the
-        # union scan pinned blocks, no recompute
-        deltas.append(keep_sig.localCheckpoint(eager=True))
         surv_sig = reduce(DataFrame.unionByName, deltas)
-        release_checkpoint(sig, matched)
+        release_checkpoint(sig)
     if surv_sig is None:
         return spark.createDataFrame([], "vec_id bigint, arrived_batch int")
     # materialize the result, then release the final accumulator — the
@@ -239,6 +174,54 @@ def incremental_semantic_survivors(
     )
     release_checkpoint(surv_sig, *deltas)
     return out
+
+
+def _read_survivors(
+    spark: SparkSession,
+    out_path: str,
+    bands_path: str,
+    batch_bands: DataFrame,
+    before: int,
+    max_bucket: int,
+    band_part: Column,
+) -> tuple[DataFrame, DataFrame]:
+    """The survivor side of trigger ``before``'s gate as prepared
+    ``(base, bands)``: the survivors (logs at ``out_path`` and
+    ``bands_path``, batches before ``before``) that share an uncapped
+    bucket with ``batch_bands``, the only ones the gate can reach.
+
+    The band scan prunes to the ``band_part`` partitions of the batch's
+    band values, caps buckets as the gate does (so each kept bucket
+    stays whole and the gate's cap drops nothing more) and semi-joins
+    on the batch's band keys.  The vector log is semi-joined on those
+    ids BELOW the latest-per-vec_id window: the window partitions by
+    vec_id, so each kept id gets the rows it gets over the whole log,
+    and the window's exchange moves candidates, not every survivor."""
+    from myrecommendsystem_spark.streaming.recommender import (
+        latest_per_key,
+        read_log,
+    )
+
+    probe_parts = [
+        r.p
+        for r in batch_bands.select(band_part.alias("p")).distinct().collect()
+    ]
+    keys = similarity._HP_BAND
+    bands = cap_buckets(
+        read_log(spark, bands_path, before=before)
+        .filter(F.col(BUCKET_COL).isin(probe_parts))
+        .select(F.col("vec_id").alias("id"), *keys),
+        keys,
+        max_bucket,
+    ).join(batch_bands.select(*keys), keys, "left_semi")
+    vectors = read_log(spark, out_path, before=before).join(
+        bands.select(F.col("id").alias("vec_id")), "vec_id", "left_semi"
+    )
+    base = latest_per_key(vectors, "vec_id").select(
+        F.col("vec_id").alias("id"),
+        F.col("embedding").cast("array<double>").alias("v"),
+    )
+    return base, bands
 
 
 def run_semantic_dedup_stream(
@@ -263,8 +246,9 @@ def run_semantic_dedup_stream(
     Each survivor's BAND SIGNATURE goes to a second log (``bands_path``,
     default ``out_path + "_bands"``), so the per-trigger signature work
     is the BATCH's alone: the survivor side contributes only a
-    band-column scan and the bucket join, and exact-cosine verification
-    touches only matched candidates' vectors.  The band log is
+    band-column scan and the bucket join, and only the candidates'
+    vectors are read and verified (:func:`_read_survivors`).  The band
+    log is
     partitioned by (batch_id, :data:`BUCKET_COL` =
     ``pmod(hash(band_idx, band_val), num_band_parts)``): the probe scan
     filters to the band partitions the batch's own band values hash
@@ -291,12 +275,11 @@ def run_semantic_dedup_stream(
     from myrecommendsystem_spark.streaming.recommender import (
         _fs_exists,
         compact_log,
-        read_log,
-        read_upserted,
         upsert_by_key,
     )
 
     bands_path = bands_path or out_path + "_bands"
+    n_bands = n_bits // band_bits
     band_part = F.pmod(F.hash(F.col("band_idx"), F.col("band_val")),
                        F.lit(num_band_parts))
 
@@ -307,73 +290,39 @@ def run_semantic_dedup_stream(
             compact_log(
                 spark, bands_path, "vec_id", BUCKET_COL, before=batch_id
             )
-        elig = _eligible(batch_df, "vec_id", "embedding")
-        prep = similarity._hp_prepare(
-            elig, n_bits, band_bits, "vec_id", "embedding", "hp"
+        sig = similarity._hp_prepare_sig(
+            batch_df, n_bits, band_bits, "vec_id", "embedding", "hp"
         )
-        if prep is None:  # empty or 0-dim batch
+        if sig is None:  # empty or 0-dim batch
             return
-        base_b, bands_b = prep
-        matched = None
-        # sign the batch ONCE; the checkpoint feeds the gate, the
-        # self-pair join, and the fresh-band append
-        step_bands = bands_b = bands_b.localCheckpoint(eager=True)
-        if _fs_exists(spark, bands_path):  # written after the vectors
-            surv_base = read_upserted(
-                spark, out_path, "vec_id", before=batch_id
-            ).select(
-                F.col("vec_id").alias("id"),
-                F.col("embedding").cast("array<double>").alias("v"),
-            )
-            # probe scan pruned to the partitions the BATCH's band
-            # values hash into — a survivor band can only match inside
-            # its own hash partition, so the filter loses nothing
-            probe_parts = [
-                r.p
-                for r in step_bands.select(band_part.alias("p"))
-                .distinct()
-                .collect()
-            ]
-            surv_bands = (
-                read_log(spark, bands_path, before=batch_id)
-                .filter(F.col(BUCKET_COL).isin(probe_parts))
-                .select(F.col("vec_id").alias("id"), "band_idx", "band_val")
-            )
-            # materialized: both anti joins below and the fresh-band
-            # append consume it, and the probe must run once
-            matched = (
-                similarity.hp_cross_pairs_from_prepared(
-                    base_b, bands_b, surv_base, surv_bands,
-                    threshold, max_bucket, ordered=False,
+        # sign the batch ONCE; the checkpoint feeds the probe partitions,
+        # the gate and the self-pair join
+        sig = sig.localCheckpoint(eager=True)
+        keep = None
+        try:
+            survivors = None
+            if _fs_exists(spark, bands_path):  # written after the vectors
+                survivors = _read_survivors(
+                    spark,
+                    out_path,
+                    bands_path,
+                    similarity._explode_bands(sig, n_bands),
+                    batch_id,
+                    max_bucket,
+                    band_part,
                 )
-                .select(F.col("new_id").alias("id"))
-                .distinct()
-                .localCheckpoint(eager=True)
+            keep = _ingest_step(
+                sig, n_bands, survivors, threshold, max_bucket, batch_id
             )
-            base_b = base_b.join(matched, "id", "left_anti")
-            bands_b = bands_b.join(matched, "id", "left_anti")
-        pairs = similarity.hp_pairs_from_prepared(
-            base_b, bands_b, threshold, max_bucket, ordered=False
-        )
-        dropped = (
-            connected_components(pairs)
-            .filter(F.col("comp") != F.col("id"))
-            .select("id")
-        )
-        fresh = (
-            base_b.join(dropped, "id", "left_anti")
-            .select(
+            if keep.isEmpty():
+                return
+            fresh = keep.select(
                 F.col("id").alias("vec_id"),
                 F.col("v").alias("embedding"),
-                F.lit(batch_id).cast("int").alias("arrived_batch"),
+                "arrived_batch",
             )
-            .localCheckpoint(eager=True)
-        )
-        try:
-            if fresh.isEmpty():
-                return
             upsert_by_key(spark, fresh, out_path, batch_id)
-            fresh_bands = bands_b.join(dropped, "id", "left_anti").select(
+            fresh_bands = similarity._explode_bands(keep, n_bands).select(
                 band_part.cast("int").alias(BUCKET_COL),
                 F.col("id").alias("vec_id"),
                 "band_idx",
@@ -381,7 +330,7 @@ def run_semantic_dedup_stream(
             )
             upsert_by_key(spark, fresh_bands, bands_path, batch_id, BUCKET_COL)
         finally:
-            release_checkpoint(step_bands, fresh, matched)
+            release_checkpoint(sig, keep)
 
     writer = vectors_stream.writeStream.foreachBatch(process).option(
         "checkpointLocation", checkpoint

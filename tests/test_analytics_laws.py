@@ -1,5 +1,6 @@
-"""Laws for the round-4b additions: decayed popularity, Zipf fit,
-user-user CF, and the k-means cluster profile.
+"""Laws of the analytics queries: decayed popularity, Zipf fit,
+user-user CF, the k-means cluster profile, CDC apply and edit-distance
+pairs.
 
 Oracle parity for the three gated queries runs in
 tests/test_registry_oracle.py; these tests pin the semantic laws the

@@ -1,4 +1,6 @@
-"""Round-4d additions: skyline, audience overlap (exact + HLL), PCA.
+"""Non-SQL semantics of the analytics queries and sketches: skyline,
+audience overlap (exact + HLL), PCA, CUSUM, the quality model, count-min,
+KMV and quantile sketches, late arrivals and entity resolution.
 
 The oracle-gated queries are covered by test_registry_oracle; here the
 non-SQL semantics are pinned: skyline vs brute-force dominance, HLL

@@ -126,6 +126,40 @@ def test_no_module_level_memo_dicts():
     assert memos == []
 
 
+def test_min_id_survivor_rule_lives_in_dedup():
+    """The near-dup keep rule (a connected_components row survives when
+    its ``comp`` equals its ``id``) is spelled once, in
+    operators/dedup.py's ``min_id_survivors`` and ``min_id_keep_list``:
+    no other module of the package compares ``F.col("comp")`` with
+    ``F.col("id")``."""
+    import ast
+    import pathlib
+
+    import myrecommendsystem_spark
+
+    def col_name(node):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", None) == "col"
+            and len(node.args) == 1
+            and isinstance(node.args[0], ast.Constant)
+        ):
+            return node.args[0].value
+        return None
+
+    root = pathlib.Path(myrecommendsystem_spark.__file__).parent
+    copies = []
+    for path in sorted(root.rglob("*.py")):
+        if path.relative_to(root).as_posix() == "operators/dedup.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Compare) and len(node.comparators) == 1:
+                names = {col_name(node.left), col_name(node.comparators[0])}
+                if names == {"comp", "id"}:
+                    copies.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert copies == []
+
+
 def test_no_shadowed_test_definitions():
     """No two module-level functions or classes in one tests/*.py file
     share a name: Python keeps the last definition silently, so the

@@ -106,13 +106,18 @@ def test_minhash_pairs_oracle_fuzz(spark, seed):
             "dedup_minhash_pairs",
             lambda d: dedup.minhash_near_duplicates(d, jaccard_threshold=0.5),
         ),
+        (
+            "dedup_simhash_pairs",
+            lambda d: dedup.simhash_near_duplicates(d, max_hamming=3),
+        ),
     ],
-    ids=["ngram_jaccard", "minhash"],
+    ids=["ngram_jaccard", "minhash", "simhash"],
 )
 def test_null_text_has_no_grams_oracle_parity(spark, name, build):
-    """NULL text has no grams in both shingle builders, as in their
-    DuckDB twins: NULL docs pair with nothing — not with each other, not
-    with the empty doc (whose one gram is '')."""
+    """NULL text has no grams in both shingle builders and no SimHash
+    fingerprint, as in their DuckDB twins: NULL docs pair with nothing —
+    not with each other, not with the empty doc (whose one gram is
+    '')."""
     rows = [
         (1, None),
         (2, ""),
@@ -121,14 +126,14 @@ def test_null_text_has_no_grams_oracle_parity(spark, name, build):
         (5, None),
     ]
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    got = sorted((r.id_a, r.id_b, r.jaccard) for r in build(docs).collect())
+    got = sorted(tuple(r) for r in build(docs).collect())
     con = _duck(rows)
     want = sorted(
-        (int(a), int(b), float(j))
-        for a, b, j in con.execute(_oracle(name)).fetchall()
+        (int(a), int(b), v) for a, b, v in con.execute(_oracle(name)).fetchall()
     )
     con.close()
-    assert got == want == [(3, 4, 1.0)]
+    assert got == want
+    assert [(a, b) for a, b, _ in got] == [(3, 4)]
 
 
 @pytest.mark.parametrize("seed", [2, 5, 9])

@@ -6,7 +6,8 @@ vector matching an EXISTING survivor is gated out, within-batch
 near-dups collapse to the min-id, and the survivor table accumulates
 across triggers through the batch-id log.  The batch fold
 (``incremental_semantic_survivors``) is additionally DuckDB-hash-gated
-via the registry (``embedding_incremental_survivors``).
+via the registry (``embedding_incremental_survivors``), and the stream
+is pinned to the fold on the test data.
 """
 
 from __future__ import annotations
@@ -26,7 +27,6 @@ from myrecommendsystem_spark.streaming.semantic_dedup import (
     BUCKET_COL,
     incremental_semantic_survivors,
     run_semantic_dedup_stream,
-    semantic_ingest_step,
 )
 
 DIM = 64
@@ -63,11 +63,119 @@ def _df(spark, rows):
     )
 
 
-def test_ingest_step_gates_and_self_dedups(spark):
-    surv0 = semantic_ingest_step(None, _df(spark, _BATCH1))
-    assert sorted(r.vec_id for r in surv0.collect()) == [1, 3]
-    surv1_new = semantic_ingest_step(surv0, _df(spark, _BATCH2))
-    assert sorted(r.vec_id for r in surv1_new.collect()) == [11]
+def test_stream_matches_batch_fold_on_testdata(spark, sf_dir, tmp_path):
+    """The foreachBatch trigger and the batch fold share one ingest
+    step: the test embeddings split as ``embedding_incremental_survivors``
+    splits them (vec_id % 3), one parquet file per trigger, leave the
+    stream's survivor log holding the fold's (vec_id, arrived_batch)
+    rows, so the fold's DuckDB gate covers the trigger too."""
+    import os
+
+    from myrecommendsystem_spark.io import readers
+
+    emb = readers.load_table(spark, sf_dir, "embeddings").select(
+        "vec_id", "embedding"
+    )
+    parts = [emb.filter(F.col("vec_id") % 3 == b) for b in range(3)]
+    src = tmp_path / "vectors_in"
+    src.mkdir()
+    for b, part in enumerate(parts):
+        stage = str(tmp_path / f"stage{b}")
+        part.coalesce(1).write.parquet(stage)
+        (name,) = [n for n in os.listdir(stage) if n.endswith(".parquet")]
+        dst = src / f"b{b}.parquet"
+        os.rename(os.path.join(stage, name), dst)
+        os.utime(dst, (1_000_000 + b, 1_000_000 + b))  # trigger order
+    out_path = str(tmp_path / "survivors")
+    stream = (
+        spark.readStream.schema(emb.schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(str(src))
+    )
+    q = run_semantic_dedup_stream(
+        stream, out_path, str(tmp_path / "ckpt"), trigger={"availableNow": True}
+    )
+    q.awaitTermination(300)
+    assert q.exception() is None
+    got = sorted(
+        (r.vec_id, r.arrived_batch)
+        for r in read_upserted(spark, out_path, "vec_id").collect()
+    )
+    want = [
+        (r.vec_id, r.arrived_batch)
+        for r in incremental_semantic_survivors(parts).collect()
+    ]
+    assert got == want
+    assert {b for _, b in got} == {0, 1, 2}
+    assert len(got) < emb.count()  # the gate and the closure dropped rows
+
+
+def test_trigger_reads_survivor_vectors_of_candidates_only(spark, tmp_path):
+    """A trigger reads the vector log only for the survivors that share
+    an uncapped bucket with its batch, and restricts the raw log rows
+    BEFORE the latest-per-vec_id window: a semi join on the candidate
+    ids sits below the window's exchange, so the window shuffles the
+    candidates' rows, not the whole log."""
+    from myrecommendsystem_spark.operators import similarity
+    from myrecommendsystem_spark.streaming.semantic_dedup import (
+        _read_survivors,
+    )
+
+    src = tmp_path / "vectors_in"
+    src.mkdir()
+    with open(src / "b1.json", "w") as f:
+        for r in _BATCH1:
+            f.write(json.dumps(r) + "\n")
+    out_path = str(tmp_path / "survivors")
+    q = run_semantic_dedup_stream(
+        spark.readStream.schema(_SCHEMA).json(str(src)),
+        out_path,
+        str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    q.awaitTermination(120)
+    sig = similarity._hp_prepare_sig(
+        _df(spark, _BATCH2), 16, 8, "vec_id", "embedding", "hp"
+    )
+    batch_bands = similarity._explode_bands(sig, 2)
+    band_part = F.pmod(F.hash("band_idx", "band_val"), F.lit(64))
+    base, bands = _read_survivors(
+        spark, out_path, out_path + "_bands", batch_bands, 1, 1000, band_part
+    )
+    # the candidates: survivors {1, 3} with a band equal to a batch band
+    shared = {
+        r.vec_id
+        for r in read_log(spark, out_path + "_bands")
+        .join(batch_bands.select("band_idx", "band_val"), ["band_idx", "band_val"])
+        .collect()
+    }
+    assert 1 in shared  # 10 is a near-dup of survivor 1
+    assert {r.id for r in base.collect()} == shared
+    assert {r.id for r in bands.collect()} == shared
+    plan = base._jdf.queryExecution().executedPlan().toString().splitlines()
+    window = next(i for i, line in enumerate(plan) if "Window [" in line)
+    below = _subtree(plan, window)
+    exchange = next(
+        i for i in below if "Exchange hashpartitioning(vec_id" in plan[i]
+    )
+    assert any("LeftSemi" in plan[i] for i in _subtree(plan, exchange)), (
+        "\n".join(plan)
+    )
+
+
+def _subtree(plan: list[str], i: int) -> list[int]:
+    """Line indices of the plan-tree node at line ``i``'s descendants
+    (a tree string indents each child past its parent)."""
+
+    def depth(line: str) -> int:
+        return len(line) - len(line.lstrip(" :+-"))
+
+    out = []
+    for j in range(i + 1, len(plan)):
+        if depth(plan[j]) <= depth(plan[i]):
+            break
+        out.append(j)
+    return out
 
 
 def test_batch_fold_accumulates_with_arrival_tags(spark):

@@ -430,12 +430,14 @@ def test_hyperplane_cross_pairs_consistent_with_self_join(vectors):
     buckets finds exactly the self-join pairs that straddle the split
     (same hyperplanes sign both sides), with identical cosines; the
     planted near-dup (0≈1) straddles an even/odd split."""
-    new = vectors.filter(F.col("vec_id") % 2 == 0)
-    ref = vectors.filter(F.col("vec_id") % 2 == 1)
+    def prep(parity):
+        side = vectors.filter(F.col("vec_id") % 2 == parity)
+        return similarity._hp_prepare(side, 16, 8, "vec_id", "embedding", "hp")
+
     cross = {
         (r.new_id, r.ref_id): r.cos
-        for r in similarity.hyperplane_lsh_cross_pairs(
-            new, ref, threshold=0.9
+        for r in similarity.hp_cross_pairs_from_prepared(
+            *prep(0), *prep(1), threshold=0.9
         ).collect()
     }
     full = {
